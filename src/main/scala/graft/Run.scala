@@ -29,6 +29,9 @@ object Run {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // see Bench: the 100-entry default codegen cache thrashes on the
+      // iterative queries, recompiling every operator each round
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .appName(s"graft:$name")
       // explicit-file-list reads: driver-side listing up to 1024 paths
       // (see Bench.scala for the full rationale; parameterised via env)

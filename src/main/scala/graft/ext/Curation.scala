@@ -108,10 +108,15 @@ object Curation {
     * gaps are per-stage planning/AQE-future latency scaling with
     * partition count). AQE is safe to drop: the loops' joins key on the
     * UNIQUE id side of the state table, so there is no skew for it to
-    * repair. Queries planned on other threads of the same session
-    * during `body` would see the narrowed conf — both loops are
-    * blocking driver-side iterations, so that window is the loop
-    * itself. */
+    * repair. The narrowing is SESSION-global, and other threads DO plan
+    * during `body`: [[splitLeakage]]'s doc_hash census and
+    * [[incrementalClusters]]' probe cut run on the report pool
+    * ([[Layout.async]]) while the main thread works the loop, so a plan
+    * those tasks create inside the window picks up the narrowed
+    * partition count and AQE off. Results are unaffected; at corpus
+    * scale such a plan is shuffled through as few as 4 partitions — a
+    * known race, not a guarantee, until loop tuning is isolated from
+    * concurrent planners. */
   private def withLoopTuning[T](sess: SparkSession, stateRows: Long)(body: Int => T): T = {
     val sessionParts = sess.conf.get("spark.sql.shuffle.partitions").toInt
     val target = math.max(4, math.min(sessionParts, math.ceil(stateRows / 4e6).toInt))
@@ -230,12 +235,16 @@ object Curation {
     // path. split = splitName(splitBucket(cluster)) is the identical
     // policy: for paired docs clusterSplitsOf's anchor is
     // coalesce(cluster, doc_id) = cluster, never the fallback.
-    val labels = dupClusterLabels(pairs).labelsUnsorted
-    val clustered = labels
-      .select(col("doc_id"), splitName(splitBucket(col("cluster"))).as("split"))
-    val clusteredRows = census(clustered, "cluster_hash").collect()
-    val rows = naiveTask.await ++ clusteredRows
-    pairs.unpersist()
+    val rows = try {
+      val labels = dupClusterLabels(pairs).labelsUnsorted
+      val clustered = labels
+        .select(col("doc_id"), splitName(splitBucket(col("cluster"))).as("split"))
+      val clusteredRows = census(clustered, "cluster_hash").collect()
+      naiveTask.await ++ clusteredRows
+    } catch {
+      // failure path: no orphan census job may outlive the query
+      case e: Throwable => naiveTask.cancel(); throw e
+    } finally pairs.unpersist()
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), naiveC.schema)
       .orderBy("policy", "split_x", "split_y")
   }
@@ -442,6 +451,9 @@ object Curation {
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist()
+    // both caches release on EVERY exit — a round that throws must not
+    // leave them pinned in the session cache manager
+    try {
     // cutLineage TRUNCATES the logical plan each round (see its doc for
     // the local-vs-reliable checkpoint switch; set
     // spark.graft.checkpointDir for executor-loss-safe multi-hour runs).
@@ -530,13 +542,15 @@ object Curation {
       labels = step.select(col("doc_id"), col("label"))
     }
     }
-    edges.unpersist()
-    if (ownsPairsCache) p.unpersist()
     if (sys.env.get("GRAFT_DEBUG_ROUNDS").contains("1"))
       System.err.println(s"[dupClusters] rounds=$rounds jumpRounds=$jumpRounds")
     ClusterRun(
       labels.select(col("doc_id"), col("label").as("cluster")),
       rounds, jumpRounds)
+    } finally {
+      edges.unpersist()
+      if (ownsPairsCache) p.unpersist()
+    }
   }
 
   /** Semantic decontamination — the embedding-space complement of the
@@ -617,19 +631,24 @@ object Curation {
     // pair pipeline) finishes materializing, so the probe keeps the
     // session's scale-adaptive width in any realistic timing.
     val newPairsTask = Layout.async(() => Dedup.cutShared(newPairs))
-    // stored state as of the previous ingest: labels over the old shard
-    // (unsorted — star contraction joins it straight away)
-    val labels0 = dupClusterLabels(Dedup.lshCandidatesOfSigs(sigsOld)).labelsUnsorted
-    val star = labels0.where(col("doc_id") =!= col("cluster"))
-      .select(col("cluster").as("doc_a"), col("doc_id").as("doc_b"))
-    val out = dupClusterLabels(star.union(newPairsTask.await)).labels
-    // both loops and the probe cut have materialized: the signature
-    // caches serve no remaining consumer (the returned frame is
-    // checkpoint-backed), so release them instead of leaking two
-    // corpus-scale entries into the session cache manager
-    sigsAll.unpersist()
-    sigsOld.unpersist()
-    out
+    try {
+      // stored state as of the previous ingest: labels over the old
+      // shard (unsorted — star contraction joins it straight away)
+      val labels0 = dupClusterLabels(Dedup.lshCandidatesOfSigs(sigsOld)).labelsUnsorted
+      val star = labels0.where(col("doc_id") =!= col("cluster"))
+        .select(col("cluster").as("doc_a"), col("doc_id").as("doc_b"))
+      dupClusterLabels(star.union(newPairsTask.await)).labels
+    } catch {
+      // failure path: no orphan probe job may outlive the query
+      case e: Throwable => newPairsTask.cancel(); throw e
+    } finally {
+      // both loops and the probe cut have materialized (or failed): the
+      // signature caches serve no remaining consumer (the returned
+      // frame is checkpoint-backed), so release them instead of leaking
+      // two corpus-scale entries into the session cache manager
+      sigsAll.unpersist()
+      sigsOld.unpersist()
+    }
   }
 
   /** Outlier filtering: per-event-type z-score against the group mean/std

@@ -210,32 +210,30 @@ object Layout {
     * sequentially, leaving most of local[N] idle during each small
     * manifest/probe job).
     *
-    * Sizing: `spark.graft.reportPool.threads` (read from the default
-    * session's runtime conf at first use; env
-    * `SPARK_GRAFT_REPORT_THREADS` as the session-less fallback),
-    * default 3 — enough to fill the tail of one chain with the next
-    * chain's jobs, not enough to fight over executors. The pool is
-    * process-global and shared by every query in the session: two lake
-    * reports running CONCURRENTLY (a multi-tenant driver) serialize
-    * through it rather than oversubscribing the scheduler — raise the
-    * conf for such drivers (≈3 × expected concurrent report queries).
-    * Callers pass FLAT task lists only (a task must never submit
-    * nested [[inParallel]] work, which could exhaust the fixed pool
-    * and deadlock). Daemon threads so a crashed run exits. */
-  private lazy val reportPool = {
-    val n = sys.env.get("SPARK_GRAFT_REPORT_THREADS").flatMap(_.toIntOption)
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession
-        .flatMap(s => s.conf.getOption("spark.graft.reportPool.threads"))
-        .flatMap(_.toIntOption))
-      .getOrElse(3).max(1)
-    java.util.concurrent.Executors.newFixedThreadPool(
-      n,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-report")
-        t.setDaemon(true)
-        t
-      })
-  }
+    * Sizing: a constant 3 threads — enough to fill the tail of one
+    * chain with the next chain's jobs, not enough to fight over
+    * executors. The pool is process-global and shared by every query in
+    * the JVM: two lake reports running CONCURRENTLY (a multi-tenant
+    * driver) serialize through it rather than oversubscribing the
+    * scheduler. Callers pass FLAT task lists only (a task must never
+    * submit nested [[inParallel]] work, which could exhaust the fixed
+    * pool and deadlock). Daemon threads so a crashed run exits. */
+  private lazy val reportPool =
+    java.util.concurrent.Executors.newFixedThreadPool(3, reportThreads)
+
+  /** Pool threads are built with `inheritThreadLocals = false`: Spark's
+    * local properties live in an InheritableThreadLocal, so a thread
+    * created while its submitter sat inside an action would otherwise
+    * keep that submitter's `spark.sql.execution.id`, callSite, etc. for
+    * its whole life and mis-attribute every later task it runs. The job
+    * properties a task SHOULD carry are handed over explicitly per task
+    * ([[inheritedJobProps]]). */
+  private[ext] val reportThreads: java.util.concurrent.ThreadFactory =
+    (r: Runnable) => {
+      val t = new Thread(null, r, "graft-report", 0, false)
+      t.setDaemon(true)
+      t
+    }
 
   /** Spark thread-local job properties a pool task must INHERIT from
     * its submitter: job group (so cancelJobGroup on the query's thread
@@ -246,33 +244,59 @@ object Layout {
     "spark.jobGroup.id", "spark.job.description",
     "spark.job.interruptOnCancel", "spark.scheduler.pool")
 
-  /** Submit one independent eager report task to [[reportPool]];
-    * [[awaitAll]]/`await` join it. Unwraps ExecutionException so caller
-    * stack traces carry the task's own failure. */
-  private[graft] final class ReportTask[A](f: java.util.concurrent.Future[A]) {
-    def await: A =
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-  }
-  private[graft] def async[A](task: () => A): ReportTask[A] = {
+  /** One independent eager report task on [[reportPool]];
+    * [[inParallel]]/`await` join it. `await` unwraps ExecutionException
+    * so caller stack traces carry the task's own failure. `cancel` is
+    * the failure path of a submitter that will never read the result:
+    * a task that has not started never will, and a running one has its
+    * Spark jobs cancelled by tag — repeatedly, since it may submit the
+    * next job before it notices — until its thread leaves `task`, so
+    * the submitter rethrows with no orphan job still running. */
+  private[graft] final class ReportTask[A] private[Layout] (task: () => A) {
     // capture the SUBMITTING thread's job group/pool properties so jobs
     // launched from the pool thread stay inside the caller's cancel
     // scope (properties are thread-local; an untagged pool thread would
     // otherwise run its jobs in no group at all)
-    val sc = org.apache.spark.sql.SparkSession.getDefaultSession
+    private val sc = org.apache.spark.sql.SparkSession.getDefaultSession
       .map(_.sparkContext)
-    val captured = sc.map(c =>
-      inheritedJobProps.map(k => k -> c.getLocalProperty(k)))
-    new ReportTask(reportPool.submit(new java.util.concurrent.Callable[A] {
+    private val captured = sc.toSeq.flatMap(c =>
+      inheritedJobProps.map(k => (c, k, c.getLocalProperty(k))))
+    private val tag = s"graft-report-${java.util.UUID.randomUUID}"
+    private val started = new java.util.concurrent.atomic.AtomicBoolean(false)
+    private val done = new java.util.concurrent.CountDownLatch(1)
+    private val f = reportPool.submit(new java.util.concurrent.Callable[A] {
       def call(): A = {
-        for (c <- sc; props <- captured; (k, v) <- props)
-          c.setLocalProperty(k, v) // null value clears a stale property
-        try task()
-        finally for (c <- sc; props <- captured; (k, _) <- props)
-          c.setLocalProperty(k, null) // don't leak into the next task
+        if (!started.compareAndSet(false, true))
+          throw new java.util.concurrent.CancellationException("cancelled before start")
+        try {
+          // a null value clears a stale property
+          captured.foreach { case (c, k, v) => c.setLocalProperty(k, v) }
+          sc.foreach(_.addJobTag(tag))
+          try task()
+          finally {
+            // don't leak into the next task
+            sc.foreach(_.removeJobTag(tag))
+            captured.foreach { case (c, k, _) => c.setLocalProperty(k, null) }
+          }
+        } finally done.countDown()
       }
-    }))
+    })
+
+    def await: A =
+      try f.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+
+    def cancel(): Unit =
+      if (started.compareAndSet(false, true)) f.cancel(false)
+      else {
+        var joined = false
+        while (!joined) {
+          sc.foreach(_.cancelJobsWithTag(tag))
+          joined = done.await(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+        }
+      }
   }
+  private[graft] def async[A](task: () => A): ReportTask[A] = new ReportTask(task)
 
   /** Run independent eager report tasks concurrently and return their
     * results in DECLARATION order (determinism: the tasks' own outputs
@@ -758,6 +782,147 @@ object Layout {
       col("user_id").between(60, 90) && col("value").between(100.0, 200.0))
   }
 
+  /** The z columns every lake lineage clusters on. */
+  private val LakeZCols = Seq("user_id", "value")
+
+  /** The lake lineages' row schema (event_id, user_id, value). */
+  private val LakeSchema = "event_id BIGINT, user_id BIGINT, value DOUBLE"
+
+  /** The lake fixtures' shared split of `events`: the projection, the
+    * 90% base (`event_id % 10 ≠ 0`) and the standard arrival — the 10%
+    * inserts plus the mod-100≡1 corrected updates (value + 150), the
+    * [[deltaRead]] fixtures. */
+  private def lakeSplit(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val ev = Tables.events(spark, dir)
+      .select(col("event_id"), col("user_id"), col("value"))
+    (ev, ev.where(pmod(col("event_id"), lit(10)) =!= 0),
+      ev.where(pmod(col("event_id"), lit(10)) === 0)
+        .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
+          .withColumn("value", col("value") + lit(150.0))))
+  }
+
+  /** A typed zero-row (event_id, user_id, value) frame — what a read of
+    * an empty file set answers. */
+  private def emptyEvents(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as("event_id"),
+      col("id").as("user_id"), col("id").cast("double").as("value"))
+
+  /** `files` read through [[LakeSchema]]; the typed empty frame when a
+    * pruned read keeps no file. */
+  private def readEvents(spark: SparkSession, files: Seq[String]): DataFrame =
+    if (files.isEmpty) emptyEvents(spark)
+    else spark.read.schema(LakeSchema).parquet(files: _*)
+
+  /** The planned content a lineage's fingerprint covers: the base
+    * z-celled on the lineage grid (its `zcell` covers the base content
+    * AND the quantize/curve formulas) ∪ each arrival under a negative
+    * placeholder cell (−1, −2, … — arrival content and its batch
+    * boundary). Columns an arrival adds NULL-fill on the base rows
+    * (Murmur3 skips NULLs, so an absent column hashes like a NULL one). */
+  private def plannedLineage(base: DataFrame, arrivals: Seq[DataFrame]): DataFrame = {
+    import graft.sources.PartitionedSink
+    val zcols = LakeZCols
+    val cols = (base.columns.toSeq ++ arrivals.flatMap(_.columns)).distinct.map(col)
+    arrivals.zipWithIndex
+      .map { case (a, i) => a.withColumn("zcell", lit(-1L - i)) }
+      .foldLeft(PartitionedSink.withZCell(base, zcols, 12, 6)
+        .select(base.columns.toSeq.map(col) :+ col("zcell"): _*))(
+        _.unionByName(_, allowMissingColumns = true))
+      .select(cols :+ col("zcell"): _*)
+  }
+
+  /** The step API of one lake lineage under construction (see
+    * [[lakeLineage]]). It tracks the committed tip and the tip's data
+    * files, so every step commits the NEXT generation declaring exactly
+    * that tip as its read state and asserts the slot it landed in — a
+    * mismatch means the log was mutated mid-build, and the build fails.
+    * Metadata entries (`schema`) ride a step as extra entries. */
+  private[ext] final class LakeLineage private[Layout] (spark: SparkSession,
+      val root: String) {
+    val fs: org.apache.hadoop.fs.FileSystem = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private var tip = -1
+    private var files = Seq.empty[(String, String)]
+
+    /** The tip's (kind, path) data-file references. */
+    def tipRefs: Seq[(String, String)] = files
+
+    /** (kind, path) references of the parquet files under `sub`. */
+    def refs(kind: String, sub: String): Seq[(String, String)] =
+      listParquetFiles(spark, s"$root/$sub").map(kind -> _)
+
+    /** Write `df` as ONE unsorted file under `sub` — an arrival batch as
+      * it lands, before the next fold — and return the directory. */
+    def stage(df: DataFrame, sub: String): String = {
+      df.coalesce(1).write.mode("overwrite").parquet(s"$root/$sub")
+      s"$root/$sub"
+    }
+
+    /** [[stage]] `df` under `sub` and return its file as a `kind` reference. */
+    def land(df: DataFrame, kind: String, sub: String): Seq[(String, String)] = {
+      stage(df, sub)
+      refs(kind, sub)
+    }
+
+    /** Commit `entries` stamped with `op` as the generation after the tip. */
+    def commit(op: String, entries: Seq[(String, String)]): Unit = {
+      val g = commitNextGeneration(root, entries :+ ("op" -> op),
+        Some((tip, files.map(_._2).toSet)))
+      require(g == tip + 1, s"$op must commit as generation ${tip + 1} of $root, got $g")
+      tip = g
+      files = entries.filter(e => LogFileKinds(e._1))
+    }
+
+    /** A data-movement step: `write` fills `sub`, whose files REPLACE the
+      * tip's as kind `base` (fold, compaction). */
+    def rewrite(op: String, sub: String, meta: (String, String)*)(write: String => Unit): Unit = {
+      write(s"$root/$sub")
+      commit(op, refs("base", sub) ++ meta)
+    }
+
+    /** An arrival step: `df` lands as one `kind` file under `sub`, added
+      * to the tip's files. */
+    def arrive(op: String, kind: String, sub: String, df: DataFrame,
+        meta: (String, String)*): Unit =
+      commit(op, files ++ land(df, kind, sub) ++ meta)
+  }
+
+  /** THE seed/wipe/commit scaffold of every lake lineage: idempotently
+    * materialize the lineage rooted at `scratchDir(kind, dir)` and
+    * return that root. `base`, every arrival and `persisted` are cached
+    * for the build and released in a `finally`, whatever happens. The
+    * fingerprint is [[layoutFingerprint]] under `tag` over
+    * [[plannedLineage]] (or the caller's precomputed one); on a marker
+    * hit nothing else runs. Otherwise the root is wiped once (the log
+    * restarts at g0 with the data), `base` is written z-celled under
+    * `baseDir`, g0 commits as `seed` with its files plus whatever `seed`
+    * stages (an initial delta, a schema entry), and `steps` drives the
+    * later generations through the [[LakeLineage]] step API. The marker
+    * lands only after `steps` returns, so a step that throws leaves the
+    * lineage to be rebuilt from g0 by the next call. */
+  private[ext] def lakeLineage(spark: SparkSession, dir: String, kind: String,
+      tag: String, base: DataFrame, arrivals: Seq[DataFrame],
+      persisted: Seq[DataFrame] = Nil, fingerprint: Option[String] = None,
+      baseDir: String = "base", seed: LakeLineage => Seq[(String, String)] = _ => Nil)(
+      steps: LakeLineage => Unit): String = {
+    val root = scratchDir(kind, dir)
+    val cached = (base +: arrivals) ++ persisted
+    cached.foreach(_.persist())
+    try {
+      materializeIfChanged(root, fingerprint.getOrElse(
+          layoutFingerprint(tag, plannedLineage(base, arrivals)))) {
+        val l = new LakeLineage(spark, root)
+        val rootPath = new org.apache.hadoop.fs.Path(root)
+        if (l.fs.exists(rootPath)) l.fs.delete(rootPath, true)
+        graft.sources.PartitionedSink.writeZCelled(base, s"$root/$baseDir", LakeZCols, 12, 6)
+        l.commit("seed", l.refs("base", baseDir) ++ seed(l))
+        steps(l)
+      }
+    } finally cached.foreach(_.unpersist())
+    root
+  }
+
   /** LAKE-MAINTENANCE LIFECYCLE, end-to-end on ONE evolving scratch
     * lineage (round 15, VERDICT r14 missing #1 / task 2 — the layout
     * story's [[graft.ext.Curation]]`.curationE2e` analogue): every
@@ -841,34 +1006,46 @@ object Layout {
 
   def lakeE2e(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{FooterManifest, PartitionedSink}
-    val root = scratchDir("lake_e2e", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    // the three lineage frames are each consumed several times per
-    // invocation (fingerprint, bounds, decision, writes) — cache them
-    // for the invocation's EAGER phase and release before returning
-    // (the round-13 cache-release discipline; everything the returned
-    // frame still computes lazily reads persisted FILES, never these)
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0))).persist()
+    val zcols = LakeZCols
+    val (_, base, delta) = lakeSplit(spark, dir)
     val folded = base.join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(delta).persist()
-    val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-      .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
+      .unionByName(delta)
     // ONE marker for the whole lineage. Coverage argument: every dir is
     // a pure function of (base, delta, quantize/curve formulas, the q4
-    // compaction target — bump the tag if that changes). plannedBase's
-    // zcell covers base content AND all the formulas; the delta rows
-    // (zcell = −1 placeholder) cover delta content — so fingerprinting
-    // the planned fold too would only re-pay the fold's anti-join per
-    // invocation for coverage the union already has.
+    // compaction target — bump the tag if that changes). The planned
+    // base's zcell covers base content AND all the formulas; the delta
+    // rows (zcell = −1 placeholder) cover delta content — so
+    // fingerprinting the planned fold too would only re-pay the fold's
+    // anti-join per invocation for coverage the union already has.
+    //
+    // ONE corpus pass serves BOTH the fingerprint and the DECIDE cell
+    // histogram (round 21, guide §1.2 — fewer passes before anything
+    // else): the fingerprint frame grouped by zcell keeps per-cell row
+    // counts and per-cell row-hash sums; the global fingerprint
+    // (count, hash-sum) is their driver-side fold — count and sum are
+    // associative, so the string is BIT-IDENTICAL to layoutFingerprint's
+    // global agg (no re-materialization on upgrade) — the zcell=−1
+    // group IS the delta count, and the zcell≥0 groups ARE the base
+    // cell rows the DECIDE join previously re-aggregated in a second
+    // corpus-scale job. Group count is bounded by 2^cellBits + 1.
+    val fpFrame = plannedLineage(base, Seq(delta))
+    val fpCols = fpFrame.columns.map(col).toSeq
+    val cellHist = fpFrame.groupBy(col("zcell"))
+      .agg(count(lit(1)).as("__n"),
+        coalesce(sum(hash(fpCols: _*).cast("long")), lit(0L)).as("__h"))
+      .collect()
+    // v3: every commit carries its operation name (round 19, VERDICT
+    // r18 missing #2 — DESCRIBE HISTORY answers over any lineage); the
+    // bump forces stale un-stamped logs through the stamping path
+    val tag = "v3:q4"
+    val fingerprint = s"$tag:${cellHist.map(_.getLong(1)).sum}:" +
+      s"${cellHist.map(_.getLong(2)).sum}"
+    val root = lakeLineage(spark, dir, "lake_e2e", tag, base, Seq(delta), Seq(folded),
+        Some(fingerprint), seed = _.land(delta, "delta", "delta")) { l =>
+      l.rewrite("fold", "fold")(PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
+      l.rewrite("compact", "compact")(writeCompactedFold(spark, folded, _, zcols))
+    }
     val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
-    val boxFilter = col("user_id").between(60, 90) && col("value").between(100.0, 200.0)
-    def emptyEv = spark.range(0).select(col("id").as("event_id"),
-      col("id").as("user_id"), col("id").cast("double").as("value"))
     // Every stage below resolves its file set FROM THE GENERATION LOG
     // (round 18): the manifests, not directory listings, decide which
     // files carry which state — the log is load-bearing, not bolted on.
@@ -888,14 +1065,11 @@ object Layout {
       val rowsDelta = FooterManifest
         .buildFromFiles(spark, g0DeltaFiles, Seq("event_id")).collect()
         .map(r => (r.getString(0), r.getLong(1))).distinct.map(_._2).sum
-      val deltaDf = spark.read
-        .schema("event_id BIGINT, user_id BIGINT, value DOUBLE")
-        .parquet(g0DeltaFiles: _*)
-      val rowsOut1 = (if (keptBaseFiles.isEmpty) emptyEv
-          else spark.read.parquet(keptBaseFiles: _*))
+      val deltaDf = spark.read.schema(LakeSchema).parquet(g0DeltaFiles: _*)
+      val rowsOut1 = readEvents(spark, keptBaseFiles)
         .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
         .unionByName(deltaDf)
-        .where(boxFilter).agg(count(lit(1)).as("rows_out"))
+        .where(lakeBox).agg(count(lit(1)).as("rows_out"))
       spark.range(1).select(
         lit(1L).as("stage"), lit("merge_on_read").as("state"),
         lit(baseRows.map(_.getAs[String]("file")).distinct.length.toLong
@@ -912,63 +1086,14 @@ object Layout {
       val mRows = m.collect()
       val kept = FooterManifest.filesToReadLocal(mRows, numBox)
       val keptFiles = kept.map(_._1)
-      val rowsOut = (if (keptFiles.isEmpty) emptyEv
-          else spark.read.parquet(keptFiles: _*))
-        .where(boxFilter).agg(count(lit(1)).as("rows_out"))
+      val rowsOut = readEvents(spark, keptFiles)
+        .where(lakeBox).agg(count(lit(1)).as("rows_out"))
       spark.range(1).select(
         lit(stage).as("stage"), lit(state).as("state"),
         lit(mRows.map(_.getAs[String]("file")).distinct.length.toLong).as("files_total"),
         lit(keptFiles.size.toLong).as("files_read"),
         lit(kept.map(_._2).sum).as("rows_scanned"))
         .crossJoin(broadcast(rowsOut))
-    }
-    // eager phase — fingerprint, writes, decision: the cached lineage
-    // frames release even when any of it throws (round-15 review; the
-    // happy path alone left three frames pinned on failure)
-    val (amp, stageTasks) = try {
-    // ONE corpus pass serves BOTH the fingerprint and the DECIDE cell
-    // histogram (round 21, guide §1.2 — fewer passes before anything
-    // else): the fingerprint frame grouped by zcell keeps per-cell row
-    // counts and per-cell row-hash sums; the global fingerprint
-    // (count, hash-sum) is their driver-side fold — count and sum are
-    // associative, so the string is BIT-IDENTICAL to layoutFingerprint's
-    // global agg (no re-materialization on upgrade) — the zcell=−1
-    // group IS the delta count, and the zcell≥0 groups ARE the base
-    // cell rows the DECIDE join previously re-aggregated in a second
-    // corpus-scale job. Group count is bounded by 2^cellBits + 1.
-    val fpFrame = plannedBase.unionByName(
-      delta.withColumn("zcell", lit(-1L))
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell")))
-    val fpCols = fpFrame.columns.map(col).toSeq
-    val cellHist = fpFrame.groupBy(col("zcell"))
-      .agg(count(lit(1)).as("__n"),
-        coalesce(sum(hash(fpCols: _*).cast("long")), lit(0L)).as("__h"))
-      .collect()
-    val fingerprint = s"v3:q4:${cellHist.map(_.getLong(1)).sum}:" +
-      s"${cellHist.map(_.getLong(2)).sum}"
-    // v3: every commit carries its operation name (round 19, VERDICT
-    // r18 missing #2 — DESCRIBE HISTORY answers over any lineage); the
-    // bump forces stale un-stamped logs through the stamping path
-    materializeIfChanged(root, fingerprint) {
-      // wipe so the log restarts at generation 0 with the data
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
-      PartitionedSink.writeZCelled(base, s"$root/base", zcols, 12, 6)
-      delta.coalesce(1).write.mode("overwrite").parquet(s"$root/delta")
-      val g0Refs = listParquetFiles(spark, s"$root/base").map("base" -> _) ++
-        listParquetFiles(spark, s"$root/delta").map("delta" -> _)
-      require(commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
-        Some((-1, Set.empty[String]))) == 0)
-      PartitionedSink.writeZCelled(folded, s"$root/fold", zcols, 12, 6)
-      val g1Refs = listParquetFiles(spark, s"$root/fold").map("base" -> _)
-      require(commitNextGeneration(root, g1Refs :+ ("op" -> "fold"),
-        Some((0, g0Refs.map(_._2).toSet))) == 1)
-      writeCompactedFold(spark, folded, s"$root/compact", zcols)
-      require(commitNextGeneration(root,
-        listParquetFiles(spark, s"$root/compact").map("base" -> _)
-          :+ ("op" -> "compact"),
-        Some((1, g1Refs.map(_._2).toSet))) == 2)
     }
     // the three stage chains are independent given the committed log —
     // kick them NOW so their eager manifest jobs overlap the DECIDE
@@ -982,22 +1107,15 @@ object Layout {
     // the fingerprint pass above; only the delta's DISTINCT grid cells
     // (≤ 2^cellBits rows) still need their own delta-scale job, and the
     // intersection sum folds driver-side at cell scale.
-    val bounds = baseBoundsOf(base)
-    val deltaCellSet = cellsUnderBounds(delta, bounds)
+    val deltaCellSet = cellsUnderBounds(delta, baseBoundsOf(base))
       .collect().map(_.getLong(0)).toSet
     val nDelta = cellHist.collectFirst {
       case r if r.getLong(0) == -1L => r.getLong(1) }.getOrElse(0L)
     val rowsRewritten = cellHist
       .filter(r => r.getLong(0) >= 0L && deltaCellSet(r.getLong(0)))
       .map(_.getLong(1)).sum
-    (if (nDelta == 0) 0L else rowsRewritten * 1000 / nDelta, tasks)
-    } finally {
-      // the stage chains read persisted FILES only — never these caches
-      base.unpersist()
-      delta.unpersist()
-      folded.unpersist()
-    }
-    val Seq(s1, s2, s3) = stageTasks.map(_.await)
+    val amp = if (nDelta == 0) 0L else rowsRewritten * 1000 / nDelta
+    val Seq(s1, s2, s3) = tasks.map(_.await)
     s1.unionByName(s2)
       .unionByName(s3)
       .withColumn("amp_x1000", lit(amp))
@@ -1401,80 +1519,35 @@ object Layout {
   def lakeEvolve(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{FooterManifest, PartitionedSink}
     import org.apache.spark.sql.types.StructType
-    val root = scratchDir("lake_evolve", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0)))
+    val zcols = LakeZCols
+    val (_, base, arrival) = lakeSplit(spark, dir)
+    val delta = arrival
       .withColumn("score", (floor(col("value")) + lit(1000L)).cast("double"))
-      .persist()
     // evolved newest-wins fold: allowMissingColumns NULL-fills `score`
     // on the surviving base rows — the schema-evolution union
     val folded = base
       .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
       .unionByName(delta, allowMissingColumns = true)
-      .persist()
-    try {
-      // fingerprint coverage as lakeE2e: plannedBase's zcell covers base
-      // content + all grid formulas; the delta rows (zcell −1) cover the
-      // evolved arrival content INCLUDING the new column's values
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"),
-          lit(null).cast("double").as("score"), col("zcell"))
-      // v2: the evolution's three states COMMIT to the generation log
-      // (round 18 — an evolved arrival is a commit like any other; the
-      // log's AS-OF read answers the core projection from any of them)
-      // v4: op-stamped commits (round 19)
-      materializeIfChanged(root, layoutFingerprint("v4:evolve",
-          plannedBase.unionByName(
-            delta.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"),
-                col("score"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        // ONE evolving table dir: old-schema base cells + the evolved
-        // delta as the unfolded-arrivals partition. Each commit also
-        // fixes the catalog's READ SCHEMA of its era (`schema` entry —
-        // the metadata-action analogue): AS OF g0 the table simply has
-        // no `score` column; the evolution itself is time-travelable
-        val preSchema = "event_id BIGINT, user_id BIGINT, value DOUBLE"
-        val evolvedSchema = s"$preSchema, score DOUBLE"
-        PartitionedSink.writeZCelled(base, s"$root/tbl", zcols, 12, 6)
-        val g0Refs = listParquetFiles(spark, s"$root/tbl").map("base" -> _)
-        require(commitNextGeneration(root,
-          g0Refs ++ Seq("schema" -> preSchema, "op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        delta.coalesce(1).write.mode("overwrite").parquet(s"$root/tbl/zcell=-1")
-        val g1Refs = g0Refs ++
-          listParquetFiles(spark, s"$root/tbl/zcell=-1").map("delta" -> _)
-        // read sets carry FILES only — metadata entries never
-        // participate in conflict detection (round 19, ADVICE r18 #1;
-        // the schema strings previously stuffed in here were a
-        // workaround for the old whole-manifest subset test)
-        require(commitNextGeneration(root,
-          g1Refs ++ Seq("schema" -> evolvedSchema, "op" -> "evolve"),
-          Some((0, g0Refs.map(_._2).toSet))) == 1)
-        PartitionedSink.writeZCelled(folded, s"$root/fold", zcols, 12, 6)
-        require(commitNextGeneration(root,
-          listParquetFiles(spark, s"$root/fold").map("base" -> _)
-            ++ Seq("schema" -> evolvedSchema, "op" -> "fold"),
-          Some((1, g1Refs.map(_._2).toSet))) == 2)
-      }
-    } finally {
-      // everything below reads persisted FILES only
-      base.unpersist()
-      delta.unpersist()
-      folded.unpersist()
+    // ONE evolving table dir: old-schema base cells + the evolved delta
+    // as the unfolded-arrivals partition. Each commit also fixes the
+    // catalog's READ SCHEMA of its era (`schema` entry — the
+    // metadata-action analogue): AS OF g0 the table simply has no
+    // `score` column; the evolution itself is time-travelable. Read
+    // sets carry FILES only — metadata entries never participate in
+    // conflict detection (round 19, ADVICE r18 #1).
+    // v2: the evolution's three states COMMIT to the generation log
+    // (round 18); v4: op-stamped commits (round 19). The delta rows'
+    // fingerprint covers the evolved arrival INCLUDING the new column.
+    val evolvedSchema = s"$LakeSchema, score DOUBLE"
+    val root = lakeLineage(spark, dir, "lake_evolve", "v4:evolve", base, Seq(delta),
+        Seq(folded), baseDir = "tbl", seed = _ => Seq("schema" -> LakeSchema)) { l =>
+      l.arrive("evolve", "delta", "tbl/zcell=-1", delta, "schema" -> evolvedSchema)
+      l.rewrite("fold", "fold", "schema" -> evolvedSchema)(
+        PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
     }
     val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
     val scoreBox = Map("score" -> ((1100.0, 1200.0)))
-    def emptyEvolved = spark.range(0).select(col("id").as("event_id"),
-      col("id").as("user_id"), col("id").cast("double").as("value"),
-      col("id").cast("double").as("score"))
+    def emptyEvolved = emptyEvents(spark).withColumn("score", lit(null).cast("double"))
     // shared answered-rows report: count, evolved-column coverage, and
     // the exact integer checksum of the carried score values
     def outAgg(df: DataFrame, filter: Column): DataFrame = df.where(filter)
@@ -1596,80 +1669,38 @@ object Layout {
     * aggregate columns are the only broadcasts. */
   def lakeWiden(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{FooterManifest, PartitionedSink}
-    val root = scratchDir("lake_widen", dir)
-    val zcols = Seq("user_id", "value")
-    val wideSchema = "event_id BIGINT, user_id BIGINT, value DOUBLE"
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0))).persist()
-    def emptyWide = spark.range(0).select(col("id").as("event_id"),
-      col("id").as("user_id"), col("id").cast("double").as("value"))
-    try {
-      // fingerprint coverage as lakeE2e: plannedBase's zcell covers base
-      // content + all grid formulas; the delta rows (zcell −1) cover the
-      // arrival content. The narrow cast changes no VALUE, so the
-      // fingerprint is width-agnostic BY VALUE — the physical widths of
-      // the two eras are encoded in the tag itself (ADVICE r17), so a
-      // future change to the narrow-era cast forces re-materialization
-      // mechanically instead of by someone remembering to bump a label.
-      // v2: the widening's three states COMMIT to the generation log
-      // (round 18; the AS-OF read IS the catalog's promotion read).
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
-      // v4: op-stamped commits (round 19)
-      materializeIfChanged(root, layoutFingerprint("v4:widen:int32->int64",
-          plannedBase.unionByName(
-            delta.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        // the NARROW era: base files persist user_id as INT32 (the cast
-        // is lossless — ids of the era provably fit), z-celled as usual;
-        // quantization runs on the VALUES, so the cell grid is identical
-        // to the wide frame's
-        PartitionedSink.writeZCelled(
-          base.withColumn("user_id", col("user_id").cast("int")),
-          s"$root/tbl", zcols, 12, 6)
-        // the narrow era's CATALOG schema rides the commit (`schema`
-        // entry): AS OF g0 the column IS an INT — the widening itself
-        // is time-travelable
-        val narrowSchema = "event_id BIGINT, user_id INT, value DOUBLE"
-        val g0Refs = listParquetFiles(spark, s"$root/tbl").map("base" -> _)
-        require(commitNextGeneration(root,
-          g0Refs ++ Seq("schema" -> narrowSchema, "op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        // the WIDE era: the arrival delta ships user_id as INT64, into
-        // the same table dir as the unfolded-arrivals partition
-        delta.coalesce(1).write.mode("overwrite").parquet(s"$root/tbl/zcell=-1")
-        val g1Refs = g0Refs ++
-          listParquetFiles(spark, s"$root/tbl/zcell=-1").map("delta" -> _)
-        require(commitNextGeneration(root,
-          g1Refs ++ Seq("schema" -> wideSchema, "op" -> "widen"),
-          Some((0, g0Refs.map(_._2).toSet))) == 1)
-        // FOLD THROUGH THE WIDE SCHEMA: consume the PERSISTED narrow
-        // files via the promotion read — the upgrade moment — and land
-        // uniformly-wide cells under re-quantized merged bounds
-        val baseFiles = g0Refs.map(_._2)
-        val baseBack = if (baseFiles.isEmpty) emptyWide
-          else spark.read.schema(wideSchema).parquet(baseFiles: _*)
-        val deltaBack = spark.read.schema(wideSchema).parquet(s"$root/tbl/zcell=-1")
-        val folded = baseBack
-          .join(deltaBack.select(col("event_id")), Seq("event_id"), "left_anti")
-          .unionByName(deltaBack)
-        PartitionedSink.writeZCelled(folded, s"$root/fold", zcols, 12, 6)
-        require(commitNextGeneration(root,
-          listParquetFiles(spark, s"$root/fold").map("base" -> _)
-            ++ Seq("schema" -> wideSchema, "op" -> "fold"),
-          Some((1, g1Refs.map(_._2).toSet))) == 2)
-      }
-    } finally {
-      // everything below reads persisted FILES only
-      base.unpersist()
-      delta.unpersist()
+    val zcols = LakeZCols
+    val (_, base, delta) = lakeSplit(spark, dir)
+    // the NARROW era: base files persist user_id as INT32 (the cast is
+    // lossless — ids of the era provably fit), z-celled as usual;
+    // quantization runs on the VALUES, so the cell grid is identical to
+    // the wide frame's. The narrow cast changes no VALUE, so the
+    // fingerprint is width-agnostic BY VALUE — the physical widths of
+    // the two eras are encoded in the tag itself (ADVICE r17), so a
+    // future change to the narrow-era cast forces re-materialization
+    // mechanically instead of by someone remembering to bump a label.
+    // v2: the widening's three states COMMIT to the generation log
+    // (round 18; the AS-OF read IS the catalog's promotion read);
+    // v4: op-stamped commits (round 19).
+    val narrowBase = base.withColumn("user_id", col("user_id").cast("int"))
+    val root = lakeLineage(spark, dir, "lake_widen", "v4:widen:int32->int64",
+        narrowBase, Seq(delta), baseDir = "tbl",
+        // the narrow era's CATALOG schema rides the commit: AS OF g0 the
+        // column IS an INT — the widening itself is time-travelable
+        seed = _ => Seq("schema" -> "event_id BIGINT, user_id INT, value DOUBLE")) { l =>
+      val g0Files = l.tipRefs.map(_._2)
+      // the WIDE era: the arrival delta ships user_id as INT64, into the
+      // same table dir as the unfolded-arrivals partition
+      l.arrive("widen", "delta", "tbl/zcell=-1", delta, "schema" -> LakeSchema)
+      // FOLD THROUGH THE WIDE SCHEMA: consume the PERSISTED narrow files
+      // via the promotion read — the upgrade moment — and land
+      // uniformly-wide cells under re-quantized merged bounds
+      val deltaBack = spark.read.schema(LakeSchema).parquet(s"${l.root}/tbl/zcell=-1")
+      val folded = readEvents(spark, g0Files)
+        .join(deltaBack.select(col("event_id")), Seq("event_id"), "left_anti")
+        .unionByName(deltaBack)
+      l.rewrite("fold", "fold", "schema" -> LakeSchema)(
+        PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
     }
     val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
     val uidBox = Map("user_id" -> ((3.0, 9.0)))
@@ -1702,14 +1733,12 @@ object Layout {
     val (baseMRows, rowsDelta, g1DeltaFiles) = mixedTask.await
     val mfRows = foldTask.await
     val baseFilesTotal = baseMRows.map(_.getAs[String]("file")).distinct.length.toLong
-    val deltaDf = spark.read.schema(wideSchema).parquet(g1DeltaFiles: _*)
+    val deltaDf = spark.read.schema(LakeSchema).parquet(g1DeltaFiles: _*)
     def mixedStage(stage: Long, state: String,
         box: Map[String, (Double, Double)], filter: Column): DataFrame = {
       val kept = FooterManifest.filesToReadLocal(baseMRows.toSeq, box)
       val keptFiles = kept.map(_._1)
-      val baseKept = if (keptFiles.isEmpty) emptyWide
-        else spark.read.schema(wideSchema).parquet(keptFiles: _*)
-      val merged = baseKept
+      val merged = readEvents(spark, keptFiles)
         .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
         .unionByName(deltaDf)
       spark.range(1).select(
@@ -1722,8 +1751,7 @@ object Layout {
     // STAGE 2 — the uniformly-wide folded generation's footers
     val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, numBox)
     val keptFFiles = keptF.map(_._1)
-    val answeredF = if (keptFFiles.isEmpty) emptyWide
-      else spark.read.schema(wideSchema).parquet(keptFFiles: _*)
+    val answeredF = readEvents(spark, keptFFiles)
     val s2 = spark.range(1).select(
       lit(2L).as("stage"), lit("folded_wide").as("state"),
       lit(mfRows.map(_.getAs[String]("file")).distinct.length.toLong).as("files_total"),
@@ -1783,65 +1811,29 @@ object Layout {
     * eager footer scans just to reach the log. */
   private def ensureDeleteLog(spark: SparkSession, dir: String): String = {
     import graft.sources.PartitionedSink
-    val root = scratchDir("lake_delete", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
-    val upserts = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0)))
-      .withColumn("op", lit("U"))
+    val (ev, base, arrival) = lakeSplit(spark, dir)
+    val upserts = arrival.withColumn("op", lit("U"))
     // an erasure request carries the KEY, never the payload
     val tombstones = ev.where(pmod(col("event_id"), lit(100)) === 3)
       .select(col("event_id"),
         lit(null).cast("bigint").as("user_id"),
         lit(null).cast("double").as("value"),
         lit("D").as("op"))
-    val delta = upserts.unionByName(tombstones).persist()
-    try {
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"),
-          lit("B").as("op"), col("zcell"))
-      // v2: the tombstone lineage's three states COMMIT to the
-      // generation log (round 18) — the CRUD arrival lands as kind
-      // `cdelta`, so [[readLakeAsOf]] applies the erasures at merge
-      // time from the manifest alone (AS-OF g1 is already
-      // tombstone-complete; AS-OF g2 is the physical erasure)
-      // v3: op-stamped commits (round 19)
-      materializeIfChanged(root, layoutFingerprint("v3:delete",
-          plannedBase.unionByName(
-            delta.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"),
-                col("op"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        PartitionedSink.writeZCelled(base, s"$root/base", zcols, 12, 6)
-        val g0Refs = listParquetFiles(spark, s"$root/base").map("base" -> _)
-        require(commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        delta.coalesce(1).write.mode("overwrite").parquet(s"$root/delta")
-        val g1Refs = g0Refs ++
-          listParquetFiles(spark, s"$root/delta").map("cdelta" -> _)
-        require(commitNextGeneration(root, g1Refs :+ ("op" -> "delete"),
-          Some((0, g0Refs.map(_._2).toSet))) == 1)
-        // the fold: ALL delta keys supersede their base versions; only
-        // the upserts re-enter — tombstoned rows are physically gone
-        val folded = base
-          .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-          .unionByName(upserts.drop("op"))
-        PartitionedSink.writeZCelled(folded, s"$root/fold", zcols, 12, 6)
-        require(commitNextGeneration(root,
-          listParquetFiles(spark, s"$root/fold").map("base" -> _)
-            :+ ("op" -> "fold"),
-          Some((1, g1Refs.map(_._2).toSet))) == 2)
-      }
-    } finally {
-      base.unpersist()
-      delta.unpersist()
+    val delta = upserts.unionByName(tombstones)
+    // v2: the tombstone lineage's three states COMMIT to the generation
+    // log (round 18) — the CRUD arrival lands as kind `cdelta`, so
+    // [[readLakeAsOf]] applies the erasures at merge time from the
+    // manifest alone (AS-OF g1 is already tombstone-complete; AS-OF g2
+    // is the physical erasure); v3: op-stamped commits (round 19)
+    lakeLineage(spark, dir, "lake_delete", "v3:delete", base, Seq(delta)) { l =>
+      l.arrive("delete", "cdelta", "delta", delta)
+      // the fold: ALL delta keys supersede their base versions; only
+      // the upserts re-enter — tombstoned rows are physically gone
+      val folded = base
+        .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
+        .unionByName(arrival)
+      l.rewrite("fold", "fold")(PartitionedSink.writeZCelled(folded, _, LakeZCols, 12, 6))
     }
-    root
   }
 
   def lakeDelete(spark: SparkSession, dir: String): DataFrame = {
@@ -1849,16 +1841,13 @@ object Layout {
     val root = ensureDeleteLog(spark, dir)
     val zcols = Seq("user_id", "value")
     val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
-    def emptyEv = spark.range(0).select(col("id").as("event_id"),
-      col("id").as("user_id"), col("id").cast("double").as("value"))
     // file sets resolve FROM THE GENERATION LOG (round 18): g1 carries
     // the base refs + the CRUD arrival (kind cdelta), g2 the fold
     val g1 = readGeneration(root, 1)
     val g1BaseFiles = g1.collect { case ("base", f) => f }
     val cdeltaFiles = g1.collect { case ("cdelta", f) => f }
     val foldFiles = readGeneration(root, 2).collect { case ("base", f) => f }
-    val deltaSchema = "event_id BIGINT, user_id BIGINT, value DOUBLE, op STRING"
-    val deltaDf = spark.read.schema(deltaSchema).parquet(cdeltaFiles: _*)
+    val deltaDf = spark.read.schema(s"$LakeSchema, op STRING").parquet(cdeltaFiles: _*)
     // the erasure accounting, from the persisted lineage, in ONE
     // DEFERRED aggregate (round 18, VERDICT r17 wrong #2 — was three
     // eager driver actions plus two rebuilt tombstone frames): the
@@ -1868,14 +1857,10 @@ object Layout {
     // (tombstoned keys surviving in the END state's files — must be
     // zero) is the compliance observable; distinct counts are sound
     // because an erasure request carries each key once.
-    def readRefs(files: Seq[String]): DataFrame =
-      if (files.isEmpty) emptyEv
-      else spark.read.schema("event_id BIGINT, user_id BIGINT, value DOUBLE")
-        .parquet(files: _*)
     val tombKeys = deltaDf.where(col("op") === "D").select(col("event_id"))
-    val probes = readRefs(g1BaseFiles)
+    val probes = readEvents(spark, g1BaseFiles)
       .select(col("event_id"), lit("base").as("src"))
-      .unionByName(readRefs(foldFiles)
+      .unionByName(readEvents(spark, foldFiles)
         .select(col("event_id"), lit("fold").as("src")))
     val erasureAcc = tombKeys.join(probes, Seq("event_id"), "left_outer")
       .agg(count_distinct(col("event_id")).as("n_tombstones"),
@@ -1900,8 +1885,7 @@ object Layout {
     // STAGE 1 — merge-on-read with tombstones over pruned base footers
     val kept = FooterManifest.filesToReadLocal(mRows.toSeq, numBox)
     val keptFiles = kept.map(_._1)
-    val merged1 = (if (keptFiles.isEmpty) emptyEv
-        else spark.read.parquet(keptFiles: _*))
+    val merged1 = readEvents(spark, keptFiles)
       .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
       .unionByName(deltaDf.where(col("op") === "U").drop("op"))
     val boxCount1 = merged1.where(lakeBox).agg(count(lit(1)).as("rows_out"))
@@ -1915,8 +1899,7 @@ object Layout {
     // STAGE 2 — the folded (physically erased) generation's footers
     val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, numBox)
     val keptFFiles = keptF.map(_._1)
-    val boxCount2 = (if (keptFFiles.isEmpty) emptyEv
-        else spark.read.parquet(keptFFiles: _*))
+    val boxCount2 = readEvents(spark, keptFFiles)
       .where(lakeBox).agg(count(lit(1)).as("rows_out"))
     val s2 = spark.range(1).select(
       lit(2L).as("stage"), lit("folded_erased").as("state"),
@@ -2163,178 +2146,145 @@ object Layout {
     * report read-back. */
   def lakeVacuum(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{FooterManifest, PartitionedSink}
-    val root = scratchDir("lake_vacuum", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0))).persist()
+    val zcols = LakeZCols
+    val (_, base, delta) = lakeSplit(spark, dir)
     val folded = base
       .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(delta).persist()
-    try {
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
-      // v6: consumer staleness bound + oracle-gated log cleanup
-      // (round 20) — a stale v5 root lacks the second cursor and the
-      // expired-log window and must re-materialize through the new
-      // shape
-      materializeIfChanged(root, layoutFingerprint("v6:vacuum",
-          plannedBase.unionByName(
-            delta.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        // the three commits, each generation's manifest written the
-        // moment its files exist (same log shape as lakeTimetravel),
-        // all through the validated optimistic append
-        PartitionedSink.writeZCelled(base, s"$root/data/base", zcols, 12, 6)
-        delta.coalesce(1).write.mode("overwrite").parquet(s"$root/data/delta")
-        val g0Refs = listParquetFiles(spark, s"$root/data/base").map("base" -> _) ++
-          listParquetFiles(spark, s"$root/data/delta").map("delta" -> _)
-        require(commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        PartitionedSink.writeZCelled(folded, s"$root/data/fold", zcols, 12, 6)
-        val g1Refs = listParquetFiles(spark, s"$root/data/fold").map("base" -> _)
-        require(commitNextGeneration(root, g1Refs :+ ("op" -> "fold"),
-          Some((0, g0Refs.map(_._2).toSet))) == 1)
-        writeCompactedFold(spark, folded, s"$root/data/compact", zcols)
-        require(commitNextGeneration(root,
-          listParquetFiles(spark, s"$root/data/compact").map("base" -> _)
-            :+ ("op" -> "compact"),
-          Some((1, g1Refs.map(_._2).toSet))) == 2)
-        // a CDC consumer registers its checkpoint at g1 (round 19,
-        // VERDICT r18 missing #3): the retention window below keeps
-        // only the newest generation by count — g1 survives BECAUSE a
-        // registered consumer still needs it as its next probe epoch,
-        // so feed(1) over this log stays answerable by construction
-        registerCursor(root, "replica", 1)
-        // ... and a consumer that DIED at g0: more than
-        // VacuumMaxCursorLag behind the tip, its checkpoint must be
-        // overridden — reported, not honored — or one dead consumer
-        // would pin the whole log forever (round 20, VERDICT r19
-        // missing #3)
-        registerCursor(root, "stale_replica", 0)
-        val gens = listGenerations(root)
-        val tip = gens.last
-        def staleCursorCount(): Long = readCursors(root)
-          .count { case (_, g) => tip - g > VacuumMaxCursorLag }.toLong
-        // the EFFECTIVE floor — the one retention respects after the
-        // staleness override
-        // minOption (round 21, ADVICE r20 #4): were EVERY registered
-        // cursor stale (none within the lag bound), .min on the empty
-        // collection would crash the report path — degrade to −1 ("no
-        // fresh cursor floors retention"), the same no-floor answer
-        // retainedGenerations' own minOption path takes
-        val cursorFloor = readCursors(root)
-          .collect { case (_, g) if tip - g <= VacuumMaxCursorLag => g }
-          .minOption.map(_.toLong).getOrElse(-1L)
-        // the about-to-expire generation must agree BEFORE it goes
-        val rowsOutBefore = readLakeAsOf(spark, root, 0).where(lakeBox).count()
-        // dead row mass from footers — distributed, the driver only
-        // ever holds the name list
-        def deadRowMass(toDelete: Seq[String]): Long =
-          if (toDelete.isEmpty) 0L
-          else FooterManifest.buildFromFiles(spark, toDelete, Seq("event_id"))
-            .agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0)
-        // DRY RUN (round 18; independently derived round 19, ADVICE r18
-        // #3): the report an operator signs off on — its OWN policy
-        // evaluation, plan, and footer sum, settled with NOTHING
-        // deleted; every planned-dead file must still be on disk and
-        // the about-to-expire g0 must still answer. RETENTION:
-        // deletable iff unreferenced by every retained generation —
-        // keep-last-1 by count PLUS the registered consumer floor
-        // (minAgeMs=0 keeps the replay deterministic for the oracle;
-        // the age half of the knob is spec-pinned with controlled
-        // mtimes)
-        val retainedDry = retainedGenerations(root, VacuumRetainGenerations,
-          0L, java.lang.System.currentTimeMillis(), Some(VacuumMaxCursorLag))
-        val (allDry, liveDry, toDeleteDry) = vacuumPlan(spark, root, retainedDry)
-        val rowsDeletedDry = deadRowMass(toDeleteDry)
-        val staleDry = staleCursorCount()
-        // the PLANNED log window after cleanup: manifests below the
-        // retained floor expire
-        val logFloorDry = retainedDry.min.toLong
-        val nLogExpiredDry = gens.count(_ < retainedDry.min).toLong
-        require(toDeleteDry.forall(f =>
-            fs.exists(new org.apache.hadoop.fs.Path(f))),
-          "dry run must leave every planned-dead file on disk")
-        val dryPrev = readLakeAsOf(spark, root, retainedDry.head)
-          .where(lakeBox).count()
-        val dryAfter = readLakeAsOf(spark, root, retainedDry.last)
-          .where(lakeBox).count()
-        // EXECUTE — a SECOND, independent policy evaluation + plan +
-        // footer sum (never the dry run's values), so the report's
-        // dry_run == vacuum column equality is a real plan-vs-execution
-        // check instead of true by construction (ADVICE r18 #3)
-        val retained = retainedGenerations(root, VacuumRetainGenerations,
-          0L, java.lang.System.currentTimeMillis(), Some(VacuumMaxCursorLag))
-        val (all, liveSet, toDelete) = vacuumPlan(spark, root, retained)
-        val rowsDeleted = deadRowMass(toDelete)
-        val staleExec = staleCursorCount()
-        // LOG CLEANUP FIRST (round 21, ADVICE r20 #3): expire the
-        // below-floor manifests BEFORE deleting their exclusive data
-        // files — a crash between the two then leaves dead files as
-        // re-vacuumable garbage behind a consistent log, instead of
-        // below-floor manifests (and TIMESTAMP AS OF resolution) still
-        // addressing generations whose files are gone (a raw
-        // FileNotFound instead of the documented "expired generation
-        // is not a readable state"). expireLogEntries anchors the
-        // floor with its own checkpoint before any manifest delete, so
-        // the window keeps reconstructing either way.
-        expireLogEntries(root, retained.min)
-        toDelete.foreach(f =>
-          fs.delete(new org.apache.hadoop.fs.Path(f), false))
-        // the executed row's survivors come from RE-LISTING the
-        // filesystem after the deletion — what is actually on disk,
-        // not what the plan said would be: the safety property (every
-        // retained-generation reference survived) and the accounting
-        // (deleted = before − after) are both read back from reality
-        val afterList = listParquetFiles(spark, s"$root/data").toSet
-        require(liveSet.subsetOf(afterList),
-          "vacuum deleted a retained-generation file")
-        require(toDelete.forall(!afterList.contains(_)),
-          "vacuum left a planned-dead file on disk")
-        // the executed row's log window is RE-LISTED from the
-        // filesystem (the cleanup itself ran above, before the data
-        // deletion), never taken from the plan
-        val logAfter = listGenerations(root)
-        require(logAfter == gens.filter(_ >= retained.min),
-          "log cleanup must leave exactly the retained-floor window")
-        // the answers must survive the deletion AND the log cleanup:
-        // the current state and the still-retained previous generation
-        // (the reader the consumer floor exists to protect), both read
-        // through the post-cleanup log
-        val rowsOutAfter = readLakeAsOf(spark, root, retained.last)
-          .where(lakeBox).count()
-        val rowsOutPrev = readLakeAsOf(spark, root, retained.head)
-          .where(lakeBox).count()
-        import spark.implicits._
-        Seq(
-          ("dry_run", gens.size.toLong, retainedDry.size.toLong,
-            allDry.size.toLong, liveDry.size.toLong,
-            toDeleteDry.size.toLong, rowsDeletedDry,
-            rowsOutBefore, dryPrev, dryAfter, cursorFloor, staleDry,
-            logFloorDry, gens.last.toLong, nLogExpiredDry),
-          ("vacuum", gens.size.toLong, retained.size.toLong, all.size.toLong,
-            afterList.size.toLong, all.size.toLong - afterList.size.toLong,
-            rowsDeleted, rowsOutBefore, rowsOutPrev, rowsOutAfter,
-            cursorFloor, staleExec,
-            logAfter.min.toLong, logAfter.max.toLong,
-            (gens.size - logAfter.size).toLong))
-          .toDF("mode", "n_gens", "n_retained", "files_before", "files_live",
-            "files_deleted", "rows_deleted", "rows_out_before",
-            "rows_out_prev_gen", "rows_out_after", "cursor_floor",
-            "n_stale_cursors", "log_floor", "log_tip", "n_log_expired")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/report")
-      }
-    } finally {
-      base.unpersist()
-      delta.unpersist()
-      folded.unpersist()
+      .unionByName(delta)
+    // v6: consumer staleness bound + oracle-gated log cleanup (round 20)
+    // — a stale v5 root lacks the second cursor and the expired-log
+    // window and must re-materialize through the new shape. The three
+    // commits are the timetravel lineage's log shape, each generation's
+    // manifest written the moment its files exist.
+    val root = lakeLineage(spark, dir, "lake_vacuum", "v6:vacuum", base, Seq(delta),
+        Seq(folded), baseDir = "data/base", seed = _.land(delta, "delta", "data/delta")) { l =>
+      val fs = l.fs
+      l.rewrite("fold", "data/fold")(PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
+      l.rewrite("compact", "data/compact")(writeCompactedFold(spark, folded, _, zcols))
+      // a CDC consumer registers its checkpoint at g1 (round 19,
+      // VERDICT r18 missing #3): the retention window below keeps
+      // only the newest generation by count — g1 survives BECAUSE a
+      // registered consumer still needs it as its next probe epoch,
+      // so feed(1) over this log stays answerable by construction
+      registerCursor(l.root, "replica", 1)
+      // ... and a consumer that DIED at g0: more than
+      // VacuumMaxCursorLag behind the tip, its checkpoint must be
+      // overridden — reported, not honored — or one dead consumer
+      // would pin the whole log forever (round 20, VERDICT r19
+      // missing #3)
+      registerCursor(l.root, "stale_replica", 0)
+      val gens = listGenerations(l.root)
+      val tip = gens.last
+      def staleCursorCount(): Long = readCursors(l.root)
+        .count { case (_, g) => tip - g > VacuumMaxCursorLag }.toLong
+      // the EFFECTIVE floor — the one retention respects after the
+      // staleness override
+      // minOption (round 21, ADVICE r20 #4): were EVERY registered
+      // cursor stale (none within the lag bound), .min on the empty
+      // collection would crash the report path — degrade to −1 ("no
+      // fresh cursor floors retention"), the same no-floor answer
+      // retainedGenerations' own minOption path takes
+      val cursorFloor = readCursors(l.root)
+        .collect { case (_, g) if tip - g <= VacuumMaxCursorLag => g }
+        .minOption.map(_.toLong).getOrElse(-1L)
+      // the about-to-expire generation must agree BEFORE it goes
+      val rowsOutBefore = readLakeAsOf(spark, l.root, 0).where(lakeBox).count()
+      // dead row mass from footers — distributed, the driver only
+      // ever holds the name list
+      def deadRowMass(toDelete: Seq[String]): Long =
+        if (toDelete.isEmpty) 0L
+        else FooterManifest.buildFromFiles(spark, toDelete, Seq("event_id"))
+          .agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0)
+      // DRY RUN (round 18; independently derived round 19, ADVICE r18
+      // #3): the report an operator signs off on — its OWN policy
+      // evaluation, plan, and footer sum, settled with NOTHING
+      // deleted; every planned-dead file must still be on disk and
+      // the about-to-expire g0 must still answer. RETENTION:
+      // deletable iff unreferenced by every retained generation —
+      // keep-last-1 by count PLUS the registered consumer floor
+      // (minAgeMs=0 keeps the replay deterministic for the oracle;
+      // the age half of the knob is spec-pinned with controlled
+      // mtimes)
+      val retainedDry = retainedGenerations(l.root, VacuumRetainGenerations,
+        0L, java.lang.System.currentTimeMillis(), Some(VacuumMaxCursorLag))
+      val (allDry, liveDry, toDeleteDry) = vacuumPlan(spark, l.root, retainedDry)
+      val rowsDeletedDry = deadRowMass(toDeleteDry)
+      val staleDry = staleCursorCount()
+      // the PLANNED log window after cleanup: manifests below the
+      // retained floor expire
+      val logFloorDry = retainedDry.min.toLong
+      val nLogExpiredDry = gens.count(_ < retainedDry.min).toLong
+      require(toDeleteDry.forall(f =>
+          fs.exists(new org.apache.hadoop.fs.Path(f))),
+        "dry run must leave every planned-dead file on disk")
+      val dryPrev = readLakeAsOf(spark, l.root, retainedDry.head)
+        .where(lakeBox).count()
+      val dryAfter = readLakeAsOf(spark, l.root, retainedDry.last)
+        .where(lakeBox).count()
+      // EXECUTE — a SECOND, independent policy evaluation + plan +
+      // footer sum (never the dry run's values), so the report's
+      // dry_run == vacuum column equality is a real plan-vs-execution
+      // check instead of true by construction (ADVICE r18 #3)
+      val retained = retainedGenerations(l.root, VacuumRetainGenerations,
+        0L, java.lang.System.currentTimeMillis(), Some(VacuumMaxCursorLag))
+      val (all, liveSet, toDelete) = vacuumPlan(spark, l.root, retained)
+      val rowsDeleted = deadRowMass(toDelete)
+      val staleExec = staleCursorCount()
+      // LOG CLEANUP FIRST (round 21, ADVICE r20 #3): expire the
+      // below-floor manifests BEFORE deleting their exclusive data
+      // files — a crash between the two then leaves dead files as
+      // re-vacuumable garbage behind a consistent log, instead of
+      // below-floor manifests (and TIMESTAMP AS OF resolution) still
+      // addressing generations whose files are gone (a raw
+      // FileNotFound instead of the documented "expired generation
+      // is not a readable state"). expireLogEntries anchors the
+      // floor with its own checkpoint before any manifest delete, so
+      // the window keeps reconstructing either way.
+      expireLogEntries(l.root, retained.min)
+      toDelete.foreach(f =>
+        fs.delete(new org.apache.hadoop.fs.Path(f), false))
+      // the executed row's survivors come from RE-LISTING the
+      // filesystem after the deletion — what is actually on disk,
+      // not what the plan said would be: the safety property (every
+      // retained-generation reference survived) and the accounting
+      // (deleted = before − after) are both read back from reality
+      val afterList = listParquetFiles(spark, s"${l.root}/data").toSet
+      require(liveSet.subsetOf(afterList),
+        "vacuum deleted a retained-generation file")
+      require(toDelete.forall(!afterList.contains(_)),
+        "vacuum left a planned-dead file on disk")
+      // the executed row's log window is RE-LISTED from the
+      // filesystem (the cleanup itself ran above, before the data
+      // deletion), never taken from the plan
+      val logAfter = listGenerations(l.root)
+      require(logAfter == gens.filter(_ >= retained.min),
+        "log cleanup must leave exactly the retained-floor window")
+      // the answers must survive the deletion AND the log cleanup:
+      // the current state and the still-retained previous generation
+      // (the reader the consumer floor exists to protect), both read
+      // through the post-cleanup log
+      val rowsOutAfter = readLakeAsOf(spark, l.root, retained.last)
+        .where(lakeBox).count()
+      val rowsOutPrev = readLakeAsOf(spark, l.root, retained.head)
+        .where(lakeBox).count()
+      import spark.implicits._
+      Seq(
+        ("dry_run", gens.size.toLong, retainedDry.size.toLong,
+          allDry.size.toLong, liveDry.size.toLong,
+          toDeleteDry.size.toLong, rowsDeletedDry,
+          rowsOutBefore, dryPrev, dryAfter, cursorFloor, staleDry,
+          logFloorDry, gens.last.toLong, nLogExpiredDry),
+        ("vacuum", gens.size.toLong, retained.size.toLong, all.size.toLong,
+          afterList.size.toLong, all.size.toLong - afterList.size.toLong,
+          rowsDeleted, rowsOutBefore, rowsOutPrev, rowsOutAfter,
+          cursorFloor, staleExec,
+          logAfter.min.toLong, logAfter.max.toLong,
+          (gens.size - logAfter.size).toLong))
+        .toDF("mode", "n_gens", "n_retained", "files_before", "files_live",
+          "files_deleted", "rows_deleted", "rows_out_before",
+          "rows_out_prev_gen", "rows_out_after", "cursor_floor",
+          "n_stale_cursors", "log_floor", "log_tip", "n_log_expired")
+        .coalesce(1).write.mode("overwrite").parquet(s"${l.root}/report")
     }
     spark.read.schema("mode STRING, n_gens BIGINT, n_retained BIGINT, " +
         "files_before BIGINT, files_live BIGINT, files_deleted BIGINT, " +
@@ -3313,12 +3263,7 @@ object Layout {
     *     but NO clause fires: the target rows must survive untouched;
     *   - mod-10≡0 rows (NOT in the target): WHEN NOT MATCHED INSERT. */
   private def ensureMergeLog(spark: SparkSession, dir: String): String = {
-    import graft.sources.PartitionedSink
-    val root = scratchDir("lake_merge", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
+    val (ev, base, _) = lakeSplit(spark, dir)
     val src = ev.where(pmod(col("event_id"), lit(100)) === 7)
         .select(col("event_id"), (col("user_id") + 1000000L).as("user_id"),
           (col("value") + 150.0).as("value"))
@@ -3327,38 +3272,17 @@ object Layout {
       .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 21)
         .withColumn("value", col("value") - 50.0))
       .unionByName(ev.where(pmod(col("event_id"), lit(10)) === 0))
-      .persist()
-    try {
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
-      materializeIfChanged(root, layoutFingerprint("v1:merge",
-          plannedBase.unionByName(
-            src.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        PartitionedSink.writeZCelled(base, s"$root/base", zcols, 12, 6)
-        val g0Refs = listParquetFiles(spark, s"$root/base").map("base" -> _)
-        require(commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        // stage the source batch (the merge's input, kept for the
-        // report's outcome accounting — it is NOT a log reference)
-        src.coalesce(1).write.mode("overwrite").parquet(s"$root/source")
-        val staged = spark.read
-          .schema("event_id BIGINT, user_id BIGINT, value DOUBLE")
-          .parquet(s"$root/source")
-        require(lakeMergeInto(spark, root, staged, "event_id", Seq(
-          WhenMatchedUpdate(col("value") > mergeTarget("value"),
-            Map("value" -> col("value"))),
-          WhenMatchedDelete(col("value") < mergeTarget("value") - 100.0),
-          WhenNotMatchedInsert(lit(true))), s"$root/cdelta") == 1)
-      }
-    } finally {
-      base.unpersist()
-      src.unpersist()
+    lakeLineage(spark, dir, "lake_merge", "v1:merge", base, Seq(src)) { l =>
+      // stage the source batch (the merge's input, kept for the
+      // report's outcome accounting — it is NOT a log reference); the
+      // merge commits g1 through its own staged cdelta commit
+      val staged = spark.read.schema(LakeSchema).parquet(l.stage(src, "source"))
+      require(lakeMergeInto(spark, l.root, staged, "event_id", Seq(
+        WhenMatchedUpdate(col("value") > mergeTarget("value"),
+          Map("value" -> col("value"))),
+        WhenMatchedDelete(col("value") < mergeTarget("value") - 100.0),
+        WhenNotMatchedInsert(lit(true))), s"${l.root}/cdelta") == 1)
     }
-    root
   }
 
   /** The MERGE report: one row per generation (pre_merge, merged) with
@@ -3376,9 +3300,8 @@ object Layout {
   def lakeMerge(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = ensureMergeLog(spark, dir)
-    val std = "event_id BIGINT, user_id BIGINT, value DOUBLE"
-    val source = spark.read.schema(std).parquet(s"$root/source")
-    val baseKeys = spark.read.schema(std)
+    val source = spark.read.schema(LakeSchema).parquet(s"$root/source")
+    val baseKeys = spark.read.schema(LakeSchema)
       .parquet(readGeneration(root, 0).collect { case ("base", f) => f }: _*)
       .select(col("event_id"), col("value").as("__tv"))
     // outcome census: the merge's own classification, re-run as one
@@ -3433,48 +3356,21 @@ object Layout {
     * a retention carve-out proving the BY-SOURCE condition is real,
     * not delete-all). */
   private def ensureMergeSyncLog(spark: SparkSession, dir: String): String = {
-    import graft.sources.PartitionedSink
-    val root = scratchDir("lake_merge_sync", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
+    val (ev, base, _) = lakeSplit(spark, dir)
     // the desired state: every mod-3 key at value+150 — matched keys
     // must converge, mod-30 keys (∉ target) must insert, and every
     // other target row is NOT MATCHED BY SOURCE
     val src = ev.where(pmod(col("event_id"), lit(3)) === 0)
-      .withColumn("value", col("value") + 150.0).persist()
-    try {
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
-      materializeIfChanged(root, layoutFingerprint("v1:mergesync",
-          plannedBase.unionByName(
-            src.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        PartitionedSink.writeZCelled(base, s"$root/base", zcols, 12, 6)
-        require(commitNextGeneration(root,
-          listParquetFiles(spark, s"$root/base").map("base" -> _)
-            :+ ("op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        src.coalesce(1).write.mode("overwrite").parquet(s"$root/source")
-        val staged = spark.read
-          .schema("event_id BIGINT, user_id BIGINT, value DOUBLE")
-          .parquet(s"$root/source")
-        require(lakeMergeInto(spark, root, staged, "event_id", Seq(
-          WhenMatchedUpdate(col("value") =!= mergeTarget("value"),
-            Map("value" -> col("value"))),
-          WhenNotMatchedInsert(lit(true)),
-          WhenNotMatchedBySourceDelete(mergeTarget("value") < 50.0)),
-          s"$root/cdelta") == 1)
-      }
-    } finally {
-      base.unpersist()
-      src.unpersist()
+      .withColumn("value", col("value") + 150.0)
+    lakeLineage(spark, dir, "lake_merge_sync", "v1:mergesync", base, Seq(src)) { l =>
+      val staged = spark.read.schema(LakeSchema).parquet(l.stage(src, "source"))
+      require(lakeMergeInto(spark, l.root, staged, "event_id", Seq(
+        WhenMatchedUpdate(col("value") =!= mergeTarget("value"),
+          Map("value" -> col("value"))),
+        WhenNotMatchedInsert(lit(true)),
+        WhenNotMatchedBySourceDelete(mergeTarget("value") < 50.0)),
+        s"${l.root}/cdelta") == 1)
     }
-    root
   }
 
   /** The FULL-SYNC merge report: same shape as [[lakeMerge]] with the
@@ -3488,9 +3384,8 @@ object Layout {
   def lakeMergeSync(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = ensureMergeSyncLog(spark, dir)
-    val std = "event_id BIGINT, user_id BIGINT, value DOUBLE"
-    val source = spark.read.schema(std).parquet(s"$root/source")
-    val baseDf = spark.read.schema(std)
+    val source = spark.read.schema(LakeSchema).parquet(s"$root/source")
+    val baseDf = spark.read.schema(LakeSchema)
       .parquet(readGeneration(root, 0).collect { case ("base", f) => f }: _*)
     val srcAcc = source
       .join(baseDf.select(col("event_id"), col("value").as("__tv")),
@@ -3588,72 +3483,30 @@ object Layout {
     * [[lakeTimestampAsof]]. */
   private def ensureTimetravelLog(spark: SparkSession, dir: String): String = {
     import graft.sources.PartitionedSink
-    val root = scratchDir("lake_timetravel", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0))).persist()
+    val (_, base, delta) = lakeSplit(spark, dir)
     val folded = base
       .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(delta).persist()
-    try {
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
-      // v3: deterministic commit instants (round 20) — a stale v2 root
-      // carries wall-clock mtimes and must re-materialize
-      materializeIfChanged(root, layoutFingerprint("v3:timetravel",
-          plannedBase.unionByName(
-            delta.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        // g0 — commit the pre-fold state the moment its files exist;
-        // every commit here rides the validated optimistic append
-        // (round 18 — one commit path for the whole engine), each
-        // writer declaring the tip + file set it built against
-        PartitionedSink.writeZCelled(base, s"$root/data/base", zcols, 12, 6)
-        delta.coalesce(1).write.mode("overwrite").parquet(s"$root/data/delta")
-        val g0Refs = listParquetFiles(spark, s"$root/data/base").map("base" -> _) ++
-          listParquetFiles(spark, s"$root/data/delta").map("delta" -> _)
-        require(commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        // g1 — the fold (a reader of g0's files) commits as its own
-        // generation
-        PartitionedSink.writeZCelled(folded, s"$root/data/fold", zcols, 12, 6)
-        val g1Refs = listParquetFiles(spark, s"$root/data/fold").map("base" -> _)
-        require(commitNextGeneration(root, g1Refs :+ ("op" -> "fold"),
-          Some((0, g0Refs.map(_._2).toSet))) == 1)
-        // g2 — compaction (a reader of g1's files) commits as a third
-        writeCompactedFold(spark, folded, s"$root/data/compact", zcols)
-        require(commitNextGeneration(root,
-          listParquetFiles(spark, s"$root/data/compact").map("base" -> _)
-            :+ ("op" -> "compact"),
-          Some((1, g1Refs.map(_._2).toSet))) == 2)
-        // normalize the commit instants to the deterministic grid, then
-        // read them back — setTimes is a silent no-op on some
-        // filesystems, and TIMESTAMP AS OF must fail loudly rather
-        // than resolve against whatever instants the FS kept
-        val gens = listGenerations(root)
-        gens.foreach(g => fs.setTimes(
-          new org.apache.hadoop.fs.Path(s"$root/gens/g=$g"),
-          TimetravelEpochMs + g * TimetravelStepMs, -1))
-        val mtimes = gens.map(g => fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(s"$root/gens/g=$g")).getModificationTime)
-        require(mtimes == gens.map(g => TimetravelEpochMs + g * TimetravelStepMs),
-          s"filesystem did not honor setTimes — commit instants are not " +
-            s"the deterministic grid: $mtimes")
-      }
-    } finally {
-      // everything below reads the generation log + persisted FILES only
-      base.unpersist()
-      delta.unpersist()
-      folded.unpersist()
+      .unionByName(delta)
+    // g0 — the pre-fold state (base cells + the arrival delta), g1 — the
+    // fold (a reader of g0's files), g2 — compaction (a reader of g1's);
+    // v3: deterministic commit instants (round 20) — a stale v2 root
+    // carries wall-clock mtimes and must re-materialize
+    lakeLineage(spark, dir, "lake_timetravel", "v3:timetravel", base, Seq(delta),
+        Seq(folded), baseDir = "data/base", seed = _.land(delta, "delta", "data/delta")) { l =>
+      l.rewrite("fold", "data/fold")(PartitionedSink.writeZCelled(folded, _, LakeZCols, 12, 6))
+      l.rewrite("compact", "data/compact")(writeCompactedFold(spark, folded, _, LakeZCols))
+      // normalize the commit instants to the deterministic grid, then
+      // read them back — setTimes is a silent no-op on some
+      // filesystems, and TIMESTAMP AS OF must fail loudly rather
+      // than resolve against whatever instants the FS kept
+      val gens = listGenerations(l.root)
+      def manifest(g: Int) = new org.apache.hadoop.fs.Path(s"${l.root}/gens/g=$g")
+      gens.foreach(g => l.fs.setTimes(manifest(g), TimetravelEpochMs + g * TimetravelStepMs, -1))
+      val mtimes = gens.map(g => l.fs.getFileStatus(manifest(g)).getModificationTime)
+      require(mtimes == gens.map(g => TimetravelEpochMs + g * TimetravelStepMs),
+        s"filesystem did not honor setTimes — commit instants are not " +
+          s"the deterministic grid: $mtimes")
     }
-    root
   }
 
   /** TIMESTAMP AS OF resolution (round 20, VERDICT r19 missing #2 —
@@ -3791,63 +3644,22 @@ object Layout {
     * shared prologue of [[lakeChanges]] (the feed) and [[cdcApply]]
     * (the feed's consumer), so both read ONE log. */
   private def ensureChangesLog(spark: SparkSession, dir: String): String = {
-    import graft.sources.PartitionedSink
-    val root = scratchDir("lake_changes", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0).persist()
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0))).persist()
-    try {
-      val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
-      // v2: op-stamped commits (round 19)
-      materializeIfChanged(root, layoutFingerprint("v2:changes",
-          plannedBase.unionByName(
-            delta.withColumn("zcell", lit(-1L))
-              .select(col("event_id"), col("user_id"), col("value"), col("zcell"))))) {
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
-        // this lineage commits through the OPTIMISTIC append loop — the
-        // path a real multi-writer table takes — and asserts the slots
-        // it expects (single writer here, so a mismatch means the log
-        // was externally mutated mid-replay and the replay must fail)
-        PartitionedSink.writeZCelled(base, s"$root/data/base", zcols, 12, 6)
-        val baseRefs = listParquetFiles(spark, s"$root/data/base").map("base" -> _)
-        require(commitNextGeneration(root, baseRefs :+ ("op" -> "seed"),
-          Some((-1, Set.empty[String]))) == 0)
-        delta.coalesce(1).write.mode("overwrite").parquet(s"$root/data/delta")
-        val g1Refs = baseRefs ++
-          listParquetFiles(spark, s"$root/data/delta").map("delta" -> _)
-        require(commitNextGeneration(root, g1Refs :+ ("op" -> "arrival"),
-          Some((0, baseRefs.map(_._2).toSet))) == 1)
-        // g2 — RESTORE to g0: re-reference g0's FILES, write nothing
-        // (the op stamp is this commit's own); the restore adds no data
-        // file outside its read set, the exact case the commit
-        // validation classifies as benign for concurrent committers
-        require(commitNextGeneration(root,
-          readGeneration(root, 0).filter(e => LogFileKinds(e._1))
-            :+ ("op" -> "restore"),
-          Some((1, g1Refs.map(_._2).toSet))) == 2)
-      }
-    } finally {
-      base.unpersist()
-      delta.unpersist()
+    val (_, base, delta) = lakeSplit(spark, dir)
+    // v2: op-stamped commits (round 19)
+    lakeLineage(spark, dir, "lake_changes", "v2:changes", base, Seq(delta),
+        baseDir = "data/base") { l =>
+      l.arrive("arrival", "delta", "data/delta", delta)
+      // g2 — RESTORE to g0: re-reference g0's FILES, write nothing (the
+      // op stamp is this commit's own); the restore adds no data file
+      // outside its read set, the exact case the commit validation
+      // classifies as benign for concurrent committers
+      l.commit("restore", readGeneration(l.root, 0).filter(e => LogFileKinds(e._1)))
     }
-    root
   }
 
   private def readLakeRefs(spark: SparkSession, root: String, gen: Int,
-      kind: String): DataFrame = {
-    val files = readGeneration(root, gen).collect { case (`kind`, f) => f }
-    if (files.isEmpty) spark.range(0).select(col("id").as("event_id"),
-      col("id").as("user_id"), col("id").cast("double").as("value"))
-    else spark.read.schema("event_id BIGINT, user_id BIGINT, value DOUBLE")
-      .parquet(files: _*)
-  }
+      kind: String): DataFrame =
+    readEvents(spark, readGeneration(root, gen).collect { case (`kind`, f) => f })
 
   /** g1's delta rows classified against g0's base keys, the base value
     * riding along as the preimage (`__bv`, NULL ⇒ insert) — THE one
@@ -3974,7 +3786,6 @@ object Layout {
     * 3-type × transitions) feed — delta-scale, never a state diff. */
   private[graft] def lakeChangesSince(spark: SparkSession, root: String,
       cursor: Int, until: Option[Int] = None): DataFrame = {
-    val std = "event_id BIGINT, user_id BIGINT, value DOUBLE"
     def emptyFeed = spark.range(0).select(
       col("id").as("from_gen"), col("id").as("to_gen"),
       lit("").as("change_type"), col("id").as("n_rows"),
@@ -4026,21 +3837,17 @@ object Layout {
     val marked = transitions.groupBy(_._5).toSeq.map { case (baseFiles, group) =>
       val tagged = group.map { case (g, deltaFiles, cdeltaFiles, inv, _) =>
         val plain = if (deltaFiles.isEmpty) None
-          else Some(spark.read.schema(std).parquet(deltaFiles: _*)
+          else Some(spark.read.schema(LakeSchema).parquet(deltaFiles: _*)
             .withColumn("op", lit("U")))
         val crud = if (cdeltaFiles.isEmpty) None
-          else Some(spark.read.schema(s"$std, op STRING").parquet(cdeltaFiles: _*))
+          else Some(spark.read.schema(s"$LakeSchema, op STRING").parquet(cdeltaFiles: _*))
         (plain.toSeq ++ crud.toSeq).reduce(_ unionByName _)
           .select(lit(g - 1L).as("from_gen"), lit(g.toLong).as("to_gen"),
             lit(inv).as("__inv"),
             col("event_id"), col("user_id"), col("value"), col("op"))
       }.reduce(_ unionByName _)
-      val baseKV = if (baseFiles.isEmpty)
-        spark.range(0).select(col("id").as("event_id"),
-          col("id").as("__bu"), col("id").cast("double").as("__bv"))
-      else spark.read.schema(std).parquet(baseFiles: _*)
-        .select(col("event_id"), col("user_id").as("__bu"),
-          col("value").as("__bv"))
+      val baseKV = readEvents(spark, baseFiles)
+        .select(col("event_id"), col("user_id").as("__bu"), col("value").as("__bv"))
       tagged.join(baseKV, Seq("event_id"), "left_outer")
     }.reduce(_ unionByName _)
       // a tombstone over a key its probe epoch never held contributes
@@ -4201,56 +4008,34 @@ object Layout {
     * commits under the fingerprint guard; the report is ONE tagged
     * AS-OF union job, as [[lakeIngestAsof]]. */
   def lakeRebase(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.PartitionedSink
     import spark.implicits._
-    val root = scratchDir("lake_rebase", dir)
-    val zcols = Seq("user_id", "value")
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
+    val (ev, base, _) = lakeSplit(spark, dir)
     val ins = ev.where(pmod(col("event_id"), lit(10)) === 0)
     val sliceA = ins.where(pmod(expr("event_id div 10"), lit(3)) === 0)
     val sliceB = ins.where(pmod(expr("event_id div 10"), lit(3)) =!= 0)
       .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
         .withColumn("value", col("value") + lit(150.0)))
-    val plannedBase = PartitionedSink.withZCell(base, zcols, 12, 6)
-      .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
     // v2: op-stamped commits (round 19)
-    materializeIfChanged(root, layoutFingerprint("v2:rebase",
-        plannedBase.unionByName(
-          sliceA.withColumn("zcell", lit(-1L))
-            .select(col("event_id"), col("user_id"), col("value"), col("zcell")))
-          .unionByName(sliceB.withColumn("zcell", lit(-2L))
-            .select(col("event_id"), col("user_id"), col("value"), col("zcell"))))) {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
-      PartitionedSink.writeZCelled(base, s"$root/base", zcols, 12, 6)
-      val g0Refs = listParquetFiles(spark, s"$root/base").map("base" -> _)
-      require(commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
-        Some((-1, Set.empty[String]))) == 0)
+    val root = lakeLineage(spark, dir, "lake_rebase", "v2:rebase", base,
+        Seq(sliceA, sliceB)) { l =>
       // BOTH writers read g0 — the shared parent of the race
-      val readG0 = Some((0, g0Refs.map(_._2).toSet))
+      val g0Refs = l.tipRefs
       // writer A wins the slot
-      sliceA.coalesce(1).write.mode("overwrite").parquet(s"$root/delta/a")
-      require(commitNextGeneration(root,
-        g0Refs ++ listParquetFiles(spark, s"$root/delta/a").map("delta" -> _)
-          :+ ("op" -> "arrival"),
-        readG0) == 1)
+      l.arrive("arrival", "delta", "delta/a", sliceA)
       // writer B: its data is written, but its SNAPSHOT is stale — the
-      // validated append must refuse it
-      sliceB.coalesce(1).write.mode("overwrite").parquet(s"$root/delta/b")
-      val bDeltaRefs = listParquetFiles(spark, s"$root/delta/b").map("delta" -> _)
+      // validated append must refuse it (B commits directly, declaring
+      // the g0 read state it still holds)
+      val bDeltaRefs = l.land(sliceB, "delta", "delta/b")
       val conflicted =
-        try { commitNextGeneration(root, g0Refs ++ bDeltaRefs, readG0); false }
-        catch { case _: CommitConflictException => true }
+        try {
+          commitNextGeneration(l.root, g0Refs ++ bDeltaRefs,
+            Some((0, g0Refs.map(_._2).toSet)))
+          false
+        } catch { case _: CommitConflictException => true }
       require(conflicted,
         "writer B's stale snapshot must abort — landing it would drop A's arrival")
       // REBASE: recompute against the tip A committed, then land
-      val tipRefs = readGeneration(root, 1).filter(e => LogFileKinds(e._1))
-      require(commitNextGeneration(root,
-        tipRefs ++ bDeltaRefs :+ ("op" -> "rebase"),
-        Some((1, tipRefs.map(_._2).toSet))) == 2)
+      l.commit("rebase", l.tipRefs ++ bDeltaRefs)
     }
     val writers = Map(0 -> ("seed", 0L), 1 -> ("A", 0L), 2 -> ("B", 1L))
     val gens = listGenerations(root)
