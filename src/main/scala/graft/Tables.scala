@@ -67,9 +67,11 @@ object Tables {
     // The driver owns SparkSession construction (no config-time
     // GraftExtensions), and every query path reads through here — so this
     // is the session-level installation point for the engine's native
-    // optimizations. Both registrations are idempotent and O(1).
+    // optimizations and the fork-free `file:` filesystem (sources.LocalFs).
+    // All three are idempotent and O(1).
     graft.functions.Md5ConvRewrite.register(spark)
     graft.functions.BloomFilter.register(spark)
+    graft.sources.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     val path = s"$dir/$name.parquet"
     val sig = mtimeSignature(path)
     if (sig.isEmpty) spark.read.parquet(path)

@@ -63,7 +63,9 @@ object LakeIngestStream {
           .getOrElse(sys.error(s"stage write for batch $i produced no parquet file"))
         fs.mkdirs(new Path(s"$root/stage"))
         val staged = new Path(s"$root/stage/b$i.parquet")
-        fs.rename(part, staged)
+        // a false return would silently drop this arrival from the replay
+        if (!fs.rename(part, staged))
+          throw new java.io.IOException(s"stage rename failed for batch $i: $part -> $staged")
         fs.setTimes(staged, t0 + i * 2000L, -1)
       }
       fs.delete(new Path(s"$root/stage_tmp"), true)
