@@ -86,7 +86,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.exec.Session.cpus
     // Environment snapshot (round-11 protocol pin): BENCH_ALL_r10 was
     // uniformly 1.71x slower than r9 on identical code+data because the
     // machine state differed between runs and the artifact carried
@@ -121,29 +121,7 @@ object Bench {
     }
     val waitedSecs = (System.nanoTime() - waitStart) / 1e9
     val gateMet = loadBefore < gateLoad
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the 100-entry default codegen cache thrashes under a multi-query
-      // suite (a single iterative query compiles ~155 classes), so with
-      // interleaved passes every pass recompiled everything — pure
-      // driver-side overhead in every measurement (static conf, must be
-      // set at session build)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // Log-resolved reads pass EXPLICIT file lists; past 32 paths Spark
-      // launches a distributed LISTING job per DataFrame construction
-      // (0.2-0.4 s of pure scheduling at any SF — the default threshold
-      // is tuned for high-latency object-store listings, guide §6). The
-      // lake's read sets are cell-bounded (≤ 2^cellBits per lineage), so
-      // driver-side listing is right up to this bound; a 10⁵-file table
-      // reads through its manifest, never a 10⁵-path raw read.
-      // Parameterised (env) with the local default justified above.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "1024"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.exec.Session(cpus)
     val all = SparkEntry.queries
     val fns =
       if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")) all.toSeq.sortBy(_._1)
@@ -269,7 +247,7 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val env = String.format(java.util.Locale.ROOT,
       """{"threads":%s,"cores":%d,"heap_gb":%.1f,"passes":%d,"max_passes":%d,"warm":%b,"load_initial":%.2f,"load_before":%.2f,"load_after":%.2f,"waited_secs":%.0f,"gate_met":%b}""",
-      cpus, Int.box(Runtime.getRuntime.availableProcessors),
+      Int.box(cpus), Int.box(Runtime.getRuntime.availableProcessors),
       Double.box(Runtime.getRuntime.maxMemory / 1073741824.0),
       Int.box(passes), Int.box(maxPasses), Boolean.box(warmup),
       Double.box(loadInitial), Double.box(loadBefore), Double.box(loadAfter),

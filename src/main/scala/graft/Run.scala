@@ -1,49 +1,101 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** User-facing runner — the "switch to this library" entry point:
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
+/** User-facing runner — the "switch to this library" entry point, and the
+  * one dev main:
   *
   *   runMain graft.Run list
   *   runMain graft.Run <queryName> [sfDir] [limit]
+  *   runMain graft.Run profile <sfDir> [runs] [query ...]
+  *   runMain graft.Run plans <sfDir> <outDir> [query ...]
   *
-  * Runs a registered query against a data directory and prints the result
-  * (truncated to `limit`, default 20 rows) plus the formatted plan when
-  * GRAFT_EXPLAIN=1.
+  *  - `<queryName>` runs a registered query against a data directory and
+  *    prints the result (truncated to `limit`, default 20 rows) plus the
+  *    formatted plan when GRAFT_EXPLAIN=1.
+  *  - `profile` runs the named queries (default: all) `runs` times
+  *    (default 2) and prints per-run wall times, plus the post-AQE
+  *    executed plan when queries are named.
+  *  - `plans` writes `.explain("formatted")` for the named queries
+  *    (default: [[Bench.headline]]) to `<outDir>/<name>.txt` — the
+  *    plan-shape evidence the optimization rounds commit under `plans/`.
+  *
+  * Every mode runs on [[graft.exec.Session]]; pass any conf it does not
+  * pin as a `-Dspark.…` system property (`run` forks, so
+  * `JAVA_TOOL_OPTIONS` reaches the session).
   */
 object Run {
-  def main(args: Array[String]): Unit = {
-    if (args.isEmpty || args(0) == "list") {
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil | "list" :: _ =>
       SparkEntry.queries.keys.toSeq.sorted.foreach(println)
-      return
-    }
+    case "profile" :: dir :: rest =>
+      profile(dir, rest.headOption.flatMap(_.toIntOption).getOrElse(2), rest.drop(1).toSet)
+    case "plans" :: dir :: outDir :: names =>
+      plans(dir, outDir, if (names.isEmpty) Bench.headline else names)
+    case (mode @ ("profile" | "plans")) :: _ =>
+      sys.error(s"usage: graft.Run $mode <sfDir> ${if (mode == "plans") "<outDir>" else "[runs]"} [query ...]")
+    case _ => query(args)
+  }
+
+  private def query(args: Array[String]): Unit = {
     val name = args(0)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val limit = args.lift(2).flatMap(_.toIntOption).getOrElse(20)
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name' — run `graft.Run list`; " +
         s"did you mean ${SparkEntry.queries.keys.minBy(levenshtein(_, name))}?"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the 100-entry default codegen cache thrashes on the
-      // iterative queries, recompiling every operator each round
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .appName(s"graft:$name")
-      // explicit-file-list reads: driver-side listing up to 1024 paths
-      // (see Bench.scala for the full rationale; parameterised via env)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "1024"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = fn(spark, dir)
-    if (sys.env.get("GRAFT_EXPLAIN").contains("1")) df.explain("formatted")
-    df.show(limit, truncate = false)
-    println(s"[run] $name over $dir: ${df.count()} rows")
-    spark.stop()
+    withSession { spark =>
+      val df = fn(spark, dir)
+      if (sys.env.get("GRAFT_EXPLAIN").contains("1")) df.explain("formatted")
+      df.show(limit, truncate = false)
+      println(s"[run] $name over $dir: ${df.count()} rows")
+    }
+  }
+
+  private def profile(dir: String, runs: Int, names: Set[String]): Unit = withSession { spark =>
+    val selected = SparkEntry.queries.filter { case (n, _) => names.isEmpty || names(n) }
+    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val times = (1 to runs).map { _ =>
+        // clear per RUN, not just per query: internal persist()s stay hot
+        // across runs otherwise (cache manager keys on canonicalized
+        // plans) and later runs measure cached reads, not execution
+        spark.catalog.clearCache()
+        val t0 = System.nanoTime()
+        fn(spark, dir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      println(f"[profile] $name%-28s ${times.map(t => f"$t%7.2f").mkString(" ")}")
+      if (names.nonEmpty) {
+        val df = fn(spark, dir)
+        df.count() // materialize so AQE settles on the final plan
+        println(df.queryExecution.executedPlan.toString)
+      }
+    }
+  }
+
+  private def plans(dir: String, outDir: String, names: Seq[String]): Unit = withSession { spark =>
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      SparkEntry.queries.get(name).foreach { fn =>
+        try {
+          spark.catalog.clearCache()
+          val plan = fn(spark, dir).queryExecution
+            .explainString(ExplainMode.fromString("formatted"))
+          Files.write(Paths.get(s"$outDir/$name.txt"), plan.getBytes("UTF-8"))
+          println(s"[plans] wrote $name")
+        } catch { case e: Throwable =>
+          println(s"[plans] $name FAILED: ${e.getMessage}")
+        }
+      }
+    }
+  }
+
+  private def withSession(body: SparkSession => Unit): Unit = {
+    val spark = graft.exec.Session()
+    try body(spark) finally spark.stop()
   }
 
   private def levenshtein(a: String, b: String): Int = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // Optional extra args: dump only these queries (dev iteration; the
     // driver always passes exactly two args and gets the full dump).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the 100-entry default codegen cache thrashes across a
-      // 124-query dump, recompiling shared operators query after query
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // explicit-file-list reads: driver-side listing up to 1024 paths
-      // (see Bench.scala for the full rationale; parameterised via env)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "1024"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.exec.Session()
     new java.io.File(outDir).mkdirs()
     // Failed queries must leave a loud artifact, not just a stderr line:
     // in round 9 four queries crashed and simply VANISHED from the

@@ -1,9 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-up measurement for the alignment blocking pass (dev protocol,
-  * the candidate-count companion to `graft.Profile`'s wall-time runs):
+  * the candidate-count companion to `graft.Run profile`'s wall-time runs):
   * for each input dir, report corpus size, adaptive plane count
   * ([[Similarity.alignPlanes]]), candidate-pair count out of
   * [[Similarity.alignCandidates]], and pairs-per-vector. The designed
@@ -17,14 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object AlignScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.exec.Session()
     args.foreach { d =>
       val e = Similarity.emb(spark, d)
       val n = e.count()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.exec.{Cut, Pool}
 
 /** Dataset-curation operators for a training-data pipeline: deterministic
   * splits, stratified sampling, and near-dup cluster resolution.
@@ -15,87 +16,6 @@ import graft.Tables
   * incremental (new data joins a split without reshuffling old data).
   */
 object Curation {
-
-  /** Lineage cut for the iterative loops (connected components, PageRank).
-    * Each round references the previous state twice, so without a cut the
-    * analyzed plan doubles per round (2^N subtrees ⇒ analyzer OOM,
-    * observed). Two modes, switched by the `spark.graft.checkpointDir`
-    * runtime conf:
-    *
-    *  - UNSET (default, right for local/dev): `localCheckpoint` — blocks
-    *    live in executor storage, zero extra I/O, but are LOST with an
-    *    executor, which fails the job.
-    *  - SET to an HDFS/object-store path (right for a long multi-hour run
-    *    on a real cluster): reliable `checkpoint` into that directory —
-    *    survives executor loss at the price of one extra write job per
-    *    round (Spark re-runs the subgraph to persist it).
-    *
-    * `eager` mirrors the Dataset API: lazy cuts let a caller fuse the
-    * materialization into its own action (dupClusters' convergence count). */
-  private[ext] def cutLineage(df: DataFrame, eager: Boolean): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    df.sparkSession.conf.getOption("spark.graft.checkpointDir") match {
-      case Some(d) if d.nonEmpty =>
-        // setCheckpointDir stores <d>/<uuid>; re-point whenever the
-        // CONFIGURED base no longer matches (the context is shared, so a
-        // user re-pointing the conf mid-session must take effect — the
-        // old shape latched the first dir forever). Compared on
-        // fs.makeQualified URIs: a bare-path compare treated
-        // `hdfs:///ckpt` and `file:///ckpt` as the same dir (same-path
-        // cross-filesystem repoints were ignored) and re-pointed every
-        // call for relative dirs (relative vs absolute spelling of the
-        // same location never matched).
-        val hconf = sc.hadoopConfiguration
-        def qualified(p: String): java.net.URI = {
-          val path = new org.apache.hadoop.fs.Path(p)
-          // URI.normalize: Hadoop Path keeps "." segments; strip them and
-          // the trailing slash they leave so equal dirs compare equal
-          val u = path.getFileSystem(hconf).makeQualified(path).toUri.normalize()
-          val pp = Option(u.getPath).getOrElse("")
-          if (pp.length > 1 && pp.endsWith("/"))
-            new java.net.URI(u.getScheme, u.getAuthority, pp.stripSuffix("/"), null, null)
-          else u
-        }
-        val want = qualified(d)
-        // compare the parent of the stored <d>/<uuid> against the base
-        val curBase = sc.getCheckpointDir.map { c =>
-          val parent = new org.apache.hadoop.fs.Path(c).getParent
-          parent.getFileSystem(hconf).makeQualified(parent).toUri
-        }
-        if (!curBase.contains(want)) sc.setCheckpointDir(d)
-        df.checkpoint(eager)
-      case _ => df.localCheckpoint(eager)
-    }
-  }
-
-  /** Best-effort removal of the reliable-checkpoint files backing an
-    * EARLIER round's cut, called once a newer cut has fully materialized
-    * (the new checkpoint is self-contained, so the old files are dead
-    * weight). Without this a multi-hour cluster run accumulates
-    * O(rounds) full copies of the loop state under
-    * `spark.graft.checkpointDir` — Spark's ContextCleaner only removes
-    * checkpoint files when `spark.cleaner.referenceTracking
-    * .cleanCheckpoints` was set at context construction, which a library
-    * cannot assume (ADVICE r6). Local checkpoints report no file and
-    * stay managed by Spark's block manager. Deletion failures are
-    * swallowed: leaking one directory must never fail the job. */
-  private[ext] def dropCheckpointData(cut: DataFrame): Unit =
-    cut.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.getCheckpointFile.foreach { f =>
-          try {
-            val p = new org.apache.hadoop.fs.Path(f)
-            p.getFileSystem(cut.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          } catch {
-            // NonFatal, not just IOException: Path/FS resolution can throw
-            // IllegalArgumentException etc., and aborting a multi-hour run
-            // over dead-file cleanup is never the right trade.
-            case scala.util.control.NonFatal(_) => ()
-          }
-        }
-      case _ => ()
-    }
 
   /** Run `body` with the session's shuffle width narrowed to fit
     * `stateRows` of iterated loop state (~4M rows ≈ 64 MB per partition,
@@ -111,7 +31,7 @@ object Curation {
     * repair. The narrowing is SESSION-global, and other threads DO plan
     * during `body`: [[splitLeakage]]'s doc_hash census and
     * [[incrementalClusters]]' probe cut run on the report pool
-    * ([[Layout.async]]) while the main thread works the loop, so a plan
+    * ([[Pool.async]]) while the main thread works the loop, so a plan
     * those tasks create inside the window picks up the narrowed
     * partition count and AQE off. Results are unaffected; at corpus
     * scale such a plan is shuffled through as few as 4 partitions — a
@@ -225,7 +145,7 @@ object Curation {
     // policy slices of the same union the old single collect computed,
     // and the final orderBy restores the identical total order.
     val naiveC = census(naive, "doc_hash")
-    val naiveTask = Layout.async(() => naiveC.collect())
+    val naiveTask = Pool.async(spark)(() => naiveC.collect())
     // The cluster_hash census joins pairs against the LABEL frame
     // directly (round 22, guide §2.3): the label loop emits a row for
     // EVERY doc that appears in some pair — exactly the docs the pair
@@ -282,7 +202,7 @@ object Curation {
     // text. Before the fusion the pipeline paid three full-text passes
     // (classifier∧gopher, NFC hash, lang join); the text columns are
     // the corpus' mass, so this is the dominant-cost fix, the same
-    // shared-subframe discipline as Dedup.cutShared (which is exactly
+    // shared-subframe discipline as Cut.shared (which is exactly
     // what cuts the branch lineage here).
     //
     // Semantics unchanged: gopher signals are per-doc stateless maps,
@@ -291,19 +211,18 @@ object Curation {
     // ALL docs by the shared Dedup.nfcContentHash key.
     // The fused-scan materialization and the split tier (LSH candidates
     // + label loop) are INDEPENDENT DAG branches that only meet at the
-    // final joins — so the eager cut runs on a second driver thread
+    // final joins — so the eager cut runs on the report pool
     // while the main thread works the loop, overlapping the two instead
     // of serializing them (concurrent actions on one context are the
     // supported multi-tenant shape; the loop's narrowed-shuffle conf
     // window can't touch the cut, which plans no exchange). At 100 TB
     // the overlap hides the full corpus-scan latency behind the loop's
     // rounds.
-    val scannedF = scala.concurrent.Future {
-      Dedup.cutShared(TextAnalysis.gopherSignalsOf(docs, Seq(
+    val scannedTask = Pool.async(spark)(() =>
+      Cut.shared(TextAnalysis.gopherSignalsOf(docs, Seq(
         "ckeep" -> TextAnalysis.classifierKeep(col("text")),
         "h" -> Dedup.nfcContentHash,
-        "lang" -> col("lang"))))
-    }(scala.concurrent.ExecutionContext.global)
+        "lang" -> col("lang")))))
     // The split tier joins the LABEL frame directly and applies the
     // split policy inline (round 22, guide §2.3): the corpus-wide
     // documents⋈labels assignment [[clusterSplits]] builds exists for
@@ -313,9 +232,12 @@ object Curation {
     // (coalesce(cluster, doc_id)) computes in the same projection. One
     // corpus-scale scan+join less in the final census job; the split
     // value per doc is the identical policy expression.
-    val labels = dupClusterLabels(Dedup.lshCandidates(spark, dir)).labelsUnsorted
-    val scanned = scala.concurrent.Await
-      .result(scannedF, scala.concurrent.duration.Duration.Inf)
+    val (labels, scanned) = try {
+      (dupClusterLabels(Dedup.lshCandidates(spark, dir)).labelsUnsorted, scannedTask.await)
+    } catch {
+      // failure path: no orphan scan job may outlive the query
+      case e: Throwable => scannedTask.cancel(); throw e
+    }
     // lang rides the kept tier directly off the fused frame — one join
     // fewer than the original docs-side lang lookup
     val kept = scanned.where(col("ckeep") && col("keep") === 1)
@@ -454,7 +376,7 @@ object Curation {
     // both caches release on EVERY exit — a round that throws must not
     // leave them pinned in the session cache manager
     try {
-    // cutLineage TRUNCATES the logical plan each round (see its doc for
+    // Cut.loop TRUNCATES the logical plan each round (see its doc for
     // the local-vs-reliable checkpoint switch; set
     // spark.graft.checkpointDir for executor-loss-safe multi-hour runs).
     // LAZY cut, on purpose: the sizing count below materializes every
@@ -477,7 +399,7 @@ object Curation {
     // TRAJECTORY is unchanged: the fused frame IS round 1's output, so
     // convergence counting and the jump heuristic resume at round 2
     // with identical state.
-    var labels = cutLineage(edges.groupBy(col("src"))
+    var labels = Cut.loop(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("__mdst"))
       .select(col("src").as("doc_id"), col("src").as("old_label"),
         least(col("src"), col("__mdst")).as("label")), eager = false)
@@ -528,12 +450,12 @@ object Curation {
       // coalesce, not repartition: merges the round's shuffle output into
       // targetParts checkpoint partitions with no extra exchange, so the
       // NEXT round's scans of this RDD launch targetParts map tasks
-      val step = cutLineage(stepped.coalesce(targetParts), eager = false)
+      val step = Cut.loop(stepped.coalesce(targetParts), eager = false)
       val changed = step.where(col("label") =!= col("old_label")).count()
       converged = changed == 0L
       // the count materialized step's checkpoint, so the previous round's
       // files are now dead — reclaim them before the next round
-      dropCheckpointData(prevCut)
+      Cut.drop(prevCut)
       prevCut = step
       // halving test: cliques collapse geometrically under hook alone;
       // anything slower is chain-shaped and needs the jump's doubling
@@ -621,7 +543,7 @@ object Curation {
     // the stored-state LABEL LOOP below are independent until star∪new —
     // the probe's materialization runs on the report pool while the main
     // thread works the loop, instead of serializing the two heaviest
-    // pieces of this query. The cut is [[Dedup.cutShared]] (eager local
+    // pieces of this query. The cut is [[Cut.shared]] (eager local
     // checkpoint), so the second loop consumes a materialized frame.
     // Concurrent first-touch of the shared sigsOld cache is safe: the
     // block manager's per-partition locks make the second computer wait,
@@ -630,7 +552,7 @@ object Curation {
     // its action submits — before the loop's heavy prolog (the old-shard
     // pair pipeline) finishes materializing, so the probe keeps the
     // session's scale-adaptive width in any realistic timing.
-    val newPairsTask = Layout.async(() => Dedup.cutShared(newPairs))
+    val newPairsTask = Pool.async(spark)(() => Cut.shared(newPairs))
     try {
       // stored state as of the previous ingest: labels over the old
       // shard (unsorted — star contraction joins it straight away)
@@ -1065,12 +987,12 @@ object Curation {
     // per token). The raw and target counts fuse into one conditional
     // groupBy(b); the totals are exact-integer sums OVER the bucket
     // frame (≤`buckets` rows), so they fold from the same pass. The
-    // bucket frame is cut eagerly ([[Dedup.cutShared]]) because totals
+    // bucket frame is cut eagerly ([[Cut.shared]]) because totals
     // and the per-bucket units both read it — uncut, the corpus pass
     // would still run twice. Values are unchanged: sum(when(lang=tgt))
     // ≡ the old left-joined filtered count with coalesce(·,0), and the
     // totals are the same integer sums the corpus-scale agg produced.
-    val bstats0 = Dedup.cutShared(toks.groupBy(col("b")).agg(
+    val bstats0 = Cut.shared(toks.groupBy(col("b")).agg(
       count(lit(1)).as("c_raw"),
       sum(when(col("lang") === targetLang, 1L).otherwise(0L)).as("c_tgt")))
     val totals = bstats0.agg(sum(col("c_raw")).as("n_raw"),
@@ -1219,14 +1141,14 @@ object Curation {
       // cut keeps every round a single tiny job (measured 3.6 → 1.5 s
       // warm at sf0.1, the rest being LSH pair generation; same
       // discipline and local/reliable switch as dupClusters)
-      ranks = cutLineage(ranks.select(col("doc_id"), col("deg"), col("n"))
+      ranks = Cut.loop(ranks.select(col("doc_id"), col("deg"), col("n"))
         .join(contrib, col("doc_id") === contrib("dst"), "left")
         .select(col("doc_id"), col("deg"), col("n"),
           (expr("15000000000 div (100 * n)") + coalesce(col("in_sum"), lit(0L))).as("r")),
         eager = true)
       // eager cut fully materialized: the previous round's checkpoint
       // files are dead — reclaim before the next round (reliable mode)
-      prevCut.foreach(dropCheckpointData)
+      prevCut.foreach(Cut.drop)
       prevCut = Some(ranks)
     }
     }

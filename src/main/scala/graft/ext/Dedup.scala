@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.exec.{Cut, Pool}
 
 /** Deduplication operators over `documents` / `embeddings`
   * (BASELINE.json extension mandate): exact, MinHash+LSH, SimHash,
@@ -257,36 +258,6 @@ object Dedup {
   def lshCandidates(spark: SparkSession, dir: String): DataFrame =
     lshCandidatesOf(Tables.documents(spark, dir))
 
-  /** Eager LOCAL lineage cut for a shared subframe (round-13 release
-    * discipline) — THE one implementation every query-internal shared
-    * frame goes through (dedup composites, hilbertPrune, lshRecall's
-    * truth side): materializes once into block-manager storage OUTSIDE
-    * the cache manager — the returned lazy frame keeps reading the
-    * blocks, the caller owes no clearCache(), and the context cleaner
-    * reclaims them when the frame drops.
-    *
-    * RELIABILITY TRADE, priced (round 22, VERDICT r21 #1).
-    * `localCheckpoint` stores blocks NON-replicated on executors and
-    * TRUNCATES lineage: on a real cluster, losing one executor while a
-    * consumer is still reading fails that QUERY (the blocks cannot be
-    * recomputed), where a plain persist would recompute the lost
-    * partitions. Bound at 100 TB: the cut frames here are
-    * query-internal intermediates (signature tables, candidate pairs,
-    * exploded shingles — minutes of work, not the hours of loop state
-    * [[Curation.cutLineage]] protects), so the blast radius of an
-    * executor loss is one query retry re-paying at most the cut's own
-    * subplan; with executor-loss probability p per query-duration the
-    * expected overhead is ~p × query cost — cheap against the certain
-    * 2–4× recompute an UNCUT shared subplan pays on every run, and
-    * against persist(MEMORY_AND_DISK)'s session-scoped cache entry no
-    * caller can release (the round-13 leak this replaced). Long
-    * multi-hour runs that cannot absorb a retry set
-    * `spark.graft.checkpointDir` and route loop state through
-    * [[Curation.cutLineage]] (reliable checkpoint); these shared
-    * subframes deliberately stay local even then — files-per-query in
-    * the checkpoint dir that nothing reclaims is the worse trade. */
-  private[ext] def cutShared(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** Hot-bucket cap for LSH candidate generation: a (band, bucket) cohort
     * larger than this emits STAR edges (bucket-min representative → each
     * member) instead of all pairs. An uncapped band self-join is the last
@@ -319,7 +290,7 @@ object Dedup {
     // build side of the bucket self-join is a different distribution
     // than the shuffle side, so reuse cannot collapse it and the
     // signature chain re-ran per branch. The cut stays.
-    lshCandidatesOfSigs(cutShared(minhashSignaturesOf(docs)), maxBucket)
+    lshCandidatesOfSigs(Cut.shared(minhashSignaturesOf(docs)), maxBucket)
 
   /** [[lshCandidatesOf]] when the caller already holds (and has cached)
     * the signature frame — lets composites that need BOTH the candidates
@@ -554,7 +525,7 @@ object Dedup {
 
   /** [[jaccardPrefixJoin]] over an arbitrary (doc_id, text, ...) frame. */
   private[ext] def jaccardPrefixJoinOf(docs: DataFrame): DataFrame = {
-    // persist, DELIBERATELY not [[cutShared]] (A/B'd round 22): the
+    // persist, DELIBERATELY not [[Cut.shared]] (A/B'd round 22): the
     // shingle-set frame feeds df, ranks, AND verification, and the
     // downstream joins rely on the InMemoryRelation's REAL size stats to
     // plan as broadcast joins — a localCheckpoint cut presents a
@@ -667,7 +638,7 @@ object Dedup {
     // per reference (the round-11 symmetrization-cache discipline). The
     // result here is O(candidate pairs) — corpus-scaled, so the
     // splitLeakage collect-a-bounded-census move does not apply; instead
-    // both shared frames materialize through [[cutShared]] (eager local
+    // both shared frames materialize through [[Cut.shared]] (eager local
     // checkpoint), whose blocks live OUTSIDE the cache manager: the returned lazy
     // frame keeps reading them, clearCache() is never required of the
     // caller, and the context cleaner reclaims the blocks when the frame
@@ -677,13 +648,13 @@ object Dedup {
     // join — its cut runs on the report pool while the main thread
     // materializes the pair cut, instead of paying the two corpus
     // passes back to back.
-    val shTask = Layout.async(() => cutShared(Tables.documents(spark, dir)
+    val shTask = Pool.async(spark)(() => Cut.shared(Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .where(size(col("w")) >= 3)
       .select(col("doc_id"),
         explode(expr(hashedShingleExpr))
           .as("s"))))
-    val pairs = cutShared(lshCandidates(spark, dir))
+    val pairs = Cut.shared(lshCandidates(spark, dir))
     val sh = shTask.await
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val inter = pairs
@@ -728,12 +699,12 @@ object Dedup {
     // signature/candidate chain until the verify join, so it overlaps
     // on the report pool (round 22, guide §2.6 — same move as
     // [[containment]]).
-    val shTask = Layout.async(() => cutShared(docs
+    val shTask = Pool.async(spark)(() => Cut.shared(docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .where(size(col("w")) >= 3)
       .select(col("doc_id"), explode(expr(hashedShingleExpr)).as("s"))))
-    val sigs = cutShared(minhashSignaturesOf(docs))
-    val pairs = cutShared(lshCandidatesOfSigs(sigs))
+    val sigs = Cut.shared(minhashSignaturesOf(docs))
+    val pairs = Cut.shared(lshCandidatesOfSigs(sigs))
     val a = sigs.select(col("doc_id").as("doc_a") +:
       (0 until K).map(i => col(s"m$i").as(s"a$i")): _*)
     val b = sigs.select(col("doc_id").as("doc_b") +:
@@ -848,13 +819,13 @@ object Dedup {
     // job paid the whole truth pipeline serially). Both sides land as
     // lineage cuts, so the final job is a join of two materialized
     // frames.
-    val truthTask = Layout.async(() =>
-      cutShared(jaccardPrefixJoinOf(Tables.documents(spark, dir))
+    val truthTask = Pool.async(spark)(() =>
+      Cut.shared(jaccardPrefixJoinOf(Tables.documents(spark, dir))
         .select(col("doc_a"), col("doc_b"), col("jaccard"))))
     // eager lineage cut, not persist: the candidate set feeds the
     // cost-side count AND the truth join — uncut, the LSH pipeline
     // would run twice (release discipline, see [[containment]])
-    val cands = cutShared(lshCandidates(spark, dir).withColumn("hit", lit(1L)))
+    val cands = Cut.shared(lshCandidates(spark, dir).withColumn("hit", lit(1L)))
     val truth = truthTask.await
     val nCands = cands.agg(count(lit(1)).as("n_cands"))
     truth.join(cands, Seq("doc_a", "doc_b"), "left")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.exec.{Cut, Pool}
 
 /** Z-order (Morton-curve) data layout planning — multi-dimensional file
   * skipping for an event lake.
@@ -202,108 +203,6 @@ object Layout {
         } finally lock.release()
       } finally ch.close()
     }
-
-  /** Bounded pool for overlapping INDEPENDENT per-stage report chains
-    * (optimization guide §2.6: Spark's scheduler happily runs several
-    * jobs at once inside one application — the lake reports' stage
-    * chains were sequential only because the driver called them
-    * sequentially, leaving most of local[N] idle during each small
-    * manifest/probe job).
-    *
-    * Sizing: a constant 3 threads — enough to fill the tail of one
-    * chain with the next chain's jobs, not enough to fight over
-    * executors. The pool is process-global and shared by every query in
-    * the JVM: two lake reports running CONCURRENTLY (a multi-tenant
-    * driver) serialize through it rather than oversubscribing the
-    * scheduler. Callers pass FLAT task lists only (a task must never
-    * submit nested [[inParallel]] work, which could exhaust the fixed
-    * pool and deadlock). Daemon threads so a crashed run exits. */
-  private lazy val reportPool =
-    java.util.concurrent.Executors.newFixedThreadPool(3, reportThreads)
-
-  /** Pool threads are built with `inheritThreadLocals = false`: Spark's
-    * local properties live in an InheritableThreadLocal, so a thread
-    * created while its submitter sat inside an action would otherwise
-    * keep that submitter's `spark.sql.execution.id`, callSite, etc. for
-    * its whole life and mis-attribute every later task it runs. The job
-    * properties a task SHOULD carry are handed over explicitly per task
-    * ([[inheritedJobProps]]). */
-  private[ext] val reportThreads: java.util.concurrent.ThreadFactory =
-    (r: Runnable) => {
-      val t = new Thread(null, r, "graft-report", 0, false)
-      t.setDaemon(true)
-      t
-    }
-
-  /** Spark thread-local job properties a pool task must INHERIT from
-    * its submitter: job group (so cancelJobGroup on the query's thread
-    * also cancels its async jobs — without this a cancelled query
-    * leaves orphans running), description (readable UI), interrupt
-    * flag, and scheduler pool. */
-  private val inheritedJobProps = Seq(
-    "spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel", "spark.scheduler.pool")
-
-  /** One independent eager report task on [[reportPool]];
-    * [[inParallel]]/`await` join it. `await` unwraps ExecutionException
-    * so caller stack traces carry the task's own failure. `cancel` is
-    * the failure path of a submitter that will never read the result:
-    * a task that has not started never will, and a running one has its
-    * Spark jobs cancelled by tag — repeatedly, since it may submit the
-    * next job before it notices — until its thread leaves `task`, so
-    * the submitter rethrows with no orphan job still running. */
-  private[graft] final class ReportTask[A] private[Layout] (task: () => A) {
-    // capture the SUBMITTING thread's job group/pool properties so jobs
-    // launched from the pool thread stay inside the caller's cancel
-    // scope (properties are thread-local; an untagged pool thread would
-    // otherwise run its jobs in no group at all)
-    private val sc = org.apache.spark.sql.SparkSession.getDefaultSession
-      .map(_.sparkContext)
-    private val captured = sc.toSeq.flatMap(c =>
-      inheritedJobProps.map(k => (c, k, c.getLocalProperty(k))))
-    private val tag = s"graft-report-${java.util.UUID.randomUUID}"
-    private val started = new java.util.concurrent.atomic.AtomicBoolean(false)
-    private val done = new java.util.concurrent.CountDownLatch(1)
-    private val f = reportPool.submit(new java.util.concurrent.Callable[A] {
-      def call(): A = {
-        if (!started.compareAndSet(false, true))
-          throw new java.util.concurrent.CancellationException("cancelled before start")
-        try {
-          // a null value clears a stale property
-          captured.foreach { case (c, k, v) => c.setLocalProperty(k, v) }
-          sc.foreach(_.addJobTag(tag))
-          try task()
-          finally {
-            // don't leak into the next task
-            sc.foreach(_.removeJobTag(tag))
-            captured.foreach { case (c, k, _) => c.setLocalProperty(k, null) }
-          }
-        } finally done.countDown()
-      }
-    })
-
-    def await: A =
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-
-    def cancel(): Unit =
-      if (started.compareAndSet(false, true)) f.cancel(false)
-      else {
-        var joined = false
-        while (!joined) {
-          sc.foreach(_.cancelJobsWithTag(tag))
-          joined = done.await(50, java.util.concurrent.TimeUnit.MILLISECONDS)
-        }
-      }
-  }
-  private[graft] def async[A](task: () => A): ReportTask[A] = new ReportTask(task)
-
-  /** Run independent eager report tasks concurrently and return their
-    * results in DECLARATION order (determinism: the tasks' own outputs
-    * are pure; only wall-clock interleaving changes). A task failure
-    * rethrows to the caller. */
-  private[graft] def inParallel[A](tasks: Seq[() => A]): Seq[A] =
-    tasks.map(async(_)).map(_.await)
 
   private def withFiles(spark: SparkSession, dir: String): DataFrame =
     bucketed(spark, dir)
@@ -565,9 +464,9 @@ object Layout {
     // cache and recomputed the bucketing + both curve expressions —
     // hilbert5 is the suite's largest codegen expression, so the race
     // tripled the query's real work. Routed through the ONE shared cut
-    // implementation ([[Dedup.cutShared]] — see its docstring for the
+    // implementation ([[graft.exec.Cut.shared]] — see its docstring for the
     // priced executor-loss trade at 100 TB).
-    val b = Dedup.cutShared(bucketed(spark, dir)
+    val b = Cut.shared(bucketed(spark, dir)
       .withColumn("zf", shiftright(morton5(col("db"), col("ub")), 2))
       .withColumn("hf", shiftright(hilbert5(col("db"), col("ub")), 2)))
     def candidateRows(fileCol: String, outName: String): DataFrame = b
@@ -1098,9 +997,9 @@ object Layout {
     // the three stage chains are independent given the committed log —
     // kick them NOW so their eager manifest jobs overlap the DECIDE
     // work below (guide §2.6; leaf tasks only, never nested)
-    val tasks = Seq(async(() => stage1()),
-      async(() => prunedStage(2L, "folded", 1)),
-      async(() => prunedStage(3L, "compacted", 2)))
+    val tasks = Seq(Pool.async(spark)(() => stage1()),
+      Pool.async(spark)(() => prunedStage(2L, "folded", 1)),
+      Pool.async(spark)(() => prunedStage(3L, "compacted", 2)))
     // DECIDE: delta cells under the base's grid (base bounds, clamped) ∩
     // base cell rows = the rewrite cost an eager re-cluster would pay
     // now. The base-cell histogram and the delta count both came out of
@@ -1561,12 +1460,12 @@ object Layout {
     // (round 21, guide §5)
     // the evolved READ schema, inferred by mergeSchema across the
     // mixed old/new files — what a catalog would record
-    val schemaTask = async(() => StructType(
+    val schemaTask = Pool.async(spark)(() => StructType(
       spark.read.option("mergeSchema", "true").parquet(s"$root/tbl")
         .schema.filterNot(_.name == "zcell")))
     // STAGE 1 inputs — g1 is the evolved merge-on-read commit, its
     // kinds partition base from arrival (round 18)
-    val stage1Task = async(() => {
+    val stage1Task = Pool.async(spark)(() => {
       val g1 = readGeneration(root, 1)
       val g1BaseFiles = g1.collect { case ("base", f) => f }
       val g1Delta = g1.collect { case ("delta", f) => f }
@@ -1579,7 +1478,7 @@ object Layout {
     })
     // STAGES 2 & 3 input — the folded generation's footers, which now
     // cover the evolved column next to the original z columns
-    val foldTask = async(() => FooterManifest.buildFromFiles(spark,
+    val foldTask = Pool.async(spark)(() => FooterManifest.buildFromFiles(spark,
       readGeneration(root, 2).collect { case ("base", f) => f },
       zcols :+ "score").collect())
     val dataSchema = schemaTask.await
@@ -1717,7 +1616,7 @@ object Layout {
     // the two independent eager chains — the g1 (mixed-width) manifests
     // and the folded generation's manifest — overlap (guide §2.6);
     // pruning and file totals fold driver-side (round 21, guide §5)
-    val mixedTask = async(() => {
+    val mixedTask = Pool.async(spark)(() => {
       val g1 = readGeneration(root, 1)
       val g1BaseFiles = g1.collect { case ("base", f) => f }
       val g1Delta = g1.collect { case ("delta", f) => f }
@@ -1728,7 +1627,7 @@ object Layout {
         .distinct.map(_._2).sum
       (baseRows, rd, g1Delta)
     })
-    val foldTask = async(() => FooterManifest.buildFromFiles(spark,
+    val foldTask = Pool.async(spark)(() => FooterManifest.buildFromFiles(spark,
       readGeneration(root, 2).collect { case ("base", f) => f }, zcols).collect())
     val (baseMRows, rowsDelta, g1DeltaFiles) = mixedTask.await
     val mfRows = foldTask.await
@@ -1870,7 +1769,7 @@ object Layout {
     // the two independent eager chains — g1's manifests and the folded
     // generation's manifest — overlap (guide §2.6); pruning and file
     // totals fold driver-side (round 21, guide §5)
-    val s1Task = async(() => {
+    val s1Task = Pool.async(spark)(() => {
       val mRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
       val rd = FooterManifest
         .buildFromFiles(spark, cdeltaFiles, Seq("event_id")).collect()
@@ -1878,7 +1777,7 @@ object Layout {
         .distinct.map(_._2).sum
       (mRows, rd)
     })
-    val s2Task = async(() =>
+    val s2Task = Pool.async(spark)(() =>
       FooterManifest.buildFromFiles(spark, foldFiles, zcols).collect())
     val (mRows, rowsDelta) = s1Task.await
     val mfRows = s2Task.await
@@ -3952,8 +3851,8 @@ object Layout {
     // roots) and each pays its own fingerprint pass — overlap the two
     // ensure* legs with the ingest replay (guide §2.6; leaf tasks, no
     // nested pool use)
-    val deleteTask = async(() => ensureDeleteLog(spark, dir))
-    val mergeTask = async(() => ensureMergeLog(spark, dir))
+    val deleteTask = Pool.async(spark)(() => ensureDeleteLog(spark, dir))
+    val mergeTask = Pool.async(spark)(() => ensureMergeLog(spark, dir))
     lakeIngest(spark, dir) // idempotently materialize the lineages
     val deleteRoot = deleteTask.await
     val mergeRoot = mergeTask.await

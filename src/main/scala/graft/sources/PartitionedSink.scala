@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Cut
+
 /** Idempotent partitioned writes — the fix for the reference's
   * duplicate-on-rerun flaw.
   *
@@ -188,7 +190,7 @@ object PartitionedSink {
         .drop("__split")
       // must materialize BEFORE overwriting the same path: localCheckpoint
       // breaks the read-your-own-overwrite cycle
-      df.localCheckpoint(true)
+      Cut.shared(df)
         .write.mode("overwrite").partitionBy("day").parquet(path)
     } finally {
       prev match {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.exec.Cut
 import graft.functions.BloomFilter
 
 /** Streaming maintenance of a corpus Bloom filter — the ingest-time twin
@@ -209,11 +210,9 @@ object BloomMaintenance {
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return
-    spark.read.parquet(indexDir).distinct()
-      .repartition(files)
-      // materialize BEFORE overwriting the path being read (see
-      // PartitionedSink.compactDaily)
-      .localCheckpoint(true)
+    // materialize BEFORE overwriting the path being read (see
+    // PartitionedSink.compactDaily)
+    Cut.shared(spark.read.parquet(indexDir).distinct().repartition(files))
       .write.mode("overwrite").parquet(indexDir)
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Dedup
+import graft.exec.Cut
 
 /** Streaming maintenance of the MinHash signature table — the ingest-time
   * twin of [[graft.ext.Dedup.incrementalMinhash]]: every micro-batch's
@@ -75,7 +76,7 @@ object MinhashMaintenance {
         // tableDir — without it Spark (correctly) refuses to overwrite a
         // path it is reading from. An executor loss mid-write fails the
         // batch and the replay re-merges idempotently (object doc).
-        merged.localCheckpoint(true)
+        Cut.shared(merged)
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket")
@@ -166,21 +167,21 @@ object MinhashMaintenance {
       // pin the batch docs' PRE-merge band rows now — computed lazily they
       // would re-read the table parquet after the overwrite replaced it
       val oldBands = existing.map(e =>
-        Dedup.bandsOf(e.join(freshIds, Seq("doc_id"), "left_semi"))
-          .withColumn("p", bandPartCol(bandParts)).localCheckpoint(true))
+        Cut.shared(Dedup.bandsOf(e.join(freshIds, Seq("doc_id"), "left_semi"))
+          .withColumn("p", bandPartCol(bandParts))))
       val merged = existing
         .fold(fresh.drop("bucket"))(e =>
           Dedup.mergeMinhashSignatures(e, fresh.drop("bucket")))
         .withColumn("bucket", pmod(col("doc_id"), lit(buckets.toLong)))
-      val cut = merged.localCheckpoint(true)
+      val cut = Cut.shared(merged)
       cut.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(tableDir)
       // POST-merge band rows of the batch docs (merged signatures, so a
       // sharded doc bands by its full content seen so far)
-      val newBands = Dedup.bandsOf(cut.drop("bucket").join(freshIds, Seq("doc_id"), "left_semi"))
-        .withColumn("p", bandPartCol(bandParts)).localCheckpoint(true)
+      val newBands = Cut.shared(Dedup.bandsOf(cut.drop("bucket").join(freshIds, Seq("doc_id"), "left_semi"))
+        .withColumn("p", bandPartCol(bandParts)))
       val touched = oldBands.fold(newBands)(_.unionByName(newBands))
         .select("p").distinct().collect().map(_.getLong(0))
       val bdir = new Path(bandDir)
@@ -195,7 +196,7 @@ object MinhashMaintenance {
       val rewritten = stored
         .map(_.join(freshIds, Seq("doc_id"), "left_anti").unionByName(newBands))
         .getOrElse(newBands)
-      val cutBands = rewritten.localCheckpoint(true)
+      val cutBands = Cut.shared(rewritten)
       cutBands.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("p")

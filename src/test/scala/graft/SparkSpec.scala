@@ -8,12 +8,8 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
+/** Built through the mains' own factory at 4 cpus, so specs run under the
+  * confs the mains use. */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val session: SparkSession = graft.exec.Session(4)
 }

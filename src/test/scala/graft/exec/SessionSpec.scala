@@ -1,0 +1,59 @@
+package graft.exec
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.{Run, SparkEntry, SparkSpec}
+
+/** The execution-context module: the session factory's conf set, the
+  * source guard that keeps session building, lineage cuts and thread
+  * pools inside `graft.exec`, and the `graft.Run` dispatcher. */
+class SessionSpec extends SparkSpec {
+
+  test("the factory pins the conf set every main runs under") {
+    val s = Session(4)
+    assert(s eq spark, "the spec session is the factory's session")
+    val conf = s.sparkContext.getConf
+    assert(conf.get("spark.master") === "local[4]")
+    assert(s.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.ui.enabled") === "false")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") === "2000")
+    assert(s.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") === "1024")
+  }
+
+  test("under src/main only graft/exec builds sessions, cuts lineage or owns threads") {
+    val patterns = Seq("SparkSession.builder", "localCheckpoint(", ".checkpoint(",
+      "Executors.new", "ExecutionContext", "Future {")
+    val exec = Paths.get("src/main/scala/graft/exec")
+    val sources = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".scala")).toSeq
+    assert(sources.exists(_.startsWith(exec)))
+    val offenders = for {
+      f <- sources if !f.startsWith(exec)
+      text = Files.readString(f)
+      p <- patterns if text.contains(p)
+    } yield s"$f: $p"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  private def runOutput(args: String*): Seq[String] = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Run.main(args.toArray))
+    out.toString("UTF-8").linesIterator.toSeq
+  }
+
+  test("graft.Run list prints every registry key, sorted") {
+    val keys = SparkEntry.queries.keys.toSeq.sorted
+    assert(keys.size === 242)
+    assert(runOutput("list") === keys)
+    assert(runOutput() === keys)
+  }
+
+  test("graft.Run rejects an unknown query with the nearest registered name") {
+    val e = intercept[RuntimeException](runOutput("x_dedup_minhash_lsj"))
+    assert(e.getMessage.contains("unknown query 'x_dedup_minhash_lsj'"))
+    assert(e.getMessage.contains("did you mean x_dedup_minhash_lsh?"))
+  }
+}

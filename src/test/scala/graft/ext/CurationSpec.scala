@@ -136,18 +136,18 @@ class CurationSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-ckpt-uri")
     spark.conf.set("spark.graft.checkpointDir", ckpt.toString)
     try {
-      Curation.cutLineage(Seq(1, 2).toDF("v"), eager = true)
+      graft.exec.Cut.loop(Seq(1, 2).toDF("v"), eager = true)
       val first = sc.getCheckpointDir
       assert(first.isDefined)
       // same directory, different spelling: explicit scheme + non-normalized
       spark.conf.set("spark.graft.checkpointDir", "file:" + ckpt.toString + "/.")
-      Curation.cutLineage(Seq(3).toDF("v"), eager = true)
+      graft.exec.Cut.loop(Seq(3).toDF("v"), eager = true)
       assert(sc.getCheckpointDir === first,
         "a respelling of the same qualified dir must not re-point")
       // a genuinely different directory must re-point
       val other = Files.createTempDirectory("graft-ckpt-uri2")
       spark.conf.set("spark.graft.checkpointDir", other.toString)
-      Curation.cutLineage(Seq(4).toDF("v"), eager = true)
+      graft.exec.Cut.loop(Seq(4).toDF("v"), eager = true)
       assert(sc.getCheckpointDir !== first, "a new dir must re-point")
       assert(sc.getCheckpointDir.exists(_.contains(other.getFileName.toString)))
     } finally spark.conf.unset("spark.graft.checkpointDir")

@@ -6,8 +6,9 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
+import graft.exec.Pool
 
-/** The report pool (`Layout.async`) and its failure paths: pool threads
+/** The report pool (`Pool.async`) and its failure paths: pool threads
   * start with NO inherited Spark local properties (only the four job
   * properties are handed over, per task), and a query whose main-thread
   * work fails cancels and joins its outstanding report task and releases
@@ -23,14 +24,14 @@ class ReportPoolSpec extends SparkSpec {
     try {
       // a thread built by the pool's factory under the property starts clean
       @volatile var seen = "unset"
-      val t = Layout.reportThreads.newThread(() => seen = sc.getLocalProperty(staleKey))
+      val t = Pool.reportThreads.newThread(() => seen = sc.getLocalProperty(staleKey))
       t.start()
       t.join()
       assert(seen === null)
       // fill every pool thread at once while the property is held: any
       // thread the pool creates now is created under it
       val gate = new java.util.concurrent.CountDownLatch(1)
-      val held = (1 to 3).map(_ => Layout.async(() => {
+      val held = (1 to 3).map(_ => Pool.async(spark)(() => {
         gate.await()
         (sc.getLocalProperty(staleKey), sc.getLocalProperty("spark.jobGroup.id"))
       }))
@@ -42,7 +43,7 @@ class ReportPoolSpec extends SparkSpec {
       sc.clearJobGroup()
     }
     // a later task on the same threads sees neither
-    val later = (1 to 3).map(_ => Layout.async(() =>
+    val later = (1 to 3).map(_ => Pool.async(spark)(() =>
       (sc.getLocalProperty(staleKey), sc.getLocalProperty("spark.jobGroup.id"))))
     assert(later.map(_.await) === Seq.fill(3)((null, null)))
   }
@@ -89,6 +90,76 @@ class ReportPoolSpec extends SparkSpec {
         assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
           s"$name left a job running")
       }
+    }
+  }
+
+  /** Runs `body` with a listener recording the job group of every job
+    * started meanwhile, and returns those groups once every recorded job
+    * has ended. */
+  private def jobGroupsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      eventually(timeout(Span(10, Seconds))) {
+        assert(!started.isEmpty && ended.containsAll(started.keySet))
+      }
+    } finally sc.removeSparkListener(listener)
+    started.values.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a task submitted with no default session runs in the submitter's group and cancels") {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    sc.setJobGroup("graft-spec-nodefault", "report pool spec", interruptOnCancel = true)
+    try {
+      val groups = jobGroupsOf {
+        assert(Pool.async(spark)(() => spark.range(0, 100, 1, 2).count()).await === 100L)
+      }
+      assert(groups.nonEmpty && groups.forall(_ == "graft-spec-nodefault"), groups)
+      // a running task: its one job's tasks sleep until interrupted
+      val task = Pool.async(spark)(() =>
+        sc.parallelize(1 to 2, 2).foreach(_ => Thread.sleep(60000)))
+      eventually(timeout(Span(30, Seconds))) {
+        assert(sc.statusTracker.getActiveJobIds.nonEmpty)
+      }
+      val t0 = System.nanoTime()
+      task.cancel()
+      assert((System.nanoTime() - t0) / 1e9 < 20, "cancel did not stop the running task")
+      intercept[Exception](task.await)
+      eventually(timeout(Span(10, Seconds))) {
+        assert(sc.statusTracker.getActiveJobIds.isEmpty)
+      }
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
+  }
+
+  test("x_curation_e2e runs every job in the caller's group and leaves nothing behind, also when it fails") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.setJobGroup("graft-spec-curation", "curation pipeline")
+    try {
+      val groups = jobGroupsOf {
+        Curation.curationPipeline(spark, "/root/testdata/sf0.001").collect()
+      }
+      assert(groups.forall(_ == "graft-spec-curation"), groups.distinct)
+      // failure path: the label loop throws while the scan task may still run
+      intercept[Exception](Curation.curationPipeline(spark, truncatedDir).collect())
+    } finally sc.clearJobGroup()
+    assert(spark.sharedState.cacheManager.isEmpty, "x_curation_e2e left a cached frame")
+    eventually(timeout(Span(10, Seconds))) {
+      assert(sc.statusTracker.getActiveJobIds.isEmpty, "x_curation_e2e left a job running")
     }
   }
 }

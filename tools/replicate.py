@@ -10,7 +10,7 @@ text operators see near-dup (not identical) copies; dims/events/embeddings
 are symlinked. Used for the measured 1x/2x/4x scale-up table in
 ARCHITECTURE.md:
 
-    SPARK_GRAFT_CPUS=8 sbt "runMain graft.Profile /tmp/sfrep4 3 <query>"
+    SPARK_GRAFT_CPUS=8 sbt "runMain graft.Run profile /tmp/sfrep4 3 <query>"
 """
 import os
 import sys
