@@ -62,6 +62,7 @@ object Pool {
     private val tag = s"graft-report-${java.util.UUID.randomUUID}"
     private val started = new java.util.concurrent.atomic.AtomicBoolean(false)
     private val done = new java.util.concurrent.CountDownLatch(1)
+    @volatile private var joined = false
     private val f = reportPool.submit(new java.util.concurrent.Callable[A] {
       def call(): A = {
         if (!started.compareAndSet(false, true))
@@ -83,6 +84,11 @@ object Pool {
     def await: A =
       try f.get()
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      finally joined = true
+
+    /** Whether [[await]] has returned or thrown: the task's outcome is
+      * in the submitter's hands. */
+    private[Pool] def isJoined: Boolean = joined
 
     def cancel(): Unit =
       if (started.compareAndSet(false, true)) f.cancel(false)
@@ -96,7 +102,39 @@ object Pool {
   }
 
   /** Submit `task` on the report pool; its jobs run in the job group of
-    * the calling thread on `spark`'s context. */
+    * the calling thread on `spark`'s context. A submitter that can fail
+    * before joining every task goes through [[overlap]] instead. */
   private[graft] def async[A](spark: SparkSession)(task: () => A): ReportTask[A] =
     new ReportTask(spark.sparkContext, task)
+
+  /** The tasks one [[overlap]] body submitted. */
+  private[graft] final class Overlap private[Pool] (spark: SparkSession) {
+    private val tasks = new java.util.concurrent.ConcurrentLinkedQueue[ReportTask[_]]()
+
+    /** [[Pool.async]], tracked so a failing body cancels it. */
+    def async[A](task: () => A): ReportTask[A] = {
+      val t = Pool.async(spark)(task)
+      tasks.add(t)
+      t
+    }
+
+    private[Pool] def cancelUnjoined(): Unit =
+      tasks.forEach(t => if (!t.isJoined) t.cancel())
+  }
+
+  /** Run `body`, which overlaps report tasks with its own work through
+    * the [[Overlap]] it is handed. If the body — or any `await` in it —
+    * throws, every task not yet joined is cancelled (and joined) before
+    * the exception propagates, so a failed query leaves no orphan job
+    * running. */
+  private[graft] def overlap[A](spark: SparkSession)(body: Overlap => A): A = {
+    val o = new Overlap(spark)
+    try body(o)
+    catch {
+      case e: Throwable =>
+        try o.cancelUnjoined()
+        catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+    }
+  }
 }

@@ -31,7 +31,7 @@ object Curation {
     * repair. The narrowing is SESSION-global, and other threads DO plan
     * during `body`: [[splitLeakage]]'s doc_hash census and
     * [[incrementalClusters]]' probe cut run on the report pool
-    * ([[Pool.async]]) while the main thread works the loop, so a plan
+    * ([[Pool.overlap]]) while the main thread works the loop, so a plan
     * those tasks create inside the window picks up the narrowed
     * partition count and AQE off. Results are unaffected; at corpus
     * scale such a plan is shuffled through as few as 4 partitions — a
@@ -145,7 +145,6 @@ object Curation {
     // policy slices of the same union the old single collect computed,
     // and the final orderBy restores the identical total order.
     val naiveC = census(naive, "doc_hash")
-    val naiveTask = Pool.async(spark)(() => naiveC.collect())
     // The cluster_hash census joins pairs against the LABEL frame
     // directly (round 22, guide §2.3): the label loop emits a row for
     // EVERY doc that appears in some pair — exactly the docs the pair
@@ -155,15 +154,13 @@ object Curation {
     // path. split = splitName(splitBucket(cluster)) is the identical
     // policy: for paired docs clusterSplitsOf's anchor is
     // coalesce(cluster, doc_id) = cluster, never the fallback.
-    val rows = try {
+    val rows = try Pool.overlap(spark) { o =>
+      val naiveTask = o.async(() => naiveC.collect())
       val labels = dupClusterLabels(pairs).labelsUnsorted
       val clustered = labels
         .select(col("doc_id"), splitName(splitBucket(col("cluster"))).as("split"))
       val clusteredRows = census(clustered, "cluster_hash").collect()
       naiveTask.await ++ clusteredRows
-    } catch {
-      // failure path: no orphan census job may outlive the query
-      case e: Throwable => naiveTask.cancel(); throw e
     } finally pairs.unpersist()
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), naiveC.schema)
       .orderBy("policy", "split_x", "split_y")
@@ -218,11 +215,6 @@ object Curation {
     // window can't touch the cut, which plans no exchange). At 100 TB
     // the overlap hides the full corpus-scan latency behind the loop's
     // rounds.
-    val scannedTask = Pool.async(spark)(() =>
-      Cut.shared(TextAnalysis.gopherSignalsOf(docs, Seq(
-        "ckeep" -> TextAnalysis.classifierKeep(col("text")),
-        "h" -> Dedup.nfcContentHash,
-        "lang" -> col("lang")))))
     // The split tier joins the LABEL frame directly and applies the
     // split policy inline (round 22, guide §2.3): the corpus-wide
     // documents⋈labels assignment [[clusterSplits]] builds exists for
@@ -232,11 +224,13 @@ object Curation {
     // (coalesce(cluster, doc_id)) computes in the same projection. One
     // corpus-scale scan+join less in the final census job; the split
     // value per doc is the identical policy expression.
-    val (labels, scanned) = try {
+    val (labels, scanned) = Pool.overlap(spark) { o =>
+      val scannedTask = o.async(() =>
+        Cut.shared(TextAnalysis.gopherSignalsOf(docs, Seq(
+          "ckeep" -> TextAnalysis.classifierKeep(col("text")),
+          "h" -> Dedup.nfcContentHash,
+          "lang" -> col("lang")))))
       (dupClusterLabels(Dedup.lshCandidates(spark, dir)).labelsUnsorted, scannedTask.await)
-    } catch {
-      // failure path: no orphan scan job may outlive the query
-      case e: Throwable => scannedTask.cancel(); throw e
     }
     // lang rides the kept tier directly off the fused frame — one join
     // fewer than the original docs-side lang lookup
@@ -552,17 +546,14 @@ object Curation {
     // its action submits — before the loop's heavy prolog (the old-shard
     // pair pipeline) finishes materializing, so the probe keeps the
     // session's scale-adaptive width in any realistic timing.
-    val newPairsTask = Pool.async(spark)(() => Cut.shared(newPairs))
-    try {
+    try Pool.overlap(spark) { o =>
+      val newPairsTask = o.async(() => Cut.shared(newPairs))
       // stored state as of the previous ingest: labels over the old
       // shard (unsorted — star contraction joins it straight away)
       val labels0 = dupClusterLabels(Dedup.lshCandidatesOfSigs(sigsOld)).labelsUnsorted
       val star = labels0.where(col("doc_id") =!= col("cluster"))
         .select(col("cluster").as("doc_a"), col("doc_id").as("doc_b"))
       dupClusterLabels(star.union(newPairsTask.await)).labels
-    } catch {
-      // failure path: no orphan probe job may outlive the query
-      case e: Throwable => newPairsTask.cancel(); throw e
     } finally {
       // both loops and the probe cut have materialized (or failed): the
       // signature caches serve no remaining consumer (the returned

@@ -648,14 +648,15 @@ object Dedup {
     // join — its cut runs on the report pool while the main thread
     // materializes the pair cut, instead of paying the two corpus
     // passes back to back.
-    val shTask = Pool.async(spark)(() => Cut.shared(Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        explode(expr(hashedShingleExpr))
-          .as("s"))))
-    val pairs = Cut.shared(lshCandidates(spark, dir))
-    val sh = shTask.await
+    val (pairs, sh) = Pool.overlap(spark) { o =>
+      val shTask = o.async(() => Cut.shared(Tables.documents(spark, dir)
+        .select(col("doc_id"), split(col("text"), " ").as("w"))
+        .where(size(col("w")) >= 3)
+        .select(col("doc_id"),
+          explode(expr(hashedShingleExpr))
+            .as("s"))))
+      (Cut.shared(lshCandidates(spark, dir)), shTask.await)
+    }
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val inter = pairs
       .join(sh.select(col("doc_id").as("da"), col("s").as("sa")), col("doc_a") === col("da"))
@@ -699,12 +700,14 @@ object Dedup {
     // signature/candidate chain until the verify join, so it overlaps
     // on the report pool (round 22, guide §2.6 — same move as
     // [[containment]]).
-    val shTask = Pool.async(spark)(() => Cut.shared(docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(hashedShingleExpr)).as("s"))))
-    val sigs = Cut.shared(minhashSignaturesOf(docs))
-    val pairs = Cut.shared(lshCandidatesOfSigs(sigs))
+    val (sigs, pairs, sh) = Pool.overlap(spark) { o =>
+      val shTask = o.async(() => Cut.shared(docs
+        .select(col("doc_id"), split(col("text"), " ").as("w"))
+        .where(size(col("w")) >= 3)
+        .select(col("doc_id"), explode(expr(hashedShingleExpr)).as("s"))))
+      val sigs = Cut.shared(minhashSignaturesOf(docs))
+      (sigs, Cut.shared(lshCandidatesOfSigs(sigs)), shTask.await)
+    }
     val a = sigs.select(col("doc_id").as("doc_a") +:
       (0 until K).map(i => col(s"m$i").as(s"a$i")): _*)
     val b = sigs.select(col("doc_id").as("doc_b") +:
@@ -712,7 +715,6 @@ object Dedup {
     val slotMatches = (0 until K)
       .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val sh = shTask.await
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val inter = pairs
       .join(sh.select(col("doc_id").as("da"), col("s").as("sa")), col("doc_a") === col("da"))
@@ -819,14 +821,15 @@ object Dedup {
     // job paid the whole truth pipeline serially). Both sides land as
     // lineage cuts, so the final job is a join of two materialized
     // frames.
-    val truthTask = Pool.async(spark)(() =>
-      Cut.shared(jaccardPrefixJoinOf(Tables.documents(spark, dir))
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))))
-    // eager lineage cut, not persist: the candidate set feeds the
-    // cost-side count AND the truth join — uncut, the LSH pipeline
-    // would run twice (release discipline, see [[containment]])
-    val cands = Cut.shared(lshCandidates(spark, dir).withColumn("hit", lit(1L)))
-    val truth = truthTask.await
+    val (cands, truth) = Pool.overlap(spark) { o =>
+      val truthTask = o.async(() =>
+        Cut.shared(jaccardPrefixJoinOf(Tables.documents(spark, dir))
+          .select(col("doc_a"), col("doc_b"), col("jaccard"))))
+      // eager lineage cut, not persist: the candidate set feeds the
+      // cost-side count AND the truth join — uncut, the LSH pipeline
+      // would run twice (release discipline, see [[containment]])
+      (Cut.shared(lshCandidates(spark, dir).withColumn("hit", lit(1L))), truthTask.await)
+    }
     val nCands = cands.agg(count(lit(1)).as("n_cands"))
     truth.join(cands, Seq("doc_a", "doc_b"), "left")
       .withColumn("decile", least(floor(col("jaccard") * 10), lit(9)).cast("long"))

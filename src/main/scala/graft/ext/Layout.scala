@@ -348,9 +348,9 @@ object Layout {
         bits = 12, cellBits = 4)
     }
     boxReadReport(spark, out, Seq("user_id", "value"),
-      Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0))), Map.empty,
+      LakeNumBox, Map.empty,
       spark.range(0).select(col("id").as("user_id"), col("id").cast("double").as("value")),
-      col("user_id").between(60, 90) && col("value").between(100.0, 200.0))
+      lakeBox)
   }
 
   /** STRING-column file pruning end-to-end (round 13): the footer loop
@@ -570,12 +570,7 @@ object Layout {
     import graft.sources.{FooterManifest, PartitionedSink}
     val outBase = scratchDir("delta_base", dir)
     val outDelta = scratchDir("delta_arrivals", dir)
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0)))
+    val (_, base, delta) = lakeSplit(spark, dir)
     materializeIfChanged(outBase, layoutFingerprint("v1",
       PartitionedSink.withZCell(base, Seq("user_id", "value"), 12, 6)
         .select(col("event_id"), col("user_id"), col("value"), col("zcell")))) {
@@ -592,7 +587,7 @@ object Layout {
     // collect once; pruning + file total driver-side (guide §5)
     val mRows = m.collect()
     val kept = FooterManifest.filesToReadLocal(mRows,
-      Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0))))
+      LakeNumBox)
     val keptFiles = kept.map(_._1)
     val filesTotal = mRows.map(_.getString(0)).distinct.length.toLong
     val rowsScannedBase = kept.map(_._2).sum
@@ -611,7 +606,7 @@ object Layout {
     val survivors = baseKept.join(
       deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
     val rowsOut = survivors.unionByName(deltaDf)
-      .where(col("user_id").between(60, 90) && col("value").between(100.0, 200.0))
+      .where(lakeBox)
       .agg(count(lit(1)).as("rows_out"))
     spark.range(1)
       .select(lit(filesTotal).as("files_total"),
@@ -652,12 +647,7 @@ object Layout {
   def deltaFold(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{FooterManifest, PartitionedSink}
     val out = scratchDir("delta_fold", dir)
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
-    val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
-      .unionByName(ev.where(pmod(col("event_id"), lit(100)) === 1)
-        .withColumn("value", col("value") + lit(150.0)))
+    val (_, base, delta) = lakeSplit(spark, dir)
     // NO broadcast hint on the delta keys (round 15, VERDICT r14 #1): a
     // fold runs precisely when the delta has grown LARGE — that is what
     // zorderIncr's amplification number schedules — so "the delta is
@@ -676,9 +666,9 @@ object Layout {
         bits = 12, cellBits = 6)
     }
     boxReadReport(spark, out, Seq("user_id", "value"),
-      Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0))), Map.empty,
+      LakeNumBox, Map.empty,
       spark.range(0).select(col("id").as("user_id"), col("id").cast("double").as("value")),
-      col("user_id").between(60, 90) && col("value").between(100.0, 200.0))
+      lakeBox)
   }
 
   /** The z columns every lake lineage clusters on. */
@@ -944,7 +934,6 @@ object Layout {
       l.rewrite("fold", "fold")(PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
       l.rewrite("compact", "compact")(writeCompactedFold(spark, folded, _, zcols))
     }
-    val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
     // Every stage below resolves its file set FROM THE GENERATION LOG
     // (round 18): the manifests, not directory listings, decide which
     // files carry which state — the log is load-bearing, not bolted on.
@@ -959,7 +948,7 @@ object Layout {
       // pruning + file totals decided driver-side over the collected
       // manifest (round 21 — was a createDataFrame + filesToRead job
       // plus a distinct-sum job over local metadata; guide §5)
-      val keptBase = FooterManifest.filesToReadLocal(baseRows, numBox)
+      val keptBase = FooterManifest.filesToReadLocal(baseRows, LakeNumBox)
       val keptBaseFiles = keptBase.map(_._1)
       val rowsDelta = FooterManifest
         .buildFromFiles(spark, g0DeltaFiles, Seq("event_id")).collect()
@@ -983,7 +972,7 @@ object Layout {
       val files = readGeneration(root, gen).collect { case ("base", f) => f }
       val m = FooterManifest.buildFromFiles(spark, files, zcols)
       val mRows = m.collect()
-      val kept = FooterManifest.filesToReadLocal(mRows, numBox)
+      val kept = FooterManifest.filesToReadLocal(mRows, LakeNumBox)
       val keptFiles = kept.map(_._1)
       val rowsOut = readEvents(spark, keptFiles)
         .where(lakeBox).agg(count(lit(1)).as("rows_out"))
@@ -997,24 +986,25 @@ object Layout {
     // the three stage chains are independent given the committed log —
     // kick them NOW so their eager manifest jobs overlap the DECIDE
     // work below (guide §2.6; leaf tasks only, never nested)
-    val tasks = Seq(Pool.async(spark)(() => stage1()),
-      Pool.async(spark)(() => prunedStage(2L, "folded", 1)),
-      Pool.async(spark)(() => prunedStage(3L, "compacted", 2)))
-    // DECIDE: delta cells under the base's grid (base bounds, clamped) ∩
-    // base cell rows = the rewrite cost an eager re-cluster would pay
-    // now. The base-cell histogram and the delta count both came out of
-    // the fingerprint pass above; only the delta's DISTINCT grid cells
-    // (≤ 2^cellBits rows) still need their own delta-scale job, and the
-    // intersection sum folds driver-side at cell scale.
-    val deltaCellSet = cellsUnderBounds(delta, baseBoundsOf(base))
-      .collect().map(_.getLong(0)).toSet
-    val nDelta = cellHist.collectFirst {
-      case r if r.getLong(0) == -1L => r.getLong(1) }.getOrElse(0L)
-    val rowsRewritten = cellHist
-      .filter(r => r.getLong(0) >= 0L && deltaCellSet(r.getLong(0)))
-      .map(_.getLong(1)).sum
-    val amp = if (nDelta == 0) 0L else rowsRewritten * 1000 / nDelta
-    val Seq(s1, s2, s3) = tasks.map(_.await)
+    val (Seq(s1, s2, s3), amp) = Pool.overlap(spark) { o =>
+      val tasks = Seq(o.async(() => stage1()),
+        o.async(() => prunedStage(2L, "folded", 1)),
+        o.async(() => prunedStage(3L, "compacted", 2)))
+      // DECIDE: delta cells under the base's grid (base bounds, clamped) ∩
+      // base cell rows = the rewrite cost an eager re-cluster would pay
+      // now. The base-cell histogram and the delta count both came out of
+      // the fingerprint pass above; only the delta's DISTINCT grid cells
+      // (≤ 2^cellBits rows) still need their own delta-scale job, and the
+      // intersection sum folds driver-side at cell scale.
+      val deltaCellSet = cellsUnderBounds(delta, baseBoundsOf(base))
+        .collect().map(_.getLong(0)).toSet
+      val nDelta = cellHist.collectFirst {
+        case r if r.getLong(0) == -1L => r.getLong(1) }.getOrElse(0L)
+      val rowsRewritten = cellHist
+        .filter(r => r.getLong(0) >= 0L && deltaCellSet(r.getLong(0)))
+        .map(_.getLong(1)).sum
+      (tasks.map(_.await), if (nDelta == 0) 0L else rowsRewritten * 1000 / nDelta)
+    }
     s1.unionByName(s2)
       .unionByName(s3)
       .withColumn("amp_x1000", lit(amp))
@@ -1087,6 +1077,9 @@ object Layout {
   /** The standard 2-D box every lake observable answers. */
   private[graft] val lakeBox: Column =
     col("user_id").between(60, 90) && col("value").between(100.0, 200.0)
+
+  /** [[lakeBox]] as the footer-pruning bounds of its z columns. */
+  private val LakeNumBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
 
   /** Static per-lineage inputs of the ingest loop: the base grid frame,
     * the base cell manifest (collected once, ≤ 2^cellBits rows), and
@@ -1345,19 +1338,10 @@ object Layout {
     lakeIngest(spark, dir) // idempotently materialize the lineage + log
     val root = scratchDir("lake_ingest", dir)
     val gens = listGenerations(root)
-    // ONE distributed job answers every generation: the tagged AS-OF
-    // replays union into a single (≤ gens)-group hash-agg instead of
-    // one job per generation; the manifest reference counts are driver
-    // metadata the log already holds
-    val counts = gens.map(g => readLakeAsOf(spark, root, g)
-        .where(lakeBox).select(lit(g.toLong).as("gen")))
-      .reduce(_ unionByName _)
-      .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
-    val fileKinds = Set("base", "delta", "cdelta")
-    val manifests = gens
-      .map(g => (g.toLong,
-        readGeneration(root, g).count(e => fileKinds(e._1)).toLong))
-      .toDF("gen", "files_live")
+    // ONE distributed job answers every generation; the manifest
+    // reference counts are driver metadata the log already holds
+    val counts = boxCountsByGen(spark, root, gens)
+    val manifests = gens.map(g => (g.toLong, filesLive(root, g))).toDF("gen", "files_live")
     // left join: a generation whose box is empty still reports its row
     manifests.join(counts, Seq("gen"), "left_outer")
       .select(col("gen"), col("files_live"),
@@ -1444,7 +1428,6 @@ object Layout {
       l.rewrite("fold", "fold", "schema" -> evolvedSchema)(
         PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
     }
-    val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
     val scoreBox = Map("score" -> ((1100.0, 1200.0)))
     def emptyEvolved = emptyEvents(spark).withColumn("score", lit(null).cast("double"))
     // shared answered-rows report: count, evolved-column coverage, and
@@ -1460,33 +1443,34 @@ object Layout {
     // (round 21, guide §5)
     // the evolved READ schema, inferred by mergeSchema across the
     // mixed old/new files — what a catalog would record
-    val schemaTask = Pool.async(spark)(() => StructType(
-      spark.read.option("mergeSchema", "true").parquet(s"$root/tbl")
-        .schema.filterNot(_.name == "zcell")))
-    // STAGE 1 inputs — g1 is the evolved merge-on-read commit, its
-    // kinds partition base from arrival (round 18)
-    val stage1Task = Pool.async(spark)(() => {
-      val g1 = readGeneration(root, 1)
-      val g1BaseFiles = g1.collect { case ("base", f) => f }
-      val g1Delta = g1.collect { case ("delta", f) => f }
-      val baseRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
-      val rd = FooterManifest
-        .buildFromFiles(spark, g1Delta, Seq("event_id")).collect()
-        .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
-        .distinct.map(_._2).sum
-      (baseRows, rd, g1Delta)
-    })
-    // STAGES 2 & 3 input — the folded generation's footers, which now
-    // cover the evolved column next to the original z columns
-    val foldTask = Pool.async(spark)(() => FooterManifest.buildFromFiles(spark,
-      readGeneration(root, 2).collect { case ("base", f) => f },
-      zcols :+ "score").collect())
-    val dataSchema = schemaTask.await
-    val (baseMRows, rowsDelta, g1DeltaFiles) = stage1Task.await
-    val mfRows = foldTask.await
+    val (dataSchema, (baseMRows, rowsDelta, g1DeltaFiles), mfRows) =
+      Pool.overlap(spark) { o =>
+        val schemaTask = o.async(() => StructType(
+          spark.read.option("mergeSchema", "true").parquet(s"$root/tbl")
+            .schema.filterNot(_.name == "zcell")))
+        // STAGE 1 inputs — g1 is the evolved merge-on-read commit, its
+        // kinds partition base from arrival (round 18)
+        val stage1Task = o.async(() => {
+          val g1 = readGeneration(root, 1)
+          val g1BaseFiles = g1.collect { case ("base", f) => f }
+          val g1Delta = g1.collect { case ("delta", f) => f }
+          val baseRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
+          val rd = FooterManifest
+            .buildFromFiles(spark, g1Delta, Seq("event_id")).collect()
+            .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
+            .distinct.map(_._2).sum
+          (baseRows, rd, g1Delta)
+        })
+        // STAGES 2 & 3 input — the folded generation's footers, which now
+        // cover the evolved column next to the original z columns
+        val foldTask = o.async(() => FooterManifest.buildFromFiles(spark,
+          readGeneration(root, 2).collect { case ("base", f) => f },
+          zcols :+ "score").collect())
+        (schemaTask.await, stage1Task.await, foldTask.await)
+      }
     // STAGE 1 — evolved merge-on-read: prune base files from footers,
     // always read the delta, answer through the union schema
-    val keptBase = FooterManifest.filesToReadLocal(baseMRows.toSeq, numBox)
+    val keptBase = FooterManifest.filesToReadLocal(baseMRows.toSeq, LakeNumBox)
     val keptBaseFiles = keptBase.map(_._1)
     val deltaDf = spark.read.schema(dataSchema).parquet(g1DeltaFiles: _*)
     val baseKept = if (keptBaseFiles.isEmpty) emptyEvolved
@@ -1515,7 +1499,7 @@ object Layout {
         lit(kept.map(_._2).sum).as("rows_scanned"))
         .crossJoin(broadcast(outAgg(answered, filter)))
     }
-    s1.unionByName(foldStage(2L, "folded", numBox, lakeBox))
+    s1.unionByName(foldStage(2L, "folded", LakeNumBox, lakeBox))
       .unionByName(foldStage(3L, "score_pruned", scoreBox,
         col("score").between(1100.0, 1200.0)))
       .orderBy("stage")
@@ -1601,7 +1585,6 @@ object Layout {
       l.rewrite("fold", "fold", "schema" -> LakeSchema)(
         PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
     }
-    val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
     val uidBox = Map("user_id" -> ((3.0, 9.0)))
     // shared answered-rows report: count + the exact integer checksum of
     // the user ids carried through the promotion
@@ -1616,21 +1599,22 @@ object Layout {
     // the two independent eager chains — the g1 (mixed-width) manifests
     // and the folded generation's manifest — overlap (guide §2.6);
     // pruning and file totals fold driver-side (round 21, guide §5)
-    val mixedTask = Pool.async(spark)(() => {
-      val g1 = readGeneration(root, 1)
-      val g1BaseFiles = g1.collect { case ("base", f) => f }
-      val g1Delta = g1.collect { case ("delta", f) => f }
-      val baseRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
-      val rd = FooterManifest
-        .buildFromFiles(spark, g1Delta, Seq("event_id")).collect()
-        .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
-        .distinct.map(_._2).sum
-      (baseRows, rd, g1Delta)
-    })
-    val foldTask = Pool.async(spark)(() => FooterManifest.buildFromFiles(spark,
-      readGeneration(root, 2).collect { case ("base", f) => f }, zcols).collect())
-    val (baseMRows, rowsDelta, g1DeltaFiles) = mixedTask.await
-    val mfRows = foldTask.await
+    val ((baseMRows, rowsDelta, g1DeltaFiles), mfRows) = Pool.overlap(spark) { o =>
+      val mixedTask = o.async(() => {
+        val g1 = readGeneration(root, 1)
+        val g1BaseFiles = g1.collect { case ("base", f) => f }
+        val g1Delta = g1.collect { case ("delta", f) => f }
+        val baseRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
+        val rd = FooterManifest
+          .buildFromFiles(spark, g1Delta, Seq("event_id")).collect()
+          .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
+          .distinct.map(_._2).sum
+        (baseRows, rd, g1Delta)
+      })
+      val foldTask = o.async(() => FooterManifest.buildFromFiles(spark,
+        readGeneration(root, 2).collect { case ("base", f) => f }, zcols).collect())
+      (mixedTask.await, foldTask.await)
+    }
     val baseFilesTotal = baseMRows.map(_.getAs[String]("file")).distinct.length.toLong
     val deltaDf = spark.read.schema(LakeSchema).parquet(g1DeltaFiles: _*)
     def mixedStage(stage: Long, state: String,
@@ -1648,7 +1632,7 @@ object Layout {
         .crossJoin(broadcast(outAgg(merged, filter)))
     }
     // STAGE 2 — the uniformly-wide folded generation's footers
-    val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, numBox)
+    val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, LakeNumBox)
     val keptFFiles = keptF.map(_._1)
     val answeredF = readEvents(spark, keptFFiles)
     val s2 = spark.range(1).select(
@@ -1657,7 +1641,7 @@ object Layout {
       lit(keptFFiles.size.toLong).as("files_read"),
       lit(keptF.map(_._2).sum).as("rows_scanned"))
       .crossJoin(broadcast(outAgg(answeredF, lakeBox)))
-    mixedStage(1L, "merge_on_read", numBox, lakeBox)
+    mixedStage(1L, "merge_on_read", LakeNumBox, lakeBox)
       .unionByName(s2)
       .unionByName(mixedStage(3L, "uid_pruned", uidBox,
         col("user_id").between(3, 9)))
@@ -1739,7 +1723,6 @@ object Layout {
     import graft.sources.FooterManifest
     val root = ensureDeleteLog(spark, dir)
     val zcols = Seq("user_id", "value")
-    val numBox = Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0)))
     // file sets resolve FROM THE GENERATION LOG (round 18): g1 carries
     // the base refs + the CRUD arrival (kind cdelta), g2 the fold
     val g1 = readGeneration(root, 1)
@@ -1769,20 +1752,21 @@ object Layout {
     // the two independent eager chains — g1's manifests and the folded
     // generation's manifest — overlap (guide §2.6); pruning and file
     // totals fold driver-side (round 21, guide §5)
-    val s1Task = Pool.async(spark)(() => {
-      val mRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
-      val rd = FooterManifest
-        .buildFromFiles(spark, cdeltaFiles, Seq("event_id")).collect()
-        .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
-        .distinct.map(_._2).sum
-      (mRows, rd)
-    })
-    val s2Task = Pool.async(spark)(() =>
-      FooterManifest.buildFromFiles(spark, foldFiles, zcols).collect())
-    val (mRows, rowsDelta) = s1Task.await
-    val mfRows = s2Task.await
+    val ((mRows, rowsDelta), mfRows) = Pool.overlap(spark) { o =>
+      val s1Task = o.async(() => {
+        val mRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
+        val rd = FooterManifest
+          .buildFromFiles(spark, cdeltaFiles, Seq("event_id")).collect()
+          .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
+          .distinct.map(_._2).sum
+        (mRows, rd)
+      })
+      val s2Task = o.async(() =>
+        FooterManifest.buildFromFiles(spark, foldFiles, zcols).collect())
+      (s1Task.await, s2Task.await)
+    }
     // STAGE 1 — merge-on-read with tombstones over pruned base footers
-    val kept = FooterManifest.filesToReadLocal(mRows.toSeq, numBox)
+    val kept = FooterManifest.filesToReadLocal(mRows.toSeq, LakeNumBox)
     val keptFiles = kept.map(_._1)
     val merged1 = readEvents(spark, keptFiles)
       .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
@@ -1796,7 +1780,7 @@ object Layout {
       lit(kept.map(_._2).sum + rowsDelta).as("rows_scanned"))
       .crossJoin(broadcast(boxCount1))
     // STAGE 2 — the folded (physically erased) generation's footers
-    val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, numBox)
+    val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, LakeNumBox)
     val keptFFiles = keptF.map(_._1)
     val boxCount2 = readEvents(spark, keptFFiles)
       .where(lakeBox).agg(count(lit(1)).as("rows_out"))
@@ -2885,6 +2869,21 @@ object Layout {
     }
   }
 
+  /** Every generation in `gens` answers the standard box in ONE job:
+    * the tagged AS-OF replays union into a single (≤ gens)-group
+    * hash-agg of (gen, rows_out). A generation whose box is empty has
+    * no row — callers left-join and coalesce. */
+  private def boxCountsByGen(spark: SparkSession, root: String, gens: Seq[Int]): DataFrame =
+    gens.map(g => readLakeAsOf(spark, root, g)
+        .where(lakeBox).select(lit(g.toLong).as("gen")))
+      .reduce(_ unionByName _)
+      .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
+
+  /** The data files generation `g` of `root` references (driver
+    * metadata, no job). */
+  private def filesLive(root: String, g: Int): Long =
+    readGeneration(root, g).count(e => LogFileKinds(e._1)).toLong
+
   /** Files whose `key` footer range may intersect [lo, hi] — the merge
     * probe's key-range file skipping (round 21, VERDICT r20 missing
     * #2), reduced to the same footer-stat machinery every pruned read
@@ -3218,15 +3217,10 @@ object Layout {
           && !(col("value") < col("__tv") - 100.0), 1L).otherwise(0L)), lit(0L))
           .as("n_matched_noop"))
     val gens = listGenerations(root)
-    val counts = gens.map(g => readLakeAsOf(spark, root, g)
-        .where(lakeBox).select(lit(g.toLong).as("gen")))
-      .reduce(_ unionByName _)
-      .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
+    val counts = boxCountsByGen(spark, root, gens)
     val states = Map(0 -> "pre_merge", 1 -> "merged")
-    val manifests = gens.map { g =>
-      (g.toLong, states.getOrElse(g, s"g$g"),
-        readGeneration(root, g).count(e => LogFileKinds(e._1)).toLong)
-    }.toDF("gen", "state", "files_live")
+    val manifests = gens.map(g => (g.toLong, states.getOrElse(g, s"g$g"), filesLive(root, g)))
+      .toDF("gen", "state", "files_live")
     manifests.join(counts, Seq("gen"), "left_outer")
       .crossJoin(broadcast(acc))
       .select(col("gen"), col("state"), col("files_live"), col("n_source"),
@@ -3302,15 +3296,10 @@ object Layout {
         coalesce(sum(when(!(col("value") < 50.0), 1L).otherwise(0L)), lit(0L))
           .as("n_kept_unmatched"))
     val gens = listGenerations(root)
-    val counts = gens.map(g => readLakeAsOf(spark, root, g)
-        .where(lakeBox).select(lit(g.toLong).as("gen")))
-      .reduce(_ unionByName _)
-      .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
+    val counts = boxCountsByGen(spark, root, gens)
     val states = Map(0 -> "pre_sync", 1 -> "synced")
-    val manifests = gens.map { g =>
-      (g.toLong, states.getOrElse(g, s"g$g"),
-        readGeneration(root, g).count(e => LogFileKinds(e._1)).toLong)
-    }.toDF("gen", "state", "files_live")
+    val manifests = gens.map(g => (g.toLong, states.getOrElse(g, s"g$g"), filesLive(root, g)))
+      .toDF("gen", "state", "files_live")
     manifests.join(counts, Seq("gen"), "left_outer")
       .crossJoin(broadcast(srcAcc))
       .crossJoin(broadcast(tgtAcc))
@@ -3446,11 +3435,7 @@ object Layout {
       else FooterManifest.buildFromFiles(spark, distinctFiles, Seq("event_id"))
         .select(col("file"), col("n_rows")).distinct().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // every generation's box answer in ONE tagged-replay hash-agg job
-    val counts = gens.map(g => readLakeAsOf(spark, root, g)
-        .where(lakeBox).select(lit(g.toLong).as("gen")))
-      .reduce(_ unionByName _)
-      .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
+    val counts = boxCountsByGen(spark, root, gens)
     val manifests = gens.map { g =>
       val files = filesByGen(g)
       (g.toLong, states.getOrElse(g, s"g$g"), files.size.toLong,
@@ -3489,13 +3474,9 @@ object Layout {
     // one tagged-replay hash-agg answers every DISTINCT resolved
     // generation's box (probes sharing a generation share the job)
     val distinctGens = resolved.map(_._2).distinct
-    val counts = distinctGens.map(g => readLakeAsOf(spark, root, g)
-        .where(lakeBox).select(lit(g.toLong).as("gen")))
-      .reduce(_ unionByName _)
-      .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
-    val rows = resolved.map { case (p, g) =>
-      (p, g.toLong, readGeneration(root, g).count(e => LogFileKinds(e._1)).toLong)
-    }.toDF("probe", "gen", "files_live")
+    val counts = boxCountsByGen(spark, root, distinctGens)
+    val rows = resolved.map { case (p, g) => (p, g.toLong, filesLive(root, g)) }
+      .toDF("probe", "gen", "files_live")
     rows.join(counts, Seq("gen"), "left_outer")
       .select(col("probe"), col("gen"), col("files_live"),
         coalesce(col("rows_out"), lit(0L)).as("rows_out"))
@@ -3851,11 +3832,12 @@ object Layout {
     // roots) and each pays its own fingerprint pass — overlap the two
     // ensure* legs with the ingest replay (guide §2.6; leaf tasks, no
     // nested pool use)
-    val deleteTask = Pool.async(spark)(() => ensureDeleteLog(spark, dir))
-    val mergeTask = Pool.async(spark)(() => ensureMergeLog(spark, dir))
-    lakeIngest(spark, dir) // idempotently materialize the lineages
-    val deleteRoot = deleteTask.await
-    val mergeRoot = mergeTask.await
+    val (deleteRoot, mergeRoot) = Pool.overlap(spark) { o =>
+      val deleteTask = o.async(() => ensureDeleteLog(spark, dir))
+      val mergeTask = o.async(() => ensureMergeLog(spark, dir))
+      lakeIngest(spark, dir) // idempotently materialize the lineages
+      (deleteTask.await, mergeTask.await)
+    }
     (historyRows(scratchDir("lake_ingest", dir), "lake_ingest") ++
       historyRows(deleteRoot, "lake_delete") ++
       historyRows(mergeRoot, "lake_merge"))
@@ -3938,14 +3920,10 @@ object Layout {
     }
     val writers = Map(0 -> ("seed", 0L), 1 -> ("A", 0L), 2 -> ("B", 1L))
     val gens = listGenerations(root)
-    val counts = gens.map(g => readLakeAsOf(spark, root, g)
-        .where(lakeBox).select(lit(g.toLong).as("gen")))
-      .reduce(_ unionByName _)
-      .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
+    val counts = boxCountsByGen(spark, root, gens)
     val manifests = gens.map { g =>
       val (w, c) = writers(g)
-      (g.toLong, w, c,
-        readGeneration(root, g).count(e => LogFileKinds(e._1)).toLong)
+      (g.toLong, w, c, filesLive(root, g))
     }.toDF("gen", "writer", "conflicts", "files_live")
     manifests.join(counts, Seq("gen"), "left_outer")
       .select(col("gen"), col("writer"), col("conflicts"), col("files_live"),
@@ -4178,6 +4156,29 @@ object Layout {
       |  FROM b),
       |f AS (SELECT zv >> 2 AS file_id, db, ub FROM z)""".stripMargin
 
+  /** `name`: one row per bucket-grid file of `src` (grouped by `key`)
+    * with its row count and day/user bucket bounds. */
+  private def bucketFiles(name: String, key: String, src: String = "f"): String =
+    s"""$name AS (
+       |  SELECT $key, count(*) AS n_rows,
+       |    min(db) AS min_db, max(db) AS max_db,
+       |    min(ub) AS min_ub, max(ub) AS max_ub
+       |  FROM $src GROUP BY 1)""".stripMargin
+
+  /** The bucket-grid probe a file's bounds may overlap: days 10–12 ×
+    * user buckets 8–11. */
+  private val bucketProbe = "max_db >= 10 AND min_db <= 12 AND max_ub >= 8 AND min_ub <= 11"
+
+  /** [[bucketCte]]'s `manifest` plus each file's running row prefix `p`
+    * in curve order — the compaction planner's input. */
+  private val compactionCtes: String =
+    s"""$bucketCte,
+       |${bucketFiles("manifest", "file_id")},
+       |p AS (
+       |  SELECT *, CAST(coalesce(sum(n_rows) OVER (ORDER BY file_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre_rows
+       |  FROM manifest)""".stripMargin
+
   /** Generated Morton interleave formula over two SQL column names —
     * identical bit placement to [[morton5]] at bits=5, and to
     * [[graft.sources.PartitionedSink.writeZCelled]]'s key at bits=12
@@ -4207,104 +4208,231 @@ object Layout {
     stages._2.mkString(",\n")
   }
 
-  /** Shared CTE fragments of the ingest-lineage oracles: the base grid
-    * (ev/base/ins/bb/bq/bfiles) and the per-batch slices b$i / cells
-    * c$i / cumulative-deltas d$i, unrolled for the 3 deterministic
-    * arrival batches. ONE generator feeds both [[lakeIngestOracleSql]]
-    * (the metrics oracle) and the AS-OF oracle — a batch-count or
-    * formula change cannot desync them. */
-  private def lakeIngestCommonCtes: String = {
-    // NULL-bounds guard mirrors quantize (ADVICE r15): an empty base
-    // leaves lo/hi NULL, and without the explicit check the NULL norm
-    // would fall through to the clamp, where least/greatest SKIP NULLs
-    val quantClamped = (c: String, lo: String, hi: String) =>
-      s"CAST(round(greatest(0.0, least(1.0, CASE WHEN $c IS NULL OR $hi IS NULL " +
-        s"OR $hi - $lo = 0 THEN 0.0 " +
-        s"ELSE (CAST($c AS DOUBLE) - $lo) / ($hi - $lo) END)) * 4095) AS BIGINT)"
-    val batchSel = Seq(
-      "SELECT event_id, user_id, value FROM ins WHERE (((event_id // 10) % 3) + 3) % 3 = 0",
-      "SELECT event_id, user_id, value FROM ins WHERE (((event_id // 10) % 3) + 3) % 3 = 1\n" +
-        "  UNION ALL SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE ((event_id % 100) + 100) % 100 = 1",
-      "SELECT event_id, user_id, value FROM ins WHERE (((event_id // 10) % 3) + 3) % 3 = 2")
-    val perBatch = (0 until 3).map { i =>
-      val cum = (0 to i).map(j => s"SELECT * FROM b$j").mkString(" UNION ALL ")
-      s"""b$i AS (${batchSel(i)}),
-         |q$i AS (SELECT ${quantClamped("user_id", "lo_u", "hi_u")} AS qu,
-         |  ${quantClamped("value", "lo_v", "hi_v")} AS qv FROM b$i, bb),
-         |c$i AS (SELECT DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM q$i),
-         |d$i AS ($cum)""".stripMargin
-    }.mkString(",\n")
+  // ---- The lake oracles' SQL vocabulary ---------------------------------
+  // Every lake oracle is assembled from the fragments below: the fixture
+  // slices, the cell grid, the box, packed groups and the change feed.
+  // They are SQL text over literals and the `events` table ONLY — never
+  // derived from the Spark-side code (only [[mortonSql]] and
+  // [[CompactionTargetRows]] are shared), so each oracle stays an
+  // independent reference for the query it checks.
+
+  /** The standard 2-D box: (column, footer-stat suffix, lo, hi). */
+  private val boxSpec = Seq(("user_id", "u", "60", "90"), ("value", "v", "100.0", "200.0"))
+
+  /** Footer-stat miss of `[lo, hi]`: a file whose min/max under stat
+    * suffix `s` prove it holds no row in range (all-NULL stats never
+    * prune). */
+  private def statsMiss(s: String, lo: String, hi: String): String =
+    s"(min_$s IS NOT NULL AND (max_$s < $lo OR min_$s > $hi))"
+
+  /** The box as a row predicate. */
+  private val boxSql =
+    boxSpec.map { case (c, _, lo, hi) => s"$c BETWEEN $lo AND $hi" }.mkString(" AND ")
+
+  /** The box's footer-pruning form: a file any box column misses. */
+  private val boxMissSql =
+    boxSpec.map { case (_, s, lo, hi) => statsMiss(s, lo, hi) }.mkString(" OR ")
+
+  /** Scalar box count of relation `src`. */
+  private def boxRows(src: String): String =
+    s"(SELECT CAST(count(*) AS BIGINT) FROM $src WHERE $boxSql)"
+
+  /** The arrival batch (0, 1, 2) of an insert row. */
+  private val batchOf = "(((event_id // 10) % 3) + 3) % 3"
+
+  /** `name` = newest-wins `rows` over `over`: a row of `over` gives way
+    * whenever its key is in `keys` (default: the keys of `rows`). */
+  private def newestWins(name: String, rows: String, keys: String = "",
+      over: String = "base"): String =
+    s"""$name AS (
+       |  SELECT * FROM $rows
+       |  UNION ALL
+       |  SELECT o.* FROM $over o ANTI JOIN ${if (keys.isEmpty) rows else keys} k
+       |    ON k.event_id = o.event_id)""".stripMargin
+
+  /** The lake fixture slices of `events`: `ev` (the projection), `base`
+    * (the 90% `event_id % 10 <> 0`), `ins` (the 10% inserts), `upd` (the
+    * mod-100≡1 rows at their ORIGINAL values), `tomb` (the mod-100≡3
+    * base rows deletes erase), `delta` (the inserts plus the +150
+    * corrected updates) and `merged` (newest-wins delta over base). */
+  private val lakeSlices: String =
     s"""ev AS (SELECT event_id, user_id, value FROM events),
        |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
        |ins AS (SELECT * FROM ev WHERE event_id % 10 = 0),
-       |bb AS (
+       |upd AS (SELECT * FROM ev WHERE event_id % 100 = 1),
+       |tomb AS (SELECT * FROM ev WHERE event_id % 100 = 3),
+       |delta AS (
+       |  SELECT * FROM ins
+       |  UNION ALL
+       |  SELECT event_id, user_id, value + 150.0 AS value FROM upd),
+       |${newestWins("merged", "delta")}""".stripMargin
+
+  /** The z-cell grid of `src` as CTEs named by prefix `p`: `{p}b` the
+    * (user_id, value) bounds of `bounds`; `{p}q` the 12-bit quantized
+    * rows; `{p}cells` their Morton cell (`>> shift`); `{p}files` one row
+    * per cell (n_rows, min/max of user_id, value and every `carry`
+    * column — what the file's footer holds); `{p}kept` the files the box
+    * keeps; `{p}n` the file count. A grid over FOREIGN bounds (an arrival
+    * under the base grid) clamps to the border cells, and its NULL-bounds
+    * guard mirrors quantize (ADVICE r15): an empty bounds source leaves
+    * lo/hi NULL, and without the explicit check the NULL norm would fall
+    * through to the clamp, where least/greatest SKIP NULLs. */
+  private def cellGrid(p: String, src: String, bounds: String, shift: Int = 18,
+      carry: Seq[String] = Nil): String = {
+    val clamp = bounds != src
+    def quantize(c: String, s: String) = {
+      val norm = s"CASE WHEN $c IS NULL OR ${if (clamp) s"hi_$s IS NULL OR " else ""}" +
+        s"hi_$s - lo_$s = 0 THEN 0.0 ELSE (CAST($c AS DOUBLE) - lo_$s) / (hi_$s - lo_$s) END"
+      val unit = if (clamp) s"greatest(0.0, least(1.0, $norm))" else s"($norm)"
+      s"CAST(round($unit * 4095) AS BIGINT) AS q$s"
+    }
+    val cols = ("user_id" +: "value" +: carry).mkString(", ")
+    val carried = carry.map(c => s",\n    min($c) AS min_$c, max($c) AS max_$c").mkString
+    s"""${p}b AS (
        |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
        |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-       |  FROM base),
-       |bq AS (
-       |  SELECT user_id, value,
-       |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-       |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-       |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-       |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-       |  FROM base, bb),
-       |bfiles AS (
-       |  SELECT (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell, count(*) AS n_rows
-       |  FROM bq GROUP BY 1),
+       |  FROM $bounds),
+       |${p}q AS (
+       |  SELECT $cols,
+       |    ${quantize("user_id", "u")},
+       |    ${quantize("value", "v")}
+       |  FROM $src, ${p}b),
+       |${p}cells AS (SELECT $cols,
+       |    (${mortonSql("qu", "qv", 12)}) >> $shift AS zcell FROM ${p}q),
+       |${p}files AS (
+       |  SELECT zcell, count(*) AS n_rows,
+       |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
+       |    min(value) AS min_v, max(value) AS max_v$carried
+       |  FROM ${p}cells GROUP BY 1),
+       |${p}kept AS (SELECT * FROM ${p}files WHERE NOT ($boxMissSql)),
+       |${p}n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ${p}files)""".stripMargin
+  }
+
+  /** Compaction of a cell grid's `files` into quarter-corpus packed
+    * groups — greedy running-sum over curve order, the layout
+    * [[writeCompactedFold]] writes: `grp` (one row per group with its
+    * merged stats), `gkept` (the groups the box keeps), `ng` (the group
+    * count). */
+  private def packedGroups(files: String): String =
+    s"""tgt AS (SELECT CAST(greatest(1, (coalesce(sum(n_rows), 0) + 3) // 4) AS BIGINT) AS t
+       |  FROM $files),
+       |ford AS (SELECT *, coalesce(sum(n_rows) OVER (ORDER BY zcell
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre FROM $files),
+       |grp AS (
+       |  SELECT pre // t AS gid, sum(n_rows) AS n_rows,
+       |    min(min_u) AS min_u, max(max_u) AS max_u,
+       |    min(min_v) AS min_v, max(max_v) AS max_v
+       |  FROM ford, tgt GROUP BY 1),
+       |gkept AS (SELECT * FROM grp WHERE NOT ($boxMissSql)),
+       |ng AS (SELECT CAST(count(*) AS BIGINT) AS n FROM grp)""".stripMargin
+
+  /** (files_total, files_read, rows_scanned) of a footer-pruned read of
+    * `files` keeping `kept`, plus `extraFiles` never-pruned files holding
+    * `extraRows` rows (the merge-on-read delta). */
+  private def prunedReadCols(files: String, kept: String, extraFiles: Int = 0,
+      extraRows: String = "0"): String =
+    s"""CAST((SELECT count(*) FROM $files) + $extraFiles AS BIGINT) AS files_total,
+       |    CAST((SELECT count(*) FROM $kept) + $extraFiles AS BIGINT) AS files_read,
+       |    CAST((SELECT coalesce(sum(n_rows), 0) FROM $kept) + $extraRows AS BIGINT)
+       |      AS rows_scanned""".stripMargin
+
+  /** `st`: one row per (state, columns-after-state) stage, numbered
+    * from 1 in order. */
+  private def stagesCte(stages: (String, String)*): String =
+    stages.zipWithIndex.map { case ((state, cols), i) =>
+      s"SELECT CAST(${i + 1} AS BIGINT) AS stage, '$state' AS state,\n    $cols"
+    }.mkString("st AS (\n  ", "\n  UNION ALL ", ")")
+
+  /** A change-feed oracle over `ctes`: each (from_gen, to_gen,
+    * change_type, value expression, source) row set feeds its rows, and
+    * the feed aggregates to per-transition counts and exact integer
+    * checksums (⌊value⌋ sums are exact in both engines, so pre/post
+    * images are pinned by content). */
+  private def changeFeedSql(ctes: String, rows: (Int, Int, String, String, String)*): String = {
+    val feed = rows.map { case (from, to, kind, value, src) =>
+      s"SELECT $from AS from_gen, $to AS to_gen, '$kind' AS change_type,\n" +
+        s"         event_id, user_id, $value AS value FROM $src"
+    }.mkString("\n  UNION ALL\n  ")
+    s"""WITH $ctes,
+       |feed AS (
+       |  $feed)
+       |SELECT CAST(from_gen AS BIGINT) AS from_gen, CAST(to_gen AS BIGINT) AS to_gen,
+       |  change_type, CAST(count(*) AS BIGINT) AS n_rows,
+       |  CAST(sum(event_id) AS BIGINT) AS key_chk,
+       |  CAST(sum(user_id) AS BIGINT) AS uid_chk,
+       |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_chk
+       |FROM feed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
+  }
+
+  /** The slices plus the base grid `b` every lake lineage seeds from. */
+  private val lakeBaseCtes: String =
+    s"""$lakeSlices,
+       |${cellGrid("b", "base", "base")}""".stripMargin
+
+  /** [[lakeBaseCtes]] plus the folded grid `m` over `merged` — the
+    * merge-on-read / fold lineage most lake reports replay. */
+  private val lakeFoldCtes: String =
+    s"""$lakeBaseCtes,
+       |${cellGrid("m", "merged", "merged")}""".stripMargin
+
+  /** The delete lineage's state: `delta` arrivals plus `tomb` deletes
+    * (`dkeys`), the newest-wins `erased` state, and its fold grid `e`. */
+  private val lakeEraseCtes: String =
+    s"""dkeys AS (SELECT event_id FROM delta UNION ALL SELECT event_id FROM tomb),
+       |${newestWins("erased", "delta", "dkeys")},
+       |${cellGrid("e", "erased", "erased")}""".stripMargin
+
+  /** Shared CTE fragments of the ingest-lineage oracles: the slices, the
+    * base grid `b`, and per arrival batch i the slice `b$i`, its cells
+    * under the base grid `c$i`, the cumulative arrivals `d$i` and the
+    * newest-wins state after it `n$i`, unrolled for the 3 deterministic
+    * batches. ONE generator feeds the metrics, AS-OF and history
+    * oracles — a batch-count or formula change cannot desync them. */
+  private def lakeIngestCommonCtes: String = {
+    val batchSel = Seq(
+      s"SELECT * FROM ins WHERE $batchOf = 0",
+      s"SELECT * FROM ins WHERE $batchOf = 1\n  UNION ALL SELECT event_id, user_id, " +
+        "value + 150.0 AS value FROM ev WHERE ((event_id % 100) + 100) % 100 = 1",
+      s"SELECT * FROM ins WHERE $batchOf = 2")
+    val perBatch = (0 until 3).map { i =>
+      val cum = (0 to i).map(j => s"SELECT * FROM b$j").mkString(" UNION ALL ")
+      s"""b$i AS (${batchSel(i)}),
+         |${cellGrid(s"c$i", s"b$i", "base")},
+         |d$i AS ($cum),
+         |${newestWins(s"n$i", s"d$i")}""".stripMargin
+    }.mkString(",\n")
+    s"""$lakeBaseCtes,
        |$perBatch""".stripMargin
   }
+
+  /** The ingest fold's grid `f`: newest-wins(base ∪ all three arrival
+    * batches) re-quantized under its OWN bounds — the layout
+    * [[lakeIngest]]'s trailing fold commit writes. */
+  private val lakeIngestFoldCtes: String = cellGrid("f", "n2", "n2")
 
   /** Generated x_lake_ingest oracle: per-batch metric fragments over
     * [[lakeIngestCommonCtes]]. */
   private def lakeIngestOracleSql: String = {
     val perBatch = (0 until 3).map { i =>
-      s"""m$i AS (SELECT CAST($i AS BIGINT) AS batch_id,
+      s"""SELECT CAST($i AS BIGINT) AS batch_id,
          |  (SELECT CAST(count(*) AS BIGINT) FROM b$i) AS n_arrived,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM c$i
+         |  (SELECT CAST(count(*) AS BIGINT) FROM c${i}files
          |     WHERE zcell IN (SELECT zcell FROM bfiles)) AS n_affected_files,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM c$i
+         |  (SELECT CAST(count(*) AS BIGINT) FROM c${i}files
          |     WHERE zcell NOT IN (SELECT zcell FROM bfiles)) AS n_new_files,
          |  (SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) FROM bfiles
-         |     WHERE zcell IN (SELECT zcell FROM c$i)) AS rows_rewritten,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM (
-         |      SELECT * FROM d$i
-         |      UNION ALL
-         |      SELECT b.* FROM base b ANTI JOIN d$i dd ON dd.event_id = b.event_id) mm
-         |    WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0) AS rows_out_after)""".stripMargin
-    }.mkString(",\n")
+         |     WHERE zcell IN (SELECT zcell FROM c${i}files)) AS rows_rewritten,
+         |  ${boxRows(s"n$i")} AS rows_out_after""".stripMargin
+    }.mkString("\n  UNION ALL ")
     s"""WITH $lakeIngestCommonCtes,
-       |$perBatch
+       |m AS (
+       |  $perBatch)
        |SELECT batch_id, n_arrived, n_affected_files, n_new_files, rows_rewritten,
        |  CAST(CASE WHEN n_arrived = 0 THEN 0
        |    ELSE rows_rewritten * 1000 // n_arrived END AS BIGINT) AS amp_x1000,
        |  rows_out_after
-       |FROM (SELECT * FROM m0 UNION ALL SELECT * FROM m1 UNION ALL SELECT * FROM m2) u
-       |ORDER BY batch_id""".stripMargin
+       |FROM m ORDER BY batch_id""".stripMargin
   }
-
-  /** The ingest fold's cell-grid CTEs: newest-wins(base ∪ all three
-    * arrival batches) re-quantized under its OWN bounds — the layout
-    * [[lakeIngest]]'s trailing fold commit writes. Shared by the AS-OF
-    * and history oracles (round 19). Yields `fm` (the folded corpus)
-    * and `fn` (its distinct-cell count). */
-  private def lakeIngestFoldCtes: String =
-    s"""fm AS (
-       |  SELECT * FROM d2
-       |  UNION ALL
-       |  SELECT b.* FROM base b ANTI JOIN d2 dd ON dd.event_id = b.event_id),
-       |fmb AS (
-       |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-       |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-       |  FROM fm),
-       |fmq AS (
-       |  SELECT
-       |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-       |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-       |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-       |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-       |  FROM fm, fmb),
-       |fn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-       |       AS n FROM fmq)""".stripMargin
 
   /** Generated x_lake_ingest_asof oracle: one row per committed
     * generation over [[lakeIngestCommonCtes]] — g0 answers from the
@@ -4314,32 +4442,20 @@ object Layout {
     * counts are the base cell-grid count plus one delta file per
     * arrival, then the fold's grid count. */
   private def lakeIngestAsofOracleSql: String = {
-    val perGen = (0 until 3).map { i =>
-      s"""a${i + 1} AS (SELECT CAST(${i + 1} AS BIGINT) AS gen,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM bfiles) + ${i + 1} AS files_live,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM (
-         |      SELECT * FROM d$i
-         |      UNION ALL
-         |      SELECT b.* FROM base b ANTI JOIN d$i dd ON dd.event_id = b.event_id) mm
-         |    WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0) AS rows_out)""".stripMargin
-    }.mkString(",\n")
+    val gens = ("(SELECT n FROM bn)", "base") +:
+      (0 until 3).map(i => (s"(SELECT n FROM bn) + ${i + 1}", s"n$i")) :+
+      (("(SELECT n FROM fn)", "n2"))
+    val rows = gens.zipWithIndex.map { case ((files, state), g) =>
+      s"SELECT CAST($g AS BIGINT) AS gen, CAST($files AS BIGINT) AS files_live,\n" +
+        s"    ${boxRows(state)} AS rows_out"
+    }.mkString("\n  UNION ALL ")
     s"""WITH $lakeIngestCommonCtes,
        |$lakeIngestFoldCtes,
-       |a0 AS (SELECT CAST(0 AS BIGINT) AS gen,
-       |  (SELECT CAST(count(*) AS BIGINT) FROM bfiles) AS files_live,
-       |  (SELECT CAST(count(*) AS BIGINT) FROM base
-       |    WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0) AS rows_out),
-       |$perGen,
-       |a4 AS (SELECT CAST(4 AS BIGINT) AS gen,
-       |  (SELECT n FROM fn) AS files_live,
-       |  (SELECT CAST(count(*) AS BIGINT) FROM fm
-       |    WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0) AS rows_out)
-       |SELECT gen, files_live, rows_out
-       |FROM (SELECT * FROM a0 UNION ALL SELECT * FROM a1
-       |      UNION ALL SELECT * FROM a2 UNION ALL SELECT * FROM a3
-       |      UNION ALL SELECT * FROM a4) u
-       |ORDER BY gen""".stripMargin
+       |a AS (
+       |  $rows)
+       |SELECT gen, files_live, rows_out FROM a ORDER BY gen""".stripMargin
   }
+
 
   val oracles: Map[String, String] = Map(
     "x_lake_ingest" -> lakeIngestOracleSql,
@@ -4349,284 +4465,135 @@ object Layout {
     "x_lake_ingest_asof" -> lakeIngestAsofOracleSql,
     // history metadata across BOTH lineages: base reference counts are
     // cell-grid counts (the ingest/delete seeds share one base grid;
-    // the delete fold's grid runs under its own merged bounds), each
+    // the delete fold's grid `e` runs under its own bounds), each
     // arrival adds exactly one staged file, and the op names are the
     // literals the commit protocol stamps
     "x_lake_history" ->
       s"""WITH $lakeIngestCommonCtes,
-         |nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM bfiles),
-         |ups AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |tomb AS (SELECT event_id FROM ev WHERE event_id % 100 = 3),
-         |dkeys AS (SELECT event_id FROM ups UNION ALL SELECT event_id FROM tomb),
-         |dmerged AS (
-         |  SELECT * FROM ups
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN dkeys d ON d.event_id = b.event_id),
-         |dmb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM dmerged),
-         |dmq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM dmerged, dmb),
-         |dn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-         |       AS n FROM dmq),
+         |$lakeEraseCtes,
          |$lakeIngestFoldCtes,
          |h AS (
          |  SELECT 'lake_ingest' AS lineage, CAST(0 AS BIGINT) AS gen, 'seed' AS op,
-         |         (SELECT n FROM nb) AS n_base_refs, CAST(0 AS BIGINT) AS n_delta_refs,
+         |         (SELECT n FROM bn) AS n_base_refs, CAST(0 AS BIGINT) AS n_delta_refs,
          |         CAST(0 AS BIGINT) AS n_cdelta_refs
-         |  UNION ALL SELECT 'lake_ingest', 1, 'arrival', (SELECT n FROM nb), 1, 0
-         |  UNION ALL SELECT 'lake_ingest', 2, 'arrival', (SELECT n FROM nb), 2, 0
-         |  UNION ALL SELECT 'lake_ingest', 3, 'arrival', (SELECT n FROM nb), 3, 0
+         |  UNION ALL SELECT 'lake_ingest', 1, 'arrival', (SELECT n FROM bn), 1, 0
+         |  UNION ALL SELECT 'lake_ingest', 2, 'arrival', (SELECT n FROM bn), 2, 0
+         |  UNION ALL SELECT 'lake_ingest', 3, 'arrival', (SELECT n FROM bn), 3, 0
          |  UNION ALL SELECT 'lake_ingest', 4, 'fold', (SELECT n FROM fn), 0, 0
-         |  UNION ALL SELECT 'lake_delete', 0, 'seed', (SELECT n FROM nb), 0, 0
-         |  UNION ALL SELECT 'lake_delete', 1, 'delete', (SELECT n FROM nb), 0, 1
-         |  UNION ALL SELECT 'lake_delete', 2, 'fold', (SELECT n FROM dn), 0, 0
-         |  UNION ALL SELECT 'lake_merge', 0, 'seed', (SELECT n FROM nb), 0, 0
-         |  UNION ALL SELECT 'lake_merge', 1, 'merge', (SELECT n FROM nb), 0, 1)
+         |  UNION ALL SELECT 'lake_delete', 0, 'seed', (SELECT n FROM bn), 0, 0
+         |  UNION ALL SELECT 'lake_delete', 1, 'delete', (SELECT n FROM bn), 0, 1
+         |  UNION ALL SELECT 'lake_delete', 2, 'fold', (SELECT n FROM en), 0, 0
+         |  UNION ALL SELECT 'lake_merge', 0, 'seed', (SELECT n FROM bn), 0, 0
+         |  UNION ALL SELECT 'lake_merge', 1, 'merge', (SELECT n FROM bn), 0, 1)
          |SELECT lineage, gen, op, n_base_refs,
          |  CAST(n_delta_refs AS BIGINT) AS n_delta_refs,
          |  CAST(n_cdelta_refs AS BIGINT) AS n_cdelta_refs
          |FROM h ORDER BY lineage, gen""".stripMargin,
     // the feed is a pure function of the fixture slices: forward rows
-    // carry the arriving values, the restore's inverse rows carry the
-    // vanishing/reverted values; ⌊value⌋ sums are exact integers in
-    // both engines, so pre/post images are pinned by content
-    "x_lake_changes" ->
-      """WITH ev AS (SELECT event_id, user_id, value FROM events),
-        |ins AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0),
-        |upd AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 100 = 1),
-        |feed AS (
-        |  SELECT 0 AS from_gen, 1 AS to_gen, 'insert' AS change_type,
-        |         event_id, user_id, value FROM ins
-        |  UNION ALL
-        |  SELECT 1, 2, 'delete', event_id, user_id, value FROM ins
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_postimage', event_id, user_id, value + 150.0 FROM upd
-        |  UNION ALL
-        |  SELECT 1, 2, 'update_preimage', event_id, user_id, value FROM upd)
-        |SELECT CAST(from_gen AS BIGINT) AS from_gen, CAST(to_gen AS BIGINT) AS to_gen,
-        |  change_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS key_chk,
-        |  CAST(sum(user_id) AS BIGINT) AS uid_chk,
-        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_chk
-        |FROM feed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+    // carry the arriving values, the fold's inverse rows carry the
+    // vanishing/reverted values
+    "x_lake_changes" -> changeFeedSql(lakeSlices,
+      (0, 1, "insert", "value", "ins"),
+      (1, 2, "delete", "value", "ins"),
+      (0, 1, "update_postimage", "value + 150.0", "upd"),
+      (1, 2, "update_preimage", "value", "upd")),
     // the cursor feed over the arrival log is a pure function of the
     // batch slices: batch-0/2 transitions are pure inserts, batch 1
-    // adds both update images (postimage +150, preimage = base value);
-    // ⌊value⌋ sums are exact integers in both engines
-    "x_lake_changes_cursor" ->
-      """WITH ev AS (SELECT event_id, user_id, value FROM events),
-        |ins AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0),
-        |upd AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 100 = 1),
-        |feed AS (
-        |  SELECT 0 AS from_gen, 1 AS to_gen, 'insert' AS change_type,
-        |         event_id, user_id, value FROM ins
-        |  WHERE (((event_id // 10) % 3) + 3) % 3 = 0
-        |  UNION ALL
-        |  SELECT 1, 2, 'insert', event_id, user_id, value FROM ins
-        |  WHERE (((event_id // 10) % 3) + 3) % 3 = 1
-        |  UNION ALL
-        |  SELECT 1, 2, 'update_postimage', event_id, user_id, value + 150.0 FROM upd
-        |  UNION ALL
-        |  SELECT 1, 2, 'update_preimage', event_id, user_id, value FROM upd
-        |  UNION ALL
-        |  SELECT 2, 3, 'insert', event_id, user_id, value FROM ins
-        |  WHERE (((event_id // 10) % 3) + 3) % 3 = 2)
-        |SELECT CAST(from_gen AS BIGINT) AS from_gen, CAST(to_gen AS BIGINT) AS to_gen,
-        |  change_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS key_chk,
-        |  CAST(sum(user_id) AS BIGINT) AS uid_chk,
-        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_chk
-        |FROM feed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+    // adds both update images (postimage +150, preimage = base value)
+    "x_lake_changes_cursor" -> changeFeedSql(lakeSlices,
+      (0, 1, "insert", "value", s"ins WHERE $batchOf = 0"),
+      (1, 2, "insert", "value", s"ins WHERE $batchOf = 1"),
+      (1, 2, "update_postimage", "value + 150.0", "upd"),
+      (1, 2, "update_preimage", "value", "upd"),
+      (2, 3, "insert", "value", s"ins WHERE $batchOf = 2")),
     // both directions are pure functions of the fixture slices: the
     // forward transition feeds the arrivals (inserts + both update
     // images), the restore feeds their inverses (vanishing inserts as
     // deletes at their arrival values, reverted updates as the +150
     // preimage next to the restored base postimage)
-    "x_lake_cdf_restore" ->
-      """WITH ev AS (SELECT event_id, user_id, value FROM events),
-        |ins AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0),
-        |upd AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 100 = 1),
-        |feed AS (
-        |  SELECT 0 AS from_gen, 1 AS to_gen, 'insert' AS change_type,
-        |         event_id, user_id, value FROM ins
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_postimage', event_id, user_id, value + 150.0 FROM upd
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_preimage', event_id, user_id, value FROM upd
-        |  UNION ALL
-        |  SELECT 1, 2, 'delete', event_id, user_id, value FROM ins
-        |  UNION ALL
-        |  SELECT 1, 2, 'update_preimage', event_id, user_id, value + 150.0 FROM upd
-        |  UNION ALL
-        |  SELECT 1, 2, 'update_postimage', event_id, user_id, value FROM upd)
-        |SELECT CAST(from_gen AS BIGINT) AS from_gen, CAST(to_gen AS BIGINT) AS to_gen,
-        |  change_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS key_chk,
-        |  CAST(sum(user_id) AS BIGINT) AS uid_chk,
-        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_chk
-        |FROM feed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+    "x_lake_cdf_restore" -> changeFeedSql(lakeSlices,
+      (0, 1, "insert", "value", "ins"),
+      (0, 1, "update_postimage", "value + 150.0", "upd"),
+      (0, 1, "update_preimage", "value", "upd"),
+      (1, 2, "delete", "value", "ins"),
+      (1, 2, "update_preimage", "value + 150.0", "upd"),
+      (1, 2, "update_postimage", "value", "upd")),
     // the CRUD arrival's feed is a pure function of the fixture slices:
     // inserts feed themselves, updates feed both images, tombstones
     // feed the erased BASE rows (the mod-100≡3 rows are base rows by
     // construction, so the preimage is the row itself); the fold
     // transition feeds nothing
-    "x_lake_cdf_delete" ->
-      """WITH ev AS (SELECT event_id, user_id, value FROM events),
-        |ins AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0),
-        |upd AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 100 = 1),
-        |tomb AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 100 = 3),
-        |feed AS (
-        |  SELECT 0 AS from_gen, 1 AS to_gen, 'insert' AS change_type,
-        |         event_id, user_id, value FROM ins
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_postimage', event_id, user_id, value + 150.0 FROM upd
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_preimage', event_id, user_id, value FROM upd
-        |  UNION ALL
-        |  SELECT 0, 1, 'delete', event_id, user_id, value FROM tomb)
-        |SELECT CAST(from_gen AS BIGINT) AS from_gen, CAST(to_gen AS BIGINT) AS to_gen,
-        |  change_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS key_chk,
-        |  CAST(sum(user_id) AS BIGINT) AS uid_chk,
-        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_chk
-        |FROM feed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+    "x_lake_cdf_delete" -> changeFeedSql(lakeSlices,
+      (0, 1, "insert", "value", "ins"),
+      (0, 1, "update_postimage", "value + 150.0", "upd"),
+      (0, 1, "update_preimage", "value", "upd"),
+      (0, 1, "delete", "value", "tomb")),
     // each commit's answer is a pure newest-wins function of the
     // fixture slices; the file counts are the base cell grid + one
     // delta file per landed writer, and the conflict count is the
     // literal the validated-append protocol guarantees (B aborts once,
     // rebases, lands)
     "x_lake_rebase" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |ins AS (SELECT * FROM ev WHERE event_id % 10 = 0),
-         |wa AS (SELECT * FROM ins WHERE (((event_id // 10) % 3) + 3) % 3 = 0),
-         |wb AS (SELECT * FROM ins WHERE (((event_id // 10) % 3) + 3) % 3 <> 0
+      s"""WITH $lakeBaseCtes,
+         |wa AS (SELECT * FROM ins WHERE $batchOf = 0),
+         |wb AS (SELECT * FROM ins WHERE $batchOf <> 0
          |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-         |       AS n FROM bq),
-         |m1 AS (
-         |  SELECT * FROM wa
-         |  UNION ALL
-         |  SELECT bs.* FROM base bs ANTI JOIN wa ON wa.event_id = bs.event_id),
+         |  SELECT event_id, user_id, value + 150.0 AS value FROM upd),
          |ab AS (SELECT * FROM wa UNION ALL SELECT * FROM wb),
-         |m2 AS (
-         |  SELECT * FROM ab
-         |  UNION ALL
-         |  SELECT bs.* FROM base bs ANTI JOIN ab ON ab.event_id = bs.event_id),
-         |r0 AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM base
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
-         |r1 AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM m1
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
-         |r2 AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM m2
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0)
+         |${newestWins("m1", "wa")},
+         |${newestWins("m2", "ab")}
          |SELECT CAST(0 AS BIGINT) AS gen, 'seed' AS writer, CAST(0 AS BIGINT) AS conflicts,
-         |       n AS files_live, rows_out FROM bn, r0
+         |       n AS files_live, ${boxRows("base")} AS rows_out FROM bn
          |UNION ALL
-         |SELECT CAST(1 AS BIGINT), 'A', CAST(0 AS BIGINT), n + 1, rows_out FROM bn, r1
+         |SELECT CAST(1 AS BIGINT), 'A', CAST(0 AS BIGINT), n + 1, ${boxRows("m1")} FROM bn
          |UNION ALL
-         |SELECT CAST(2 AS BIGINT), 'B', CAST(1 AS BIGINT), n + 2, rows_out FROM bn, r2
+         |SELECT CAST(2 AS BIGINT), 'B', CAST(1 AS BIGINT), n + 2, ${boxRows("m2")} FROM bn
          |ORDER BY gen""".stripMargin,
     // every MERGE report column is a pure function of the events
     // table: file counts are the base cell grid + the one staged
     // arrival, outcome counts are slice counts (the clause conditions
     // reduce to the slices by construction — s.value offsets ±150/−50
     // against t.value decide each clause), and both box answers are
-    // newest-wins-with-clause-semantics counts. The merged upd rows
+    // newest-wins-with-clause-semantics counts. The merged mupd rows
     // keep the ORIGINAL user_id — DuckDB recomputing them from the
     // events row alone is the per-column-UPDATE pin (a whole-row
     // upsert would land the +10⁶ decoy and hash-mismatch)
     "x_lake_merge" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-         |       AS n FROM bq),
-         |upd AS (SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 7),
-         |del AS (SELECT event_id FROM ev WHERE event_id % 100 = 13),
-         |noop AS (SELECT event_id FROM ev WHERE event_id % 100 = 21),
-         |ins AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0),
-         |touched AS (SELECT event_id FROM upd UNION ALL SELECT event_id FROM del
-         |  UNION ALL SELECT event_id FROM ins),
-         |merged AS (
-         |  SELECT * FROM upd
-         |  UNION ALL SELECT * FROM ins
-         |  UNION ALL SELECT b.* FROM base b ANTI JOIN touched t ON t.event_id = b.event_id),
+      s"""WITH $lakeBaseCtes,
+         |mupd AS (SELECT event_id, user_id, value + 150.0 AS value FROM ev
+         |  WHERE event_id % 100 = 7),
+         |mdel AS (SELECT event_id FROM ev WHERE event_id % 100 = 13),
+         |mnoop AS (SELECT event_id FROM ev WHERE event_id % 100 = 21),
+         |mrows AS (SELECT * FROM mupd UNION ALL SELECT * FROM ins),
+         |touched AS (SELECT event_id FROM mrows UNION ALL SELECT event_id FROM mdel),
+         |${newestWins("mmerged", "mrows", "touched")},
          |acc AS (SELECT
-         |  CAST((SELECT count(*) FROM upd) + (SELECT count(*) FROM del)
-         |     + (SELECT count(*) FROM noop) + (SELECT count(*) FROM ins) AS BIGINT) AS n_source,
+         |  CAST((SELECT count(*) FROM mupd) + (SELECT count(*) FROM mdel)
+         |     + (SELECT count(*) FROM mnoop) + (SELECT count(*) FROM ins) AS BIGINT) AS n_source,
          |  CAST((SELECT count(*) FROM ins) AS BIGINT) AS n_inserted,
-         |  CAST((SELECT count(*) FROM upd) AS BIGINT) AS n_updated,
-         |  CAST((SELECT count(*) FROM del) AS BIGINT) AS n_deleted,
-         |  CAST((SELECT count(*) FROM noop) AS BIGINT) AS n_matched_noop),
-         |r0 AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM base
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
-         |r1 AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0)
+         |  CAST((SELECT count(*) FROM mupd) AS BIGINT) AS n_updated,
+         |  CAST((SELECT count(*) FROM mdel) AS BIGINT) AS n_deleted,
+         |  CAST((SELECT count(*) FROM mnoop) AS BIGINT) AS n_matched_noop)
          |SELECT CAST(0 AS BIGINT) AS gen, 'pre_merge' AS state, n AS files_live,
-         |  n_source, n_inserted, n_updated, n_deleted, n_matched_noop, rows_out
-         |FROM bn, acc, r0
+         |  n_source, n_inserted, n_updated, n_deleted, n_matched_noop,
+         |  ${boxRows("base")} AS rows_out
+         |FROM bn, acc
          |UNION ALL
          |SELECT CAST(1 AS BIGINT), 'merged', n + 1,
-         |  n_source, n_inserted, n_updated, n_deleted, n_matched_noop, rows_out
-         |FROM bn, acc, r1
+         |  n_source, n_inserted, n_updated, n_deleted, n_matched_noop, ${boxRows("mmerged")}
+         |FROM bn, acc
          |ORDER BY gen""".stripMargin,
-    // the FULL-SYNC merge: merged state = the desired source state ∪
+    // the FULL-SYNC merge: synced state = the desired source state ∪
     // the stale target rows the BY-SOURCE condition retained — every
     // column a pure function of the events table (outcome counts are
     // slice counts; matched rows all differ by +150, so every one
     // updates)
     "x_lake_merge_sync" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-         |       AS n FROM bq),
+      s"""WITH $lakeBaseCtes,
          |src AS (SELECT event_id, user_id, value + 150.0 AS value FROM ev
          |        WHERE event_id % 3 = 0),
          |stale AS (SELECT * FROM base WHERE event_id % 3 <> 0),
-         |merged AS (
+         |synced AS (
          |  SELECT * FROM src
          |  UNION ALL SELECT * FROM stale WHERE value >= 50.0),
          |acc AS (SELECT
@@ -4634,184 +4601,85 @@ object Layout {
          |  CAST((SELECT count(*) FROM src WHERE event_id % 10 = 0) AS BIGINT) AS n_inserted,
          |  CAST((SELECT count(*) FROM src WHERE event_id % 10 <> 0) AS BIGINT) AS n_updated,
          |  CAST((SELECT count(*) FROM stale WHERE value < 50.0) AS BIGINT) AS n_deleted_by_source,
-         |  CAST((SELECT count(*) FROM stale WHERE value >= 50.0) AS BIGINT) AS n_kept_unmatched),
-         |r0 AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM base
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
-         |r1 AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0)
+         |  CAST((SELECT count(*) FROM stale WHERE value >= 50.0) AS BIGINT) AS n_kept_unmatched)
          |SELECT CAST(0 AS BIGINT) AS gen, 'pre_sync' AS state, n AS files_live,
          |  n_source, n_inserted, n_updated, n_deleted_by_source,
-         |  n_kept_unmatched, rows_out
-         |FROM bn, acc, r0
+         |  n_kept_unmatched, ${boxRows("base")} AS rows_out
+         |FROM bn, acc
          |UNION ALL
          |SELECT CAST(1 AS BIGINT), 'synced', n + 1,
          |  n_source, n_inserted, n_updated, n_deleted_by_source,
-         |  n_kept_unmatched, rows_out
-         |FROM bn, acc, r1
+         |  n_kept_unmatched, ${boxRows("synced")}
+         |FROM bn, acc
          |ORDER BY gen""".stripMargin,
     // the sync's feed: convergence updates feed both images, absent
     // rows feed inserts, and the BY-SOURCE deletes feed the erased
     // stale target rows — all pure functions of the fixture slices
-    "x_lake_cdf_merge_sync" ->
-      """WITH ev AS (SELECT event_id, user_id, value FROM events),
-        |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-        |ins AS (SELECT event_id, user_id, value FROM ev
-        |        WHERE event_id % 3 = 0 AND event_id % 10 = 0),
-        |upd AS (SELECT event_id, user_id, value FROM ev
-        |        WHERE event_id % 3 = 0 AND event_id % 10 <> 0),
-        |del AS (SELECT event_id, user_id, value FROM base
-        |        WHERE event_id % 3 <> 0 AND value < 50.0),
-        |feed AS (
-        |  SELECT 0 AS from_gen, 1 AS to_gen, 'insert' AS change_type,
-        |         event_id, user_id, value + 150.0 AS v FROM ins
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_postimage', event_id, user_id, value + 150.0 FROM upd
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_preimage', event_id, user_id, value FROM upd
-        |  UNION ALL
-        |  SELECT 0, 1, 'delete', event_id, user_id, value FROM del)
-        |SELECT CAST(from_gen AS BIGINT) AS from_gen, CAST(to_gen AS BIGINT) AS to_gen,
-        |  change_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS key_chk,
-        |  CAST(sum(user_id) AS BIGINT) AS uid_chk,
-        |  CAST(sum(CAST(floor(v) AS BIGINT)) AS BIGINT) AS val_chk
-        |FROM feed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+    "x_lake_cdf_merge_sync" -> changeFeedSql(
+      s"""$lakeSlices,
+         |sins AS (SELECT * FROM ins WHERE event_id % 3 = 0),
+         |supd AS (SELECT * FROM ev WHERE event_id % 3 = 0 AND event_id % 10 <> 0),
+         |sdel AS (SELECT * FROM base WHERE event_id % 3 <> 0 AND value < 50.0)""".stripMargin,
+      (0, 1, "insert", "value + 150.0", "sins"),
+      (0, 1, "update_postimage", "value + 150.0", "supd"),
+      (0, 1, "update_preimage", "value", "supd"),
+      (0, 1, "delete", "value", "sdel")),
     // the merge's feed is a pure function of the fixture slices:
     // clause-inserts feed themselves, conditional updates feed both
     // images with the ORIGINAL user_id (the decoy staying out of
     // uid_chk is the per-column pin riding the CDF), and conditional
     // deletes feed the erased base rows
-    "x_lake_cdf_merge" ->
-      """WITH ev AS (SELECT event_id, user_id, value FROM events),
-        |ins AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0),
-        |upd AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 100 = 7),
-        |del AS (SELECT event_id, user_id, value FROM ev WHERE event_id % 100 = 13),
-        |feed AS (
-        |  SELECT 0 AS from_gen, 1 AS to_gen, 'insert' AS change_type,
-        |         event_id, user_id, value FROM ins
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_postimage', event_id, user_id, value + 150.0 FROM upd
-        |  UNION ALL
-        |  SELECT 0, 1, 'update_preimage', event_id, user_id, value FROM upd
-        |  UNION ALL
-        |  SELECT 0, 1, 'delete', event_id, user_id, value FROM del)
-        |SELECT CAST(from_gen AS BIGINT) AS from_gen, CAST(to_gen AS BIGINT) AS to_gen,
-        |  change_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS key_chk,
-        |  CAST(sum(user_id) AS BIGINT) AS uid_chk,
-        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_chk
-        |FROM feed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+    "x_lake_cdf_merge" -> changeFeedSql(
+      s"""$lakeSlices,
+         |mupd AS (SELECT * FROM ev WHERE event_id % 100 = 7),
+         |mdel AS (SELECT * FROM ev WHERE event_id % 100 = 13)""".stripMargin,
+      (0, 1, "insert", "value", "ins"),
+      (0, 1, "update_postimage", "value + 150.0", "mupd"),
+      (0, 1, "update_preimage", "value", "mupd"),
+      (0, 1, "delete", "value", "mdel")),
     // the maintained view is base census + fixture-slice corrections —
     // a pure function of the events table; DuckDB recomputes it with no
     // knowledge of the log or the feed
     "x_lake_cdc_apply" ->
-      """WITH ev AS (SELECT event_id, user_id, value FROM events),
-        |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-        |ins AS (SELECT * FROM ev WHERE event_id % 10 = 0),
-        |upd AS (SELECT * FROM ev WHERE event_id % 100 = 1),
-        |d AS (
-        |  SELECT user_id, 1 AS dn, CAST(floor(value) AS BIGINT) AS dv FROM ins
-        |  UNION ALL
-        |  SELECT user_id, 0,
-        |    CAST(floor(value + 150.0) AS BIGINT) - CAST(floor(value) AS BIGINT)
-        |  FROM upd),
-        |du AS (SELECT user_id, CAST(sum(dn) AS BIGINT) AS dn,
-        |       CAST(sum(dv) AS BIGINT) AS dv FROM d GROUP BY 1),
-        |v0 AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_before,
-        |       CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_before
-        |  FROM base GROUP BY 1)
-        |SELECT du.user_id,
-        |  coalesce(n_before, 0) AS n_before,
-        |  coalesce(val_before, 0) AS val_before,
-        |  coalesce(n_before, 0) + dn AS n_after,
-        |  coalesce(val_before, 0) + dv AS val_after
-        |FROM du LEFT JOIN v0 ON du.user_id = v0.user_id
-        |ORDER BY du.user_id""".stripMargin,
+      s"""WITH $lakeSlices,
+         |d AS (
+         |  SELECT user_id, 1 AS dn, CAST(floor(value) AS BIGINT) AS dv FROM ins
+         |  UNION ALL
+         |  SELECT user_id, 0,
+         |    CAST(floor(value + 150.0) AS BIGINT) - CAST(floor(value) AS BIGINT)
+         |  FROM upd),
+         |du AS (SELECT user_id, CAST(sum(dn) AS BIGINT) AS dn,
+         |       CAST(sum(dv) AS BIGINT) AS dv FROM d GROUP BY 1),
+         |v0 AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_before,
+         |       CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS val_before
+         |  FROM base GROUP BY 1)
+         |SELECT du.user_id,
+         |  coalesce(n_before, 0) AS n_before,
+         |  coalesce(val_before, 0) AS val_before,
+         |  coalesce(n_before, 0) + dn AS n_after,
+         |  coalesce(val_before, 0) + dv AS val_after
+         |FROM du LEFT JOIN v0 ON du.user_id = v0.user_id
+         |ORDER BY du.user_id""".stripMargin,
     // erasure accounting and both stage reports are pure functions of
     // the events table: file counts are cell-grid counts, the box is
     // ONE newest-wins-with-deletes count, and erased_remaining is the
-    // tombstone-keys ∩ merged-state probe (zero — the erasure proof)
+    // tombstone-keys ∩ erased-state probe (zero — the erasure proof)
     "x_lake_delete" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |ups AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |tomb AS (SELECT event_id FROM ev WHERE event_id % 100 = 3),
-         |dkeys AS (SELECT event_id FROM ups UNION ALL SELECT event_id FROM tomb),
-         |merged AS (
-         |  SELECT * FROM ups
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN dkeys d ON d.event_id = b.event_id),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bcells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM bq),
-         |bfiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM bcells GROUP BY 1),
-         |bkept AS (
-         |  SELECT * FROM bfiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |nd AS (SELECT CAST((SELECT count(*) FROM ups)
-         |       + (SELECT count(*) FROM tomb) AS BIGINT) AS n_delta),
-         |mb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |mq AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, mb),
-         |mcells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM mq),
-         |ffiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM mcells GROUP BY 1),
-         |fkept AS (
-         |  SELECT * FROM ffiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
+      s"""WITH $lakeBaseCtes,
+         |$lakeEraseCtes,
          |acc AS (SELECT
          |    CAST((SELECT count(*) FROM tomb) AS BIGINT) AS n_tombstones,
          |    CAST((SELECT count(*) FROM base b SEMI JOIN tomb t
          |          ON t.event_id = b.event_id) AS BIGINT) AS n_erased,
-         |    CAST((SELECT count(*) FROM merged m SEMI JOIN tomb t
+         |    CAST((SELECT count(*) FROM erased m SEMI JOIN tomb t
          |          ON t.event_id = m.event_id) AS BIGINT) AS erased_remaining),
-         |s1 AS (SELECT CAST(1 AS BIGINT) AS stage, 'merge_on_read' AS state,
-         |    CAST((SELECT count(*) FROM bfiles) + 1 AS BIGINT) AS files_total,
-         |    CAST((SELECT count(*) FROM bkept) + 1 AS BIGINT) AS files_read,
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM bkept)
-         |       + (SELECT n_delta FROM nd) AS BIGINT) AS rows_scanned,
-         |    rows_out FROM ro),
-         |s2 AS (SELECT CAST(2 AS BIGINT), 'folded_erased',
-         |    CAST((SELECT count(*) FROM ffiles) AS BIGINT),
-         |    CAST((SELECT count(*) FROM fkept) AS BIGINT),
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM fkept) AS BIGINT),
-         |    rows_out FROM ro)
-         |SELECT stage, state, files_total, files_read, rows_scanned, rows_out,
-         |  n_tombstones, n_erased, erased_remaining
-         |FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2) u, acc
+         |${stagesCte(
+           "merge_on_read" -> prunedReadCols("bfiles", "bkept", 1,
+             "(SELECT count(*) FROM delta) + (SELECT count(*) FROM tomb)"),
+           "folded_erased" -> prunedReadCols("efiles", "ekept"))}
+         |SELECT stage, state, files_total, files_read, rows_scanned,
+         |  ${boxRows("erased")} AS rows_out, n_tombstones, n_erased, erased_remaining
+         |FROM st, acc
          |ORDER BY stage""".stripMargin,
     // file counts are cell-grid / packed-group counts (the layouts are
     // pure functions of the data) plus the one-file ingest-batch delta;
@@ -4819,69 +4687,25 @@ object Layout {
     // both survival proofs: the current state's answer outlives the
     // vacuum AND the retained previous generation still answers
     "x_lake_vacuum" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |merged AS (
-         |  SELECT * FROM delta
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN delta d ON d.event_id = b.event_id),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-         |       AS n_base_files FROM bq),
-         |mb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |mq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, mb),
-         |mfiles AS (SELECT (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell,
-         |           count(*) AS n_rows FROM mq GROUP BY 1),
-         |mn AS (SELECT CAST(count(*) AS BIGINT) AS n_fold_files FROM mfiles),
-         |tgt AS (SELECT CAST(greatest(1, (coalesce(sum(n_rows), 0) + 3) // 4) AS BIGINT) AS t
-         |        FROM mfiles),
-         |ford AS (SELECT *, coalesce(sum(n_rows) OVER (ORDER BY zcell
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre FROM mfiles),
-         |ng AS (SELECT CAST(count(DISTINCT pre // t) AS BIGINT) AS n_groups FROM ford, tgt),
-         |cnts AS (SELECT
-         |    CAST((SELECT count(*) FROM base) AS BIGINT) AS n_base_rows,
-         |    CAST((SELECT count(*) FROM delta) AS BIGINT) AS n_delta_rows),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
+      s"""WITH $lakeFoldCtes,
+         |${packedGroups("mfiles")},
          |one AS (SELECT
          |  CAST(3 AS BIGINT) AS n_gens,
          |  CAST(2 AS BIGINT) AS n_retained,
-         |  n_base_files + 1 + n_fold_files + n_groups AS files_before,
-         |  n_fold_files + n_groups AS files_live,
-         |  n_base_files + 1 AS files_deleted,
-         |  n_base_rows + n_delta_rows AS rows_deleted,
-         |  rows_out AS rows_out_before,
-         |  rows_out AS rows_out_prev_gen,
-         |  rows_out AS rows_out_after,
+         |  bn.n + 1 + mn.n + ng.n AS files_before,
+         |  mn.n + ng.n AS files_live,
+         |  bn.n + 1 AS files_deleted,
+         |  CAST((SELECT count(*) FROM base) + (SELECT count(*) FROM delta) AS BIGINT)
+         |    AS rows_deleted,
+         |  ${boxRows("merged")} AS rows_out_before,
+         |  ${boxRows("merged")} AS rows_out_prev_gen,
+         |  ${boxRows("merged")} AS rows_out_after,
          |  CAST(1 AS BIGINT) AS cursor_floor,
          |  CAST(1 AS BIGINT) AS n_stale_cursors,
          |  CAST(1 AS BIGINT) AS log_floor,
          |  CAST(2 AS BIGINT) AS log_tip,
          |  CAST(1 AS BIGINT) AS n_log_expired
-         |FROM bn, mn, ng, cnts, ro)
+         |FROM bn, mn, ng)
          |SELECT m.mode, one.* FROM one,
          |  (SELECT 'dry_run' AS mode UNION ALL SELECT 'vacuum') m
          |ORDER BY m.mode""".stripMargin,
@@ -4890,65 +4714,18 @@ object Layout {
     // SAME newest-wins box count — equality across the three rows IS the
     // fold/compaction invariant the log exists to let a reader replay
     "x_lake_timetravel" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |merged AS (
-         |  SELECT * FROM delta
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN delta d ON d.event_id = b.event_id),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-         |       AS n_base_files FROM bq),
-         |mb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |mq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, mb),
-         |mfiles AS (SELECT (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell,
-         |           count(*) AS n_rows FROM mq GROUP BY 1),
-         |mn AS (SELECT CAST(count(*) AS BIGINT) AS n_fold_files FROM mfiles),
-         |tgt AS (SELECT CAST(greatest(1, (coalesce(sum(n_rows), 0) + 3) // 4) AS BIGINT) AS t
-         |        FROM mfiles),
-         |ford AS (SELECT *, coalesce(sum(n_rows) OVER (ORDER BY zcell
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre FROM mfiles),
-         |ng AS (SELECT CAST(count(DISTINCT pre // t) AS BIGINT) AS n_groups FROM ford, tgt),
-         |cnts AS (SELECT
-         |    CAST((SELECT count(*) FROM base) AS BIGINT) AS n_base_rows,
-         |    CAST((SELECT count(*) FROM delta) AS BIGINT) AS n_delta_rows,
-         |    CAST((SELECT count(*) FROM merged) AS BIGINT) AS n_merged_rows),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
-         |g0 AS (SELECT CAST(0 AS BIGINT) AS gen, 'pre_fold' AS state,
-         |    n_base_files + 1 AS files_live,
-         |    n_base_rows + n_delta_rows AS rows_referenced, rows_out
-         |  FROM bn, cnts, ro),
-         |g1 AS (SELECT CAST(1 AS BIGINT), 'folded', n_fold_files,
-         |    n_merged_rows, rows_out FROM mn, cnts, ro),
-         |g2 AS (SELECT CAST(2 AS BIGINT), 'compacted', n_groups,
-         |    n_merged_rows, rows_out FROM ng, cnts, ro)
-         |SELECT gen, state, files_live, rows_referenced, rows_out
-         |FROM (SELECT * FROM g0 UNION ALL SELECT * FROM g1 UNION ALL SELECT * FROM g2) u
-         |ORDER BY gen""".stripMargin,
+      s"""WITH $lakeFoldCtes,
+         |${packedGroups("mfiles")},
+         |g AS (
+         |  SELECT CAST(0 AS BIGINT) AS gen, 'pre_fold' AS state,
+         |    bn.n + 1 AS files_live,
+         |    CAST((SELECT count(*) FROM base) + (SELECT count(*) FROM delta) AS BIGINT)
+         |      AS rows_referenced FROM bn
+         |  UNION ALL SELECT 1, 'folded', n, (SELECT count(*) FROM merged) FROM mn
+         |  UNION ALL SELECT 2, 'compacted', n, (SELECT count(*) FROM merged) FROM ng)
+         |SELECT gen, state, files_live, CAST(rows_referenced AS BIGINT) AS rows_referenced,
+         |  ${boxRows("merged")} AS rows_out
+         |FROM g ORDER BY gen""".stripMargin,
     // TIMESTAMP AS OF: the probe→generation mapping is the resolution
     // rule over the deterministic commit grid (latest commit instant ≤
     // probe — protocol literals, like the rebase conflict counts);
@@ -4957,50 +4734,8 @@ object Layout {
     // that the RIGHT generation was resolved (the three differ), and
     // rows_out is the shared newest-wins box answer
     "x_lake_timestamp_asof" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |merged AS (
-         |  SELECT * FROM delta
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN delta d ON d.event_id = b.event_id),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bn AS (SELECT CAST(count(DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18) AS BIGINT)
-         |       AS n_base_files FROM bq),
-         |mb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |mq AS (
-         |  SELECT
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, mb),
-         |mfiles AS (SELECT (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell,
-         |           count(*) AS n_rows FROM mq GROUP BY 1),
-         |mn AS (SELECT CAST(count(*) AS BIGINT) AS n_fold_files FROM mfiles),
-         |tgt AS (SELECT CAST(greatest(1, (coalesce(sum(n_rows), 0) + 3) // 4) AS BIGINT) AS t
-         |        FROM mfiles),
-         |ford AS (SELECT *, coalesce(sum(n_rows) OVER (ORDER BY zcell
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre FROM mfiles),
-         |ng AS (SELECT CAST(count(DISTINCT pre // t) AS BIGINT) AS n_groups FROM ford, tgt),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
+      s"""WITH $lakeFoldCtes,
+         |${packedGroups("mfiles")},
          |probes AS (
          |  SELECT 'exact_g0' AS probe, CAST(0 AS BIGINT) AS gen
          |  UNION ALL SELECT 'mid_g0_g1', 0
@@ -5008,222 +4743,100 @@ object Layout {
          |  UNION ALL SELECT 'mid_g1_g2', 1
          |  UNION ALL SELECT 'after_tip', 2),
          |fl AS (
-         |  SELECT CAST(0 AS BIGINT) AS gen, n_base_files + 1 AS files_live FROM bn
-         |  UNION ALL SELECT 1, n_fold_files FROM mn
-         |  UNION ALL SELECT 2, n_groups FROM ng)
-         |SELECT p.probe, p.gen, fl.files_live, ro.rows_out
-         |FROM probes p JOIN fl ON fl.gen = p.gen, ro
+         |  SELECT CAST(0 AS BIGINT) AS gen, n + 1 AS files_live FROM bn
+         |  UNION ALL SELECT 1, n FROM mn
+         |  UNION ALL SELECT 2, n FROM ng)
+         |SELECT p.probe, p.gen, fl.files_live, ${boxRows("merged")} AS rows_out
+         |FROM probes p JOIN fl ON fl.gen = p.gen
          |ORDER BY p.probe""".stripMargin,
     "x_lake_evolve" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value, floor(value) + 1000 AS score FROM (
-         |    SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |    UNION ALL
-         |    SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1) d),
-         |merged AS (
-         |  SELECT event_id, user_id, value, score FROM delta
+      s"""WITH $lakeBaseCtes,
+         |sdelta AS (SELECT *, floor(value) + 1000 AS score FROM delta),
+         |smerged AS (
+         |  SELECT event_id, user_id, value, score FROM sdelta
          |  UNION ALL
          |  SELECT b.event_id, b.user_id, b.value, CAST(NULL AS DOUBLE) AS score
-         |  FROM base b ANTI JOIN delta dd ON dd.event_id = b.event_id),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bcells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM bq),
-         |bfiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM bcells GROUP BY 1),
-         |bkept AS (
-         |  SELECT * FROM bfiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_delta FROM delta),
-         |mb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |mq AS (
-         |  SELECT user_id, value, score,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, mb),
-         |mcells AS (SELECT user_id, value, score,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM mq),
-         |ffiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v,
-         |    min(score) AS min_sc, max(score) AS max_sc
-         |  FROM mcells GROUP BY 1),
-         |fkept AS (
-         |  SELECT * FROM ffiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |skept AS (
-         |  SELECT * FROM ffiles WHERE NOT (
-         |    min_sc IS NOT NULL AND (max_sc < 1100 OR min_sc > 1200))),
+         |  FROM base b ANTI JOIN sdelta dd ON dd.event_id = b.event_id),
+         |${cellGrid("m", "smerged", "smerged", carry = Seq("score"))},
+         |skept AS (SELECT * FROM mfiles WHERE NOT ${statsMiss("score", "1100", "1200")}),
          |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out,
          |    CAST(coalesce(sum(CASE WHEN score IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_scored,
          |    CAST(coalesce(sum(score), 0) AS BIGINT) AS score_chk
-         |  FROM merged WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
+         |  FROM smerged WHERE $boxSql),
          |so AS (SELECT CAST(count(*) AS BIGINT) AS rows_out,
          |    CAST(count(*) AS BIGINT) AS n_scored,
          |    CAST(coalesce(sum(score), 0) AS BIGINT) AS score_chk
-         |  FROM merged WHERE score BETWEEN 1100.0 AND 1200.0),
-         |s1 AS (SELECT CAST(1 AS BIGINT) AS stage, 'merge_on_read' AS state,
-         |    CAST((SELECT count(*) FROM bfiles) + 1 AS BIGINT) AS files_total,
-         |    CAST((SELECT count(*) FROM bkept) + 1 AS BIGINT) AS files_read,
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM bkept)
-         |       + (SELECT n_delta FROM nd) AS BIGINT) AS rows_scanned,
-         |    rows_out, n_scored, score_chk FROM ro),
-         |s2 AS (SELECT CAST(2 AS BIGINT), 'folded',
-         |    CAST((SELECT count(*) FROM ffiles) AS BIGINT),
-         |    CAST((SELECT count(*) FROM fkept) AS BIGINT),
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM fkept) AS BIGINT),
-         |    rows_out, n_scored, score_chk FROM ro),
-         |s3 AS (SELECT CAST(3 AS BIGINT), 'score_pruned',
-         |    CAST((SELECT count(*) FROM ffiles) AS BIGINT),
-         |    CAST((SELECT count(*) FROM skept) AS BIGINT),
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM skept) AS BIGINT),
-         |    rows_out, n_scored, score_chk FROM so)
+         |  FROM smerged WHERE score BETWEEN 1100.0 AND 1200.0),
+         |${stagesCte(
+           "merge_on_read" -> (prunedReadCols("bfiles", "bkept", 1, "(SELECT count(*) FROM delta)") +
+             ", rows_out, n_scored, score_chk FROM ro"),
+           "folded" -> (prunedReadCols("mfiles", "mkept") + ", rows_out, n_scored, score_chk FROM ro"),
+           "score_pruned" -> (prunedReadCols("mfiles", "skept") +
+             ", rows_out, n_scored, score_chk FROM so"))}
          |SELECT stage, state, files_total, files_read, rows_scanned,
          |  rows_out, n_scored, score_chk
-         |FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3) u
-         |ORDER BY stage""".stripMargin,
+         |FROM st ORDER BY stage""".stripMargin,
     // the widening never changes a value, so every file count is a
     // cell-grid count, every pruning decision a min/max comparison over
     // exact integers, and uid_chk an exact integer sum — all recomputed
     // from the events table with no notion of physical width; equality
     // pins that the INT32→INT64 promotion read is value-preserving
     "x_lake_widen" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |merged AS (
-         |  SELECT * FROM delta
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN delta d ON d.event_id = b.event_id),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bcells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM bq),
-         |bfiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM bcells GROUP BY 1),
-         |bkept AS (
-         |  SELECT * FROM bfiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |ukept AS (
-         |  SELECT * FROM bfiles WHERE NOT (
-         |    min_u IS NOT NULL AND (max_u < 3 OR min_u > 9))),
-         |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_delta FROM delta),
-         |mb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |mq AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, mb),
-         |mcells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM mq),
-         |ffiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM mcells GROUP BY 1),
-         |fkept AS (
-         |  SELECT * FROM ffiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
+      s"""WITH $lakeFoldCtes,
+         |ukept AS (SELECT * FROM bfiles WHERE NOT ${statsMiss("u", "3", "9")}),
          |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out,
          |    CAST(coalesce(sum(user_id), 0) AS BIGINT) AS uid_chk
-         |  FROM merged WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
+         |  FROM merged WHERE $boxSql),
          |uo AS (SELECT CAST(count(*) AS BIGINT) AS rows_out,
          |    CAST(coalesce(sum(user_id), 0) AS BIGINT) AS uid_chk
          |  FROM merged WHERE user_id BETWEEN 3 AND 9),
-         |s1 AS (SELECT CAST(1 AS BIGINT) AS stage, 'merge_on_read' AS state,
-         |    CAST((SELECT count(*) FROM bfiles) + 1 AS BIGINT) AS files_total,
-         |    CAST((SELECT count(*) FROM bkept) + 1 AS BIGINT) AS files_read,
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM bkept)
-         |       + (SELECT n_delta FROM nd) AS BIGINT) AS rows_scanned,
-         |    rows_out, uid_chk FROM ro),
-         |s2 AS (SELECT CAST(2 AS BIGINT), 'folded_wide',
-         |    CAST((SELECT count(*) FROM ffiles) AS BIGINT),
-         |    CAST((SELECT count(*) FROM fkept) AS BIGINT),
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM fkept) AS BIGINT),
-         |    rows_out, uid_chk FROM ro),
-         |s3 AS (SELECT CAST(3 AS BIGINT), 'uid_pruned',
-         |    CAST((SELECT count(*) FROM bfiles) + 1 AS BIGINT),
-         |    CAST((SELECT count(*) FROM ukept) + 1 AS BIGINT),
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM ukept)
-         |       + (SELECT n_delta FROM nd) AS BIGINT),
-         |    rows_out, uid_chk FROM uo)
+         |${stagesCte(
+           "merge_on_read" -> (prunedReadCols("bfiles", "bkept", 1, "(SELECT count(*) FROM delta)") +
+             ", rows_out, uid_chk FROM ro"),
+           "folded_wide" -> (prunedReadCols("mfiles", "mkept") + ", rows_out, uid_chk FROM ro"),
+           "uid_pruned" -> (prunedReadCols("bfiles", "ukept", 1, "(SELECT count(*) FROM delta)") +
+             ", rows_out, uid_chk FROM uo"))}
          |SELECT stage, state, files_total, files_read, rows_scanned,
          |  rows_out, uid_chk
-         |FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3) u
-         |ORDER BY stage""".stripMargin,
+         |FROM st ORDER BY stage""".stripMargin,
     "x_footer_prune" ->
-      s"""WITH bounds AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM events),
-         |q AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM events, bounds),
-         |cells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 20 AS zcell FROM q),
-         |files AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM cells GROUP BY 1),
-         |kept AS (
-         |  SELECT * FROM files WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |ft AS (SELECT CAST(count(*) AS BIGINT) AS files_total FROM files),
-         |ka AS (SELECT CAST(count(*) AS BIGINT) AS files_read,
-         |       CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS rows_scanned FROM kept),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM events
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0)
-         |SELECT files_total, files_read, rows_scanned, rows_out FROM ft, ka, ro""".stripMargin,
+      s"""WITH ${cellGrid("e", "events", "events", shift = 20)}
+         |SELECT ${prunedReadCols("efiles", "ekept")},
+         |  ${boxRows("events")} AS rows_out""".stripMargin,
+    "x_delta_read" ->
+      s"""WITH $lakeBaseCtes,
+         |r AS (SELECT (SELECT n FROM bn) AS files_total,
+         |  CAST((SELECT count(*) FROM bkept) AS BIGINT) AS files_read_base,
+         |  CAST((SELECT coalesce(sum(n_rows), 0) FROM bkept) AS BIGINT) AS rows_scanned_base,
+         |  CAST((SELECT count(*) FROM delta) AS BIGINT) AS rows_delta)
+         |SELECT files_total, files_read_base, rows_scanned_base, rows_delta,
+         |  rows_scanned_base + rows_delta AS rows_scanned, ${boxRows("merged")} AS rows_out
+         |FROM r""".stripMargin,
+    "x_delta_fold" ->
+      s"""WITH $lakeSlices,
+         |${cellGrid("m", "merged", "merged")}
+         |SELECT ${prunedReadCols("mfiles", "mkept")},
+         |  ${boxRows("merged")} AS rows_out""".stripMargin,
+    // stage 1 reads the base grid pruned plus the whole delta; DECIDE
+    // counts the base rows under the delta's cells (the delta `d` under
+    // the base grid, clamped); stages 2/3 read the fold and its packed
+    // groups
+    "x_lake_e2e" ->
+      s"""WITH $lakeFoldCtes,
+         |${cellGrid("d", "delta", "base")},
+         |${packedGroups("mfiles")},
+         |rw AS (SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS rows_rw
+         |       FROM bfiles WHERE zcell IN (SELECT zcell FROM dfiles)),
+         |amp AS (SELECT CAST(CASE WHEN n_delta = 0 THEN 0
+         |    ELSE rows_rw * 1000 // n_delta END AS BIGINT) AS amp_x1000
+         |  FROM rw, (SELECT count(*) AS n_delta FROM delta) nd),
+         |${stagesCte(
+           "merge_on_read" -> prunedReadCols("bfiles", "bkept", 1, "(SELECT count(*) FROM delta)"),
+           "folded" -> prunedReadCols("mfiles", "mkept"),
+           "compacted" -> prunedReadCols("grp", "gkept"))}
+         |SELECT stage, state, files_total, files_read, rows_scanned,
+         |  ${boxRows("merged")} AS rows_out, amp_x1000
+         |FROM st, amp ORDER BY stage""".stripMargin,
     "x_dpp_read" ->
       """WITH by_src AS (
         |  SELECT source AS sel_source, count(*) AS n_total,
@@ -5236,186 +4849,6 @@ object Layout {
         |       CAST(sum(d.n_chars) AS BIGINT) AS sum_chars
         |FROM documents d JOIN sel ON d.source = sel.sel_source
         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "x_delta_read" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |bounds AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |q AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bounds),
-         |cells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM q),
-         |files AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM cells GROUP BY 1),
-         |kept AS (
-         |  SELECT * FROM files WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |ft AS (SELECT CAST(count(*) AS BIGINT) AS files_total FROM files),
-         |ka AS (SELECT CAST(count(*) AS BIGINT) AS files_read_base,
-         |       CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS rows_scanned_base FROM kept),
-         |dr AS (SELECT CAST(count(*) AS BIGINT) AS rows_delta FROM delta),
-         |merged AS (
-         |  SELECT * FROM delta
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN delta d ON d.event_id = b.event_id),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0)
-         |SELECT files_total, files_read_base, rows_scanned_base, rows_delta,
-         |  rows_scanned_base + rows_delta AS rows_scanned, rows_out
-         |FROM ft, ka, dr, ro""".stripMargin,
-    "x_delta_fold" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |merged AS (
-         |  SELECT * FROM delta
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN delta d ON d.event_id = b.event_id),
-         |bounds AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |q AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, bounds),
-         |cells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM q),
-         |files AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM cells GROUP BY 1),
-         |kept AS (
-         |  SELECT * FROM files WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |ft AS (SELECT CAST(count(*) AS BIGINT) AS files_total FROM files),
-         |ka AS (SELECT CAST(count(*) AS BIGINT) AS files_read,
-         |       CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS rows_scanned FROM kept),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0)
-         |SELECT files_total, files_read, rows_scanned, rows_out FROM ft, ka, ro""".stripMargin,
-    "x_lake_e2e" ->
-      s"""WITH ev AS (SELECT event_id, user_id, value FROM events),
-         |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
-         |delta AS (
-         |  SELECT event_id, user_id, value FROM ev WHERE event_id % 10 = 0
-         |  UNION ALL
-         |  SELECT event_id, user_id, value + 150.0 AS value FROM ev WHERE event_id % 100 = 1),
-         |merged AS (
-         |  SELECT * FROM delta
-         |  UNION ALL
-         |  SELECT b.* FROM base b ANTI JOIN delta d ON d.event_id = b.event_id),
-         |bb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM base),
-         |bq AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM base, bb),
-         |bcells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM bq),
-         |bfiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM bcells GROUP BY 1),
-         |bkept AS (
-         |  SELECT * FROM bfiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_delta FROM delta),
-         |dq AS (
-         |  SELECT
-         |    CAST(round(greatest(0.0, least(1.0, CASE WHEN user_id IS NULL OR hi_u IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END)) * 4095) AS BIGINT) AS qu,
-         |    CAST(round(greatest(0.0, least(1.0, CASE WHEN value IS NULL OR hi_v IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END)) * 4095) AS BIGINT) AS qv
-         |  FROM delta, bb),
-         |dcells AS (SELECT DISTINCT (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM dq),
-         |rw AS (SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS rows_rw
-         |       FROM bfiles WHERE zcell IN (SELECT zcell FROM dcells)),
-         |amp AS (SELECT CAST(CASE WHEN n_delta = 0 THEN 0
-         |    ELSE rows_rw * 1000 // n_delta END AS BIGINT) AS amp_x1000 FROM rw, nd),
-         |mb AS (
-         |  SELECT min(CAST(user_id AS DOUBLE)) AS lo_u, max(CAST(user_id AS DOUBLE)) AS hi_u,
-         |         min(CAST(value AS DOUBLE)) AS lo_v, max(CAST(value AS DOUBLE)) AS hi_v
-         |  FROM merged),
-         |mq AS (
-         |  SELECT user_id, value,
-         |    CAST(round((CASE WHEN user_id IS NULL OR hi_u - lo_u = 0 THEN 0.0
-         |      ELSE (CAST(user_id AS DOUBLE) - lo_u) / (hi_u - lo_u) END) * 4095) AS BIGINT) AS qu,
-         |    CAST(round((CASE WHEN value IS NULL OR hi_v - lo_v = 0 THEN 0.0
-         |      ELSE (CAST(value AS DOUBLE) - lo_v) / (hi_v - lo_v) END) * 4095) AS BIGINT) AS qv
-         |  FROM merged, mb),
-         |mcells AS (SELECT user_id, value,
-         |    (${mortonSql("qu", "qv", 12)}) >> 18 AS zcell FROM mq),
-         |ffiles AS (
-         |  SELECT zcell, count(*) AS n_rows,
-         |    min(CAST(user_id AS DOUBLE)) AS min_u, max(CAST(user_id AS DOUBLE)) AS max_u,
-         |    min(value) AS min_v, max(value) AS max_v
-         |  FROM mcells GROUP BY 1),
-         |fkept AS (
-         |  SELECT * FROM ffiles WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |tgt AS (SELECT CAST(greatest(1, (coalesce(sum(n_rows), 0) + 3) // 4) AS BIGINT) AS t
-         |        FROM ffiles),
-         |ford AS (SELECT *, coalesce(sum(n_rows) OVER (ORDER BY zcell
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre FROM ffiles),
-         |grp AS (
-         |  SELECT pre // t AS gid, sum(n_rows) AS n_rows,
-         |    min(min_u) AS min_u, max(max_u) AS max_u,
-         |    min(min_v) AS min_v, max(max_v) AS max_v
-         |  FROM ford, tgt GROUP BY 1),
-         |gkept AS (
-         |  SELECT * FROM grp WHERE NOT (
-         |    (min_u IS NOT NULL AND (max_u < 60 OR min_u > 90)) OR
-         |    (min_v IS NOT NULL AND (max_v < 100 OR min_v > 200)))),
-         |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM merged
-         |       WHERE user_id BETWEEN 60 AND 90 AND value BETWEEN 100.0 AND 200.0),
-         |s1 AS (SELECT CAST(1 AS BIGINT) AS stage, 'merge_on_read' AS state,
-         |    CAST((SELECT count(*) FROM bfiles) + 1 AS BIGINT) AS files_total,
-         |    CAST((SELECT count(*) FROM bkept) + 1 AS BIGINT) AS files_read,
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM bkept)
-         |       + (SELECT n_delta FROM nd) AS BIGINT) AS rows_scanned),
-         |s2 AS (SELECT CAST(2 AS BIGINT), 'folded',
-         |    CAST((SELECT count(*) FROM ffiles) AS BIGINT),
-         |    CAST((SELECT count(*) FROM fkept) AS BIGINT),
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM fkept) AS BIGINT)),
-         |s3 AS (SELECT CAST(3 AS BIGINT), 'compacted',
-         |    CAST((SELECT count(*) FROM grp) AS BIGINT),
-         |    CAST((SELECT count(*) FROM gkept) AS BIGINT),
-         |    CAST((SELECT coalesce(sum(n_rows), 0) FROM gkept) AS BIGINT)),
-         |st AS (SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3)
-         |SELECT stage, state, files_total, files_read, rows_scanned, rows_out, amp_x1000
-         |FROM st, ro, amp ORDER BY stage""".stripMargin,
     "x_footer_prune_mixed" ->
       s"""WITH files AS (
          |  SELECT source, n_chars // 128 AS lb, count(*) AS n_rows,
@@ -5457,22 +4890,15 @@ object Layout {
          |       WHERE source BETWEEN 'src12' AND 'src17' AND n_chars BETWEEN 150 AND 400)
          |SELECT files_total, files_read, rows_scanned, rows_out FROM ft, ka, ro""".stripMargin,
     "x_zorder_layout" ->
-      s"""WITH $bucketCte
-         |SELECT file_id, count(*) AS n_rows,
-         |  min(db) AS min_db, max(db) AS max_db,
-         |  min(ub) AS min_ub, max(ub) AS max_ub
-         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
+      s"""WITH $bucketCte,
+         |${bucketFiles("files", "file_id")}
+         |SELECT * FROM files ORDER BY 1""".stripMargin,
     "x_zorder_prune" ->
       s"""WITH $bucketCte,
-         |files AS (
-         |  SELECT file_id, count(*) AS n_rows,
-         |    min(db) AS min_db, max(db) AS max_db,
-         |    min(ub) AS min_ub, max(ub) AS max_ub
-         |  FROM f GROUP BY 1),
+         |${bucketFiles("files", "file_id")},
          |zc AS (
          |  SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS z_candidate_rows
-         |  FROM files
-         |  WHERE max_db >= 10 AND min_db <= 12 AND max_ub >= 8 AND min_ub <= 11),
+         |  FROM files WHERE $bucketProbe),
          |tot AS (
          |  SELECT count(*) AS total_rows,
          |    CAST(sum(CASE WHEN db BETWEEN 10 AND 12 THEN 1 ELSE 0 END) AS BIGINT) AS naive_candidate_rows,
@@ -5483,24 +4909,14 @@ object Layout {
     "x_hilbert_prune" ->
       s"""WITH $bucketCte,
          |$hilbertCtes,
-         |hfiles AS (
-         |  SELECT hd >> 2 AS hf, count(*) AS n_rows,
-         |    min(db) AS min_db, max(db) AS max_db,
-         |    min(ub) AS min_ub, max(ub) AS max_ub
-         |  FROM h1 GROUP BY 1),
-         |mfiles AS (
-         |  SELECT file_id, count(*) AS n_rows,
-         |    min(db) AS min_db, max(db) AS max_db,
-         |    min(ub) AS min_ub, max(ub) AS max_ub
-         |  FROM f GROUP BY 1),
+         |${bucketFiles("hfiles", "hd >> 2 AS hf", "h1")},
+         |${bucketFiles("mfiles", "file_id")},
          |hc AS (
          |  SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS hilbert_candidate_rows
-         |  FROM hfiles
-         |  WHERE max_db >= 10 AND min_db <= 12 AND max_ub >= 8 AND min_ub <= 11),
+         |  FROM hfiles WHERE $bucketProbe),
          |mc AS (
          |  SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS morton_candidate_rows
-         |  FROM mfiles
-         |  WHERE max_db >= 10 AND min_db <= 12 AND max_ub >= 8 AND min_ub <= 11),
+         |  FROM mfiles WHERE $bucketProbe),
          |tot AS (
          |  SELECT count(*) AS total_rows,
          |    CAST(sum(CASE WHEN db BETWEEN 10 AND 12 AND ub BETWEEN 8 AND 11 THEN 1 ELSE 0 END) AS BIGINT) AS exact_rows
@@ -5534,16 +4950,7 @@ object Layout {
          |  FROM j)
          |SELECT r.*, rows_rewritten * 1000 // n_arrivals AS rewrite_amp_x1000 FROM r""".stripMargin,
     "x_compaction_exec" ->
-      s"""WITH $bucketCte,
-         |manifest AS (
-         |  SELECT file_id, count(*) AS n_rows,
-         |    min(db) AS min_db, max(db) AS max_db,
-         |    min(ub) AS min_ub, max(ub) AS max_ub
-         |  FROM f GROUP BY 1),
-         |p AS (
-         |  SELECT *, CAST(coalesce(sum(n_rows) OVER (ORDER BY file_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre_rows
-         |  FROM manifest)
+      s"""WITH $compactionCtes
          |SELECT pre_rows // $CompactionTargetRows AS group_id,
          |  count(*) AS n_files_in,
          |  CAST(1 AS BIGINT) AS n_files_out,
@@ -5552,16 +4959,7 @@ object Layout {
          |  min(min_ub) AS min_ub, max(max_ub) AS max_ub
          |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
     "x_compaction_plan" ->
-      s"""WITH $bucketCte,
-         |manifest AS (
-         |  SELECT file_id, count(*) AS n_rows,
-         |    min(db) AS min_db, max(db) AS max_db,
-         |    min(ub) AS min_ub, max(ub) AS max_ub
-         |  FROM f GROUP BY 1),
-         |p AS (
-         |  SELECT *, CAST(coalesce(sum(n_rows) OVER (ORDER BY file_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre_rows
-         |  FROM manifest)
+      s"""WITH $compactionCtes
          |SELECT pre_rows // $CompactionTargetRows AS group_id, count(*) AS n_files,
          |  CAST(sum(n_rows) AS BIGINT) AS n_rows,
          |  min(file_id) AS first_file, max(file_id) AS last_file,

@@ -42,6 +42,18 @@ class RegistryGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("Layout's oracles say the cell grid and the box once, in the SQL generators") {
+    // a pasted copy of the quantize block or the box predicate drifts
+    // silently (a missed copy shows up only as an oracle hash mismatch):
+    // the lake oracles build both from Layout's SQL fragment generators
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/ext/Layout.scala"))
+    def occurrences(s: String) = java.util.regex.Pattern.quote(s).r.findAllMatchIn(text).size
+    assert(occurrences("4095") <= 2, "the 12-bit quantize scale is pasted outside cellGrid")
+    assert(occurrences("user_id BETWEEN 60 AND 90") <= 1,
+      "the standard box predicate is pasted outside the box generator")
+  }
+
   test("every oracle key is a registered query (no orphan oracles)") {
     val orphans = SparkEntry.oracleSql.keySet.filterNot(SparkEntry.queries.contains)
     assert(orphans.isEmpty,

@@ -8,11 +8,12 @@ import org.scalatest.time.{Seconds, Span}
 import graft.SparkSpec
 import graft.exec.Pool
 
-/** The report pool (`Pool.async`) and its failure paths: pool threads
-  * start with NO inherited Spark local properties (only the four job
-  * properties are handed over, per task), and a query whose main-thread
-  * work fails cancels and joins its outstanding report task and releases
-  * its cached frames before rethrowing. */
+/** The report pool (`Pool.async`, `Pool.overlap`) and its failure paths:
+  * pool threads start with NO inherited Spark local properties (only the
+  * four job properties are handed over, per task), and a query whose
+  * main-thread work or earlier await fails cancels and joins its
+  * outstanding report tasks and releases its cached frames before
+  * rethrowing. */
 class ReportPoolSpec extends SparkSpec {
 
   private val staleKey = "graft.spec.stale"
@@ -143,6 +144,32 @@ class ReportPoolSpec extends SparkSpec {
       sc.clearJobGroup()
       org.apache.spark.sql.SparkSession.setDefaultSession(spark)
     }
+  }
+
+  test("overlap cancels a still-running task when an earlier task's await throws") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-spec-overlap", "report pool spec", interruptOnCancel = true)
+    try {
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException] {
+        Pool.overlap(spark) { o =>
+          val failing = o.async(() => { release.await(); throw new IllegalStateException("boom") })
+          // a running task: its one job's tasks sleep until interrupted
+          val running = o.async(() => sc.parallelize(1 to 2, 2).foreach(_ => Thread.sleep(60000)))
+          eventually(timeout(Span(30, Seconds))) {
+            assert(sc.statusTracker.getActiveJobIds.nonEmpty)
+          }
+          release.countDown()
+          Seq(failing, running).map(_.await)
+        }
+      }
+      assert(e.getMessage === "boom")
+      assert((System.nanoTime() - t0) / 1e9 < 40, "the running task was not cancelled")
+      eventually(timeout(Span(10, Seconds))) {
+        assert(sc.statusTracker.getActiveJobIds.isEmpty, "overlap left a job running")
+      }
+    } finally sc.clearJobGroup()
   }
 
   test("x_curation_e2e runs every job in the caller's group and leaves nothing behind, also when it fails") {
