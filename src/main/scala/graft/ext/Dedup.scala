@@ -98,11 +98,24 @@ object Dedup {
     "array_distinct(transform(sequence(1, size(w) - 2), " +
       "i -> cast(conv(substring(md5(concat_ws(' ', w[i-1], w[i], w[i+1])), 1, 15), 16, 10) as bigint)))"
 
-  private val shinglesSql: String =
-    """words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |sh AS (SELECT DISTINCT doc_id, s FROM (
-      |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
-      |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s FROM words))""".stripMargin
+  /** DuckDB twin of the word-3-gram shingling: `words` splits each
+    * document on spaces, and `sh` holds the DISTINCT (doc_id, s)
+    * shingles of documents with at least three words, each shingle text
+    * mapped through `shingle` — raw, or [[md5Shingle]]. */
+  private def shingleCtes(words: String, sh: String,
+      shingle: String => String = identity): String =
+    s"""$words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       |$sh AS (SELECT DISTINCT doc_id, s FROM (
+       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
+       |    i -> ${shingle("w[i] || ' ' || w[i+1] || ' ' || w[i+2]")})) AS s
+       |  FROM $words WHERE len(w) >= 3))""".stripMargin
+
+  /** A shingle as its 60-bit md5-derived integer — [[hashedShingleExpr]]'s
+    * twin. */
+  private def md5Shingle(text: String): String =
+    s"('0x' || substr(md5($text), 1, 15))::BIGINT"
+
+  private val shinglesSql: String = shingleCtes("words", "sh")
 
   /** Exact dedup: group by content hash, keep lowest doc_id per group. */
   def exact(spark: SparkSession, dir: String): DataFrame =
@@ -910,11 +923,7 @@ object Dedup {
       "x_dedup_lsh_recall" -> {
         import graft.ops.StableStats
         s"""WITH pairs AS ($pairsSubquery),
-           |words2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |shx AS (SELECT DISTINCT doc_id, s FROM (
-           |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
-           |    i -> ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT)) AS s
-           |  FROM words2 WHERE len(w) >= 3)),
+           |${shingleCtes("words2", "shx", md5Shingle)},
            |sizes AS (SELECT doc_id, count(*) AS n FROM shx GROUP BY doc_id),
            |inter AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS n_shared
            |  FROM shx x JOIN shx y ON x.s = y.s AND x.doc_id < y.doc_id
@@ -968,17 +977,13 @@ object Dedup {
         val est = (0 until K).map(i => s"CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END")
           .mkString(" + ")
         s"""WITH pairs AS ($pairsSubquery),
-           |words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |sh2 AS (SELECT DISTINCT doc_id, s FROM (
-           |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
-           |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-           |  FROM words WHERE len(w) >= 3)),
+           |${shingleCtes("words", "sh2")},
            |hashed2 AS (SELECT doc_id,
            |  ('0x' || substr(md5(s), 1, 8))::BIGINT AS h1,
            |  ('0x' || substr(md5(s), 9, 8))::BIGINT AS h2 FROM sh2),
            |mh2 AS (SELECT doc_id, $minCols FROM hashed2 GROUP BY doc_id),
            |hsh AS (SELECT DISTINCT doc_id,
-           |    ('0x' || substr(md5(s), 1, 15))::BIGINT AS hs FROM sh2),
+           |    ${md5Shingle("s")} AS hs FROM sh2),
            |sizes AS (SELECT doc_id, count(*) AS n_sh FROM hsh GROUP BY doc_id),
            |inter AS (SELECT doc_a, doc_b, count(*) AS n_inter
            |  FROM pairs
@@ -1008,11 +1013,7 @@ object Dedup {
       "x_dedup_containment" -> {
         import graft.ops.StableStats
         s"""WITH pairs AS ($pairsSubquery),
-           |words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |hsh AS (SELECT DISTINCT doc_id, s FROM (
-           |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
-           |    i -> ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT)) AS s
-           |  FROM words WHERE len(w) >= 3)),
+           |${shingleCtes("words", "hsh", md5Shingle)},
            |sizes AS (SELECT doc_id, count(*) AS n_sh FROM hsh GROUP BY doc_id),
            |inter AS (
            |  SELECT doc_a, doc_b, count(*) AS n_inter
@@ -1079,11 +1080,7 @@ object Dedup {
            |WHERE bit_count(xor(x.simhash, y.simhash)) <= 8
            |ORDER BY doc_a, doc_b""".stripMargin,
       "x_dedup_ngram_jaccard" ->
-        s"""WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |sh AS (SELECT DISTINCT doc_id, s FROM (
-           |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
-           |    i -> ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT)) AS s
-           |  FROM words WHERE len(w) >= 3)),
+        s"""WITH ${shingleCtes("words", "sh", md5Shingle)},
            |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
            |informative AS (SELECT s FROM sh GROUP BY s HAVING count(*) >= 2 AND count(*) <= 100),
            |shr AS (SELECT sh.doc_id, sh.s FROM sh JOIN informative USING (s)),
@@ -1101,11 +1098,7 @@ object Dedup {
       // anywhere): the differential proves the prefix filter lossless
       "x_dedup_jaccard_exact" -> {
         import graft.ops.StableStats
-        s"""WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-           |sh AS (SELECT DISTINCT doc_id, s FROM (
-           |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 2),
-           |    i -> ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT)) AS s
-           |  FROM words WHERE len(w) >= 3)),
+        s"""WITH ${shingleCtes("words", "sh", md5Shingle)},
            |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
            |inter AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS n_shared
            |  FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id

@@ -276,6 +276,103 @@ object Layout {
     tot.crossJoin(broadcast(zCand))
   }
 
+  /** A merge-on-read delta as a pruned read sees it: its files (never
+    * pruned), their footer row count, its rows (whose keys supersede
+    * the base versions) and the rows of it that re-enter the read — all
+    * of them, or a cdelta's op='U' upserts. */
+  private final case class MorDelta(files: Seq[String], rows: Long, frame: DataFrame,
+      upserts: DataFrame)
+
+  /** Newest-wins over `base` and a delta: a base row is dropped whenever
+    * its event_id appears in `delta`, and `upserts` re-enter. No
+    * broadcast hint on the delta keys: the delta is a corpus FRACTION
+    * (it grows linearly with SF), so AQE broadcasts from runtime stats
+    * exactly when it really is small (round 15). */
+  private def newestWins(base: DataFrame, delta: DataFrame, upserts: DataFrame): DataFrame =
+    base.join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
+      .unionByName(upserts)
+
+  /** One footer-pruned read of a lake state, counted the way the
+    * oracle's [[prunedReadCols]] counts it: `filesTotal` is the
+    * manifest's distinct files, `filesRead` the files the box keeps,
+    * `rowsScanned` their footer rows, and a merge-on-read delta adds its
+    * files and rows to all three. `rows` is what the read answers from —
+    * the kept base rows, newest-wins with the delta when there is one. */
+  private final case class PrunedStage(filesTotal: Long, filesRead: Long, rowsScanned: Long,
+      rows: DataFrame) {
+    /** The 1-row counter frame: `lead`, then files_total, files_read,
+      * rows_scanned (literals settled driver-side). */
+    def counters(lead: Column*): DataFrame = rows.sparkSession.range(1).select(lead ++ Seq(
+      lit(filesTotal).as("files_total"), lit(filesRead).as("files_read"),
+      lit(rowsScanned).as("rows_scanned")): _*)
+
+    /** The report row: [[counters]] with the 1-row `answer` over [[rows]]
+      * broadcast across (an auto-off planner would otherwise fall back to
+      * CartesianProduct, see zorderPrune). */
+    def report(answer: DataFrame => DataFrame, lead: Column*): DataFrame =
+      counters(lead: _*).crossJoin(broadcast(answer(rows)))
+
+    /** [[report]] led by stagesCte's (stage, state) columns. */
+    def stage(n: Long, state: String, answer: DataFrame => DataFrame): DataFrame =
+      report(answer, lit(n).as("stage"), lit(state).as("state"))
+  }
+
+  /** THE pruned read of a lake state: decide the files `box`/`strBox`
+    * keep from the collected footer `manifest` driver-side (files×columns
+    * rows — FileIndex metadata scale; the decision and the file totals
+    * cost no Spark job, guide §5), read only those through the site's own
+    * `read` (inferred, [[LakeSchema]], an evolved schema — `read` answers
+    * an empty file list with its typed zero-row frame), and merge the
+    * `delta` newest-wins. No session-scoped persist: the stage holds
+    * literals plus lazy rows (the round-13 release discipline). */
+  private def prunedStage(manifest: Seq[org.apache.spark.sql.Row],
+      box: Map[String, (Double, Double)], read: Seq[String] => DataFrame,
+      delta: Option[MorDelta] = None,
+      strBox: Map[String, (String, String)] = Map.empty): PrunedStage = {
+    val kept = graft.sources.FooterManifest.filesToReadLocal(manifest, box, strBox)
+    val base = read(kept.map(_._1))
+    val (dFiles, dRows) = delta.fold((0L, 0L))(d => (d.files.size.toLong, d.rows))
+    PrunedStage(manifest.map(_.getString(0)).distinct.length.toLong + dFiles,
+      kept.length.toLong + dFiles, kept.map(_._2).sum + dRows,
+      delta.fold(base)(d => newestWins(base, d.frame, d.upserts)))
+  }
+
+  /** `files` read with `read` (which resolves their schema), or `empty`
+    * — the typed zero-row frame a fully pruned read needs, since an empty
+    * parquet read has no schema to infer. */
+  private def orEmpty(empty: => DataFrame)(read: Seq[String] => DataFrame)(
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty) empty else read(files)
+
+  /** The answer every lake box report carries: how many `rows` `filter`
+    * keeps. */
+  private def countIn(filter: Column)(rows: DataFrame): DataFrame =
+    rows.where(filter).agg(count(lit(1)).as("rows_out"))
+
+  /** Idempotently write `df` z-celled over the lake z columns under
+    * `out` (same contract as zorderPrune): the fingerprint covers the
+    * PLANNED rows INCLUDING the writer's cell assignment
+    * (PartitionedSink.withZCell — the exact quantize+Morton pipeline
+    * writeZCelled runs), so a change to the curve/quantization formulas
+    * misses the fingerprint just like a data change would. */
+  private def ensureZCelled(df: DataFrame, out: String, cellBits: Int): Unit = {
+    import graft.sources.PartitionedSink
+    materializeIfChanged(out, layoutFingerprint("v1",
+      PartitionedSink.withZCell(df, LakeZCols, 12, cellBits)
+        .select(df.columns.map(col) :+ col("zcell"): _*))) {
+      PartitionedSink.writeZCelled(df, out, LakeZCols, bits = 12, cellBits = cellBits)
+    }
+  }
+
+  /** The standard box read back from the (user_id, value) footers of the
+    * z-celled layout under `out`: (files_total, files_read,
+    * rows_scanned, rows_out). */
+  private def zcelledBoxReport(spark: SparkSession, out: String): DataFrame =
+    prunedStage(graft.sources.FooterManifest.build(spark, out, LakeZCols).collect(),
+      LakeNumBox, orEmpty(spark.range(0).select(col("id").as("user_id"),
+        col("id").cast("double").as("value")))(spark.read.parquet(_: _*)))
+      .report(countIn(lakeBox))
+
   /** The production pruning loop end-to-end on RAW event columns: write
     * a z-CELLED slice ([[graft.sources.PartitionedSink.writeZCelled]] —
     * the deterministic cell-split writer, each non-empty curve cell one
@@ -294,63 +391,11 @@ object Layout {
     * misses rule — files_read/rows_scanned are differentially checked,
     * not pinned constants. The kept-file list collected to the driver
     * is bounded by 2^cellBits (=16), never by data. */
-  /** Shared read-back half of every single-box pruned-read report
-    * (round-14 dedup of four near-identical blocks): collect the
-    * manifest ONCE to the driver (files×columns rows — FileIndex
-    * metadata scale; no session-scoped persist, the round-13 release
-    * discipline), decide the kept files, read ONLY those, answer the
-    * box, and report one row (files_total, files_read, rows_scanned,
-    * rows_out). `emptyFallback` supplies the zero-row typed frame a
-    * fully-pruned layout needs (an empty parquet read can't infer a
-    * schema); `boxFilter` is the query predicate re-applied to the
-    * surviving rows. */
-  private def boxReadReport(spark: SparkSession, layoutDir: String,
-      cols: Seq[String], numBox: Map[String, (Double, Double)],
-      strBox: Map[String, (String, String)],
-      emptyFallback: => DataFrame, boxFilter: Column): DataFrame = {
-    import graft.sources.FooterManifest
-    val m = FooterManifest.build(spark, layoutDir, cols)
-    // collect ONCE, then decide pruning and count files driver-side:
-    // the manifest is file-count metadata already on the driver, so the
-    // old filesToRead round-trip + distinct().count() were two Spark
-    // jobs of pure scheduling overhead per report (guide §5)
-    val mRows = m.collect()
-    val kept = FooterManifest.filesToReadLocal(mRows, numBox, strBox)
-    val keptFiles = kept.map(_._1)
-    val filesTotal = mRows.map(_.getString(0)).distinct.length.toLong
-    val rowsScanned = kept.map(_._2).sum
-    val rowsOut = (if (keptFiles.isEmpty) emptyFallback
-      else spark.read.parquet(keptFiles: _*))
-      .where(boxFilter)
-      .agg(count(lit(1)).as("rows_out"))
-    // 1-row report columns broadcast (see zorderPrune)
-    spark.range(1)
-      .select(lit(filesTotal).as("files_total"),
-        lit(keptFiles.size.toLong).as("files_read"),
-        lit(rowsScanned).as("rows_scanned"))
-      .crossJoin(broadcast(rowsOut))
-  }
-
   def footerPrune(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.PartitionedSink
     val out = scratchDir("footer_prune", dir)
-    val slice = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    // idempotent materialization, same contract as zorderPrune: the
-    // fingerprint covers the PLANNED rows INCLUDING the writer's cell
-    // assignment (PartitionedSink.withZCell — the exact quantize+Morton
-    // pipeline writeZCelled runs), so a change to the curve/quantization
-    // formulas misses the fingerprint just like a data change would
-    materializeIfChanged(out, layoutFingerprint("v1",
-      PartitionedSink.withZCell(slice, Seq("user_id", "value"), 12, 4)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell")))) {
-      PartitionedSink.writeZCelled(slice, out, Seq("user_id", "value"),
-        bits = 12, cellBits = 4)
-    }
-    boxReadReport(spark, out, Seq("user_id", "value"),
-      LakeNumBox, Map.empty,
-      spark.range(0).select(col("id").as("user_id"), col("id").cast("double").as("value")),
-      lakeBox)
+    ensureZCelled(Tables.events(spark, dir)
+      .select(col("event_id"), col("user_id"), col("value")), out, cellBits = 4)
+    zcelledBoxReport(spark, out)
   }
 
   /** STRING-column file pruning end-to-end (round 13): the footer loop
@@ -396,13 +441,13 @@ object Layout {
 
   def footerPruneStr(spark: SparkSession, dir: String): DataFrame = {
     val out = ensureStrLayoutMaterialized(spark, dir)
-    boxReadReport(spark, out, Seq("source", "n_chars"),
+    prunedStage(graft.sources.FooterManifest.build(spark, out, Seq("source", "n_chars")).collect(),
       Map("n_chars" -> ((150.0, 400.0))),
-      Map("source" -> (("src12", "src17"))),
-      spark.range(0).select(col("id").cast("string").as("source"),
-        col("id").as("n_chars")),
-      col("source").between("src12", "src17") &&
-        col("n_chars").between(150, 400))
+      orEmpty(spark.range(0).select(col("id").cast("string").as("source"),
+        col("id").as("n_chars")))(spark.read.parquet(_: _*)),
+      strBox = Map("source" -> (("src12", "src17"))))
+      .report(countIn(col("source").between("src12", "src17") &&
+        col("n_chars").between(150, 400)))
   }
 
   /** PREDICATE-DECOMPOSED file pruning over the (source, length-band)
@@ -567,54 +612,27 @@ object Layout {
     * manifest collects once (bounded by 2^cellBits = 64 files) and the
     * returned frame is literals + the lazy merged count. */
   def deltaRead(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{FooterManifest, PartitionedSink}
+    import graft.sources.FooterManifest
     val outBase = scratchDir("delta_base", dir)
     val outDelta = scratchDir("delta_arrivals", dir)
     val (_, base, delta) = lakeSplit(spark, dir)
-    materializeIfChanged(outBase, layoutFingerprint("v1",
-      PartitionedSink.withZCell(base, Seq("user_id", "value"), 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell")))) {
-      PartitionedSink.writeZCelled(base, outBase, Seq("user_id", "value"),
-        bits = 12, cellBits = 6)
-    }
+    ensureZCelled(base, outBase, cellBits = 6)
     materializeIfChanged(outDelta, layoutFingerprint("v1",
       delta.select(col("event_id"), col("user_id"), col("value")))) {
       // the delta is deliberately ONE unsorted file — the state an
       // operator is in between arrivals and the next re-cluster
       delta.coalesce(1).write.mode("overwrite").parquet(outDelta)
     }
-    val m = FooterManifest.build(spark, outBase, Seq("user_id", "value"))
-    // collect once; pruning + file total driver-side (guide §5)
-    val mRows = m.collect()
-    val kept = FooterManifest.filesToReadLocal(mRows,
-      LakeNumBox)
-    val keptFiles = kept.map(_._1)
-    val filesTotal = mRows.map(_.getString(0)).distinct.length.toLong
-    val rowsScannedBase = kept.map(_._2).sum
+    // the pruned base stage and the fully scanned delta side by side
+    val s = prunedStage(FooterManifest.build(spark, outBase, LakeZCols).collect(),
+      LakeNumBox, orEmpty(emptyEvents(spark))(spark.read.parquet(_: _*)))
     val rowsDelta = FooterManifest.rowCountFromFooters(spark, outDelta)
     val deltaDf = spark.read.parquet(outDelta)
-    val baseKept = if (keptFiles.isEmpty)
-        spark.range(0).select(col("id").as("event_id"),
-          col("id").as("user_id"), col("id").cast("double").as("value"))
-      else spark.read.parquet(keptFiles: _*)
-    // no broadcast HINT on the delta keys: the delta is a FRACTION of
-    // the corpus (it grows linearly with SF — PlanSpec's fixed-
-    // cardinality rule), so the hint is the planner's call: AQE
-    // broadcasts from runtime stats exactly when the delta really is
-    // small, and degrades to a shuffle join when it is not (round 15 —
-    // the same de-forcing as strictPrefixKeep in round 14)
-    val survivors = baseKept.join(
-      deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
-    val rowsOut = survivors.unionByName(deltaDf)
-      .where(lakeBox)
-      .agg(count(lit(1)).as("rows_out"))
-    spark.range(1)
-      .select(lit(filesTotal).as("files_total"),
-        lit(keptFiles.size.toLong).as("files_read_base"),
-        lit(rowsScannedBase).as("rows_scanned_base"),
-        lit(rowsDelta).as("rows_delta"),
-        lit(rowsScannedBase + rowsDelta).as("rows_scanned"))
-      .crossJoin(broadcast(rowsOut))
+    s.counters()
+      .select(col("files_total"), col("files_read").as("files_read_base"),
+        col("rows_scanned").as("rows_scanned_base"), lit(rowsDelta).as("rows_delta"),
+        (col("rows_scanned") + rowsDelta).as("rows_scanned"))
+      .crossJoin(broadcast(countIn(lakeBox)(newestWins(s.rows, deltaDf, deltaDf))))
   }
 
   /** FOLD the delta back into the z-celled base — the re-cluster step
@@ -645,30 +663,15 @@ object Layout {
     * write sized by the MERGED table — the fold is the amortized cost
     * zorderIncr's rewrite-amplification number exists to schedule. */
   def deltaFold(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{FooterManifest, PartitionedSink}
     val out = scratchDir("delta_fold", dir)
     val (_, base, delta) = lakeSplit(spark, dir)
-    // NO broadcast hint on the delta keys (round 15, VERDICT r14 #1): a
-    // fold runs precisely when the delta has grown LARGE — that is what
-    // zorderIncr's amplification number schedules — so "the delta is
-    // small by definition" never holds here, and the delta is a
-    // corpus-fraction frame that grows linearly with SF. The merged
-    // rewrite shuffles the whole table anyway; one planner-chosen
-    // exchange on event_id is marginal against it, and AQE still
-    // broadcasts from runtime stats when the delta actually is small.
-    val folded = base.join(
-        delta.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(delta)
-    materializeIfChanged(out, layoutFingerprint("v1",
-      PartitionedSink.withZCell(folded, Seq("user_id", "value"), 12, 6)
-        .select(col("event_id"), col("user_id"), col("value"), col("zcell")))) {
-      PartitionedSink.writeZCelled(folded, out, Seq("user_id", "value"),
-        bits = 12, cellBits = 6)
-    }
-    boxReadReport(spark, out, Seq("user_id", "value"),
-      LakeNumBox, Map.empty,
-      spark.range(0).select(col("id").as("user_id"), col("id").cast("double").as("value")),
-      lakeBox)
+    // newestWins puts NO broadcast hint on the delta keys (round 15,
+    // VERDICT r14 #1): a fold runs precisely when the delta has grown
+    // LARGE — that is what zorderIncr's amplification number schedules —
+    // and the merged rewrite shuffles the whole table anyway; one
+    // planner-chosen exchange on event_id is marginal against it.
+    ensureZCelled(newestWins(base, delta, delta), out, cellBits = 6)
+    zcelledBoxReport(spark, out)
   }
 
   /** The z columns every lake lineage clusters on. */
@@ -702,6 +705,40 @@ object Layout {
   private def readEvents(spark: SparkSession, files: Seq[String]): DataFrame =
     if (files.isEmpty) emptyEvents(spark)
     else spark.read.schema(LakeSchema).parquet(files: _*)
+
+  /** The collected footer manifest over the lake z columns plus `extra`
+    * of generation `gen`'s `base` files — resolved FROM THE GENERATION
+    * LOG (round 18): the manifests, not directory listings, decide which
+    * files carry which state. */
+  private def baseManifest(spark: SparkSession, root: String, gen: Int,
+      extra: String*): Array[org.apache.spark.sql.Row] =
+    graft.sources.FooterManifest.buildFromFiles(spark,
+      readGeneration(root, gen).collect { case ("base", f) => f }, LakeZCols ++ extra).collect()
+
+  /** Generation inputs of a merge-on-read stage: the base files, their
+    * collected manifest, and the delta (or cdelta) files with their
+    * footer row sum. */
+  private final case class MorInputs(baseFiles: Seq[String],
+      manifest: Array[org.apache.spark.sql.Row], deltaFiles: Seq[String], deltaRows: Long) {
+    /** The delta read as `frame`; `upserts` picks the rows that re-enter. */
+    def delta(frame: DataFrame, upserts: DataFrame => DataFrame = identity): MorDelta =
+      MorDelta(deltaFiles, deltaRows, frame, upserts(frame))
+  }
+
+  /** THE merge-on-read input step: generation `gen`'s base manifest and
+    * its `kind` (delta / cdelta) files' footer row sum. Two eager
+    * manifest jobs, so reports run it inside `o.async`. */
+  private def morInputs(spark: SparkSession, root: String, gen: Int,
+      kind: String = "delta"): MorInputs = {
+    import graft.sources.FooterManifest
+    val g = readGeneration(root, gen)
+    val baseFiles = g.collect { case ("base", f) => f }
+    val deltaFiles = g.collect { case (`kind`, f) => f }
+    val manifest = FooterManifest.buildFromFiles(spark, baseFiles, LakeZCols).collect()
+    MorInputs(baseFiles, manifest, deltaFiles,
+      FooterManifest.buildFromFiles(spark, deltaFiles, Seq("event_id")).collect()
+        .map(r => (r.getString(0), r.getLong(1))).distinct.map(_._2).sum)
+  }
 
   /** The planned content a lineage's fingerprint covers: the base
     * z-celled on the lineage grid (its `zcell` covers the base content
@@ -894,11 +931,10 @@ object Layout {
   }
 
   def lakeE2e(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{FooterManifest, PartitionedSink}
+    import graft.sources.PartitionedSink
     val zcols = LakeZCols
     val (_, base, delta) = lakeSplit(spark, dir)
-    val folded = base.join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(delta)
+    val folded = newestWins(base, delta, delta)
     // ONE marker for the whole lineage. Coverage argument: every dir is
     // a pure function of (base, delta, quantize/curve formulas, the q4
     // compaction target — bump the tag if that changes). The planned
@@ -934,62 +970,26 @@ object Layout {
       l.rewrite("fold", "fold")(PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
       l.rewrite("compact", "compact")(writeCompactedFold(spark, folded, _, zcols))
     }
-    // Every stage below resolves its file set FROM THE GENERATION LOG
-    // (round 18): the manifests, not directory listings, decide which
-    // files carry which state — the log is load-bearing, not bolted on.
-    // STAGE 1 — merge-on-read: g0's base refs pruned + its delta refs
-    // scanned fully
+    // Every stage resolves its file set FROM THE GENERATION LOG (round
+    // 18): stage 1 is merge-on-read over g0 (its base pruned, its delta
+    // scanned fully), stages 2 & 3 the pruned reads of the fold and the
+    // compaction
     def stage1(): DataFrame = {
-      val g0 = readGeneration(root, 0)
-      val g0BaseFiles = g0.collect { case ("base", f) => f }
-      val g0DeltaFiles = g0.collect { case ("delta", f) => f }
-      val mBase = FooterManifest.buildFromFiles(spark, g0BaseFiles, zcols)
-      val baseRows = mBase.collect()
-      // pruning + file totals decided driver-side over the collected
-      // manifest (round 21 — was a createDataFrame + filesToRead job
-      // plus a distinct-sum job over local metadata; guide §5)
-      val keptBase = FooterManifest.filesToReadLocal(baseRows, LakeNumBox)
-      val keptBaseFiles = keptBase.map(_._1)
-      val rowsDelta = FooterManifest
-        .buildFromFiles(spark, g0DeltaFiles, Seq("event_id")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).distinct.map(_._2).sum
-      val deltaDf = spark.read.schema(LakeSchema).parquet(g0DeltaFiles: _*)
-      val rowsOut1 = readEvents(spark, keptBaseFiles)
-        .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
-        .unionByName(deltaDf)
-        .where(lakeBox).agg(count(lit(1)).as("rows_out"))
-      spark.range(1).select(
-        lit(1L).as("stage"), lit("merge_on_read").as("state"),
-        lit(baseRows.map(_.getAs[String]("file")).distinct.length.toLong
-          + g0DeltaFiles.size).as("files_total"),
-        lit(keptBaseFiles.size.toLong + g0DeltaFiles.size).as("files_read"),
-        lit(keptBase.map(_._2).sum + rowsDelta).as("rows_scanned"))
-        .crossJoin(broadcast(rowsOut1))
+      val in = morInputs(spark, root, 0)
+      prunedStage(in.manifest, LakeNumBox, readEvents(spark, _),
+        Some(in.delta(readEvents(spark, in.deltaFiles))))
+        .stage(1L, "merge_on_read", countIn(lakeBox))
     }
-    // STAGES 2 & 3 — the standard pruned-read report over each committed
-    // generation's file references
-    def prunedStage(stage: Long, state: String, gen: Int): DataFrame = {
-      val files = readGeneration(root, gen).collect { case ("base", f) => f }
-      val m = FooterManifest.buildFromFiles(spark, files, zcols)
-      val mRows = m.collect()
-      val kept = FooterManifest.filesToReadLocal(mRows, LakeNumBox)
-      val keptFiles = kept.map(_._1)
-      val rowsOut = readEvents(spark, keptFiles)
-        .where(lakeBox).agg(count(lit(1)).as("rows_out"))
-      spark.range(1).select(
-        lit(stage).as("stage"), lit(state).as("state"),
-        lit(mRows.map(_.getAs[String]("file")).distinct.length.toLong).as("files_total"),
-        lit(keptFiles.size.toLong).as("files_read"),
-        lit(kept.map(_._2).sum).as("rows_scanned"))
-        .crossJoin(broadcast(rowsOut))
-    }
+    def genStage(stage: Long, state: String, gen: Int): DataFrame =
+      prunedStage(baseManifest(spark, root, gen), LakeNumBox, readEvents(spark, _))
+        .stage(stage, state, countIn(lakeBox))
     // the three stage chains are independent given the committed log —
     // kick them NOW so their eager manifest jobs overlap the DECIDE
     // work below (guide §2.6; leaf tasks only, never nested)
     val (Seq(s1, s2, s3), amp) = Pool.overlap(spark) { o =>
       val tasks = Seq(o.async(() => stage1()),
-        o.async(() => prunedStage(2L, "folded", 1)),
-        o.async(() => prunedStage(3L, "compacted", 2)))
+        o.async(() => genStage(2L, "folded", 1)),
+        o.async(() => genStage(3L, "compacted", 2)))
       // DECIDE: delta cells under the base's grid (base bounds, clamped) ∩
       // base cell rows = the rewrite cost an eager re-cluster would pay
       // now. The base-cell histogram and the delta count both came out of
@@ -1097,17 +1097,15 @@ object Layout {
   private[graft] def prepareLakeIngest(spark: SparkSession, dir: String,
       root: String): LakeIngestCtx = {
     import graft.sources.PartitionedSink
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
-    PartitionedSink.writeZCelled(base, s"$root/base", Seq("user_id", "value"), 12, 6)
+    val (_, base, _) = lakeSplit(spark, dir)
+    PartitionedSink.writeZCelled(base, s"$root/base", LakeZCols, 12, 6)
     require(commitNextGeneration(root,
       listParquetFiles(spark, s"$root/base").map("base" -> _)
         :+ ("op" -> "seed"),
       Some((-1, Set.empty[String]))) == 0,
       "ingest log must start at generation 0 on a wiped root")
     val baseCellRows = PartitionedSink
-      .withZCell(base, Seq("user_id", "value"), 12, 6)
+      .withZCell(base, LakeZCols, 12, 6)
       .groupBy(col("zcell")).agg(count(lit(1)).as("n")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val baseBoxKeys = base.where(lakeBox).select(col("event_id")).persist()
@@ -1236,10 +1234,8 @@ object Layout {
     * re-materialize through the folding code path. */
   private[graft] def lakeIngestFingerprint(spark: SparkSession, dir: String): String = {
     import graft.sources.PartitionedSink
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
-    val plannedBase = PartitionedSink.withZCell(base, Seq("user_id", "value"), 12, 6)
+    val (_, base, _) = lakeSplit(spark, dir)
+    val plannedBase = PartitionedSink.withZCell(base, LakeZCols, 12, 6)
       .select(col("event_id"), col("user_id"), col("value"), col("zcell"))
     val plannedArrivals = lakeArrivalBatches(spark, dir).zipWithIndex
       .map { case (b, i) => b.withColumn("zcell", lit(-1L - i))
@@ -1288,16 +1284,10 @@ object Layout {
     * against a non-manifest neighbor for real. */
   private[graft] def commitIngestFold(spark: SparkSession, dir: String,
       root: String): Unit = {
-    import graft.sources.PartitionedSink
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
+    val (_, base, _) = lakeSplit(spark, dir)
     val arrivals = lakeArrivalBatches(spark, dir).reduce(_ unionByName _)
-    val folded = base
-      .join(arrivals.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(arrivals)
-    PartitionedSink.writeZCelled(folded, s"$root/fold",
-      Seq("user_id", "value"), 12, 6)
+    graft.sources.PartitionedSink.writeZCelled(newestWins(base, arrivals, arrivals),
+      s"$root/fold", LakeZCols, 12, 6)
     val tip = listGenerations(root).last
     val tipRefs = readGeneration(root, tip)
     require(commitNextGeneration(root,
@@ -1340,13 +1330,7 @@ object Layout {
     val gens = listGenerations(root)
     // ONE distributed job answers every generation; the manifest
     // reference counts are driver metadata the log already holds
-    val counts = boxCountsByGen(spark, root, gens)
-    val manifests = gens.map(g => (g.toLong, filesLive(root, g))).toDF("gen", "files_live")
-    // left join: a generation whose box is empty still reports its row
-    manifests.join(counts, Seq("gen"), "left_outer")
-      .select(col("gen"), col("files_live"),
-        coalesce(col("rows_out"), lit(0L)).as("rows_out"))
-      .orderBy("gen")
+    genReport(root, gens, gens.map(g => (g.toLong, filesLive(root, g))).toDF("gen", "files_live"))
   }
 
   /** SCHEMA EVOLUTION across the lake lifecycle (round 16, VERDICT r15
@@ -1400,7 +1384,7 @@ object Layout {
     * file-count driver frames; the report's three 1-row aggregate
     * columns are the only broadcasts (PlanSpec ceilings). */
   def lakeEvolve(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{FooterManifest, PartitionedSink}
+    import graft.sources.PartitionedSink
     import org.apache.spark.sql.types.StructType
     val zcols = LakeZCols
     val (_, base, arrival) = lakeSplit(spark, dir)
@@ -1438,70 +1422,31 @@ object Layout {
           .as("n_scored"),
         coalesce(sum(col("score")), lit(0.0)).cast("long").as("score_chk"))
     // the three independent eager chains — schema inference, the g1
-    // manifests, the fold manifest — overlap (guide §2.6); pruning and
-    // file totals fold driver-side over the collected manifests
-    // (round 21, guide §5)
-    // the evolved READ schema, inferred by mergeSchema across the
-    // mixed old/new files — what a catalog would record
-    val (dataSchema, (baseMRows, rowsDelta, g1DeltaFiles), mfRows) =
-      Pool.overlap(spark) { o =>
-        val schemaTask = o.async(() => StructType(
-          spark.read.option("mergeSchema", "true").parquet(s"$root/tbl")
-            .schema.filterNot(_.name == "zcell")))
-        // STAGE 1 inputs — g1 is the evolved merge-on-read commit, its
-        // kinds partition base from arrival (round 18)
-        val stage1Task = o.async(() => {
-          val g1 = readGeneration(root, 1)
-          val g1BaseFiles = g1.collect { case ("base", f) => f }
-          val g1Delta = g1.collect { case ("delta", f) => f }
-          val baseRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
-          val rd = FooterManifest
-            .buildFromFiles(spark, g1Delta, Seq("event_id")).collect()
-            .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
-            .distinct.map(_._2).sum
-          (baseRows, rd, g1Delta)
-        })
-        // STAGES 2 & 3 input — the folded generation's footers, which now
-        // cover the evolved column next to the original z columns
-        val foldTask = o.async(() => FooterManifest.buildFromFiles(spark,
-          readGeneration(root, 2).collect { case ("base", f) => f },
-          zcols :+ "score").collect())
-        (schemaTask.await, stage1Task.await, foldTask.await)
-      }
+    // merge-on-read inputs (g1 is the evolved commit, its kinds
+    // partition base from arrival), the fold manifest — overlap (guide
+    // §2.6); the evolved READ schema is inferred by mergeSchema across
+    // the mixed old/new files — what a catalog would record — and the
+    // folded generation's footers cover the evolved column next to the
+    // original z columns
+    val (dataSchema, g1, mfRows) = Pool.overlap(spark) { o =>
+      val schemaTask = o.async(() => StructType(
+        spark.read.option("mergeSchema", "true").parquet(s"$root/tbl")
+          .schema.filterNot(_.name == "zcell")))
+      val g1Task = o.async(() => morInputs(spark, root, 1))
+      val foldTask = o.async(() => baseManifest(spark, root, 2, "score"))
+      (schemaTask.await, g1Task.await, foldTask.await)
+    }
+    val read: Seq[String] => DataFrame =
+      orEmpty(emptyEvolved)(spark.read.schema(dataSchema).parquet(_: _*))
     // STAGE 1 — evolved merge-on-read: prune base files from footers,
     // always read the delta, answer through the union schema
-    val keptBase = FooterManifest.filesToReadLocal(baseMRows.toSeq, LakeNumBox)
-    val keptBaseFiles = keptBase.map(_._1)
-    val deltaDf = spark.read.schema(dataSchema).parquet(g1DeltaFiles: _*)
-    val baseKept = if (keptBaseFiles.isEmpty) emptyEvolved
-      else spark.read.schema(dataSchema).parquet(keptBaseFiles: _*)
-    val merged1 = baseKept
-      .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(deltaDf)
-    val s1 = spark.range(1).select(
-      lit(1L).as("stage"), lit("merge_on_read").as("state"),
-      lit(baseMRows.map(_.getAs[String]("file")).distinct.length.toLong
-        + g1DeltaFiles.size).as("files_total"),
-      lit(keptBaseFiles.size.toLong + g1DeltaFiles.size).as("files_read"),
-      lit(keptBase.map(_._2).sum + rowsDelta).as("rows_scanned"))
-      .crossJoin(broadcast(outAgg(merged1, lakeBox)))
-    val foldFilesTotal = mfRows.map(_.getAs[String]("file")).distinct.length.toLong
-    def foldStage(stage: Long, state: String,
-        box: Map[String, (Double, Double)], filter: Column): DataFrame = {
-      val kept = FooterManifest.filesToReadLocal(mfRows.toSeq, box)
-      val keptFiles = kept.map(_._1)
-      val answered = if (keptFiles.isEmpty) emptyEvolved
-        else spark.read.schema(dataSchema).parquet(keptFiles: _*)
-      spark.range(1).select(
-        lit(stage).as("stage"), lit(state).as("state"),
-        lit(foldFilesTotal).as("files_total"),
-        lit(keptFiles.size.toLong).as("files_read"),
-        lit(kept.map(_._2).sum).as("rows_scanned"))
-        .crossJoin(broadcast(outAgg(answered, filter)))
-    }
-    s1.unionByName(foldStage(2L, "folded", LakeNumBox, lakeBox))
-      .unionByName(foldStage(3L, "score_pruned", scoreBox,
-        col("score").between(1100.0, 1200.0)))
+    val deltaDf = spark.read.schema(dataSchema).parquet(g1.deltaFiles: _*)
+    prunedStage(g1.manifest, LakeNumBox, read, Some(g1.delta(deltaDf)))
+      .stage(1L, "merge_on_read", outAgg(_, lakeBox))
+      .unionByName(prunedStage(mfRows, LakeNumBox, read)
+        .stage(2L, "folded", outAgg(_, lakeBox)))
+      .unionByName(prunedStage(mfRows, scoreBox, read)
+        .stage(3L, "score_pruned", outAgg(_, col("score").between(1100.0, 1200.0))))
       .orderBy("stage")
   }
 
@@ -1551,7 +1496,7 @@ object Layout {
     * manifests are file-count driver frames; the report's 1-row
     * aggregate columns are the only broadcasts. */
   def lakeWiden(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{FooterManifest, PartitionedSink}
+    import graft.sources.PartitionedSink
     val zcols = LakeZCols
     val (_, base, delta) = lakeSplit(spark, dir)
     // the NARROW era: base files persist user_id as INT32 (the cast is
@@ -1579,9 +1524,7 @@ object Layout {
       // via the promotion read — the upgrade moment — and land
       // uniformly-wide cells under re-quantized merged bounds
       val deltaBack = spark.read.schema(LakeSchema).parquet(s"${l.root}/tbl/zcell=-1")
-      val folded = readEvents(spark, g0Files)
-        .join(deltaBack.select(col("event_id")), Seq("event_id"), "left_anti")
-        .unionByName(deltaBack)
+      val folded = newestWins(readEvents(spark, g0Files), deltaBack, deltaBack)
       l.rewrite("fold", "fold", "schema" -> LakeSchema)(
         PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
     }
@@ -1593,58 +1536,23 @@ object Layout {
         coalesce(sum(col("user_id")), lit(0L)).as("uid_chk"))
     // MIXED-WIDTH stages (1 and 3): prune base files from their footers
     // (INT32 stats), always read the delta, answer through the wide
-    // schema's promotion read. File sets resolve FROM THE GENERATION
-    // LOG (round 18): g1 is the mixed-width commit, its kinds partition
-    // the narrow era from the wide arrival
-    // the two independent eager chains — the g1 (mixed-width) manifests
-    // and the folded generation's manifest — overlap (guide §2.6);
-    // pruning and file totals fold driver-side (round 21, guide §5)
-    val ((baseMRows, rowsDelta, g1DeltaFiles), mfRows) = Pool.overlap(spark) { o =>
-      val mixedTask = o.async(() => {
-        val g1 = readGeneration(root, 1)
-        val g1BaseFiles = g1.collect { case ("base", f) => f }
-        val g1Delta = g1.collect { case ("delta", f) => f }
-        val baseRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
-        val rd = FooterManifest
-          .buildFromFiles(spark, g1Delta, Seq("event_id")).collect()
-          .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
-          .distinct.map(_._2).sum
-        (baseRows, rd, g1Delta)
-      })
-      val foldTask = o.async(() => FooterManifest.buildFromFiles(spark,
-        readGeneration(root, 2).collect { case ("base", f) => f }, zcols).collect())
+    // schema's promotion read. g1 is the mixed-width commit, its kinds
+    // partition the narrow era from the wide arrival; its inputs and the
+    // folded generation's manifest are independent eager chains that
+    // overlap (guide §2.6)
+    val (g1, mfRows) = Pool.overlap(spark) { o =>
+      val mixedTask = o.async(() => morInputs(spark, root, 1))
+      val foldTask = o.async(() => baseManifest(spark, root, 2))
       (mixedTask.await, foldTask.await)
     }
-    val baseFilesTotal = baseMRows.map(_.getAs[String]("file")).distinct.length.toLong
-    val deltaDf = spark.read.schema(LakeSchema).parquet(g1DeltaFiles: _*)
-    def mixedStage(stage: Long, state: String,
-        box: Map[String, (Double, Double)], filter: Column): DataFrame = {
-      val kept = FooterManifest.filesToReadLocal(baseMRows.toSeq, box)
-      val keptFiles = kept.map(_._1)
-      val merged = readEvents(spark, keptFiles)
-        .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
-        .unionByName(deltaDf)
-      spark.range(1).select(
-        lit(stage).as("stage"), lit(state).as("state"),
-        lit(baseFilesTotal + g1DeltaFiles.size).as("files_total"),
-        lit(keptFiles.size.toLong + g1DeltaFiles.size).as("files_read"),
-        lit(kept.map(_._2).sum + rowsDelta).as("rows_scanned"))
-        .crossJoin(broadcast(outAgg(merged, filter)))
-    }
-    // STAGE 2 — the uniformly-wide folded generation's footers
-    val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, LakeNumBox)
-    val keptFFiles = keptF.map(_._1)
-    val answeredF = readEvents(spark, keptFFiles)
-    val s2 = spark.range(1).select(
-      lit(2L).as("stage"), lit("folded_wide").as("state"),
-      lit(mfRows.map(_.getAs[String]("file")).distinct.length.toLong).as("files_total"),
-      lit(keptFFiles.size.toLong).as("files_read"),
-      lit(keptF.map(_._2).sum).as("rows_scanned"))
-      .crossJoin(broadcast(outAgg(answeredF, lakeBox)))
-    mixedStage(1L, "merge_on_read", LakeNumBox, lakeBox)
-      .unionByName(s2)
-      .unionByName(mixedStage(3L, "uid_pruned", uidBox,
-        col("user_id").between(3, 9)))
+    val wide = Some(g1.delta(readEvents(spark, g1.deltaFiles)))
+    prunedStage(g1.manifest, LakeNumBox, readEvents(spark, _), wide)
+      .stage(1L, "merge_on_read", outAgg(_, lakeBox))
+      // STAGE 2 — the uniformly-wide folded generation's footers
+      .unionByName(prunedStage(mfRows, LakeNumBox, readEvents(spark, _))
+        .stage(2L, "folded_wide", outAgg(_, lakeBox)))
+      .unionByName(prunedStage(g1.manifest, uidBox, readEvents(spark, _), wide)
+        .stage(3L, "uid_pruned", outAgg(_, col("user_id").between(3, 9))))
       .orderBy("stage")
   }
 
@@ -1712,24 +1620,24 @@ object Layout {
       l.arrive("delete", "cdelta", "delta", delta)
       // the fold: ALL delta keys supersede their base versions; only
       // the upserts re-enter — tombstoned rows are physically gone
-      val folded = base
-        .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-        .unionByName(arrival)
+      val folded = newestWins(base, delta, arrival)
       l.rewrite("fold", "fold")(PartitionedSink.writeZCelled(folded, _, LakeZCols, 12, 6))
     }
   }
 
   def lakeDelete(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.FooterManifest
     val root = ensureDeleteLog(spark, dir)
-    val zcols = Seq("user_id", "value")
     // file sets resolve FROM THE GENERATION LOG (round 18): g1 carries
-    // the base refs + the CRUD arrival (kind cdelta), g2 the fold
-    val g1 = readGeneration(root, 1)
-    val g1BaseFiles = g1.collect { case ("base", f) => f }
-    val cdeltaFiles = g1.collect { case ("cdelta", f) => f }
+    // the base refs + the CRUD arrival (kind cdelta), g2 the fold; the
+    // two independent eager chains — g1's merge-on-read inputs and the
+    // folded generation's manifest — overlap (guide §2.6)
+    val (g1, mfRows) = Pool.overlap(spark) { o =>
+      val s1Task = o.async(() => morInputs(spark, root, 1, "cdelta"))
+      val s2Task = o.async(() => baseManifest(spark, root, 2))
+      (s1Task.await, s2Task.await)
+    }
     val foldFiles = readGeneration(root, 2).collect { case ("base", f) => f }
-    val deltaDf = spark.read.schema(s"$LakeSchema, op STRING").parquet(cdeltaFiles: _*)
+    val deltaDf = spark.read.schema(s"$LakeSchema, op STRING").parquet(g1.deltaFiles: _*)
     // the erasure accounting, from the persisted lineage, in ONE
     // DEFERRED aggregate (round 18, VERDICT r17 wrong #2 — was three
     // eager driver actions plus two rebuilt tombstone frames): the
@@ -1740,7 +1648,7 @@ object Layout {
     // zero) is the compliance observable; distinct counts are sound
     // because an erasure request carries each key once.
     val tombKeys = deltaDf.where(col("op") === "D").select(col("event_id"))
-    val probes = readEvents(spark, g1BaseFiles)
+    val probes = readEvents(spark, g1.baseFiles)
       .select(col("event_id"), lit("base").as("src"))
       .unionByName(readEvents(spark, foldFiles)
         .select(col("event_id"), lit("fold").as("src")))
@@ -1749,48 +1657,14 @@ object Layout {
         count_distinct(when(col("src") === "base", col("event_id"))).as("n_erased"),
         count_distinct(when(col("src") === "fold", col("event_id")))
           .as("erased_remaining"))
-    // the two independent eager chains — g1's manifests and the folded
-    // generation's manifest — overlap (guide §2.6); pruning and file
-    // totals fold driver-side (round 21, guide §5)
-    val ((mRows, rowsDelta), mfRows) = Pool.overlap(spark) { o =>
-      val s1Task = o.async(() => {
-        val mRows = FooterManifest.buildFromFiles(spark, g1BaseFiles, zcols).collect()
-        val rd = FooterManifest
-          .buildFromFiles(spark, cdeltaFiles, Seq("event_id")).collect()
-          .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
-          .distinct.map(_._2).sum
-        (mRows, rd)
-      })
-      val s2Task = o.async(() =>
-        FooterManifest.buildFromFiles(spark, foldFiles, zcols).collect())
-      (s1Task.await, s2Task.await)
-    }
-    // STAGE 1 — merge-on-read with tombstones over pruned base footers
-    val kept = FooterManifest.filesToReadLocal(mRows.toSeq, LakeNumBox)
-    val keptFiles = kept.map(_._1)
-    val merged1 = readEvents(spark, keptFiles)
-      .join(deltaDf.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(deltaDf.where(col("op") === "U").drop("op"))
-    val boxCount1 = merged1.where(lakeBox).agg(count(lit(1)).as("rows_out"))
-    val s1 = spark.range(1).select(
-      lit(1L).as("stage"), lit("merge_on_read").as("state"),
-      lit(mRows.map(_.getAs[String]("file")).distinct.length.toLong
-        + cdeltaFiles.size).as("files_total"),
-      lit(keptFiles.size.toLong + cdeltaFiles.size).as("files_read"),
-      lit(kept.map(_._2).sum + rowsDelta).as("rows_scanned"))
-      .crossJoin(broadcast(boxCount1))
-    // STAGE 2 — the folded (physically erased) generation's footers
-    val keptF = FooterManifest.filesToReadLocal(mfRows.toSeq, LakeNumBox)
-    val keptFFiles = keptF.map(_._1)
-    val boxCount2 = readEvents(spark, keptFFiles)
-      .where(lakeBox).agg(count(lit(1)).as("rows_out"))
-    val s2 = spark.range(1).select(
-      lit(2L).as("stage"), lit("folded_erased").as("state"),
-      lit(mfRows.map(_.getAs[String]("file")).distinct.length.toLong).as("files_total"),
-      lit(keptFFiles.size.toLong).as("files_read"),
-      lit(keptF.map(_._2).sum).as("rows_scanned"))
-      .crossJoin(broadcast(boxCount2))
-    s1.unionByName(s2)
+    // STAGE 1 — merge-on-read with tombstones over pruned base footers:
+    // every delta key supersedes its base version, only the upserts
+    // re-enter; STAGE 2 — the folded (physically erased) generation
+    prunedStage(g1.manifest, LakeNumBox, readEvents(spark, _),
+        Some(g1.delta(deltaDf, _.where(col("op") === "U").drop("op"))))
+      .stage(1L, "merge_on_read", countIn(lakeBox))
+      .unionByName(prunedStage(mfRows, LakeNumBox, readEvents(spark, _))
+        .stage(2L, "folded_erased", countIn(lakeBox)))
       .crossJoin(broadcast(erasureAcc))
       .orderBy("stage")
   }
@@ -2031,9 +1905,7 @@ object Layout {
     import graft.sources.{FooterManifest, PartitionedSink}
     val zcols = LakeZCols
     val (_, base, delta) = lakeSplit(spark, dir)
-    val folded = base
-      .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(delta)
+    val folded = newestWins(base, delta, delta)
     // v6: consumer staleness bound + oracle-gated log cleanup (round 20)
     // — a stale v5 root lacks the second cursor and the expired-log
     // window and must re-materialize through the new shape. The three
@@ -2842,7 +2714,7 @@ object Layout {
     val d = readOr(files("delta"))
     val cdFiles = files("cdelta")
     if (cdFiles.isEmpty)
-      b.join(d.select(col("event_id")), Seq("event_id"), "left_anti").unionByName(d)
+      newestWins(b, d, d)
     else {
       val cd = spark.read.schema(s"$schema, op STRING").parquet(cdFiles: _*)
       // precedence base < delta < cdelta (round 20): a CRUD arrival's
@@ -2878,6 +2750,21 @@ object Layout {
         .where(lakeBox).select(lit(g.toLong).as("gen")))
       .reduce(_ unionByName _)
       .groupBy(col("gen")).agg(count(lit(1)).as("rows_out"))
+
+  /** THE per-generation report: `frame` (one row per answered
+    * generation, keyed by `gen`) left-joined to [[boxCountsByGen]] over
+    * `gens` — a generation whose box is empty still reports its row,
+    * `rows_out` 0 — with each 1-row `acc` broadcast across. Columns:
+    * `frame`'s, the accs', then rows_out; ordered by `orderCol`. */
+  private def genReport(root: String, gens: Seq[Int], frame: DataFrame,
+      orderCol: String = "gen", accs: Seq[DataFrame] = Nil): DataFrame = {
+    val counts = boxCountsByGen(frame.sparkSession, root, gens)
+    accs.foldLeft(frame.join(counts, Seq("gen"), "left_outer"))(
+        (df, acc) => df.crossJoin(broadcast(acc)))
+      .select((frame.columns ++ accs.flatMap(_.columns)).map(col).toSeq
+        :+ coalesce(col("rows_out"), lit(0L)).as("rows_out"): _*)
+      .orderBy(orderCol)
+  }
 
   /** The data files generation `g` of `root` references (driver
     * metadata, no job). */
@@ -3217,17 +3104,9 @@ object Layout {
           && !(col("value") < col("__tv") - 100.0), 1L).otherwise(0L)), lit(0L))
           .as("n_matched_noop"))
     val gens = listGenerations(root)
-    val counts = boxCountsByGen(spark, root, gens)
     val states = Map(0 -> "pre_merge", 1 -> "merged")
-    val manifests = gens.map(g => (g.toLong, states.getOrElse(g, s"g$g"), filesLive(root, g)))
-      .toDF("gen", "state", "files_live")
-    manifests.join(counts, Seq("gen"), "left_outer")
-      .crossJoin(broadcast(acc))
-      .select(col("gen"), col("state"), col("files_live"), col("n_source"),
-        col("n_inserted"), col("n_updated"), col("n_deleted"),
-        col("n_matched_noop"),
-        coalesce(col("rows_out"), lit(0L)).as("rows_out"))
-      .orderBy("gen")
+    genReport(root, gens, gens.map(g => (g.toLong, states.getOrElse(g, s"g$g"), filesLive(root, g)))
+      .toDF("gen", "state", "files_live"), accs = Seq(acc))
   }
 
   /** The cursor feed over the MERGE lineage's log — the CDF half of the
@@ -3296,18 +3175,9 @@ object Layout {
         coalesce(sum(when(!(col("value") < 50.0), 1L).otherwise(0L)), lit(0L))
           .as("n_kept_unmatched"))
     val gens = listGenerations(root)
-    val counts = boxCountsByGen(spark, root, gens)
     val states = Map(0 -> "pre_sync", 1 -> "synced")
-    val manifests = gens.map(g => (g.toLong, states.getOrElse(g, s"g$g"), filesLive(root, g)))
-      .toDF("gen", "state", "files_live")
-    manifests.join(counts, Seq("gen"), "left_outer")
-      .crossJoin(broadcast(srcAcc))
-      .crossJoin(broadcast(tgtAcc))
-      .select(col("gen"), col("state"), col("files_live"), col("n_source"),
-        col("n_inserted"), col("n_updated"), col("n_deleted_by_source"),
-        col("n_kept_unmatched"),
-        coalesce(col("rows_out"), lit(0L)).as("rows_out"))
-      .orderBy("gen")
+    genReport(root, gens, gens.map(g => (g.toLong, states.getOrElse(g, s"g$g"), filesLive(root, g)))
+      .toDF("gen", "state", "files_live"), accs = Seq(srcAcc, tgtAcc))
   }
 
   /** The cursor feed over the FULL-SYNC lineage — the BY-SOURCE
@@ -3372,9 +3242,7 @@ object Layout {
   private def ensureTimetravelLog(spark: SparkSession, dir: String): String = {
     import graft.sources.PartitionedSink
     val (_, base, delta) = lakeSplit(spark, dir)
-    val folded = base
-      .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
-      .unionByName(delta)
+    val folded = newestWins(base, delta, delta)
     // g0 — the pre-fold state (base cells + the arrival delta), g1 — the
     // fold (a reader of g0's files), g2 — compaction (a reader of g1's);
     // v3: deterministic commit instants (round 20) — a stale v2 root
@@ -3435,16 +3303,11 @@ object Layout {
       else FooterManifest.buildFromFiles(spark, distinctFiles, Seq("event_id"))
         .select(col("file"), col("n_rows")).distinct().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val counts = boxCountsByGen(spark, root, gens)
-    val manifests = gens.map { g =>
+    genReport(root, gens, gens.map { g =>
       val files = filesByGen(g)
       (g.toLong, states.getOrElse(g, s"g$g"), files.size.toLong,
         files.map(rowsByFile.getOrElse(_, 0L)).sum)
-    }.toDF("gen", "state", "files_live", "rows_referenced")
-    manifests.join(counts, Seq("gen"), "left_outer")
-      .select(col("gen"), col("state"), col("files_live"),
-        col("rows_referenced"), coalesce(col("rows_out"), lit(0L)).as("rows_out"))
-      .orderBy("gen")
+    }.toDF("gen", "state", "files_live", "rows_referenced"))
   }
 
   /** TIMESTAMP AS OF over the timetravel lineage (round 20): five
@@ -3473,14 +3336,9 @@ object Layout {
     val resolved = probes.map { case (p, ts) => (p, resolveTimestampAsOf(root, ts)) }
     // one tagged-replay hash-agg answers every DISTINCT resolved
     // generation's box (probes sharing a generation share the job)
-    val distinctGens = resolved.map(_._2).distinct
-    val counts = boxCountsByGen(spark, root, distinctGens)
-    val rows = resolved.map { case (p, g) => (p, g.toLong, filesLive(root, g)) }
-      .toDF("probe", "gen", "files_live")
-    rows.join(counts, Seq("gen"), "left_outer")
-      .select(col("probe"), col("gen"), col("files_live"),
-        coalesce(col("rows_out"), lit(0L)).as("rows_out"))
-      .orderBy("probe")
+    genReport(root, resolved.map(_._2).distinct,
+      resolved.map { case (p, g) => (p, g.toLong, filesLive(root, g)) }
+        .toDF("probe", "gen", "files_live"), orderCol = "probe")
   }
 
   /** CHANGE DATA FEED over the generation log (round 17, beyond-plan —
@@ -3920,15 +3778,10 @@ object Layout {
     }
     val writers = Map(0 -> ("seed", 0L), 1 -> ("A", 0L), 2 -> ("B", 1L))
     val gens = listGenerations(root)
-    val counts = boxCountsByGen(spark, root, gens)
-    val manifests = gens.map { g =>
+    genReport(root, gens, gens.map { g =>
       val (w, c) = writers(g)
       (g.toLong, w, c, filesLive(root, g))
-    }.toDF("gen", "writer", "conflicts", "files_live")
-    manifests.join(counts, Seq("gen"), "left_outer")
-      .select(col("gen"), col("writer"), col("conflicts"), col("files_live"),
-        coalesce(col("rows_out"), lit(0L)).as("rows_out"))
-      .orderBy("gen")
+    }.toDF("gen", "writer", "conflicts", "files_live"))
   }
 
   /** Compaction plan over the [[zorderLayout]] manifest: greedy running-sum

@@ -54,6 +54,27 @@ class RegistryGuardSpec extends AnyFunSuite {
       "the standard box predicate is pasted outside the box generator")
   }
 
+  test("Layout's Spark reports count a pruned read once and Dedup's oracles shingle once") {
+    // a pasted counting block drifts like a pasted SQL fragment: the
+    // Spark-side lake reports build their rows from the one pruned-stage
+    // primitive and the one per-generation report, and Dedup's oracles
+    // take their trigram shingles from one fragment
+    def read(f: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"src/main/scala/graft/ext/$f"))
+    def occurrences(text: String, s: String) =
+      java.util.regex.Pattern.quote(s).r.findAllMatchIn(text).size
+    val layout = read("Layout.scala")
+    val oracleStart = layout.indexOf("val queries")
+    assert(oracleStart > 0, "Layout.scala no longer declares `val queries`")
+    val sparkSide = layout.substring(0, oracleStart)
+    assert(occurrences(sparkSide, ".as(\"files_total\")") <= 2,
+      "a pruned-read report row is built outside the pruned-stage primitive")
+    assert(occurrences(sparkSide, "join(counts, Seq(\"gen\")") <= 1,
+      "a per-generation report is joined outside the per-generation report helper")
+    assert(occurrences(read("Dedup.scala"), "generate_series(1, len(w) - 2)") <= 1,
+      "the trigram-shingle CTE is pasted outside Dedup's shingle fragment")
+  }
+
   test("every oracle key is a registered query (no orphan oracles)") {
     val orphans = SparkEntry.oracleSql.keySet.filterNot(SparkEntry.queries.contains)
     assert(orphans.isEmpty,
