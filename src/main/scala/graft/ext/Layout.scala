@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.exec.{Cut, Pool}
+import graft.exec.{Cut, Pool, Scratch}
 
 /** Z-order (Morton-curve) data layout planning — multi-dimensional file
   * skipping for an event lake.
@@ -119,91 +119,6 @@ object Layout {
     d
   }
 
-  /** Order-free content fingerprint of a planned-layout frame: row-hash
-    * sum + count under a version tag. Shared by the idempotent
-    * materialization guards of [[zorderPrune]] and [[footerPrune]]. */
-  private def layoutFingerprint(tag: String, planned: DataFrame): String = {
-    val cols = planned.columns.map(col).toSeq
-    val r = planned.agg(count(lit(1)),
-      coalesce(sum(hash(cols: _*).cast("long")), lit(0L))).head()
-    s"$tag:${r.getLong(0)}:${r.getLong(1)}"
-  }
-
-  /** Scratch directory for a materialized layout: keyed by the FULL md5
-    * of the data-dir string (hashCode alone let two dirs collide on 32
-    * bits) plus the user name (a world-shared /tmp path caused
-    * permission clashes between users on a shared host). */
-  private[graft] def scratchDir(kind: String, dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val user = sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9_-]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_${kind}_${user}_$digest"
-  }
-
-  /** Run `write` only when `fingerprint` differs from the marker the
-    * last successful write left in `out` — then refresh the marker. The
-    * marker is written AFTER the (dir-truncating) write, so it is the
-    * commit point: a crash mid-write leaves no marker and the next
-    * invocation rewrites. Guarded by an OS file lock on `<out>.lock`
-    * (NEXT TO the dir — the overwrite deletes everything inside it), so
-    * two JVMs sharing the scratch path (a bench run racing `sbt test`
-    * on the same fixture) serialize instead of one reading a
-    * half-written layout; the JVM-level monitor covers same-process
-    * reentry, where a second FileChannel.lock would throw
-    * OverlappingFileLockException instead of blocking.
-    *
-    * `markerName` lets the streaming replays
-    * ([[graft.streaming.IngestReplay]], [[graft.streaming.StreamJoin]])
-    * run their wipe-and-replay blocks under the SAME check/write/commit
-    * protocol and lock — before round 14 they re-implemented the marker
-    * check without the lock, so two JVMs could both see a stale marker,
-    * both wipe, and interleave replay writes into one scratch dir.
-    *
-    * The in-process monitor is PER PATH (a striped lock map), not a
-    * global object monitor: multi-minute write blocks now run under
-    * this guard (streaming replays, the classifier training loop), and
-    * a single global monitor would stall every unrelated
-    * materialization in the JVM behind them — the per-path OS lock
-    * wouldn't block a different scratch dir, but the monitor would. */
-  private val pathMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Monitor key for `out`: the CANONICAL path, so two spellings of the
-    * same scratch dir ("/tmp/x" vs "/tmp/./x", trailing slash) take the
-    * SAME in-process monitor — with the raw string they would take
-    * different monitors and then collide on the shared OS lock as an
-    * OverlappingFileLockException instead of blocking (ADVICE r14).
-    * Growth bound: `pathMonitors` lives for the JVM and is keyed by
-    * scratch path — bounded by (fixture data dirs × layout kinds), a
-    * few dozen entries. Do NOT route per-invocation unique paths
-    * through here; that would leak one monitor Object per call. */
-  private def monitorFor(out: String): Object = {
-    val key = try new java.io.File(out).getCanonicalPath
-      catch { case _: java.io.IOException => out }
-    pathMonitors.computeIfAbsent(key, _ => new Object)
-  }
-
-  private[graft] def materializeIfChanged(out: String, fingerprint: String,
-      markerName: String = "_graft_layout_fingerprint")(write: => Unit): Unit =
-    monitorFor(out).synchronized {
-      val lockPath = java.nio.file.Paths.get(s"$out.lock")
-      val ch = java.nio.channels.FileChannel.open(lockPath,
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try {
-          val marker = new java.io.File(s"$out/$markerName")
-          val current = if (marker.isFile)
-            new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-          if (current != fingerprint) {
-            write
-            java.nio.file.Files.createDirectories(marker.toPath.getParent)
-            java.nio.file.Files.write(marker.toPath, fingerprint.getBytes("UTF-8"))
-          }
-        } finally lock.release()
-      } finally ch.close()
-    }
-
   private def withFiles(spark: SparkSession, dir: String): DataFrame =
     bucketed(spark, dir)
       .withColumn("zv", morton5(col("db"), col("ub")))
@@ -242,12 +157,12 @@ object Layout {
     * already-clustered layout is not rewritten). */
   private def ensureZorderMaterialized(spark: SparkSession, dir: String,
       plannedPre: Option[DataFrame] = None): String = {
-    val out = scratchDir("zorder_prune", dir)
+    val out = Scratch.root("zorder_prune", dir)
     // callers that already hold a persisted planned frame pass it in so
     // the per-invocation fingerprint agg rides their cache
     val planned = plannedPre.getOrElse(withFiles(spark, dir))
       .select(col("db"), col("ub"), col("file_id"))
-    materializeIfChanged(out, layoutFingerprint("v1", planned)) {
+    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1", planned)) {
       // one physical file per planned file_id: hash-repartition on the
       // id puts each id wholly in one task, partitionBy splits ids to
       // dirs
@@ -357,7 +272,7 @@ object Layout {
     * misses the fingerprint just like a data change would. */
   private def ensureZCelled(df: DataFrame, out: String, cellBits: Int): Unit = {
     import graft.sources.PartitionedSink
-    materializeIfChanged(out, layoutFingerprint("v1",
+    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1",
       PartitionedSink.withZCell(df, LakeZCols, 12, cellBits)
         .select(df.columns.map(col) :+ col("zcell"): _*))) {
       PartitionedSink.writeZCelled(df, out, LakeZCols, bits = 12, cellBits = cellBits)
@@ -392,7 +307,7 @@ object Layout {
     * not pinned constants. The kept-file list collected to the driver
     * is bounded by 2^cellBits (=16), never by data. */
   def footerPrune(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir("footer_prune", dir)
+    val out = Scratch.root("footer_prune", dir)
     ensureZCelled(Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("value")), out, cellBits = 4)
     zcelledBoxReport(spark, out)
@@ -420,13 +335,13 @@ object Layout {
     * columns so both get footer stats — and return its directory.
     * Shared by [[footerPruneStr]] and [[footerPruneMixed]]. */
   private def ensureStrLayoutMaterialized(spark: SparkSession, dir: String): String = {
-    val out = scratchDir("footer_prune_str", dir)
+    val out = Scratch.root("footer_prune_str", dir)
     val slice = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("n_chars"))
     val planned = slice
       .withColumn("src_part", col("source"))
       .withColumn("lb", expr("n_chars div 128"))
-    materializeIfChanged(out, layoutFingerprint("v1",
+    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1",
       planned.select(col("doc_id"), col("source"), col("n_chars"), col("lb")))) {
       // each (src_part, lb) group lands wholly in one task, and
       // partitionBy splits directories per key → exactly one file per
@@ -613,11 +528,11 @@ object Layout {
     * returned frame is literals + the lazy merged count. */
   def deltaRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.FooterManifest
-    val outBase = scratchDir("delta_base", dir)
-    val outDelta = scratchDir("delta_arrivals", dir)
+    val outBase = Scratch.root("delta_base", dir)
+    val outDelta = Scratch.root("delta_arrivals", dir)
     val (_, base, delta) = lakeSplit(spark, dir)
     ensureZCelled(base, outBase, cellBits = 6)
-    materializeIfChanged(outDelta, layoutFingerprint("v1",
+    Scratch.materializeIfChanged(outDelta, Scratch.fingerprint("v1",
       delta.select(col("event_id"), col("user_id"), col("value")))) {
       // the delta is deliberately ONE unsorted file — the state an
       // operator is in between arrivals and the next re-cluster
@@ -663,7 +578,7 @@ object Layout {
     * write sized by the MERGED table — the fold is the amortized cost
     * zorderIncr's rewrite-amplification number exists to schedule. */
   def deltaFold(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir("delta_fold", dir)
+    val out = Scratch.root("delta_fold", dir)
     val (_, base, delta) = lakeSplit(spark, dir)
     // newestWins puts NO broadcast hint on the delta keys (round 15,
     // VERDICT r14 #1): a fold runs precisely when the delta has grown
@@ -815,12 +730,12 @@ object Layout {
   }
 
   /** THE seed/wipe/commit scaffold of every lake lineage: idempotently
-    * materialize the lineage rooted at `scratchDir(kind, dir)` and
+    * materialize the lineage rooted at `Scratch.root(kind, dir)` and
     * return that root. `base`, every arrival and `persisted` are cached
     * for the build and released in a `finally`, whatever happens. The
-    * fingerprint is [[layoutFingerprint]] under `tag` over
+    * fingerprint is [[Scratch.fingerprint]] under `tag` over
     * [[plannedLineage]] (or the caller's precomputed one); on a marker
-    * hit nothing else runs. Otherwise the root is wiped once (the log
+    * hit nothing else runs. Otherwise the guard wipes the root (the log
     * restarts at g0 with the data), `base` is written z-celled under
     * `baseDir`, g0 commits as `seed` with its files plus whatever `seed`
     * stages (an initial delta, a schema entry), and `steps` drives the
@@ -832,15 +747,13 @@ object Layout {
       persisted: Seq[DataFrame] = Nil, fingerprint: Option[String] = None,
       baseDir: String = "base", seed: LakeLineage => Seq[(String, String)] = _ => Nil)(
       steps: LakeLineage => Unit): String = {
-    val root = scratchDir(kind, dir)
+    val root = Scratch.root(kind, dir)
     val cached = (base +: arrivals) ++ persisted
     cached.foreach(_.persist())
     try {
-      materializeIfChanged(root, fingerprint.getOrElse(
-          layoutFingerprint(tag, plannedLineage(base, arrivals)))) {
+      Scratch.materializeIfChanged(root, fingerprint.getOrElse(
+          Scratch.fingerprint(tag, plannedLineage(base, arrivals)))) {
         val l = new LakeLineage(spark, root)
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        if (l.fs.exists(rootPath)) l.fs.delete(rootPath, true)
         graft.sources.PartitionedSink.writeZCelled(base, s"$root/$baseDir", LakeZCols, 12, 6)
         l.commit("seed", l.refs("base", baseDir) ++ seed(l))
         steps(l)
@@ -948,23 +861,22 @@ object Layout {
     // else): the fingerprint frame grouped by zcell keeps per-cell row
     // counts and per-cell row-hash sums; the global fingerprint
     // (count, hash-sum) is their driver-side fold — count and sum are
-    // associative, so the string is BIT-IDENTICAL to layoutFingerprint's
+    // associative, so the string is BIT-IDENTICAL to Scratch.fingerprint's
     // global agg (no re-materialization on upgrade) — the zcell=−1
     // group IS the delta count, and the zcell≥0 groups ARE the base
     // cell rows the DECIDE join previously re-aggregated in a second
     // corpus-scale job. Group count is bounded by 2^cellBits + 1.
     val fpFrame = plannedLineage(base, Seq(delta))
-    val fpCols = fpFrame.columns.map(col).toSeq
+    val (nAgg, hAgg) = Scratch.aggregates(fpFrame.columns.map(col).toSeq)
     val cellHist = fpFrame.groupBy(col("zcell"))
-      .agg(count(lit(1)).as("__n"),
-        coalesce(sum(hash(fpCols: _*).cast("long")), lit(0L)).as("__h"))
+      .agg(nAgg.as("__n"), hAgg.as("__h"))
       .collect()
     // v3: every commit carries its operation name (round 19, VERDICT
     // r18 missing #2 — DESCRIBE HISTORY answers over any lineage); the
     // bump forces stale un-stamped logs through the stamping path
     val tag = "v3:q4"
-    val fingerprint = s"$tag:${cellHist.map(_.getLong(1)).sum}:" +
-      s"${cellHist.map(_.getLong(2)).sum}"
+    val fingerprint = Scratch.fingerprintOf(tag, cellHist.map(_.getLong(1)).sum,
+      cellHist.map(_.getLong(2)).sum)
     val root = lakeLineage(spark, dir, "lake_e2e", tag, base, Seq(delta), Seq(folded),
         Some(fingerprint), seed = _.land(delta, "delta", "delta")) { l =>
       l.rewrite("fold", "fold")(PartitionedSink.writeZCelled(folded, _, zcols, 12, 6))
@@ -1241,16 +1153,13 @@ object Layout {
       .map { case (b, i) => b.withColumn("zcell", lit(-1L - i))
         .select(col("event_id"), col("user_id"), col("value"), col("zcell")) }
       .reduce(_ unionByName _)
-    layoutFingerprint("v6", plannedBase.unionByName(plannedArrivals))
+    Scratch.fingerprint("v6", plannedBase.unionByName(plannedArrivals))
   }
 
   def lakeIngest(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchDir("lake_ingest", dir)
+    val root = Scratch.root("lake_ingest", dir)
     val bs = lakeArrivalBatches(spark, dir)
-    materializeIfChanged(root, lakeIngestFingerprint(spark, dir)) {
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    Scratch.materializeIfChanged(root, lakeIngestFingerprint(spark, dir)) {
       val ctx = prepareLakeIngest(spark, dir, root)
       try {
         var running = ctx.boxInit
@@ -1326,7 +1235,7 @@ object Layout {
   def lakeIngestAsof(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     lakeIngest(spark, dir) // idempotently materialize the lineage + log
-    val root = scratchDir("lake_ingest", dir)
+    val root = Scratch.root("lake_ingest", dir)
     val gens = listGenerations(root)
     // ONE distributed job answers every generation; the manifest
     // reference counts are driver metadata the log already holds
@@ -3638,7 +3547,7 @@ object Layout {
     * inserts + both update images) from the events table alone. */
   def lakeChangesCursor(spark: SparkSession, dir: String): DataFrame = {
     lakeIngest(spark, dir) // idempotently materialize the lineage + log
-    lakeChangesSince(spark, scratchDir("lake_ingest", dir), cursor = 0)
+    lakeChangesSince(spark, Scratch.root("lake_ingest", dir), cursor = 0)
   }
 
   /** The cursor feed over the RESTORE lineage's log ([[ensureChangesLog]]
@@ -3696,7 +3605,7 @@ object Layout {
       lakeIngest(spark, dir) // idempotently materialize the lineages
       (deleteTask.await, mergeTask.await)
     }
-    (historyRows(scratchDir("lake_ingest", dir), "lake_ingest") ++
+    (historyRows(Scratch.root("lake_ingest", dir), "lake_ingest") ++
       historyRows(deleteRoot, "lake_delete") ++
       historyRows(mergeRoot, "lake_merge"))
       .toDF("lineage", "gen", "op", "n_base_refs", "n_delta_refs",
@@ -3852,11 +3761,11 @@ object Layout {
       .select(col("file_id"), col("group_id"))
     val assign = spark.createDataFrame(
       java.util.Arrays.asList(assignDist.collect(): _*), assignDist.schema)
-    val out = scratchDir("compaction_exec", dir)
+    val out = Scratch.root("compaction_exec", dir)
     val plannedRows = z.select(col("db"), col("ub"), col("file_id"))
       .join(broadcast(assign), Seq("file_id"))
       .select(col("db"), col("ub"), col("group_id"))
-    materializeIfChanged(out, layoutFingerprint("v1", plannedRows)) {
+    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1", plannedRows)) {
       // explicit schema: types the file_id partition column LONG to
       // match the assignment's key (inference would make it INT), and
       // keeps an EMPTY base (zero-row source → no part files, only
@@ -3936,9 +3845,9 @@ object Layout {
     * READ), so DuckDB replays the share cut + join + agg with no
     * knowledge of the partitioning. */
   def dppRead(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir("dpp_read", dir)
+    val out = Scratch.root("dpp_read", dir)
     val docs = Tables.documents(spark, dir)
-    materializeIfChanged(out, layoutFingerprint("v1",
+    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1",
       docs.select(col("doc_id"), col("source"), col("lang"), col("n_chars")))) {
       docs.withColumn("src_part", col("source"))
         .repartition(col("src_part"))

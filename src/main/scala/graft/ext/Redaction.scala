@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.exec.Scratch
 import graft.ops.StableStats
 
 /** PII scrubbing — the redaction pass every production training-data
@@ -253,7 +254,7 @@ object Redaction {
     * [[graft.ops.Incremental]]-family story applied to the privacy
     * audit: the 90% split's class table is MATERIALIZED once per corpus
     * (QI-domain-bounded — a few hundred rows regardless of SF, under
-    * the [[graft.ext.Layout.materializeIfChanged]] fingerprint+lock
+    * the [[graft.exec.Scratch.materializeIfChanged]] fingerprint+lock
     * discipline), and when the 10% shard arrives the audit updates by
     * scanning ONLY the shard: delta classes aggregate from the shard,
     * union-merge into the stored table (class counts are additive),
@@ -274,12 +275,10 @@ object Redaction {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     val base = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
     val delta = docs.where(pmod(col("doc_id"), lit(10)) === 0)
-    val store = graft.ext.Layout.scratchDir("kanon_classes", dir)
+    val store = Scratch.root("kanon_classes", dir)
     val baseCls = classesOf(base)
-    graft.ext.Layout.materializeIfChanged(store,
-      "v1:" + base.agg(count(lit(1)),
-        coalesce(sum(hash(col("lang"), col("source"), col("n_chars")).cast("long")),
-          lit(0L))).head().toSeq.mkString(":")) {
+    Scratch.materializeIfChanged(store, Scratch.fingerprint("v1",
+        base.select(col("lang"), col("source"), col("n_chars")))) {
       baseCls.write.mode("overwrite").parquet(store)
     }
     val stored = spark.read.schema(

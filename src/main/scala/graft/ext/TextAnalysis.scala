@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.exec.Scratch
 
 /** Text-analysis operators for a training-data pipeline over `documents`
   * (BASELINE.json extension mandate): token counting, quality scoring,
@@ -710,18 +711,16 @@ object TextAnalysis {
     * model-as-data deployment [[classifierTrain]]'s doc promises —
     * round 14): (slot, w) rows for all [[ClassifierBuckets]] slots,
     * written once per corpus under the scratch-dir + fingerprint + OS
-    * lock discipline of [[graft.ext.Layout]]. The fingerprint covers
+    * lock discipline of [[graft.exec.Scratch]]. The fingerprint covers
     * the corpus content AND the training hyper-constants, so a data or
     * recipe change retrains; an unchanged corpus reuses the stored
     * model with ZERO training scans — the "train once, apply across
     * queries/sessions" contract. Returns the weight-table path. */
   private[ext] def ensureModelMaterialized(spark: SparkSession, dir: String): String = {
-    val out = graft.ext.Layout.scratchDir("classifier_model", dir)
-    val fr = Tables.documents(spark, dir).agg(count(lit(1)),
-      coalesce(sum(hash(col("doc_id"), col("lang"), col("text")).cast("long")), lit(0L)))
-      .head()
-    val fp = s"v1:$TrainSteps:$TrainStepMillis:${fr.getLong(0)}:${fr.getLong(1)}"
-    graft.ext.Layout.materializeIfChanged(out, fp, "_model_fingerprint") {
+    val out = Scratch.root("classifier_model", dir)
+    val fp = Scratch.fingerprint(s"v1:$TrainSteps:$TrainStepMillis",
+      Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")))
+    Scratch.materializeIfChanged(out, fp) {
       val (w, _) = trainLoop(spark, dir)
       import spark.implicits._
       w.zipWithIndex.map { case (wt, slot) => (slot.toLong, wt) }.toSeq

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Scratch
+
 /** Bucketed-table layout for shuffle-free co-located joins.
   *
   * The one manual layout decision Catalyst cannot make for you: two fact
@@ -65,7 +67,7 @@ object BucketedTables {
 
   /** Short content tag of a data dir for catalog table names (two dirs
     * must not collide on one table name — the scratch-dir discipline of
-    * [[graft.ext.Layout.scratchDir]], applied to the catalog). */
+    * [[graft.exec.Scratch.root]], applied to the catalog). */
   private def dirTag(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
@@ -73,7 +75,7 @@ object BucketedTables {
   /** Idempotently materialize `df` as an EXTERNAL bucketed table at a
     * fingerprint-guarded scratch location, and make sure the catalog
     * knows it: the parquet bucket files survive across JVMs (the
-    * [[graft.ext.Layout.materializeIfChanged]] marker protocol), but
+    * [[graft.exec.Scratch.materializeIfChanged]] marker protocol), but
     * the in-memory catalog does not — a fresh session re-registers the
     * existing files with `CREATE TABLE … CLUSTERED BY … LOCATION`
     * (bucket ids ride the file names, so the re-created table keeps
@@ -91,8 +93,8 @@ object BucketedTables {
     // the re-registration below would declare the new key over files
     // bucketed by the old one (round-15 review; the footerPrune
     // formula-coverage discipline applied to the bucket spec)
-    val fp = s"v1:$buckets:$key:$nRows:$hashSum"
-    graft.ext.Layout.materializeIfChanged(loc, fp) {
+    val fp = Scratch.fingerprintOf(s"v1:$buckets:$key", nRows, hashSum)
+    Scratch.materializeIfChanged(loc, fp) {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       df.write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, key).sortBy(key)
@@ -139,26 +141,25 @@ object BucketedTables {
     // bit-identical to the ones the separate aggs produced. The
     // fingerprint covers the derived count, so a data change that moves
     // the sizing misses the marker and rewrites both layouts.
-    val hc = hash(col("event_id"), col("user_id")).cast("long")
     def slice(t: String) = col("event_type") === t
-    val s = ev.agg(
-      coalesce(sum(when(slice("click"), 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(slice("click"), hc)), lit(0L)),
-      coalesce(sum(when(slice("purchase"), 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(slice("purchase"), hc)), lit(0L))).head()
+    def sliceAggs(t: String) =
+      Scratch.aggregates(Seq(col("event_id"), col("user_id")), Some(slice(t)))
+    val (nc, hc) = sliceAggs("click")
+    val (np, hp) = sliceAggs("purchase")
+    val s = ev.agg(nc, hc, np, hp).head()
     val (nClick, hClick, nPurch, hPurch) =
       (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
     val buckets = deriveBuckets(math.max(nClick, nPurch))
     val tc = s"graft_bkt_clicks_$tag"
     val tp = s"graft_bkt_purchases_$tag"
     ensureBucketedTable(spark, tc,
-      graft.ext.Layout.scratchDir("bkt_clicks", dir),
+      Scratch.root("bkt_clicks", dir),
       "click_id BIGINT, user_id BIGINT", "user_id", buckets,
       ev.where(slice("click"))
         .select(col("event_id").as("click_id"), col("user_id")),
       nClick, hClick)
     ensureBucketedTable(spark, tp,
-      graft.ext.Layout.scratchDir("bkt_purchases", dir),
+      Scratch.root("bkt_purchases", dir),
       "purchase_id BIGINT, user_id BIGINT", "user_id", buckets,
       ev.where(slice("purchase"))
         .select(col("event_id").as("purchase_id"), col("user_id")),
@@ -194,10 +195,10 @@ object BucketedTables {
     // aggs) settles both snapshot sizes AND both content fingerprints;
     // the diff's output schema is the census, so here the count is
     // observable via the fingerprint, not a report column
-    def sideAgg(df: DataFrame, pfx: String) = df.agg(
-      count(lit(1)).as(s"n_$pfx"),
-      coalesce(sum(hash(col("doc_id"), col("text"), col("source")).cast("long")),
-        lit(0L)).as(s"h_$pfx"))
+    def sideAgg(df: DataFrame, pfx: String) = {
+      val (n, h) = Scratch.aggregates(Seq(col("doc_id"), col("text"), col("source")))
+      df.agg(n.as(s"n_$pfx"), h.as(s"h_$pfx"))
+    }
     val s = sideAgg(old, "old").crossJoin(sideAgg(newer, "new")).head()
     val (nOld, hOld, nNew, hNew) =
       (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
@@ -206,10 +207,10 @@ object BucketedTables {
     val tn = s"graft_bkt_snap_new_$tag"
     val schemaDdl = "doc_id BIGINT, text STRING, source STRING"
     ensureBucketedTable(spark, to,
-      graft.ext.Layout.scratchDir("bkt_snap_old", dir), schemaDdl, "doc_id",
+      Scratch.root("bkt_snap_old", dir), schemaDdl, "doc_id",
       buckets, old, nOld, hOld)
     ensureBucketedTable(spark, tn,
-      graft.ext.Layout.scratchDir("bkt_snap_new", dir), schemaDdl, "doc_id",
+      Scratch.root("bkt_snap_new", dir), schemaDdl, "doc_id",
       buckets, newer, nNew, hNew)
     graft.ext.Curation.diffOf(spark.table(to), spark.table(tn))
   }

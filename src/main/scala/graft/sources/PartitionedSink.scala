@@ -21,24 +21,16 @@ import graft.exec.Cut
 object PartitionedSink {
 
   /** Write `df` (must carry a `timestamp` column) partitioned by day,
-    * overwriting only the days present in `df`. Safe to re-run. */
-  def writeDaily(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      df.withColumn("day", to_date(col("timestamp")))
-        .write
-        .mode("overwrite")
-        .partitionBy("day")
-        .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+    * overwriting only the days present in `df`. Safe to re-run. Dynamic
+    * overwrite is a per-write option (which Spark reads ahead of the
+    * session conf), so no other thread's write sees it. */
+  def writeDaily(df: DataFrame, path: String): Unit =
+    df.withColumn("day", to_date(col("timestamp")))
+      .write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day")
+      .parquet(path)
 
   /** Z-order (Morton-curve) layout writer: interleave the bits of the
     * quantized sort columns so rows close in EVERY dimension land in the
@@ -175,28 +167,20 @@ object PartitionedSink {
     * store) checkpointing for the compaction path there. */
   def compactDaily(spark: org.apache.spark.sql.SparkSession, path: String,
       filesPerDay: Int = 1): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val raw = spark.read.parquet(path)
-      val days = raw.select("day").distinct().count().toInt max 1
-      val dataCols = raw.columns.filter(_ != "day").map(col).toSeq
-      // explicit partition count: a column-only repartition is subject to
-      // AQE partition coalescing, which folds small days back into one
-      // task (= one file) regardless of the requested split
-      val df = raw
-        .withColumn("__split", pmod(hash(dataCols: _*), lit(filesPerDay)))
-        .repartition(days * filesPerDay, col("day"), col("__split"))
-        .drop("__split")
-      // must materialize BEFORE overwriting the same path: localCheckpoint
-      // breaks the read-your-own-overwrite cycle
-      Cut.shared(df)
-        .write.mode("overwrite").partitionBy("day").parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    val raw = spark.read.parquet(path)
+    val days = raw.select("day").distinct().count().toInt max 1
+    val dataCols = raw.columns.filter(_ != "day").map(col).toSeq
+    // explicit partition count: a column-only repartition is subject to
+    // AQE partition coalescing, which folds small days back into one
+    // task (= one file) regardless of the requested split
+    val df = raw
+      .withColumn("__split", pmod(hash(dataCols: _*), lit(filesPerDay)))
+      .repartition(days * filesPerDay, col("day"), col("__split"))
+      .drop("__split")
+    // must materialize BEFORE overwriting the same path: localCheckpoint
+    // breaks the read-your-own-overwrite cycle
+    Cut.shared(df)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(path)
   }
 }

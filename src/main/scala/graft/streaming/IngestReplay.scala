@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.exec.Scratch
 
 /** Deterministic batch replay of the two-tier screened ingest — the
   * registry surface for its per-batch observability counters (round 13;
@@ -31,7 +31,7 @@ import graft.Tables
   * arrived) must be identically 1, which the oracle pins as constants.
   *
   * Idempotence: the replay materializes under a fingerprint marker
-  * (the [[graft.ext.Layout]] discipline — the marker is written AFTER a
+  * (the [[graft.exec.Scratch]] discipline — the marker is written AFTER a
   * successful replay, so a crash mid-replay forces a clean rerun);
   * unchanged data re-reads the persisted metrics without re-ingesting,
   * changed data wipes the scratch state and replays. Scale shape: the
@@ -54,23 +54,15 @@ object IngestReplay {
   }
 
   def ingestMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ext.Layout.scratchDir("ingest_replay", dir)
+    val base = Scratch.root("ingest_replay", dir)
     val bs = batches(spark, dir)
     // order-free content fingerprint of the planned arrivals, batch-tagged
     val planned = bs.zipWithIndex
       .map { case (b, i) => b.select(col("doc_id"), col("text"), lit(i).as("b")) }
       .reduce(_ unionByName _)
-    val fr = planned.agg(count(lit(1)),
-      coalesce(sum(hash(col("doc_id"), col("text"), col("b")).cast("long")), lit(0L))).head()
-    val fp = s"v1:${fr.getLong(0)}:${fr.getLong(1)}"
-    // check-marker / wipe / replay / commit-marker under the Layout
-    // scratch lock (ADVICE r13): without the OS file lock two JVMs on
-    // one fixture could both see a stale marker, both wipe, and
-    // interleave append-mode metrics/index writes into the same dirs
-    graft.ext.Layout.materializeIfChanged(base, fp, "_replay_fingerprint") {
-      val p = new Path(base)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    // the guard wipes the root before the replay: the metrics/index
+    // writes append, so a stale dir would double them
+    Scratch.materializeIfChanged(base, Scratch.fingerprint("v1", planned)) {
       bs.zipWithIndex.foreach { case (b, i) =>
         BloomMaintenance.ingestBatch(b, s"$base/filter", s"$base/index",
           s"$base/admitted", BloomMaintenance.DefaultBits, BloomMaintenance.DefaultK,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.exec.Scratch
 import graft.ext.Layout
 
 /** The CURSOR CHANGE FEED consumed as a STREAM over the generation log
@@ -46,14 +47,11 @@ import graft.ext.Layout
 object LakeCdfStream {
 
   def lakeCdfStream(spark: SparkSession, dir: String): DataFrame = {
-    val root = Layout.scratchDir("lake_cdf_stream", dir)
+    val root = Scratch.root("lake_cdf_stream", dir)
     val feedSchema = "from_gen BIGINT, to_gen BIGINT, change_type STRING, " +
       "n_rows BIGINT, key_chk BIGINT, uid_chk BIGINT, val_chk BIGINT"
-    Layout.materializeIfChanged(root, Layout.lakeIngestFingerprint(spark, dir),
-        "_replay_fingerprint") {
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    Scratch.materializeIfChanged(root, Layout.lakeIngestFingerprint(spark, dir)) {
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // the committing arrival loop, under this operator's own root
       val ctx = Layout.prepareLakeIngest(spark, dir, root)
       try {

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.exec.Scratch
 import graft.ext.Layout
 
 /** The lake arrival loop driven by the REAL streaming engine (round 16,
@@ -26,7 +27,7 @@ import graft.ext.Layout
   * of logging fewer decision rows.
   *
   * Replay discipline as [[IngestReplay]]: wipe-and-replay under the
-  * shared fingerprint+OS-lock protocol ([[graft.ext.Layout
+  * shared fingerprint+OS-lock protocol ([[graft.exec.Scratch
   * .materializeIfChanged]]), marker written only after a completed
   * replay, checkpoint directory wiped with the lineage so batch ids
   * restart at 0. The fingerprint is the SAME one the batch loop uses
@@ -43,13 +44,10 @@ import graft.ext.Layout
 object LakeIngestStream {
 
   def lakeIngestStream(spark: SparkSession, dir: String): DataFrame = {
-    val root = Layout.scratchDir("lake_ingest_stream", dir)
+    val root = Scratch.root("lake_ingest_stream", dir)
     val bs = Layout.lakeArrivalBatches(spark, dir)
-    Layout.materializeIfChanged(root, Layout.lakeIngestFingerprint(spark, dir),
-        "_replay_fingerprint") {
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    Scratch.materializeIfChanged(root, Layout.lakeIngestFingerprint(spark, dir)) {
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // stage each arrival slice as ONE parquet file; explicit ascending
       // modification times make the file source's replay order the
       // arrival order deterministically (same-millisecond writes would

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
+import graft.exec.Scratch
 
 /** Watermarked stream-stream interval join — the attribution shape
   * (purchase joined to the same user's clicks in the preceding hour)
@@ -60,25 +60,16 @@ object StreamJoin {
   }
 
   def streamJoinAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ext.Layout.scratchDir("stream_join", dir)
+    val base = Scratch.root("stream_join", dir)
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
       .where(col("event_type").isin("click", "purchase"))
-    // order-free content fingerprint of both input slices
-    val fr = ev.agg(count(lit(1)),
-      coalesce(sum(hash(col("event_id"), col("user_id"), col("ts"),
-        col("event_type")).cast("long")), lit(0L))).head()
-    // v2: the replay now also persists the join's state-store metrics
-    // (see below) — the version bump forces one re-replay over r13
-    // scratch dirs that predate the metrics table. Marker check / wipe /
-    // replay / commit now run under the Layout scratch lock (ADVICE
-    // r13): two unlocked JVMs could both see a stale marker, both wipe,
-    // and interleave sink/checkpoint writes into one scratch dir.
-    val fp = s"v2:60min:${fr.getLong(0)}:${fr.getLong(1)}"
-    graft.ext.Layout.materializeIfChanged(base, fp, "_replay_fingerprint") {
-      val p = new Path(base)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    // order-free content fingerprint of both input slices. v2: the
+    // replay also persists the join's state-store metrics (see below) —
+    // the version bump forces one re-replay over scratch dirs that
+    // predate the metrics table. The guard wipes the root (sink,
+    // checkpoint and inputs) before the replay.
+    Scratch.materializeIfChanged(base, Scratch.fingerprint("v2:60min", ev)) {
       // multi-file stream inputs: 3 files per side → 3 micro-batches per
       // source under maxFilesPerTrigger=1, so the join genuinely runs
       // across micro-batches with buffered state, not as one batch
@@ -165,7 +156,7 @@ object StreamJoin {
     * by `StreamJoinSpec`'s controlled MemoryStream feed, where arrival
     * order is deterministic. */
   def streamJoinState(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.ext.Layout.scratchDir("stream_join", dir)
+    val base = Scratch.root("stream_join", dir)
     // ensure the replay (and its metrics table) exists for this fixture
     streamJoinAttribution(spark, dir).count()
     val m = spark.read.parquet(s"$base/state_metrics")

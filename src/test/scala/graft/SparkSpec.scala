@@ -1,15 +1,55 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM per sbt test run). */
-trait SparkSpec extends AnyFunSuite {
+/** Shared local session for all specs (one JVM per sbt test run). Temp
+  * dirs come from [[tempDir]]: when the suite ends each is deleted, with
+  * the `graft_*` scratch roots and lock files keyed on it (a temp dir a
+  * query read as its data dir). */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A fresh directory under `java.io.tmpdir`, deleted in `afterAll`. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach { d =>
+      SparkSpec.deleteTree(d)
+      // "_<user>_<md5>": the suffix every kind's root over `d` shares
+      val key = "_" + java.nio.file.Paths.get(graft.exec.Scratch.root("", d.toString))
+        .getFileName.toString.stripPrefix("graft__")
+      val tmp = Files.list(d.getParent)
+      try tmp.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("graft_") && (n.endsWith(key) || n.endsWith(key + ".lock"))
+      }.forEach(SparkSpec.deleteTree(_))
+      finally tmp.close()
+    } finally super.afterAll()
 }
 
 /** Built through the mains' own factory at 4 cpus, so specs run under the
   * confs the mains use. */
 object SparkSpec {
   lazy val session: SparkSession = graft.exec.Session(4)
+
+  /** Best-effort recursive delete (symlinks are not followed): a file a
+    * spec still holds open must not fail the suite. */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
+      val all = Files.walk(root)
+      try all.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+      finally all.close()
+    }
 }

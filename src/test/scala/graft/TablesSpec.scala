@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 class TablesSpec extends SparkSpec {
 
   private def writeAndRead(schema: StructType, rows: Seq[Row]): org.apache.spark.sql.DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val dir = tempDir("graft-events").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     Tables.events(spark, dir)

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import graft.{Run, SparkEntry, SparkSpec}
 
 /** The execution-context module: the session factory's conf set, the
-  * source guard that keeps session building, lineage cuts and thread
-  * pools inside `graft.exec`, and the `graft.Run` dispatcher. */
+  * source guards that keep session building, lineage cuts, thread
+  * pools and the scratch guard inside `graft.exec`, and the `graft.Run`
+  * dispatcher. */
 class SessionSpec extends SparkSpec {
 
   test("the factory pins the conf set every main runs under") {
@@ -36,6 +37,26 @@ class SessionSpec extends SparkSpec {
       p <- patterns if text.contains(p)
     } yield s"$f: $p"
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("under src/main only graft/exec/Scratch.scala fingerprints, locks or names the marker") {
+    val scratch = Paths.get("src/main/scala/graft/exec/Scratch.scala")
+    val owned = Seq("sum(hash(", "FileChannel.open", "_graft_layout_fingerprint")
+    val sources = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".scala")).toSeq
+    val own = Files.readString(scratch)
+    assert(owned.forall(own.contains), "Scratch.scala holds the guard")
+    val offenders = for {
+      f <- sources if f != scratch
+      text = Files.readString(f)
+      p <- owned if text.contains(p)
+    } yield s"$f: $p"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // dynamic partition overwrite is a per-write option, never a
+    // session-wide conf window other threads can see
+    val confWindows = sources.filter(f => Files.readString(f)
+      .contains("conf.set(\"spark.sql.sources.partitionOverwriteMode\""))
+    assert(confWindows.isEmpty, confWindows.mkString("\n"))
   }
 
   private def runOutput(args: String*): Seq[String] = {

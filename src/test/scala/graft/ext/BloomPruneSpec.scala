@@ -14,7 +14,7 @@ class BloomPruneSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-bloomprune").toString
+    val d = tempDir("graft-bloomprune").toString
     // doc 0 and 37 are bench; 1 copies doc 0's text (full hit), 2 shares a
     // 4-word window with doc 37 (single-gram hit), the rest are clean.
     val rows = Seq(

@@ -14,7 +14,7 @@ class ContainmentSpec extends SparkSpec {
   /** doc1 = doc2 (exact copies — identical minhash signatures, so the LSH
     * pair is guaranteed); doc3 = doc1 + a short suffix (near-superset). */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-contain").toString
+    val d = tempDir("graft-contain").toString
     Seq(
       (1L, base, "en", "s0", 0L),
       (2L, base, "en", "s0", 0L),

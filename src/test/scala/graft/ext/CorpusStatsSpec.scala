@@ -11,7 +11,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("bpe merges: the textbook low/lower fixture learns (l o), (lo w), (e r)") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val d = tempDir("graft-bpe").toString
     // vocab: low×2, lower×1, plus a single-char word that must contribute
     // no pairs. Hand-traced: pairs {l o:3, o w:3, w e:1, e r:1} — tie at 3
     // breaks to 'l o'; then 'lo w':3 wins; then tie at 1 breaks to 'e r'.
@@ -26,7 +26,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("bpe merges: greedy LTR on overlapping runs — 'a a a' merges left first") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-bpe2").toString
+    val d = tempDir("graft-bpe2").toString
     Seq((0L, "aaa aaa", "en", "s0", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode(SaveMode.Overwrite).parquet(s"$d/documents.parquet")
@@ -41,7 +41,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("bpe segment: low/lower after 3 merges tokenizes to low / low+er / a") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-bpeseg").toString
+    val d = tempDir("graft-bpeseg").toString
     Seq((0L, "low low a", "en", "s0", 9L), (1L, "lower a", "en", "s1", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode(SaveMode.Overwrite).parquet(s"$d/documents.parquet")
@@ -57,7 +57,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("psi drift: identical halves score ~0, a length shift scores high") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-psi").toString
+    val d = tempDir("graft-psi").toString
     // the half split is at the GLOBAL mid id (99 div 2 = 49), so each
     // source needs ids on both sides. sStable keeps the same length mix
     // in both halves; sShift moves every doc from 50 to 500 chars.
@@ -76,7 +76,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("vocab coverage: occurrences outside the top-k vocab count as OOV") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-vocab").toString
+    val d = tempDir("graft-vocab").toString
     // top-2 vocab is {aa, bb} (freq 3, 2); cc/dd are OOV
     Seq(
       (0L, "aa aa bb cc", "en", "sA", 11L),
@@ -96,7 +96,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("datasheet: duplicate docs and lang mode are counted per source") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-ds").toString
+    val d = tempDir("graft-ds").toString
     Seq(
       (0L, "alpha beta", "en", "sA", 10L),
       (1L, "alpha beta", "en", "sA", 10L), // exact dup of doc 0
@@ -120,7 +120,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("bpe merges: a fully-merged vocab stops early instead of looping") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-bpe3").toString
+    val d = tempDir("graft-bpe3").toString
     Seq((0L, "ab ab", "en", "s0", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode(SaveMode.Overwrite).parquet(s"$d/documents.parquet")
@@ -186,7 +186,7 @@ class CorpusStatsSpec extends SparkSpec {
   test("ngram novelty buckets use floor division: total over negative doc_ids") {
     import org.apache.spark.sql.{SaveMode}
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-novneg").toString
+    val d = tempDir("graft-novneg").toString
     // ids straddling zero: floor puts -60 in bucket -2, -1 in -1, 0..49
     // in 0, 50 in 1 — truncation would wrongly merge -49..49 into one
     Seq(-60L, -1L, 0L, 49L, 50L)

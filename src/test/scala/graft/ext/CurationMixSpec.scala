@@ -21,7 +21,7 @@ class CurationMixSpec extends SparkSpec {
   /** doc1 = A+B (first occurrences), doc2 = A+C (A is a dup), doc3 = B
     * (entirely duplicated), doc4 = A + a short 3-word tail. */
   private lazy val spanDir: String = {
-    val d = Files.createTempDirectory("graft-span").toString
+    val d = tempDir("graft-span").toString
     Seq(
       (1L, s"$spanA $spanB", "en", "s0", 0L),
       (2L, s"$spanA $spanC", "en", "s0", 0L),
@@ -51,7 +51,7 @@ class CurationMixSpec extends SparkSpec {
   /** 90 docs from src_big, 10 from src_small: fair share is 50, so the
     * small source keeps everything and the big one downsamples to ~5/9. */
   private lazy val mixDir: String = {
-    val d = Files.createTempDirectory("graft-mix").toString
+    val d = tempDir("graft-mix").toString
     ((1 to 90).map(i => (i.toLong, s"t$i", "en", "src_big", 0L)) ++
       (91 to 100).map(i => (i.toLong, s"t$i", "en", "src_small", 0L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -122,7 +122,7 @@ class CurationMixSpec extends SparkSpec {
   }
 
   test("DSIR weights score content against the target distribution, not the label") {
-    val d = Files.createTempDirectory("graft-dsir").toString
+    val d = tempDir("graft-dsir").toString
     val enVocab = Seq("alpha", "beta", "gamma", "delta", "epsilon")
     val deVocab = Seq("zett", "eta", "theta", "iota", "kappa")
     def text(v: Seq[String], seed: Int) = (0 until 8).map(i => v((seed + i) % v.size)).mkString(" ")
@@ -178,7 +178,7 @@ class CurationMixSpec extends SparkSpec {
   }
 
   private lazy val winsorDir: String = {
-    val d = Files.createTempDirectory("graft-winsor").toString
+    val d = tempDir("graft-winsor").toString
     (1 to 100).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "a", i.toDouble, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -199,7 +199,7 @@ class CurationMixSpec extends SparkSpec {
   /** Nine common-token docs and one all-unique-token doc: the unique one
     * has the lowest unigram logprob, so it must land in the tail bucket. */
   private lazy val pplDir: String = {
-    val d = Files.createTempDirectory("graft-ppl").toString
+    val d = tempDir("graft-ppl").toString
     ((1 to 9).map(i => (i.toLong, "the cat sat on the mat", "en", "s0", 0L)) :+
       (10L, words("zq", 6), "xx", "s0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -28,7 +28,7 @@ class CurationPropertiesSpec extends SparkSpec {
     (1 to 4).map(i => corpusGen.pureApply(Gen.Parameters.default, Seed(i.toLong)))
 
   private def writeDocs(docs: List[String]): String = {
-    val d = Files.createTempDirectory("graft-prop").toString
+    val d = tempDir("graft-prop").toString
     docs.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode(SaveMode.Overwrite).parquet(s"$d/documents.parquet")
@@ -110,7 +110,7 @@ class CurationPropertiesSpec extends SparkSpec {
     }
     for (i <- 1 to 4) {
       val rows = eventsGen.pureApply(Gen.Parameters.default, Seed(100L + i))
-      val d = Files.createTempDirectory("graft-prop-ev").toString
+      val d = tempDir("graft-prop-ev").toString
       rows.zipWithIndex.map { case ((t, v), id) =>
         (id.toLong, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, t, v, "{}")
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -15,7 +15,7 @@ class CurationSpec extends SparkSpec {
     * the huge value inflates σ enough to hide the moderate one from the
     * z-score; MAD's 50% breakdown point keeps both visible. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-mad").toString
+    val d = tempDir("graft-mad").toString
     val base = (1 to 19).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "a", i.toDouble, "{}"))
     (base :+
@@ -27,7 +27,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("neyman allocation: spread, not size, wins the sampling budget") {
-    val d = Files.createTempDirectory("graft-neyman").toString
+    val d = tempDir("graft-neyman").toString
     // sA: 6 identical docs (zero variance) — proportionally dominant but
     // informationally saturated; sB: 2 wildly different docs
     val docs = (0 until 6).map(i =>
@@ -108,7 +108,7 @@ class CurationSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val local = Curation.dupClusters(spark, sf).collect()
     assert(local.nonEmpty, "fixture must produce clusters")
-    val ckpt = Files.createTempDirectory("graft-ckpt")
+    val ckpt = tempDir("graft-ckpt")
     spark.conf.set("spark.graft.checkpointDir", ckpt.toString)
     try {
       val reliable = Curation.dupClusters(spark, sf).collect()
@@ -133,7 +133,7 @@ class CurationSpec extends SparkSpec {
     // (new uuid subdir) on every call. Qualified-URI comparison fixes both.
     import spark.implicits._
     val sc = spark.sparkContext
-    val ckpt = Files.createTempDirectory("graft-ckpt-uri")
+    val ckpt = tempDir("graft-ckpt-uri")
     spark.conf.set("spark.graft.checkpointDir", ckpt.toString)
     try {
       graft.exec.Cut.loop(Seq(1, 2).toDF("v"), eager = true)
@@ -145,7 +145,7 @@ class CurationSpec extends SparkSpec {
       assert(sc.getCheckpointDir === first,
         "a respelling of the same qualified dir must not re-point")
       // a genuinely different directory must re-point
-      val other = Files.createTempDirectory("graft-ckpt-uri2")
+      val other = tempDir("graft-ckpt-uri2")
       spark.conf.set("spark.graft.checkpointDir", other.toString)
       graft.exec.Cut.loop(Seq(4).toDF("v"), eager = true)
       assert(sc.getCheckpointDir !== first, "a new dir must re-point")
@@ -302,7 +302,7 @@ class CurationSpec extends SparkSpec {
   test("span decontamination: a 32-word verbatim quote hits every width tier exactly") {
     import org.apache.spark.sql.SaveMode
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-spandecon").toString
+    val d = tempDir("graft-spandecon").toString
     // benchmark doc (doc_id 0 ≡ 0 mod 50): 40 unique words w00..w39
     val benchWords = (0 until 40).map(i => f"w$i%02d")
     // contaminated doc: words 5..36 of the benchmark (a 32-word verbatim
@@ -358,7 +358,7 @@ class CurationSpec extends SparkSpec {
     // skewed synthetic corpus: 'lo' is tiny, so its cap (2 epochs) binds
     // and the sample must repeat its documents; 'hi' fills a partial
     // hash-ordered prefix
-    val dir = java.nio.file.Files.createTempDirectory("graft-unimax").toString
+    val dir = tempDir("graft-unimax").toString
     val docs =
       (0L until 4L).map(i => (i, "lo", 50L, s"lo doc $i")) ++
       (100L until 200L).map(i => (i, "hi", 100L, s"hi doc $i body"))

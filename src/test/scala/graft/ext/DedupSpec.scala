@@ -13,7 +13,7 @@ class DedupSpec extends SparkSpec {
 
   /** Write a literal documents/embeddings fixture as parquet, return dir. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-dedup").toString
+    val d = tempDir("graft-dedup").toString
     val docs = Seq(
       (0L, "alpha beta gamma delta epsilon zeta eta theta", "en", "src0", 46L),
       (1L, "alpha beta gamma delta epsilon zeta eta theta", "en", "src1", 46L), // exact dup of 0
@@ -178,7 +178,7 @@ class DedupSpec extends SparkSpec {
     // -3 % 2 is -1 in Spark — every negative ODD id landed in neither
     // shard, so the incremental paths silently dropped those documents.
     // pmod makes the parity split total over the id domain.
-    val d = Files.createTempDirectory("graft-dedup-neg").toString
+    val d = tempDir("graft-dedup-neg").toString
     Seq(
       (-10L, "alpha beta gamma delta epsilon zeta eta theta"), // pmod10==0: re-ingested in both shards
       (-3L,  "alpha beta gamma delta epsilon zeta eta theta"), // negative odd — the lost shard

@@ -12,7 +12,7 @@ class KmeansStepSpec extends SparkSpec {
   /** Two orthogonal directions among the 8 seed centroids; members assign
     * by cosine (scale-invariant), diagonal ties break to the lower id. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-kmeans").toString
+    val d = tempDir("graft-kmeans").toString
     val vecs: Seq[(Long, Seq[Float])] =
       (0 to 7).map(i => i.toLong -> (if (i % 2 == 0) Seq(1.0f, 0.0f) else Seq(0.0f, 1.0f))) ++
         Seq(8L -> Seq(4.0f, 0.0f), 9L -> Seq(0.0f, 2.0f), 10L -> Seq(3.0f, 3.0f))

@@ -7,6 +7,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
+import graft.exec.Scratch
 
 /** The lake-lineage builder (`Layout.lakeLineage`): idempotent builds,
   * op-stamped generations in step order, and a failure path that leaves
@@ -18,7 +19,7 @@ class LakeLineageSpec extends SparkSpec {
 
   private lazy val dir: String = {
     val src = Paths.get("/root/testdata/sf0.001")
-    val d = Files.createTempDirectory("graft-lineage-sf")
+    val d = tempDir("graft-lineage-sf")
     Files.list(src).forEach(p => Files.copy(p, d.resolve(p.getFileName)))
     d.toString
   }
@@ -66,13 +67,13 @@ class LakeLineageSpec extends SparkSpec {
     assert(fold.forall(_._1 == "base") && fold.toSet.intersect(g1.toSet).isEmpty)
     // a registry lineage goes through the same builder
     Layout.lakeChanges(spark, dir).collect()
-    assert(ops(Layout.scratchDir("lake_changes", dir)) === Seq("seed", "arrival", "restore"))
+    assert(ops(Scratch.root("lake_changes", dir)) === Seq("seed", "arrival", "restore"))
   }
 
   test("a step that throws leaves no marker, cache entry or job; the next call rebuilds from g0") {
     spark.catalog.clearCache()
     val kind = "lineage_spec_fail"
-    val root = Layout.scratchDir(kind, dir)
+    val root = Scratch.root(kind, dir)
     val err = intercept[IllegalStateException](
       lineage(kind, "t1")(throw new IllegalStateException("step failed")))
     assert(err.getMessage === "step failed")

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.exec.Scratch
 
 /** Pins the Morton interleave bit math, the skipping-effectiveness
   * invariants on the real corpus, and the clustered-write idiom
@@ -159,12 +160,12 @@ class LayoutSpec extends SparkSpec {
     // content identity: the compacted table is the same (db, ub) multiset
     // as the planned layout — nothing lost, duplicated, or reassigned
     val compacted = spark.read
-      .parquet(Layout.scratchDir("compaction_exec", sf))
+      .parquet(Scratch.root("compaction_exec", sf))
       .groupBy("db", "ub").count()
     val source = graft.Tables.events(spark, sf)
     assert(compacted.agg(sum("count")).head().getLong(0) === source.count())
     val diff = compacted.join(
-      spark.read.parquet(Layout.scratchDir("zorder_prune", sf))
+      spark.read.parquet(Scratch.root("zorder_prune", sf))
         .groupBy("db", "ub").count().withColumnRenamed("count", "base_count"),
       Seq("db", "ub"), "full_outer")
       .where(col("count").isNull || col("base_count").isNull ||
@@ -194,9 +195,9 @@ class LayoutSpec extends SparkSpec {
     val box = col("user_id").between(60, 90) && col("value").between(100.0, 200.0)
     // run the report once — materializes both layout dirs idempotently
     val r = Layout.deltaRead(spark, sf).head()
-    val baseAll = spark.read.parquet(Layout.scratchDir("delta_base", sf))
+    val baseAll = spark.read.parquet(Scratch.root("delta_base", sf))
       .select("event_id", "user_id", "value")
-    val delta = spark.read.parquet(Layout.scratchDir("delta_arrivals", sf))
+    val delta = spark.read.parquet(Scratch.root("delta_arrivals", sf))
     // the un-pruned reference: full base scan, newest-wins merge
     val mergedFull = baseAll
       .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
@@ -206,7 +207,7 @@ class LayoutSpec extends SparkSpec {
     assert(r.getAs[Long]("rows_out") === fullIds.length.toLong,
       "pruned merge-on-read must answer exactly the full-scan merge")
     // replicate the pruned read path and compare the ID SET, not counts
-    val m = FooterManifest.build(spark, Layout.scratchDir("delta_base", sf),
+    val m = FooterManifest.build(spark, Scratch.root("delta_base", sf),
       Seq("user_id", "value"))
     val keptFiles = FooterManifest.filesToRead(m,
       Map("user_id" -> ((60.0, 90.0)), "value" -> ((100.0, 200.0))))
@@ -246,10 +247,10 @@ class LayoutSpec extends SparkSpec {
     assert(fold.getAs[Long]("rows_out") === read.getAs[Long]("rows_out"),
       "the folded layout must answer exactly what merge-on-read answered")
     // ...as an ID SET, not just a count: folded table vs in-test merge
-    val folded = spark.read.parquet(Layout.scratchDir("delta_fold", sf))
-    val baseAll = spark.read.parquet(Layout.scratchDir("delta_base", sf))
+    val folded = spark.read.parquet(Scratch.root("delta_fold", sf))
+    val baseAll = spark.read.parquet(Scratch.root("delta_base", sf))
       .select("event_id", "user_id", "value")
-    val delta = spark.read.parquet(Layout.scratchDir("delta_arrivals", sf))
+    val delta = spark.read.parquet(Scratch.root("delta_arrivals", sf))
     val mergedFull = baseAll
       .join(delta.select(col("event_id")), Seq("event_id"), "left_anti")
       .unionByName(delta)
@@ -287,9 +288,9 @@ class LayoutSpec extends SparkSpec {
     assert(s1.getAs[Long]("amp_x1000") > 0L)
     // content identity: the compacted table is row-for-row the folded
     // table (the rewrite moved bytes, never rows)
-    val fold = spark.read.parquet(s"${Layout.scratchDir("lake_e2e", sf)}/fold")
+    val fold = spark.read.parquet(s"${Scratch.root("lake_e2e", sf)}/fold")
       .select("event_id", "user_id", "value")
-    val compact = spark.read.parquet(s"${Layout.scratchDir("lake_e2e", sf)}/compact")
+    val compact = spark.read.parquet(s"${Scratch.root("lake_e2e", sf)}/compact")
       .select("event_id", "user_id", "value")
     assert(fold.count() === compact.count())
     assert(compact.exceptAll(fold).count() === 0L,
@@ -354,7 +355,7 @@ class LayoutSpec extends SparkSpec {
       assert(r.getAs[Long]("n_arrived") > 0L)
     }
     // the physical lineage exists: one delta file per batch
-    val root = Layout.scratchDir("lake_ingest", sf)
+    val root = Scratch.root("lake_ingest", sf)
     (0 until 3).foreach { i =>
       val n = new java.io.File(s"$root/delta/b=$i")
         .listFiles().count(_.getName.endsWith(".parquet"))
@@ -384,13 +385,13 @@ class LayoutSpec extends SparkSpec {
     assert(s3.getAs[Long]("rows_out") === s3.getAs[Long]("n_scored"))
     // mergeSchema inferred the evolved union schema over the mixed dir
     val tbl = spark.read.option("mergeSchema", "true")
-      .parquet(s"${Layout.scratchDir("lake_evolve", sf)}/tbl")
+      .parquet(s"${Scratch.root("lake_evolve", sf)}/tbl")
     assert(tbl.schema.fieldNames.contains("score"),
       "the union schema must carry the added column")
     // folded content ≡ the evolved newest-wins merge, INCLUDING the
     // added column's values (NULL for pre-evolution rows)
     val folded = spark.read
-      .parquet(s"${Layout.scratchDir("lake_evolve", sf)}/fold")
+      .parquet(s"${Scratch.root("lake_evolve", sf)}/fold")
       .select("event_id", "user_id", "value", "score")
     val ev = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
@@ -409,7 +410,7 @@ class LayoutSpec extends SparkSpec {
     // for delta-bearing cells AND NULL-stat rows for all-NULL cells —
     // both kinds must exist for the stage-3 numbers to mean anything
     val mf = graft.sources.FooterManifest.build(spark,
-      s"${Layout.scratchDir("lake_evolve", sf)}/fold", Seq("score")).collect()
+      s"${Scratch.root("lake_evolve", sf)}/fold", Seq("score")).collect()
     assert(mf.exists(r => !r.isNullAt(r.fieldIndex("min_v"))),
       "at least one folded file must persist usable score stats")
   }
@@ -420,7 +421,7 @@ class LayoutSpec extends SparkSpec {
     // catalog records the WIDER type and old files read through it —
     // Spark 4's parquet readers support widening promotions, so the
     // mixed table answers exactly, no rewrite of old files needed.
-    val dir = java.nio.file.Files.createTempDirectory("graft-widen").toString
+    val dir = tempDir("graft-widen").toString
     spark.range(5).select(col("id").cast("int").as("v"))
       .write.mode("overwrite").parquet(s"$dir/w")
     spark.range(5, 10).select(col("id").as("v"))
@@ -438,7 +439,7 @@ class LayoutSpec extends SparkSpec {
     // compose: the narrow era persists (k INT, v DOUBLE); the evolved
     // era ships k as LONG plus a new score column. The catalog records
     // the union-and-widened schema and BOTH eras read through it.
-    val dir = java.nio.file.Files.createTempDirectory("graft-evwide").toString
+    val dir = tempDir("graft-evwide").toString
     spark.range(10)
       .select(col("id").cast("int").as("k"), (col("id") * 2.0).as("v"))
       .write.mode("overwrite").parquet(s"$dir/t")
@@ -481,7 +482,7 @@ class LayoutSpec extends SparkSpec {
   test("lake widen: narrow era on disk is INT32, the fold lands uniformly INT64, values survive") {
     val rows = Layout.lakeWiden(spark, sf).collect().sortBy(_.getAs[Long]("stage"))
     assert(rows.length === 3)
-    val root = Layout.scratchDir("lake_widen", sf)
+    val root = Scratch.root("lake_widen", sf)
     // the width claims, from the footers themselves: every base file is
     // the narrow era (INT32), the delta and every folded file are wide
     val (deltaFiles, baseFiles) = Layout.listParquetFiles(spark, s"$root/tbl")
@@ -520,53 +521,9 @@ class LayoutSpec extends SparkSpec {
     assert(rows(2).getAs[Long]("rows_out") > 0L)
   }
 
-  test("materializeIfChanged: concurrent same-root materializations yield one writer, both readers committed") {
-    // every lake/bucketed lineage runs under this fingerprint+lock
-    // protocol; this actually CONTENDS it (VERDICT r16 next #6) instead
-    // of trusting the monitor/OS-lock description. Two threads race the
-    // same root with the same fingerprint: exactly one may run the
-    // write body, the other must wait on the lock and then see the
-    // fresh marker; both must observe the committed state afterwards.
-    val root = java.nio.file.Files.createTempDirectory("graft-lockrace")
-      .toString + "/mat"
-    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
-    def attempt(fp: String): Unit = Layout.materializeIfChanged(root, fp) {
-      writes.incrementAndGet()
-      // widen the write window so the loser provably arrives inside it
-      Thread.sleep(300)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$root/data.txt"), fp.getBytes("UTF-8"))
-    }
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val gate = new java.util.concurrent.CountDownLatch(2)
-    val ts = (1 to 2).map(_ => new Thread(() => {
-      gate.countDown(); gate.await()
-      try attempt("fp-race-1") catch { case t: Throwable => errs.add(t) }
-    }))
-    ts.foreach(_.start())
-    ts.foreach(_.join(30000))
-    assert(ts.forall(!_.isAlive), "both contenders must finish")
-    assert(errs.isEmpty, s"no contender may throw: ${errs.toArray.toSeq}")
-    assert(writes.get() === 1,
-      "exactly ONE thread may run the write body; the other waits and skips")
-    // both readers observe the committed state: payload + marker
-    def readBack(p: String): String = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-    assert(readBack(s"$root/data.txt") === "fp-race-1")
-    assert(readBack(s"$root/_graft_layout_fingerprint") === "fp-race-1")
-    // steady state: a later same-fingerprint call is a pure no-op...
-    attempt("fp-race-1")
-    assert(writes.get() === 1)
-    // ...and a changed fingerprint still rewrites through the same lock
-    attempt("fp-race-2")
-    assert(writes.get() === 2)
-    assert(readBack(s"$root/data.txt") === "fp-race-2")
-  }
-
   test("lake changes: restore is metadata-only, the delta-scale feed equals the generic state diff") {
     val feed = Layout.lakeChanges(spark, sf).collect()
-    val root = Layout.scratchDir("lake_changes", sf)
+    val root = Scratch.root("lake_changes", sf)
     // RESTORE wrote no data: g2's manifest re-references g0's FILE
     // entries verbatim (its op stamp is its own — a restore is a new
     // commit), and the data dir holds exactly the g0 ∪ g1 file set
@@ -614,7 +571,7 @@ class LayoutSpec extends SparkSpec {
 
   test("cdc apply: feed-maintained view equals the full g1 recompute, untouched users bit-identical") {
     val out = Layout.cdcApply(spark, sf).persist()
-    val root = Layout.scratchDir("lake_changes", sf)
+    val root = Scratch.root("lake_changes", sf)
     val flv = floor(col("value")).cast("long")
     def census(gen: Int) = Layout.readLakeAsOf(spark, root, gen)
       .groupBy(col("user_id"))
@@ -660,7 +617,7 @@ class LayoutSpec extends SparkSpec {
     // physical erasure, re-proven from the folded FILES: no tombstoned
     // key survives in any folded file, and the fold is exactly the
     // newest-wins-with-deletes merge
-    val root = Layout.scratchDir("lake_delete", sf)
+    val root = Scratch.root("lake_delete", sf)
     val fold = spark.read
       .schema("event_id BIGINT, user_id BIGINT, value DOUBLE")
       .parquet(s"$root/fold").select("event_id", "user_id", "value")
@@ -679,7 +636,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("generation log: two concurrent optimistic committers claim distinct generations") {
-    val root = java.nio.file.Files.createTempDirectory("graft-genrace").toString
+    val root = tempDir("graft-genrace").toString
     val gate = new java.util.concurrent.CountDownLatch(2)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
@@ -738,7 +695,7 @@ class LayoutSpec extends SparkSpec {
     // log lists exactly the retained window and a read below the floor
     // throws; every file a retained generation references exists, at
     // exactly files_live, and NOTHING else is left under the data root
-    val root = Layout.scratchDir("lake_vacuum", sf)
+    val root = Scratch.root("lake_vacuum", sf)
     def onDisk(f: String): Boolean =
       new java.io.File(f.replaceFirst("^file:", "")).exists()
     val live = (Layout.readGeneration(root, 1) ++ Layout.readGeneration(root, 2))
@@ -776,7 +733,7 @@ class LayoutSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("rows_out")).distinct.length === 1)
     // TIME TRAVEL: read AS OF g0 through the log AFTER g1/g2 committed,
     // and demand the full pre-fold CONTENT — not just the box count
-    val root = Layout.scratchDir("lake_timetravel", sf)
+    val root = Scratch.root("lake_timetravel", sf)
     val ev = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
     val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
@@ -885,7 +842,7 @@ class LayoutSpec extends SparkSpec {
     // writer A and writer B both fold parent g0; A lands g1 with its own
     // fold output — B's snapshot, computed against g0, would silently
     // drop that output, so B must ABORT, never land
-    val root = java.nio.file.Files.createTempDirectory("graft-conflict").toString
+    val root = tempDir("graft-conflict").toString
     Layout.commitGeneration(root, 0,
       Seq("base" -> "file:/t/a.parquet", "base" -> "file:/t/b.parquet"))
     val read0 = Layout.readGeneration(root, 0).map(_._2).toSet
@@ -901,7 +858,7 @@ class LayoutSpec extends SparkSpec {
     // a METADATA-ONLY winner (a RESTORE re-referencing files the loser
     // already read) introduces no datum the loser's snapshot misses —
     // the loser's retry proceeds
-    val root2 = java.nio.file.Files.createTempDirectory("graft-conflict2").toString
+    val root2 = tempDir("graft-conflict2").toString
     Layout.commitGeneration(root2, 0,
       Seq("base" -> "file:/t/a.parquet", "base" -> "file:/t/b.parquet"))
     val read02 = Layout.readGeneration(root2, 0).map(_._2).toSet
@@ -912,7 +869,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("commit conflict race: two committers folding one parent — exactly one lands, one aborts") {
-    val root = java.nio.file.Files.createTempDirectory("graft-conflictrace").toString
+    val root = tempDir("graft-conflictrace").toString
     Layout.commitGeneration(root, 0, Seq("base" -> "file:/t/parent.parquet"))
     val readState = Some((0, Layout.readGeneration(root, 0).map(_._2).toSet))
     val gate = new java.util.concurrent.CountDownLatch(2)
@@ -939,7 +896,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("actions log: an 8-commit lineage reconstructs every state from checkpoint + action replay") {
-    val root = java.nio.file.Files.createTempDirectory("graft-actlog").toString
+    val root = tempDir("graft-actlog").toString
     def f(i: Int) = s"file:/t/d$i.parquet"
     // the expected snapshots, built exactly as the lineages build theirs:
     // seed, five arrivals (append a delta, restamp op), a fold (replace
@@ -1003,8 +960,7 @@ class LayoutSpec extends SparkSpec {
     }
     for (seed <- 1 to 6) {
       val rnd = new scala.util.Random(seed)
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-logprop$seed").toString
+      val root = tempDir(s"graft-logprop$seed").toString
       val pool = (0 until 10).map(i => s"file:/t/f$i.parquet")
       val kindsOf = Map(0 -> "base", 1 -> "delta", 2 -> "cdelta")
       var files = Vector.empty[(String, String)]
@@ -1054,7 +1010,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("log expiry: manifests below the retained window die, the floor re-anchors on its checkpoint") {
-    val root = java.nio.file.Files.createTempDirectory("graft-logexpire").toString
+    val root = tempDir("graft-logexpire").toString
     // a 10-commit arrival-shaped lineage: the expected snapshots, then
     // committed through the public API (delta-form manifests g1..g9)
     var snaps = Vector[Seq[(String, String)]](
@@ -1084,7 +1040,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("commit validation: metadata-only intervening commits never conflict; data adds still do") {
-    val root = java.nio.file.Files.createTempDirectory("graft-metaconflict").toString
+    val root = tempDir("graft-metaconflict").toString
     val baseRefs = Seq("base" -> "file:/t/b0.parquet")
     Layout.commitGeneration(root, 0, baseRefs :+ ("schema" -> "event_id BIGINT"))
     // the committer's read set holds FILES only — no schema text, no op
@@ -1116,7 +1072,7 @@ class LayoutSpec extends SparkSpec {
     // a duplicate-key batch used to land as a readable generation first
     // and only then fail, leaving AS-OF/CDF readers a state referencing
     // an arrival that violated the contract
-    val root = java.nio.file.Files.createTempDirectory("graft-badbatch").toString
+    val root = tempDir("graft-badbatch").toString
     val ctx = Layout.prepareLakeIngest(spark, sf, root)
     try {
       assert(Layout.listGenerations(root) === Seq(0))
@@ -1136,7 +1092,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("actions log: a wiped and re-committed root reads its new states, never stale cached ones") {
-    val root = java.nio.file.Files.createTempDirectory("graft-logwipe").toString
+    val root = tempDir("graft-logwipe").toString
     Layout.commitGeneration(root, 0, Seq("base" -> "file:/t/old.parquet"))
     Layout.commitGeneration(root, 1,
       Seq("base" -> "file:/t/old.parquet", "delta" -> "file:/t/old_d.parquet"))
@@ -1158,7 +1114,7 @@ class LayoutSpec extends SparkSpec {
 
   test("unified log: the arrival loop commits per batch and every boundary replays AS OF its generation") {
     val metrics = Layout.lakeIngest(spark, sf).collect().sortBy(_.getAs[Long]("batch_id"))
-    val root = Layout.scratchDir("lake_ingest", sf)
+    val root = Scratch.root("lake_ingest", sf)
     // g0 = the seeded base, g1..g3 = one commit per arrival batch,
     // g4 = the fold committed on the same log (round 19)
     assert(Layout.listGenerations(root) === Seq(0, 1, 2, 3, 4))
@@ -1196,12 +1152,12 @@ class LayoutSpec extends SparkSpec {
       "a consumer checkpointed before the fold still drains every arrival")
     // the lifecycle lineage commits its three states too
     Layout.lakeE2e(spark, sf).collect()
-    assert(Layout.listGenerations(Layout.scratchDir("lake_e2e", sf)) === Seq(0, 1, 2))
+    assert(Layout.listGenerations(Scratch.root("lake_e2e", sf)) === Seq(0, 1, 2))
   }
 
   test("lake delete via the log: AS-OF g1 is already erasure-complete, g2 physically erased") {
     Layout.lakeDelete(spark, sf).collect()
-    val root = Layout.scratchDir("lake_delete", sf)
+    val root = Scratch.root("lake_delete", sf)
     assert(Layout.listGenerations(root) === Seq(0, 1, 2))
     assert(Layout.readGeneration(root, 1)
       .collect { case (k, _) if Layout.LogFileKinds(k) => k }.toSet ===
@@ -1222,7 +1178,7 @@ class LayoutSpec extends SparkSpec {
 
   test("cursor CDF: checkpointed consumption composes, and data-movement commits feed nothing") {
     Layout.lakeIngest(spark, sf).collect()
-    val root = Layout.scratchDir("lake_ingest", sf)
+    val root = Scratch.root("lake_ingest", sf)
     val full = Layout.lakeChangesSince(spark, root, 0)
     // the feed covers all three arrival transitions with real rows
     assert(full.select(col("from_gen"), col("to_gen")).distinct().count() === 3L)
@@ -1240,7 +1196,7 @@ class LayoutSpec extends SparkSpec {
     // feed entries (the published CDF semantics for data movement)
     Layout.lakeE2e(spark, sf).collect()
     assert(Layout.lakeChangesSince(spark,
-      Layout.scratchDir("lake_e2e", sf), 0).count() === 0L)
+      Scratch.root("lake_e2e", sf), 0).count() === 0L)
   }
 
   test("cursor CDF consumed LIVE: a checkpointing consumer drains each commit as the loop lands it") {
@@ -1249,7 +1205,7 @@ class LayoutSpec extends SparkSpec {
     // advance the checkpoint to the tip — the union of the drained
     // increments must equal the from-scratch feed, which is what makes
     // "resume from my last checkpoint" a safe production loop
-    val root = java.nio.file.Files.createTempDirectory("graft-cdflive").toString
+    val root = tempDir("graft-cdflive").toString
     val ctx = Layout.prepareLakeIngest(spark, sf, root)
     try {
       var running = ctx.boxInit
@@ -1273,7 +1229,7 @@ class LayoutSpec extends SparkSpec {
     val rows = Layout.lakeRebase(spark, sf).collect().sortBy(_.getAs[Long]("gen"))
     assert(rows.map(r => (r.getAs[String]("writer"), r.getAs[Long]("conflicts"))).toSeq
       === Seq(("seed", 0L), ("A", 0L), ("B", 1L)))
-    val root = Layout.scratchDir("lake_rebase", sf)
+    val root = Scratch.root("lake_rebase", sf)
     val ev = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
     val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
@@ -1309,7 +1265,7 @@ class LayoutSpec extends SparkSpec {
     // from-scratch batch feed, and that the registered cursor now
     // floors retention over the streamed lineage.
     val streamed = graft.streaming.LakeCdfStream.lakeCdfStream(spark, sf).collect()
-    val root = Layout.scratchDir("lake_cdf_stream", sf)
+    val root = Scratch.root("lake_cdf_stream", sf)
     val full = Layout.lakeChangesSince(spark, root, 0).collect()
     assert(streamed.sortBy(_.toString).toSeq === full.sortBy(_.toString).toSeq,
       "per-trigger increments must compose to the from-scratch feed")
@@ -1339,7 +1295,7 @@ class LayoutSpec extends SparkSpec {
       Array("delete", "insert", "update_postimage", "update_preimage"))
     // the delete rows must equal what a generic (state-scale) diff of
     // the two log states finds vanished — identity AND values
-    val root = Layout.scratchDir("lake_delete", sf)
+    val root = Scratch.root("lake_delete", sf)
     val g0 = Layout.readLakeAsOf(spark, root, 0)
     val g1 = Layout.readLakeAsOf(spark, root, 1)
     val vanished = g0.join(g1.select(col("event_id")), Seq("event_id"), "left_anti")
@@ -1361,7 +1317,7 @@ class LayoutSpec extends SparkSpec {
     // reading an old generation reproduces the CATALOG of its era, not
     // just its rows
     Layout.lakeEvolve(spark, sf).collect()
-    val er = Layout.scratchDir("lake_evolve", sf)
+    val er = Scratch.root("lake_evolve", sf)
     assert(Layout.readLakeSchemaAsOf(er, 0).exists(!_.contains("score")))
     assert(Layout.readLakeSchemaAsOf(er, 1).exists(_.contains("score DOUBLE")))
     val e0 = Layout.readLakeAsOf(spark, er, 0)
@@ -1375,7 +1331,7 @@ class LayoutSpec extends SparkSpec {
       ev.where(pmod(col("event_id"), lit(100)) === 1).count()
     assert(e1.where(col("score").isNotNull).count() === nDelta)
     Layout.lakeWiden(spark, sf).collect()
-    val wr = Layout.scratchDir("lake_widen", sf)
+    val wr = Scratch.root("lake_widen", sf)
     def uidType(gen: Int) = Layout.readLakeAsOf(spark, wr, gen)
       .schema("user_id").dataType
     assert(uidType(0) === org.apache.spark.sql.types.IntegerType,
@@ -1392,7 +1348,7 @@ class LayoutSpec extends SparkSpec {
 
   test("restore cursor feed: the inverse transition equals the generic g1→g2 state diff") {
     val feed = Layout.lakeCdfRestore(spark, sf).collect()
-    val root = Layout.scratchDir("lake_changes", sf)
+    val root = Scratch.root("lake_changes", sf)
     val g1 = Layout.readLakeAsOf(spark, root, 1)
     val g2 = Layout.readLakeAsOf(spark, root, 2)
     // delete rows ≡ keys vanishing across the restore, at their g1 values
@@ -1426,7 +1382,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("retention policy: the age floor retains generations keep-last would expire") {
-    val root = java.nio.file.Files.createTempDirectory("graft-retain").toString
+    val root = tempDir("graft-retain").toString
     (0 to 3).foreach(g =>
       Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val now = java.lang.System.currentTimeMillis()
@@ -1445,7 +1401,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("consumer-aware retention: a lagging REGISTERED checkpoint floors expiry; an unregistered one does not") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cursorfloor").toString
+    val root = tempDir("graft-cursorfloor").toString
     (0 to 3).foreach(g =>
       Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val now = java.lang.System.currentTimeMillis()
@@ -1474,7 +1430,7 @@ class LayoutSpec extends SparkSpec {
     // deleted files
     val rows = Layout.lakeVacuum(spark, sf).collect()
     assert(rows.forall(_.getAs[Long]("cursor_floor") === 1L))
-    val root = Layout.scratchDir("lake_vacuum", sf)
+    val root = Scratch.root("lake_vacuum", sf)
     // round 20: the lineage also registers a DEAD consumer at g0 —
     // overridden by the staleness bound (reported, not honored), so
     // the effective floor stays the fresh replica's g1
@@ -1491,7 +1447,7 @@ class LayoutSpec extends SparkSpec {
   test("MERGE INTO: committed state is the recomputed clause semantics; per-column UPDATE keeps the target's untouched columns") {
     val rows = Layout.lakeMerge(spark, sf).collect().sortBy(_.getAs[Long]("gen"))
     assert(rows.map(_.getAs[String]("state")).toSeq === Seq("pre_merge", "merged"))
-    val root = Layout.scratchDir("lake_merge", sf)
+    val root = Scratch.root("lake_merge", sf)
     val ev = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
     val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
@@ -1536,7 +1492,7 @@ class LayoutSpec extends SparkSpec {
 
   test("MERGE INTO: clauses evaluate in declaration order — the first matching clause wins") {
     def seeded(tag: String): String = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+      val root = tempDir(s"graft-$tag").toString
       Seq((1L, 10L, 1.0), (2L, 20L, 5.0)).toDF("event_id", "user_id", "value")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
       val refs = Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
@@ -1572,7 +1528,7 @@ class LayoutSpec extends SparkSpec {
   test("MERGE INTO full sync: WHEN NOT MATCHED BY SOURCE converges the table to desired ∪ retained-stale") {
     val rows = Layout.lakeMergeSync(spark, sf).collect().sortBy(_.getAs[Long]("gen"))
     assert(rows.map(_.getAs[String]("state")).toSeq === Seq("pre_sync", "synced"))
-    val root = Layout.scratchDir("lake_merge_sync", sf)
+    val root = Scratch.root("lake_merge_sync", sf)
     val ev = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
     val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
@@ -1595,7 +1551,7 @@ class LayoutSpec extends SparkSpec {
 
   test("MERGE INTO by-source clause group: declaration order within the group, update variant keeps unset columns") {
     def seeded(tag: String): String = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+      val root = tempDir(s"graft-$tag").toString
       // targets: key 1 matched by source; keys 2,3 NOT matched
       Seq((1L, 10L, 1.0), (2L, 20L, 5.0), (3L, 30L, 9.0))
         .toDF("event_id", "user_id", "value")
@@ -1635,7 +1591,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("MERGE INTO under optimistic concurrency: a stale merge aborts, the re-merge supersedes the winner's arrival") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mergerace").toString
+    val root = tempDir("graft-mergerace").toString
     Seq((1L, 10L, 1.0), (2L, 20L, 5.0)).toDF("event_id", "user_id", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
     val g0Refs = Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
@@ -1675,7 +1631,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("MERGE INTO stacking: key-disjoint merges stack freely; a same-key re-merge over an unfolded cdelta fails loudly") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mergestack").toString
+    val root = tempDir("graft-mergestack").toString
     Seq((1L, 10L, 1.0), (2L, 20L, 5.0), (3L, 30L, 9.0))
       .toDF("event_id", "user_id", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
@@ -1713,7 +1669,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("MERGE probe key-range pruning: a narrow-key merge reads strictly fewer base files and commits the identical state") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mergeprune").toString
+    val root = tempDir("graft-mergeprune").toString
     // base laid out in key ranges — four files with disjoint event_id
     // bands, the layout a key-clustered table holds at scale
     val tgtRows = (1L to 40L).map(k => (k, k * 10L, k.toDouble))
@@ -1757,7 +1713,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("MERGE INTO rejects duplicate source keys with the published multiple-source-rows-matched error") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mergedup").toString
+    val root = tempDir("graft-mergedup").toString
     Seq((1L, 10L, 1.0), (2L, 20L, 5.0)).toDF("event_id", "user_id", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
     assert(Layout.commitNextGeneration(root,
@@ -1861,8 +1817,7 @@ class LayoutSpec extends SparkSpec {
               Some(Del): Option[RefAct])
         }
       // commit the target, run the merge
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-mergeprop$seed").toString
+      val root = tempDir(s"graft-mergeprop$seed").toString
       tgtRows.toDF("event_id", "user_id", "value")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
       assert(Layout.commitNextGeneration(root,
@@ -1921,7 +1876,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("TIMESTAMP AS OF: boundary resolution over controlled commit instants") {
-    val root = java.nio.file.Files.createTempDirectory("graft-tsasof").toString
+    val root = tempDir("graft-tsasof").toString
     (0 to 2).foreach(g =>
       Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val t0 = 1000000L
@@ -1946,7 +1901,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("TIMESTAMP AS OF composed with log expiry: expired history is not timestamp-addressable") {
-    val root = java.nio.file.Files.createTempDirectory("graft-tsexpire").toString
+    val root = tempDir("graft-tsexpire").toString
     (0 to 3).foreach(g =>
       Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val t0 = 2000000L
@@ -1972,7 +1927,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("consumer staleness bound: a dead checkpoint is overridden and reported, a fresh one floors, unregister releases") {
-    val root = java.nio.file.Files.createTempDirectory("graft-stale").toString
+    val root = tempDir("graft-stale").toString
     (0 to 3).foreach(g =>
       Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val now = java.lang.System.currentTimeMillis()

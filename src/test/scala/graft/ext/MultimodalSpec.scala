@@ -9,7 +9,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("frame-dup families: same frame signature groups; singletons dropped") {
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-framedup").toString
+    val d = tempDir("graft-framedup").toString
     // docs 0 and 2 share the exact text (same frames); 1 differs; 3 is a
     // re-encode stand-in: same sampled frames because same text length
     // pattern at sampled positions

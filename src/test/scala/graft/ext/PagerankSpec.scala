@@ -30,7 +30,7 @@ class PagerankSpec extends SparkSpec {
   test("reliable-checkpoint mode: bit-identical ranks (integer arithmetic end-to-end)") {
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 5L)).toDF("doc_a", "doc_b")
     val local = Curation.pagerankEdges(pairs).collect().map(_.toSeq)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-pr-ckpt")
+    val ckpt = tempDir("graft-pr-ckpt")
     spark.conf.set("spark.graft.checkpointDir", ckpt.toString)
     try {
       val reliable = Curation.pagerankEdges(pairs).collect().map(_.toSeq)

@@ -14,7 +14,7 @@ class PqSearchSpec extends SparkSpec {
     * assignment hits an IDENTICAL sub-centroid and reconstruction is
     * exact, making PQ search provably lossless on this corpus. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-pq").toString
+    val d = tempDir("graft-pq").toString
     val lo = Seq(Seq(1.0f, 0.0f), Seq(0.0f, 1.0f))
     val hi = Seq(Seq(1.0f, 1.0f), Seq(1.0f, 0.0f))
     (0 until 24).map { i =>

@@ -13,7 +13,7 @@ class QuantizedSimSpec extends SparkSpec {
     * x ∈ {0, 1}), so the quantized ranking must equal the full-precision
     * ranking and every hit must carry the exact-top-5 flag. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-quant").toString
+    val d = tempDir("graft-quant").toString
     // 30 binary vectors in dim 8: vector i sets bits {i%8, (i+1)%8, (i/8)%8}
     (0 until 30).map { i =>
       val bits = Set(i % 8, (i + 1) % 8, (i / 8) % 8)

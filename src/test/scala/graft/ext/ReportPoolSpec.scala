@@ -2,7 +2,6 @@ package graft.ext
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
@@ -15,7 +14,7 @@ import graft.exec.Pool
   * main-thread work or earlier await fails cancels and joins its
   * outstanding report tasks and releases its cached frames before
   * rethrowing. */
-class ReportPoolSpec extends SparkSpec with BeforeAndAfterAll {
+class ReportPoolSpec extends SparkSpec {
 
   private val staleKey = "graft.spec.stale"
 
@@ -57,12 +56,9 @@ class ReportPoolSpec extends SparkSpec with BeforeAndAfterAll {
     * shorter file would drop it from the split and read as empty), so
     * the query gets as far as caching its frames and starting its
     * report task, and every job that reads `text` then fails. */
-  private var truncatedCopy: Option[java.nio.file.Path] = None
-
   private lazy val truncatedDir: String = {
     val src = Paths.get("/root/testdata/sf0.001")
-    val d = Files.createTempDirectory("graft-truncated-sf")
-    truncatedCopy = Some(d)
+    val d = tempDir("graft-truncated-sf")
     Files.list(src).forEach(p => Files.copy(p, d.resolve(p.getFileName)))
     val docs = d.resolve("documents.parquet")
     val bytes = Files.readAllBytes(docs)
@@ -80,15 +76,6 @@ class ReportPoolSpec extends SparkSpec with BeforeAndAfterAll {
     Files.write(docs, bytes)
     d.toString
   }
-
-  /** The truncated copy lives as long as the suite. */
-  override def afterAll(): Unit =
-    try truncatedCopy.foreach { d =>
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    } finally super.afterAll()
 
   test("splitLeakage and incrementalClusters leave no cache entry or job behind when they fail") {
     val queries = Seq(

@@ -11,7 +11,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("label noise: the planted mislabel in a coherent bucket is the only suspect") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-noise").toString
+    val d = tempDir("graft-noise").toString
     // four near-identical 64-dim vectors (same hyperplane signs → same
     // bucket): labels 1,1,1,7 — the 7 must be flagged with suggested=1.
     // Two isolated vectors with disagreeing labels land in their own
@@ -161,7 +161,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("silhouette: separated clusters score a wide positive margin") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-sil").toString
+    val d = tempDir("graft-sil").toString
     // label 0 hugs e1, label 1 hugs e2 — own-centroid cosine ≈ 1, the
     // other centroid is near-orthogonal → margin close to 1
     Seq(
@@ -181,7 +181,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("silhouette: a single-label corpus has no other-centroid columns") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-sil1").toString
+    val d = tempDir("graft-sil1").toString
     Seq((0L, Seq(1f, 0f), 5L), (1L, Seq(0.9f, 0.1f), 5L))
       .toDF("vec_id", "embedding", "label")
       .write.mode(SaveMode.Overwrite).parquet(s"$d/embeddings.parquet")
@@ -194,7 +194,7 @@ class SimilaritySpec extends SparkSpec {
   test("mmr: the redundant twin loses to the diverse candidate") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-mmr").toString
+    val d = tempDir("graft-mmr").toString
     // q=v0; v1 and v2 are near-twins (sim ≈ 0.995), v3 is less relevant
     // but orthogonal in the twins' redundant direction. Plain top-2 is
     // (v1, v2); MMR must pick (v1, v3): v2's mmr = 0.7·0.792 − 0.3·0.995
@@ -244,7 +244,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-sim").toString
+    val d = tempDir("graft-sim").toString
     // 30 vectors: id 0..7 are centroid-ish axes repeated, rest mixtures
     val vecs = (0 until 30).map { i =>
       val base = Array.fill(4)(0.0f)
@@ -305,7 +305,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("materialized IVF index: build-once/search-many returns exactly the inline IVF results") {
     val dir = "/root/testdata/sf0.001"
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString + "/index"
+    val idx = tempDir("graft-ivf-idx").toString + "/index"
     Similarity.buildIvfIndex(spark, dir, idx)
     val fromIndex = Similarity.searchIvfIndex(spark, idx).collect().map(_.toSeq)
     val inline = Similarity.ivfTopK(spark, dir).collect().map(_.toSeq)
@@ -345,7 +345,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("embed norm: known per-dimension moments standardize to exact z-scores") {
-    val d = Files.createTempDirectory("graft-znorm").toString
+    val d = tempDir("graft-znorm").toString
     // dim means (2, 20), sample sds (2, 10) → z rows exactly (-1,-1),(0,0),(1,1)
     Seq(
       (0L, Array(0.0f, 10.0f), 0),

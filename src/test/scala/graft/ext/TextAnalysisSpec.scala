@@ -10,7 +10,7 @@ class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-text").toString
+    val d = tempDir("graft-text").toString
     Seq(
       (0L, "the cat and the hat", "en", "s0", 19L),
       (1L, "der hund und die katze ist da", "de", "s0", 29L),
@@ -49,7 +49,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   private lazy val boilerDir: String = {
-    val d = Files.createTempDirectory("graft-boiler").toString
+    val d = tempDir("graft-boiler").toString
     Seq(
       (0L, "click here now for cats", "en", "s0", 23L),
       (1L, "click here now for dogs", "en", "s0", 23L),
@@ -73,7 +73,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("bm25: only matching docs score; term coverage counted per doc") {
-    val d = Files.createTempDirectory("graft-bm25").toString
+    val d = tempDir("graft-bm25").toString
     Seq(
       (0L, "spark table scan fast", "en", "s0", 21L),
       (1L, "spark spark spark spark spark table", "en", "s0", 35L),
@@ -92,7 +92,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("char entropy: hand-computed bits for degenerate and uniform alphabets") {
-    val d = Files.createTempDirectory("graft-entropy").toString
+    val d = tempDir("graft-entropy").toString
     Seq(
       (0L, "aaaa", "en", "s0", 4L),  // one symbol → 0 bits
       (1L, "abab", "en", "s0", 4L),  // two equiprobable → 1 bit
@@ -108,7 +108,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("lm logprob: matches the hand-computed unigram mean") {
-    val d = Files.createTempDirectory("graft-lm").toString
+    val d = tempDir("graft-lm").toString
     Seq(
       (0L, "a a b", "en", "s0", 5L),
       (1L, "a b c", "en", "s0", 5L))
@@ -195,7 +195,7 @@ class TextAnalysisSpec extends SparkSpec {
     // unnest(NULL) yields 0 rows, so the doc_id never reaches the agg)
     // nor emit NULL metrics (Spark split(NULL)) — both sides coalesce to
     // '' and score its single empty-string unigram
-    val d = Files.createTempDirectory("graft-text-null").toString
+    val d = tempDir("graft-text-null").toString
     Seq((0L, Option("the cat and the hat"), "en", "s0", 19L),
         (1L, None: Option[String], "en", "s0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -21,7 +21,7 @@ class CosineHofRewriteSpec extends SparkSpec {
     import s2.implicits._
     // parquet-backed so ConvertToLocalRelation can't constant-fold the
     // whole projection away before the plan is observable
-    val p = java.nio.file.Files.createTempDirectory("graft-hofrw").toString
+    val p = tempDir("graft-hofrw").toString
     Seq(
       (Seq(1.0, 2.0, 3.0), Seq(3.0, 2.0, 1.0)),
       (Seq(0.5, 0.5, 0.0), Seq(0.5, 0.5, 0.0)),

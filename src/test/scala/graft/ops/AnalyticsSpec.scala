@@ -12,7 +12,7 @@ class AnalyticsSpec extends SparkSpec {
 
   /** Literal events fixture written as parquet (query contract takes a dir). */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-analytics").toString
+    val d = tempDir("graft-analytics").toString
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     Seq(
       // user 1: two sessions separated by a 2h gap
@@ -35,7 +35,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("event transitions: equal timestamps break ties by event_id, deterministically") {
-    val d = Files.createTempDirectory("graft-ties").toString
+    val d = tempDir("graft-ties").toString
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     Seq(
       (10L, ts, 7L, "signup", 0.0, "{}"),
@@ -49,7 +49,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("lateness histogram: disorder lands in the right buckets across blocks") {
-    val d = Files.createTempDirectory("graft-late").toString
+    val d = tempDir("graft-late").toString
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     // ids span multiple 1024-id blocks so the block-prefix path is live;
     // ingest order (by id) vs event time: two late arrivals, one very late
@@ -90,7 +90,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("count anomalies: only the spike above its trailing-24h baseline fires") {
-    val d = Files.createTempDirectory("graft-anom").toString
+    val d = tempDir("graft-anom").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:15:00").getTime
     // hours 0..24 alternate counts 2/4 (nonzero variance baseline);
     // hour 25 spikes to 10 — z ≈ (10-3)/1.02 ≈ 6.9, the only |z| ≥ 2
@@ -109,7 +109,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("seasonal mase: a perfectly daily-periodic series scores 0") {
-    val d = Files.createTempDirectory("graft-mase").toString
+    val d = tempDir("graft-mase").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:30:00").getTime
     // 48 hourly buckets, count 3 at hour 0 of each day, else 1 — day 2
     // repeats day 1 exactly, so every 24-lag error is 0 while the naive
@@ -160,7 +160,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("gap fill: full grid, forward-fill carries last value, leading gap stays null") {
-    val d = Files.createTempDirectory("graft-gapfill").toString
+    val d = tempDir("graft-gapfill").toString
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     Seq(
       (0L, ts("2024-01-03 00:10:00"), 1L, "x", 10.0, "{}"),
@@ -182,7 +182,7 @@ class AnalyticsSpec extends SparkSpec {
     // user 1 session [00:00, 00:10] overlaps user 2's single-event
     // session [01:00, 01:00] not at all; extend the fixture with a user 3
     // session [00:05, 00:20] that overlaps user 1's first session by 5 min
-    val d = Files.createTempDirectory("graft-overlap").toString
+    val d = tempDir("graft-overlap").toString
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     Seq(
       (0L, ts("2024-01-01 00:00:00"), 1L, "click", 1.0, "{}"),

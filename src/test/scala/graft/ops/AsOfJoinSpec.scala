@@ -11,7 +11,7 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("multi-touch: equal split in cents, remainder to the books, window excludes stale clicks") {
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-mt").toString
+    val d = tempDir("graft-mt").toString
     // purchase 100 (10.00 = 1000 cents) at day 3 noon: three clicks in
     // the prior 24 h → 333 each + 1 remainder; a 2-day-old click and a
     // later click must not count. purchase 101: no clicks at all.

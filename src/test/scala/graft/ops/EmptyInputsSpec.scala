@@ -14,7 +14,7 @@ class EmptyInputsSpec extends SparkSpec {
   /** All 10 test tables, schema-correct but 0 rows. */
   private lazy val dir: String = {
     val src = "/root/testdata/sf0.001"
-    val d = Files.createTempDirectory("graft-empty").toString
+    val d = tempDir("graft-empty").toString
     Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings").foreach { t =>
       graft.Tables.table(spark, src, t).limit(0)
@@ -368,7 +368,7 @@ class EmptyInputsSpec extends SparkSpec {
     // EMPTY — a grouped report over zero changes has zero rows
     assert(graft.ext.Layout.lakeChanges(spark, dir).count() === 0L)
     assert(graft.ext.Layout
-      .listGenerations(graft.ext.Layout.scratchDir("lake_changes", dir))
+      .listGenerations(graft.exec.Scratch.root("lake_changes", dir))
       === Seq(0, 1, 2))
     // applying an empty feed maintains nothing: zero touched users
     assert(graft.ext.Layout.cdcApply(spark, dir).count() === 0L)

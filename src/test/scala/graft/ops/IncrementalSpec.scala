@@ -20,7 +20,7 @@ class IncrementalSpec extends SparkSpec {
   test("incremental transitions: the cross-shard boundary bigram is not lost") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val d = java.nio.file.Files.createTempDirectory("graft-incrtrans").toString
+    val d = tempDir("graft-incrtrans").toString
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     // user 7's only two events straddle the 2024-01-16 cut: a naive
     // per-shard union sees NO bigram at all; the boundary join must
@@ -60,7 +60,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("refresh parity holds with a NULL-ts event (null-safe day filter keeps the NULL-day bucket)") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-incr-null").toString
+    val d = tempDir("graft-incr-null").toString
     Seq(
       (1L, Option(java.sql.Timestamp.valueOf("2024-01-03 10:00:00")), 1L, "click", 2.0, "{}"),
       (2L, Option(java.sql.Timestamp.valueOf("2024-01-04 10:00:00")), 1L, "click", 4.0, "{}"),

@@ -10,7 +10,7 @@ class ModalityCoverageSpec extends SparkSpec {
   import spark.implicits._
 
   test("holes and dangles are counted; coverage is docs-side") {
-    val d = Files.createTempDirectory("graft-modality").toString
+    val d = tempDir("graft-modality").toString
     // docs 0..3; embeddings for 1, 2, and a dangling 99
     Seq((0L, "a", "en", "s", 1L), (1L, "b", "en", "s", 1L),
       (2L, "c", "en", "s", 1L), (3L, "d", "en", "s", 1L))

@@ -135,7 +135,7 @@ class PropertiesSpec extends SparkSpec {
   test("incremental partial merge is split-invariant: any day partitioning merges to the same stats") {
     import java.nio.file.Files
     for (rows <- cases) {
-      val d = Files.createTempDirectory("graft-incr").toString
+      val d = tempDir("graft-incr").toString
       // events parquet written with ts as TIMESTAMP (Tables.events handles both)
       toDf(rows).write.mode("overwrite").parquet(s"$d/events.parquet")
       val merged = Incremental.mergedStats(spark, d).collect().map(_.toSeq)
@@ -175,7 +175,7 @@ class PropertiesSpec extends SparkSpec {
     val corpusGen = Gen.choose(2, 8).flatMap(n => Gen.listOfN(n, docGen))
     for (i <- 1 to 5) {
       val docs = corpusGen.pureApply(Gen.Parameters.default, Seed(200 + i.toLong))
-      val d = java.nio.file.Files.createTempDirectory("graft-bpe-prop").toString
+      val d = tempDir("graft-bpe-prop").toString
       docs.zipWithIndex.map { case (t, id) => (id.toLong, t, "en", "s0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$d/documents.parquet")
@@ -200,7 +200,7 @@ class PropertiesSpec extends SparkSpec {
     val caseGen = Gen.choose(5, 80).flatMap(n => Gen.listOfN(n, evGen))
     for (i <- 1 to 5) {
       val rows = caseGen.pureApply(Gen.Parameters.default, Seed(200 + i.toLong))
-      val d = java.nio.file.Files.createTempDirectory(s"graft-ptrans$i").toString
+      val d = tempDir(s"graft-ptrans$i").toString
       rows.zipWithIndex.map { case ((uid, off, tpe), id) =>
         (id.toLong,
           new Timestamp(Timestamp.valueOf("2024-01-01 00:00:00").getTime + off * 1000),
@@ -252,7 +252,7 @@ class PropertiesSpec extends SparkSpec {
       val docs = (0 until 6).map(j =>
         (j.toLong, docGen.pureApply(Gen.Parameters.default, Seed(400 + i * 10 + j.toLong)),
           "en", s"s${j % 2}", 0L))
-      val d = java.nio.file.Files.createTempDirectory(s"graft-pbpe$i").toString
+      val d = tempDir(s"graft-pbpe$i").toString
       docs.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$d/documents.parquet")
       val seg = CorpusStats.bpeSegment(spark, d).collect()

@@ -14,7 +14,7 @@ class Scd2Spec extends SparkSpec {
     * user 3 has a NULL-ts event: NULLS-FIRST ordering (Spark's asc
     * default, pinned in the oracle too) makes it version 1. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-scd2").toString
+    val d = tempDir("graft-scd2").toString
     Seq(
       (1L, Option(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")), 1L, "a", 1.0, "{}"),
       (2L, Option(java.sql.Timestamp.valueOf("2024-01-01 01:00:00")), 1L, "a", 1.0, "{}"),

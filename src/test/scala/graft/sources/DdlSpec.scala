@@ -36,7 +36,7 @@ class DdlSpec extends SparkSpec {
   }
 
   test("external table: data at an explicit LOCATION outlives DROP TABLE") {
-    val loc = java.nio.file.Files.createTempDirectory("graft-ddl-ext").toString
+    val loc = tempDir("graft-ddl-ext").toString
     val t = "graft_ddl_spec_ext"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     Ddl.createSourceTable(spark, t, Some(loc))
@@ -51,7 +51,7 @@ class DdlSpec extends SparkSpec {
   test("daily lake: MSCK discovers sink-written partitions, SHOW PARTITIONS lists them") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val lake = java.nio.file.Files.createTempDirectory("graft-ddl-lake").toString
+    val lake = tempDir("graft-ddl-lake").toString
     val t = "graft_ddl_spec_daily"
     def day(df: org.apache.spark.sql.DataFrame) = PartitionedSink.writeDaily(df, lake)
     day(Seq(
@@ -94,7 +94,7 @@ class DdlSpec extends SparkSpec {
   }
 
   test("a quoted LOCATION path cannot break out of its string literal") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ddl-q")
+    val base = tempDir("graft-ddl-q")
     // a directory name containing a single quote must arrive intact
     val loc = base.resolve("odd'name").toString
     val t = "graft_ddl_spec_quote"

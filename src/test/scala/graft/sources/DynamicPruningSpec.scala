@@ -20,7 +20,7 @@ class DynamicPruningSpec extends SparkSpec {
   private val nDays = 10
 
   private lazy val (lake, dimPath): (String, String) = {
-    val d = Files.createTempDirectory("graft-dpp").toString
+    val d = tempDir("graft-dpp").toString
     val rows = for {
       day <- 1 to nDays
       i <- 1 to 20

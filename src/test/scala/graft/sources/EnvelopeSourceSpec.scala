@@ -9,7 +9,7 @@ import graft.SparkSpec
 class EnvelopeSourceSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-envelope")
+    val d = tempDir("graft-envelope")
     // two captured daily payloads in the reference's serialization shape
     // (api/app/main.py:143-158; isoformat timestamps, count, filters)
     Files.writeString(d.resolve("day1.json"),
@@ -198,7 +198,7 @@ class EnvelopeSourceSpec extends SparkSpec {
   }
 
   test("COUNT(*) over an empty directory is 0, not NULL") {
-    val empty = Files.createTempDirectory("graft-envelope-empty").toString
+    val empty = tempDir("graft-envelope-empty").toString
     val r = spark.read.format("graft.sources.EnvelopeSource").load(empty)
       .selectExpr("count(*) as n").head()
     assert(!r.isNullAt(0) && r.getLong(0) === 0L,
@@ -244,14 +244,14 @@ class EnvelopeSourceSpec extends SparkSpec {
   }
 
   test("SUM over an empty directory is NULL") {
-    val empty = Files.createTempDirectory("graft-envelope-empty3").toString
+    val empty = tempDir("graft-envelope-empty3").toString
     val r = spark.read.format("graft.sources.EnvelopeSource").load(empty)
       .selectExpr("sum(power) as s", "count(*) as n").head()
     assert(r.isNullAt(0) && r.getLong(1) === 0L)
   }
 
   test("MIN over an empty directory is NULL, COUNT is 0") {
-    val empty = Files.createTempDirectory("graft-envelope-empty2").toString
+    val empty = tempDir("graft-envelope-empty2").toString
     val r = spark.read.format("graft.sources.EnvelopeSource").load(empty)
       .selectExpr("min(power) as mn", "count(*) as n").head()
     assert(r.isNullAt(0) && r.getLong(1) === 0L)
@@ -267,7 +267,7 @@ class EnvelopeSourceSpec extends SparkSpec {
   /** Fixture with a categorical column repeated within and across files —
     * the shape grouped partial pushdown has to merge correctly. */
   private lazy val groupedDir: String = {
-    val d = Files.createTempDirectory("graft-envelope-grp")
+    val d = tempDir("graft-envelope-grp")
     Files.writeString(d.resolve("day1.json"),
       """{"data": [
         |  {"station": "A", "power": 10.0},
@@ -332,7 +332,7 @@ class EnvelopeSourceSpec extends SparkSpec {
 
   test("TWO-key grouped pushdown: per-(file,station,day) partials merge exactly") {
     import org.apache.spark.sql.functions._
-    val d = Files.createTempDirectory("graft-envelope-grp2")
+    val d = tempDir("graft-envelope-grp2")
     Files.writeString(d.resolve("day1.json"),
       """{"data": [
         |  {"station": "A", "day": "d1", "power": 10.0},
@@ -362,7 +362,7 @@ class EnvelopeSourceSpec extends SparkSpec {
 
   test("grouped aggregate over an empty directory is empty (no sentinel row)") {
     import org.apache.spark.sql.functions._
-    val empty = Files.createTempDirectory("graft-envelope-empty-grp").toString
+    val empty = tempDir("graft-envelope-empty-grp").toString
     val df = spark.read.format("graft.sources.EnvelopeSource")
       .schema("station STRING, power DOUBLE").load(empty)
       .groupBy("station").agg(count(lit(1)))
@@ -405,7 +405,7 @@ class EnvelopeSourceSpec extends SparkSpec {
   test("streaming ingest: published envelopes arrive once; late file appends") {
     import org.apache.spark.sql.functions.col
     // fresh dir (not `dir`): the seen-file log must start empty
-    val d = Files.createTempDirectory("graft-envelope-stream")
+    val d = tempDir("graft-envelope-stream")
     Files.writeString(d.resolve("day1.json"),
       Files.readString(java.nio.file.Path.of(dir, "day1.json")))
     val q = EnvelopeSource.readStream(spark, d.toString)
@@ -459,7 +459,7 @@ class EnvelopeSourceSpec extends SparkSpec {
       } finally q.stop()
       // python isoformat() carries microseconds when nonzero — the stream
       // schema's TimestampType parse must keep them, exactly like batch
-      val md = Files.createTempDirectory("graft-envelope-micros")
+      val md = tempDir("graft-envelope-micros")
       Files.writeString(md.resolve("day.json"),
         """{"data": [{"timestamp": "2025-08-10T00:00:00.123456", "wind_speed": 1.0,
           |"power": 2.0, "ambient_temprature": 3.0}], "count": 1}""".stripMargin)
@@ -477,7 +477,7 @@ class EnvelopeSourceSpec extends SparkSpec {
   }
 
   test("V2 write: envelope round-trip, one part file per partition, no temps left") {
-    val out = Files.createTempDirectory("graft-envelope-out").toString
+    val out = tempDir("graft-envelope-out").toString
     val src = read
     src.repartition(2).write.format("graft.sources.EnvelopeSource")
       .mode("append").save(out)
@@ -493,7 +493,7 @@ class EnvelopeSourceSpec extends SparkSpec {
 
   test("second append into a non-empty directory publishes without colliding") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("graft-envelope-app2").toString
+    val out = tempDir("graft-envelope-app2").toString
     read.coalesce(1).write.format("graft.sources.EnvelopeSource")
       .mode("append").save(out)
     read.where(col("power") === 0.0).coalesce(1)
@@ -508,7 +508,7 @@ class EnvelopeSourceSpec extends SparkSpec {
 
   test("V2 overwrite truncates previous part files in the same commit") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("graft-envelope-ovr").toString
+    val out = tempDir("graft-envelope-ovr").toString
     read.write.format("graft.sources.EnvelopeSource").mode("append").save(out)
     val one = read.where(col("power") === 0.0)
     one.coalesce(1).write.format("graft.sources.EnvelopeSource")

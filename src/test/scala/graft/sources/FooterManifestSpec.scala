@@ -12,7 +12,7 @@ import graft.{SparkSpec, Tables}
   * z-clustered write path must compose with it end-to-end. */
 class FooterManifestSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft-footman").toString
+  private lazy val tmp = tempDir("graft-footman").toString
 
   test("manifest rows reproduce the data's per-file extrema and row counts") {
     val events = Tables.events(spark, "/root/testdata/sf0.001")

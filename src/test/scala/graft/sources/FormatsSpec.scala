@@ -8,7 +8,7 @@ import graft.Tables
 class FormatsSpec extends SparkSpec {
 
   private lazy val events = Tables.events(spark, "/root/testdata/sf0.001")
-  private lazy val tmp = Files.createTempDirectory("graft-formats").toString
+  private lazy val tmp = tempDir("graft-formats").toString
 
   private def assertSame(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
     assert(a.schema === b.schema)

@@ -25,7 +25,7 @@ class LocalFsSpec extends SparkSpec {
     fs.initialize(LocalUri, conf); fs
   }
 
-  private def tmp(prefix: String): java.nio.file.Path = Files.createTempDirectory(prefix)
+  private def tmp(prefix: String): java.nio.file.Path = tempDir(prefix)
 
   private def mode(p: java.nio.file.Path): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))

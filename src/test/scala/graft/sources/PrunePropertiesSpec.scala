@@ -60,7 +60,7 @@ class PrunePropertiesSpec extends SparkSpec {
   test("footer pruning is complete and sound on any frame and any box") {
     for (seed <- 1 to 5) {
       val rows = frameGen.pureApply(Gen.Parameters.default, Seed(seed.toLong))
-      val d = Files.createTempDirectory(s"graft-pruneprop$seed").toString
+      val d = tempDir(s"graft-pruneprop$seed").toString
       val df = rows.toDF("id", "u", "v")
       PartitionedSink.writeZCelled(df, d, Seq("u", "v"), bits = 12, cellBits = 3)
       val m = FooterManifest.build(spark, d, Seq("u", "v")).cache()
@@ -128,7 +128,7 @@ class PrunePropertiesSpec extends SparkSpec {
       val rows = Gen.listOfN(40, Gen.zip(sGen, Gen.choose(-100, 400).map(_ / 2.0)))
         .pureApply(Gen.Parameters.default, Seed(seed.toLong))
         .zipWithIndex.map { case ((s, v), i) => (i.toLong, s, v) }
-      val d = Files.createTempDirectory(s"graft-prunestr$seed").toString
+      val d = tempDir(s"graft-prunestr$seed").toString
       rows.toDF("id", "s", "v")
         .repartition(4, col("s"))
         .write.mode(SaveMode.Overwrite).parquet(d)

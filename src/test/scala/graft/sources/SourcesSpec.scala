@@ -42,7 +42,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compaction: many small files per day collapse to one, data intact") {
-    val out = Files.createTempDirectory("graft-compact").toString + "/fact"
+    val out = tempDir("graft-compact").toString + "/fact"
     // 5 separate appends → ≥5 files in the day-1 partition
     (1 to 5).foreach { i =>
       Seq((java.sql.Timestamp.valueOf(s"2024-01-01 0$i:00:00"), i, i.toDouble))
@@ -60,7 +60,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compaction: filesPerDay > 1 actually splits a day into multiple files") {
-    val out = Files.createTempDirectory("graft-compact-n").toString + "/fact"
+    val out = tempDir("graft-compact-n").toString + "/fact"
     // one day, 64 rows across 8 appends → 8+ micro-files
     (0 until 8).foreach { i =>
       (0 until 8).map(j =>
@@ -82,7 +82,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned sink: re-running a day replaces, not duplicates (fixes §2.8)") {
-    val out = Files.createTempDirectory("graft-sink").toString + "/fact"
+    val out = tempDir("graft-sink").toString + "/fact"
     val day1 = Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1, 1.0),
       (java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 1, 2.0))

@@ -12,7 +12,7 @@ import graft.{SparkSpec, Tables}
 class ZOrderSpec extends SparkSpec {
 
   private lazy val events = Tables.events(spark, "/root/testdata/sf0.001")
-  private lazy val tmp = Files.createTempDirectory("graft-zorder").toString
+  private lazy val tmp = tempDir("graft-zorder").toString
 
   /** Files whose [min,max] box intersects the query box — the files a
     * stats-pruning reader must open. */
@@ -149,7 +149,7 @@ class ZOrderSpec extends SparkSpec {
     // overwrite deletes everything in the target dir, a skip preserves
     // the planted file.
     val dir = "/root/testdata/sf0.001"
-    val out = new java.io.File(graft.ext.Layout.scratchDir("zorder_prune", dir))
+    val out = new java.io.File(graft.exec.Scratch.root("zorder_prune", dir))
     val r1 = graft.ext.Layout.zorderPrune(spark, dir).collect().map(_.toSeq)
     val marker = new java.io.File(out, "_graft_layout_fingerprint")
     assert(marker.isFile, "first run must leave the fingerprint marker")

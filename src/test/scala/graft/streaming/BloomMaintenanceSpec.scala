@@ -28,7 +28,7 @@ class BloomMaintenanceSpec extends SparkSpec {
 
   private def runBatches(tableDir: String,
       batches: Seq[Seq[(Long, String)]]): Unit = {
-    val ckpt = Files.createTempDirectory("graft-bloom-ckpt").toString
+    val ckpt = tempDir("graft-bloom-ckpt").toString
     implicit val ctx = spark.sqlContext
     val stream = MemoryStream[Doc]
     val q = BloomMaintenance.start(stream.toDS(), tableDir, ckpt, M, K)
@@ -41,7 +41,7 @@ class BloomMaintenanceSpec extends SparkSpec {
   }
 
   test("streamed filter == one-shot batch build after 2 micro-batches") {
-    val tableDir = Files.createTempDirectory("graft-bloom-table").toString
+    val tableDir = tempDir("graft-bloom-table").toString
     runBatches(tableDir, Seq(b1, b2))
     val got = BloomMaintenance.bits(spark, tableDir, M)
     val expected = BloomFilter.build(
@@ -52,7 +52,7 @@ class BloomMaintenanceSpec extends SparkSpec {
   }
 
   test("replayed batch is a no-op (idempotent OR)") {
-    val tableDir = Files.createTempDirectory("graft-bloom-idem").toString
+    val tableDir = tempDir("graft-bloom-idem").toString
     runBatches(tableDir, Seq(b1, b2, b2))
     val got = BloomMaintenance.bits(spark, tableDir, M)
     val expected = BloomFilter.build(
@@ -68,7 +68,7 @@ class BloomMaintenanceSpec extends SparkSpec {
     // and land bit-identical to the one-shot build. A FILE source is used
     // because its offsets (file names) survive restart; MemoryStream's
     // do not, so it cannot exercise real checkpoint recovery.
-    val base = Files.createTempDirectory("graft-bloom-restart")
+    val base = tempDir("graft-bloom-restart")
     val (inDir, tableDir, ckpt) = (s"$base/in", s"$base/table", s"$base/ckpt")
     new java.io.File(inDir).mkdirs()
     def deliver(name: String, rows: Seq[(Long, String)]): Unit = {
@@ -104,7 +104,7 @@ class BloomMaintenanceSpec extends SparkSpec {
     // behind. Readers must keep serving the last committed version, and
     // the replayed batch must fold onto it and converge to the same bits
     // as an uninterrupted run.
-    val tableDir = Files.createTempDirectory("graft-bloom-torn").toString
+    val tableDir = tempDir("graft-bloom-torn").toString
     runBatches(tableDir, Seq(b1))
     val committed = BloomMaintenance.bits(spark, tableDir, M)
     // torn write: poison content (all-ones words) so serving it would be
@@ -139,7 +139,7 @@ class BloomMaintenanceSpec extends SparkSpec {
   }
 
   test("snapshot reclamation keeps at most the latest snapshot and one predecessor") {
-    val tableDir = Files.createTempDirectory("graft-bloom-reclaim").toString
+    val tableDir = tempDir("graft-bloom-reclaim").toString
     runBatches(tableDir, Seq(b1, b2, b1.map { case (i, t) => (i + 100, t + " x") }))
     val vs = new java.io.File(tableDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("v")).map(_.getName).sorted
@@ -148,7 +148,7 @@ class BloomMaintenanceSpec extends SparkSpec {
   }
 
   test("screened admission: non-hits bypass the exact probe, output == unscreened path") {
-    val tableDir = Files.createTempDirectory("graft-bloom-twotier").toString
+    val tableDir = tempDir("graft-bloom-twotier").toString
     runBatches(tableDir, Seq(b1, b2))
     // corpus index: hashes of everything ingested EXCEPT doc 4 — so doc 4
     // is a filter hit whose exact check exonerates it (the ε-tail shape:
@@ -185,7 +185,7 @@ class BloomMaintenanceSpec extends SparkSpec {
   }
 
   test("streaming two-tier ingest: each content admitted once, fresh batches skip the probe") {
-    val base = Files.createTempDirectory("graft-bloom-ingest")
+    val base = tempDir("graft-bloom-ingest")
     val (tableDir, indexDir, admittedDir) =
       (s"$base/filter", s"$base/index", s"$base/admitted")
     // batch 1: three docs, one intra-batch content dup (doc 3 repeats
@@ -288,7 +288,7 @@ class BloomMaintenanceSpec extends SparkSpec {
   }
 
   test("ingest metrics: an empty micro-batch writes a zeros row instead of hanging") {
-    val base = Files.createTempDirectory("graft-bloom-empty")
+    val base = tempDir("graft-bloom-empty")
     val (tableDir, indexDir, admittedDir, metricsDir) =
       (s"$base/filter", s"$base/index", s"$base/admitted", s"$base/metrics")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
@@ -338,7 +338,7 @@ class BloomMaintenanceSpec extends SparkSpec {
   }
 
   test("admission screen: every ingested doc flags, fresh docs pass clean") {
-    val tableDir = Files.createTempDirectory("graft-bloom-screen").toString
+    val tableDir = tempDir("graft-bloom-screen").toString
     runBatches(tableDir, Seq(b1, b2))
     val candidates = ((b1 ++ b2) ++ Seq(
       (10L, "a genuinely new document never seen before"),

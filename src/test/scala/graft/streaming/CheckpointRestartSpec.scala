@@ -19,7 +19,7 @@ class CheckpointRestartSpec extends SparkSpec {
 
   test("restart re-reads offsets, commits and join state under checkpoint checksums") {
     assert(spark.conf.get(ChecksumConf) === "true", "checkpoint checksums must stay at their default")
-    val base = Files.createTempDirectory("graft-ckpt-restart").toString
+    val base = tempDir("graft-ckpt-restart").toString
     // install graft's filesystem the way every query does
     spark.range(1).write.parquet(s"$base/t.parquet")
     graft.Tables.table(spark, base, "t")

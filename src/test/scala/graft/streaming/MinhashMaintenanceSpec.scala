@@ -31,7 +31,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
 
   private def runBatches(tableDir: String, batches: Seq[Seq[(Long, String)]],
       buckets: Int): Unit = {
-    val ckpt = Files.createTempDirectory("graft-sig-ckpt").toString
+    val ckpt = tempDir("graft-sig-ckpt").toString
     implicit val ctx = spark.sqlContext
     val stream = MemoryStream[Doc]
     val q = MinhashMaintenance.start(stream.toDS(), tableDir, ckpt, buckets)
@@ -44,7 +44,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
   }
 
   test("streamed table == one-pass batch recompute after 3 micro-batches") {
-    val tableDir = Files.createTempDirectory("graft-sig-table").toString
+    val tableDir = tempDir("graft-sig-table").toString
     runBatches(tableDir, Seq(b1, b2, b3), buckets = 4)
     val got = sigMap(MinhashMaintenance.signatures(spark, tableDir))
     val expected = sigMap(Dedup.minhashSignaturesOf((b1 ++ b2 ++ b3).toDF("doc_id", "text")))
@@ -54,7 +54,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
   }
 
   test("re-ingesting a whole batch is a no-op (idempotent merge)") {
-    val tableDir = Files.createTempDirectory("graft-sig-idem").toString
+    val tableDir = tempDir("graft-sig-idem").toString
     runBatches(tableDir, Seq(b1, b2, b2), buckets = 4)
     val got = sigMap(MinhashMaintenance.signatures(spark, tableDir))
     val expected = sigMap(Dedup.minhashSignaturesOf((b1 ++ b2).toDF("doc_id", "text")))
@@ -63,7 +63,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
   }
 
   test("candidate loop: every final-signature LSH pair is emitted across batches") {
-    val base = Files.createTempDirectory("graft-cand")
+    val base = tempDir("graft-cand")
     val (tableDir, bandDir, pairsDir) =
       (s"$base/sigs", s"$base/bands", s"$base/pairs")
     val ckpt = s"$base/ckpt"
@@ -107,7 +107,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
     // this corpus means a signature is final on first ingest, so the
     // union of per-batch index probes must equal the one-pass batch
     // candidate set EXACTLY — supersets quantify to zero extras here.
-    val base = Files.createTempDirectory("graft-cand-corpus")
+    val base = tempDir("graft-cand-corpus")
     val (tableDir, bandDir, pairsDir, ckpt) =
       (s"$base/sigs", s"$base/bands", s"$base/pairs", s"$base/ckpt")
     val corpus = graft.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -138,14 +138,14 @@ class MinhashMaintenanceSpec extends SparkSpec {
   test("candidates() on an empty pair log reads cleanly (explicit schema)") {
     // regression (ADVICE r8): a schema-less parquet read of a pair log to
     // which no batch had emitted yet failed with "Unable to infer schema"
-    val empty = java.nio.file.Files.createTempDirectory("graft-pairs-empty").toString
+    val empty = tempDir("graft-pairs-empty").toString
     val r = MinhashMaintenance.candidates(spark, empty)
     assert(r.columns.toSeq === Seq("doc_a", "doc_b", "batch_id"))
     assert(r.count() === 0L)
   }
 
   test("re-running a batch rewrites its own pairs partition identically") {
-    val base = Files.createTempDirectory("graft-cand-idem")
+    val base = tempDir("graft-cand-idem")
     val (tableDir, bandDir) = (s"$base/sigs", s"$base/bands")
     val batch = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
                     (3L, "alpha beta gamma delta epsilon zeta eta iota"))
@@ -163,7 +163,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
   }
 
   test("band index: a batch rewrites ONLY the partitions its band rows hash into") {
-    val base = Files.createTempDirectory("graft-band-stab")
+    val base = tempDir("graft-band-stab")
     val (tableDir, bandDir) = (s"$base/sigs", s"$base/bands")
     val b1df = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
                    (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
@@ -191,7 +191,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
   }
 
   test("an empty micro-batch is a no-op for table, index, and candidates") {
-    val base = Files.createTempDirectory("graft-empty-batch")
+    val base = tempDir("graft-empty-batch")
     val (tableDir, bandDir) = (s"$base/sigs", s"$base/bands")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val pairs = MinhashMaintenance.mergeBatchWithCandidates(empty, tableDir, bandDir, 4, 8)
@@ -221,7 +221,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
         batches(rnd.nextInt(nBatches)) += d
         if (rnd.nextInt(4) == 0) batches(rnd.nextInt(nBatches)) += d
       }
-      val tableDir = Files.createTempDirectory(s"graft-sig-prop$seed").toString
+      val tableDir = tempDir(s"graft-sig-prop$seed").toString
       batches.map(_.result()).filter(_.nonEmpty).foreach { b =>
         MinhashMaintenance.mergeBatch(b.toDF("doc_id", "text"), tableDir, buckets = 4)
       }
@@ -232,7 +232,7 @@ class MinhashMaintenanceSpec extends SparkSpec {
   }
 
   test("a batch rewrites ONLY the buckets it touches") {
-    val tableDir = Files.createTempDirectory("graft-sig-bkt").toString
+    val tableDir = tempDir("graft-sig-bkt").toString
     // doc_ids 1,2,3,5 under 4 buckets land in buckets 1,2,3,1 — bucket 0
     // stays empty until doc 8 arrives
     runBatches(tableDir, Seq(b1, b2), buckets = 4)

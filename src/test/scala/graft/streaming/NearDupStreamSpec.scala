@@ -21,7 +21,7 @@ class NearDupStreamSpec extends SparkSpec {
   private val textC = "entirely different words compose this document about spark physical plans"
 
   test("per-row simhash32 is bit-identical to the batch signature aggregate") {
-    val d = java.nio.file.Files.createTempDirectory("graft-neardup").toString
+    val d = tempDir("graft-neardup").toString
     Seq((1L, textA, "en", "s0", textA.length.toLong),
         (2L, textB, "en", "s0", textB.length.toLong),
         (3L, textC, "en", "s0", textC.length.toLong),

@@ -208,7 +208,7 @@ class StreamBatchParitySpec extends SparkSpec {
       s"stream/batch ingest divergence:\n stream=$stream\n batch=$batch")
     // the streaming lineage is physically real: one staged arrival file
     // and one appended delta file per micro-batch
-    val root = graft.ext.Layout.scratchDir("lake_ingest_stream", dir)
+    val root = graft.exec.Scratch.root("lake_ingest_stream", dir)
     (0 until 3).foreach { i =>
       assert(new java.io.File(s"$root/stage/b$i.parquet").isFile,
         s"staged arrival file b$i must exist")
@@ -219,7 +219,7 @@ class StreamBatchParitySpec extends SparkSpec {
     // the two engines write generation-for-generation IDENTICAL logs
     // (round 19 — one committed-fold definition shared by both): same
     // generations, same op stamps, same per-kind reference counts
-    val broot = graft.ext.Layout.scratchDir("lake_ingest", dir)
+    val broot = graft.exec.Scratch.root("lake_ingest", dir)
     assert(graft.ext.Layout.listGenerations(root) ===
       graft.ext.Layout.listGenerations(broot))
     graft.ext.Layout.listGenerations(root).foreach { g =>

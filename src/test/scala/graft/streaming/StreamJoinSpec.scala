@@ -27,8 +27,8 @@ class StreamJoinSpec extends SparkSpec {
     assert(got.nonEmpty, "fixture must produce attribution pairs")
     // second invocation: fingerprint unchanged → no re-run (marker mtime
     // stable), same rows
-    val base = graft.ext.Layout.scratchDir("stream_join", sf)
-    val marker = new java.io.File(s"$base/_replay_fingerprint")
+    val base = graft.exec.Scratch.root("stream_join", sf)
+    val marker = new java.io.File(s"$base/_graft_layout_fingerprint")
     assert(marker.isFile)
     val mtime = marker.lastModified()
     val again = StreamJoin.streamJoinAttribution(spark, sf).collect()
@@ -58,8 +58,8 @@ class StreamJoinSpec extends SparkSpec {
     val joined = StatefulOps
       .clickConversionJoin(c, p, watermark = "1 minute", window = "60 minutes")
       .select(col("user_id"), col("click_id"), col("purchase_id"))
-    val out = Files.createTempDirectory("graft-ssj-out").toString
-    val ckpt = Files.createTempDirectory("graft-ssj-ckpt").toString
+    val out = tempDir("graft-ssj-out").toString
+    val ckpt = tempDir("graft-ssj-ckpt").toString
     val q = joined.writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(0)).start()

@@ -14,7 +14,7 @@ class StreamingSinkSpec extends SparkSpec {
 
   test("foreachBatch -> dynamic partition overwrite: replayed day rewrites, never duplicates") {
     implicit val ctx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-ssink").toString
+    val base = tempDir("graft-ssink").toString
     val out = s"$base/lake"
 
     val stream = MemoryStream[(Timestamp, Int, Double)]
