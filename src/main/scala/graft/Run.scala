@@ -17,8 +17,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *    prints the result (truncated to `limit`, default 20 rows) plus the
   *    formatted plan when GRAFT_EXPLAIN=1.
   *  - `profile` runs the named queries (default: all) `runs` times
-  *    (default 2) and prints per-run wall times, plus the post-AQE
-  *    executed plan when queries are named.
+  *    (default 2) and prints each run's wall time and the number of
+  *    Spark jobs it started, plus the post-AQE executed plan when
+  *    queries are named.
   *  - `plans` writes `.explain("formatted")` for the named queries
   *    (default: [[Bench.headline]]) to `<outDir>/<name>.txt` — the
   *    plan-shape evidence the optimization rounds commit under `plans/`.
@@ -58,22 +59,58 @@ object Run {
   private def profile(dir: String, runs: Int, names: Set[String]): Unit = withSession { spark =>
     val selected = SparkEntry.queries.filter { case (n, _) => names.isEmpty || names(n) }
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val times = (1 to runs).map { _ =>
+      val timed = (1 to runs).map { i =>
         // clear per RUN, not just per query: internal persist()s stay hot
         // across runs otherwise (cache manager keys on canonicalized
         // plans) and later runs measure cached reads, not execution
         spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
+        var secs = 0.0
+        val jobs = jobsStarted(spark, s"graft-profile-$name-$i") {
+          val t0 = System.nanoTime()
+          fn(spark, dir).count()
+          secs = (System.nanoTime() - t0) / 1e9
+        }
+        f"$secs%7.2f s $jobs%3d jobs"
       }
-      println(f"[profile] $name%-28s ${times.map(t => f"$t%7.2f").mkString(" ")}")
+      println(f"[profile] $name%-28s ${timed.mkString("  ")}")
       if (names.nonEmpty) {
         val df = fn(spark, dir)
         df.count() // materialize so AQE settles on the final plan
         println(df.queryExecution.executedPlan.toString)
       }
     }
+  }
+
+  /** Runs `body` under job group `group` and returns the number of Spark
+    * jobs it started (report-pool tasks inherit the group). A listener
+    * counts them; it is read once a one-task sentinel job run after
+    * `body` has reached it, since the listener bus delivers in order. */
+  private[graft] def jobsStarted(spark: SparkSession, group: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val sentinel = s"$group-drained"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `sentinel` => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(run: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try run finally sc.clearJobGroup()
+      }
+      inGroup(group)(body)
+      inGroup(sentinel)(sc.parallelize(Seq(0), 1).count())
+      require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"the listener bus did not deliver the job starts of $group within 60 s")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 
   private def plans(dir: String, outDir: String, names: Seq[String]): Unit = withSession { spark =>

@@ -2,7 +2,10 @@ package graft.exec
 
 import java.nio.file.{Files, LinkOption, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** The one guard for every write graft does "once per input content":
@@ -18,6 +21,13 @@ import org.apache.spark.sql.functions._
   *     left in the root; on a miss wipe the root, run the write, then
   *     write the marker — LAST, so it is the commit point: a crash or a
   *     throwing write leaves no marker and the next call rewrites.
+  *
+  * A write that stores the planned rows one-for-one takes the observed
+  * form, `materializeIfChanged(out, tag, planned, cols)(write)`: on a
+  * root with no marker (a cold root) the fingerprint's two aggregates
+  * ride the write itself through `Dataset.observe`, so the input is read
+  * once, not once for the fingerprint and again for the write. A root
+  * that has a marker computes the fingerprint first, as the plain form.
   *
   * Bump a fingerprint's tag when the write's output changes for the
   * same input (a new formula, a new file in the root): the content hash
@@ -85,13 +95,65 @@ object Scratch {
 
   /** Run `write` only when `fingerprint` differs from the marker the
     * last successful write left in `out`: wipe `out`, write, then write
-    * the marker. The OS file lock on `<out>.lock` (NEXT TO the root, so
-    * the wipe cannot delete it) serializes two JVMs sharing the path (a
-    * bench run racing `sbt test` on one fixture); the monitor covers
-    * same-process reentry, where a second `FileChannel.lock` would throw
-    * instead of blocking. */
+    * the marker. For fingerprints computed elsewhere (the fused sites,
+    * lineages whose write is not the fingerprinted rows). */
   private[graft] def materializeIfChanged(out: String, fingerprint: String)(
       write: => Unit): Unit =
+    guarded(out) { current =>
+      if (current.contains(fingerprint)) None
+      else { wipe(out); write; Some(fingerprint) }
+    }
+
+  /** [[materializeIfChanged]] for a `write` that stores `planned`'s rows
+    * one-for-one, fingerprinted over `cols` under `tag`. With a marker
+    * in `out` it is the plain form: [[fingerprint]], compare, rewrite on
+    * a miss. With none (a cold root) there is nothing to compare, so it
+    * wipes, hands `write` the planned frame with the fingerprint's
+    * aggregates observed, and builds the marker from what the write
+    * counted — the string [[fingerprint]] would have returned, without
+    * its job. `write` must run every row of the frame it is handed (a
+    * `limit` above it counts a prefix): a wrong count writes a marker
+    * the next warm call misses, which costs one rewrite. When the
+    * observation does not arrive within [[ObservedWait]] (the write
+    * never ran the observed plan) or arrives empty (AQE pruned the node
+    * over an empty input), the marker comes from a [[fingerprint]] job
+    * after the write. */
+  private[graft] def materializeIfChanged(out: String, tag: String, planned: DataFrame,
+      cols: Seq[String])(write: DataFrame => Unit): Unit = {
+    def computed = fingerprint(tag, planned.select(cols.map(col): _*))
+    guarded(out) {
+      case Some(current) =>
+        val fp = computed
+        if (current == fp) None else { wipe(out); write(planned); Some(fp) }
+      case None =>
+        val obs = Observation()
+        val (n, h) = aggregates(cols.map(col))
+        wipe(out)
+        write(planned.observe(obs, n.as("n"), h.as("h")))
+        Some(observed(tag, obs).getOrElse(computed))
+    }
+  }
+
+  /** How long a cold write's caller waits, after the write returned, for
+    * its observation: the listener bus delivers it asynchronously. */
+  private val ObservedWait = 10.seconds
+
+  /** The fingerprint `obs` counted, or None when it never completed or
+    * completed empty. */
+  private def observed(tag: String, obs: Observation): Option[String] =
+    scala.util.Try(Await.result(obs.future, ObservedWait)).toOption
+      .filter(_.length == 2)
+      .map(r => fingerprintOf(tag, r.getLong(0), r.getLong(1)))
+
+  /** The in-process monitor and the OS lock around one guarded call:
+    * `body` gets the marker's current content (None without a marker)
+    * and returns the marker to commit, or None to leave the root as it
+    * is. The OS file lock on `<out>.lock` (NEXT TO the root, so the wipe
+    * cannot delete it) serializes two JVMs sharing the path (a bench run
+    * racing `sbt test` on one fixture); the monitor covers same-process
+    * reentry, where a second `FileChannel.lock` would throw instead of
+    * blocking. */
+  private def guarded(out: String)(body: Option[String] => Option[String]): Unit =
     monitorFor(out).synchronized {
       val ch = java.nio.channels.FileChannel.open(Paths.get(s"$out.lock"),
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
@@ -100,12 +162,10 @@ object Scratch {
         try {
           val marker = Paths.get(out, Marker)
           val current = if (Files.isRegularFile(marker))
-            new String(Files.readAllBytes(marker), "UTF-8") else ""
-          if (current != fingerprint) {
-            wipe(out)
-            write
+            Some(new String(Files.readAllBytes(marker), "UTF-8")) else None
+          body(current).foreach { fp =>
             Files.createDirectories(marker.getParent)
-            Files.write(marker, fingerprint.getBytes("UTF-8"))
+            Files.write(marker, fp.getBytes("UTF-8"))
           }
         } finally lock.release()
       } finally ch.close()

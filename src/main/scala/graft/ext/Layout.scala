@@ -162,12 +162,11 @@ object Layout {
     // the per-invocation fingerprint agg rides their cache
     val planned = plannedPre.getOrElse(withFiles(spark, dir))
       .select(col("db"), col("ub"), col("file_id"))
-    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1", planned)) {
+    Scratch.materializeIfChanged(out, "v1", planned, planned.columns.toSeq) {
       // one physical file per planned file_id: hash-repartition on the
       // id puts each id wholly in one task, partitionBy splits ids to
       // dirs
-      planned
-        .repartition(col("file_id"))
+      _.repartition(col("file_id"))
         .write.mode("overwrite").partitionBy("file_id").parquet(out)
     }
     out
@@ -272,11 +271,8 @@ object Layout {
     * misses the fingerprint just like a data change would. */
   private def ensureZCelled(df: DataFrame, out: String, cellBits: Int): Unit = {
     import graft.sources.PartitionedSink
-    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1",
-      PartitionedSink.withZCell(df, LakeZCols, 12, cellBits)
-        .select(df.columns.map(col) :+ col("zcell"): _*))) {
-      PartitionedSink.writeZCelled(df, out, LakeZCols, bits = 12, cellBits = cellBits)
-    }
+    Scratch.materializeIfChanged(out, "v1", PartitionedSink.withZCell(df, LakeZCols, 12, cellBits),
+      df.columns.toSeq :+ "zcell")(PartitionedSink.writeCells(_, out, LakeZCols))
   }
 
   /** The standard box read back from the (user_id, value) footers of the
@@ -284,9 +280,7 @@ object Layout {
     * rows_scanned, rows_out). */
   private def zcelledBoxReport(spark: SparkSession, out: String): DataFrame =
     prunedStage(graft.sources.FooterManifest.build(spark, out, LakeZCols).collect(),
-      LakeNumBox, orEmpty(spark.range(0).select(col("id").as("user_id"),
-        col("id").cast("double").as("value")))(spark.read.parquet(_: _*)))
-      .report(countIn(lakeBox))
+      LakeNumBox, readEvents(spark, _)).report(countIn(lakeBox))
 
   /** The production pruning loop end-to-end on RAW event columns: write
     * a z-CELLED slice ([[graft.sources.PartitionedSink.writeZCelled]] —
@@ -341,14 +335,12 @@ object Layout {
     val planned = slice
       .withColumn("src_part", col("source"))
       .withColumn("lb", expr("n_chars div 128"))
-    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1",
-      planned.select(col("doc_id"), col("source"), col("n_chars"), col("lb")))) {
+    Scratch.materializeIfChanged(out, "v1", planned, Seq("doc_id", "source", "n_chars", "lb")) {
       // each (src_part, lb) group lands wholly in one task, and
       // partitionBy splits directories per key → exactly one file per
       // cell; `source`/`n_chars` stay DATA columns (a partitionBy-only
       // column never gets footer stats), the dir keys are duplicates
-      planned
-        .repartition(col("src_part"), col("lb"))
+      _.repartition(col("src_part"), col("lb"))
         .write.mode("overwrite").partitionBy("src_part", "lb").parquet(out)
     }
     out
@@ -532,17 +524,16 @@ object Layout {
     val outDelta = Scratch.root("delta_arrivals", dir)
     val (_, base, delta) = lakeSplit(spark, dir)
     ensureZCelled(base, outBase, cellBits = 6)
-    Scratch.materializeIfChanged(outDelta, Scratch.fingerprint("v1",
-      delta.select(col("event_id"), col("user_id"), col("value")))) {
+    Scratch.materializeIfChanged(outDelta, "v1", delta, Seq("event_id", "user_id", "value")) {
       // the delta is deliberately ONE unsorted file — the state an
       // operator is in between arrivals and the next re-cluster
-      delta.coalesce(1).write.mode("overwrite").parquet(outDelta)
+      _.coalesce(1).write.mode("overwrite").parquet(outDelta)
     }
     // the pruned base stage and the fully scanned delta side by side
     val s = prunedStage(FooterManifest.build(spark, outBase, LakeZCols).collect(),
-      LakeNumBox, orEmpty(emptyEvents(spark))(spark.read.parquet(_: _*)))
+      LakeNumBox, readEvents(spark, _))
     val rowsDelta = FooterManifest.rowCountFromFooters(spark, outDelta)
-    val deltaDf = spark.read.parquet(outDelta)
+    val deltaDf = spark.read.schema(LakeSchema).parquet(outDelta)
     s.counters()
       .select(col("files_total"), col("files_read").as("files_read_base"),
         col("rows_scanned").as("rows_scanned_base"), lit(rowsDelta).as("rows_delta"),
@@ -3847,9 +3838,8 @@ object Layout {
   def dppRead(spark: SparkSession, dir: String): DataFrame = {
     val out = Scratch.root("dpp_read", dir)
     val docs = Tables.documents(spark, dir)
-    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1",
-      docs.select(col("doc_id"), col("source"), col("lang"), col("n_chars")))) {
-      docs.withColumn("src_part", col("source"))
+    Scratch.materializeIfChanged(out, "v1", docs, Seq("doc_id", "source", "lang", "n_chars")) {
+      _.withColumn("src_part", col("source"))
         .repartition(col("src_part"))
         .write.mode("overwrite").partitionBy("src_part").parquet(out)
     }

@@ -130,14 +130,20 @@ object PartitionedSink {
   def writeZCelled(df: DataFrame, path: String, zCols: Seq[String],
       bits: Int = 12, cellBits: Int = 4): Unit = {
     require(zCols.nonEmpty && cellBits > 0 && cellBits <= bits * zCols.size)
-    withZCell(df, zCols, bits, cellBits)
+    writeCells(withZCell(df, zCols, bits, cellBits), path, zCols)
+  }
+
+  /** The write half of [[writeZCelled]] over a frame [[withZCell]]
+    * already celled (a caller that observes the celled rows on their
+    * way to the files). */
+  private[graft] def writeCells(celled: DataFrame, path: String, zCols: Seq[String]): Unit =
+    celled
       // hash-repartition on the cell key: each cell lands wholly in one
       // task, so each zcell=<id> directory holds exactly ONE part file
       .repartition(col("zcell"))
       .sortWithinPartitions("__z")
       .drop("__z" +: zCols.flatMap(c => Seq(s"__min_$c", s"__max_$c")): _*)
       .write.mode("overwrite").partitionBy("zcell").parquet(path)
-  }
 
   /** `df` + the `zcell` id [[writeZCelled]] would assign each row (and
     * the internal `__z`/bound columns) — exposed so consumers can

@@ -69,18 +69,23 @@ object StreamJoin {
     // the version bump forces one re-replay over scratch dirs that
     // predate the metrics table. The guard wipes the root (sink,
     // checkpoint and inputs) before the replay.
-    Scratch.materializeIfChanged(base, Scratch.fingerprint("v2:60min", ev)) {
+    Scratch.materializeIfChanged(base, "v2:60min", ev, ev.columns.toSeq) { observed =>
       // multi-file stream inputs: 3 files per side → 3 micro-batches per
       // source under maxFilesPerTrigger=1, so the join genuinely runs
-      // across micro-batches with buffered state, not as one batch
-      ev.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts"))
-        .repartition(3).write.parquet(s"$base/in_clicks")
-      ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-        .repartition(3).write.parquet(s"$base/in_purchases")
-      val cSchema = spark.read.parquet(s"$base/in_clicks").schema
-      val pSchema = spark.read.parquet(s"$base/in_purchases").schema
+      // across micro-batches with buffered state, not as one batch. The
+      // clicks write runs every input row through the observed frame
+      // (the filter sits above the observation), so it alone completes
+      // the fingerprint.
+      def slice(kind: String, id: String): org.apache.spark.sql.types.StructType = {
+        val rows = observed.where(col("event_type") === kind)
+          .select(col("event_id").as(id), col("user_id"), col("ts"))
+        rows.repartition(3).write.parquet(s"$base/in_${kind}s")
+        // the schema a parquet read of the slice reports: every field
+        // nullable — no inference job over the files just written
+        org.apache.spark.sql.types.StructType(rows.schema.map(_.copy(nullable = true)))
+      }
+      val cSchema = slice("click", "click_id")
+      val pSchema = slice("purchase", "purchase_id")
       val c = spark.readStream.schema(cSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$base/in_clicks")
         .select(col("click_id"), col("user_id"), col("ts").as("click_ts"))
@@ -92,35 +97,25 @@ object StreamJoin {
       val joined = StatefulOps
         .clickConversionJoin(c, pr, watermark = "40 days", window = "60 minutes")
         .select(col("user_id"), col("click_id"), col("purchase_id"))
-      // recentProgress is a ring buffer capped at
-      // spark.sql.streaming.numRecentProgressUpdates (default 100): a
-      // replay with more micro-batches than the cap would silently
-      // truncate the per-batch state metrics below to peak-of-last-100
-      // (ADVICE r14). Raise the cap for the replay's query and VERIFY
-      // nothing rolled off — the require turns a future fixture change
-      // that outgrows the cap into a loud failure, never a wrong metric.
-      val progressCap = 10000
-      val prevCap = spark.conf.getOption("spark.sql.streaming.numRecentProgressUpdates")
-      spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", progressCap.toString)
-      val q = try {
-        val q0 = joined.writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      } finally prevCap match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", v)
-        case None => spark.conf.unset("spark.sql.streaming.numRecentProgressUpdates")
-      }
-      // Spark trims the buffer to AT MOST cap−1 entries (addNewProgress
-      // dequeues while length >= retention), so a buffer at cap−1 may
-      // already have lost its head — the guard must reject cap−1, not
-      // cap (round-15 review: `< progressCap` could never fail)
-      require(q.recentProgress.length < progressCap - 1,
+      val q = joined.writeStream.format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // recentProgress is a ring buffer Spark trims to AT MOST
+      // retention−1 entries (addNewProgress dequeues while length >=
+      // spark.sql.streaming.numRecentProgressUpdates, default 100), so a
+      // buffer at retention−1 may already have lost its head and the
+      // per-batch state metrics below would read peak-of-the-rest. The
+      // replay stays far below it by construction: 3 files per side
+      // under maxFilesPerTrigger=1 is at most 3 data batches plus one
+      // no-data batch. The require turns a fixture change that outgrows
+      // the retention into a loud failure, never a wrong metric.
+      val retention = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates").toInt
+      require(q.recentProgress.length < retention - 1,
         s"stream-join replay retained ${q.recentProgress.length} progress entries — " +
-          s"at the $progressCap cap the state metrics would be silently truncated")
+          s"at the retention of $retention the state metrics would be silently truncated")
       // persist the symmetric join's state-store metrics so eviction
       // behavior is REGISTRY-visible, not spec-only (VERDICT r13 task
       // 7): per micro-batch, total buffered state rows from the

@@ -2,13 +2,15 @@ package graft.exec
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Run, SparkEntry, SparkSpec}
 
 /** The scratch-materialization guard: root naming, the wipe before a
-  * guarded write, the marker as commit point, same-root contention, and
-  * the fingerprint string every marker already on disk holds. */
+  * guarded write, the marker as commit point, same-root contention, the
+  * fingerprint string every marker already on disk holds, and the
+  * observed form whose cold write counts the fingerprint itself. */
 class ScratchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -116,5 +118,108 @@ class ScratchSpec extends SparkSpec {
     attempt("fp-race-2")
     assert(writes.get() === 2)
     assert(readBack(s"$root/data.txt") === "fp-race-2")
+  }
+
+  /** 1,000 parquet-backed rows: (id, s, v), `s` null on every 7th. */
+  private lazy val thousand: DataFrame = {
+    val p = tempDir("graft-scratch-src").toString + "/rows"
+    spark.range(1000).select(col("id"),
+      when(col("id") % 7 =!= 0, concat(lit("s"), col("id").cast("string"))).as("s"),
+      (col("id") * 0.5).as("v")).write.parquet(p)
+    spark.read.parquet(p)
+  }
+
+  private def mtime(p: String): Long = Files.getLastModifiedTime(Paths.get(p)).toMillis
+
+  test("a cold observed write leaves the marker Scratch.fingerprint writes, and the next call is a hit") {
+    val root = tempDir("graft-scratch-observed").toString + "/mat"
+    val cols = Seq("id", "s")
+    var writes = 0
+    def call(): Unit = Scratch.materializeIfChanged(root, "v1", thousand, cols) { df =>
+      writes += 1
+      df.write.parquet(s"$root/data")
+    }
+    call()
+    val fp = Scratch.fingerprint("v1", thousand.select(cols.map(col): _*))
+    assert(fp.startsWith("v1:1000:"))
+    assert(readBack(s"$root/${Scratch.Marker}") === fp)
+    assert(spark.read.parquet(s"$root/data").count() === 1000L)
+    val stamp = mtime(s"$root/${Scratch.Marker}")
+    Thread.sleep(20)
+    call()
+    assert(writes === 1, "a warm call with an unchanged input does not write")
+    assert(mtime(s"$root/${Scratch.Marker}") === stamp, "a hit leaves the marker untouched")
+    // the warm path still rewrites on a miss
+    Scratch.materializeIfChanged(root, "v2", thousand, cols) { df =>
+      writes += 1
+      df.write.parquet(s"$root/data")
+    }
+    assert(writes === 2)
+    assert(readBack(s"$root/${Scratch.Marker}") === fp.replaceFirst("^v1:", "v2:"))
+  }
+
+  test("a cold write that splits the observed frame across two writes counts every row once") {
+    val root = tempDir("graft-scratch-split").toString + "/mat"
+    Scratch.materializeIfChanged(root, "v1", thousand, thousand.columns.toSeq) { df =>
+      df.where(col("id") % 2 === 0).write.parquet(s"$root/even")
+      df.where(col("id") % 2 =!= 0).write.parquet(s"$root/odd")
+    }
+    assert(readBack(s"$root/${Scratch.Marker}") === Scratch.fingerprint("v1", thousand))
+  }
+
+  test("cold writes the observation cannot count fall back to the fingerprint job") {
+    val empty = tempDir("graft-scratch-empty").toString + "/none"
+    spark.range(0).select(col("id")).write.parquet(empty)
+    val cases = Seq(
+      "an empty planned frame" -> ((thousand.where(lit(false)), identity[DataFrame] _)),
+      // AQE sees the empty build side at run time and prunes the plan,
+      // the observation with it
+      "an AQE-emptied input" ->
+        ((thousand.join(spark.read.parquet(empty), Seq("id")), identity[DataFrame] _)),
+      // the observed plan never runs: the wait times out
+      "a write that never reads its frame" ->
+        ((thousand, (_: DataFrame) => spark.range(3).toDF())))
+    for ((name, (planned, written)) <- cases) {
+      val root = tempDir("graft-scratch-fallback").toString + "/mat"
+      Scratch.materializeIfChanged(root, "v1", planned, planned.columns.toSeq) { df =>
+        written(df).write.parquet(s"$root/data")
+      }
+      assert(readBack(s"$root/${Scratch.Marker}") === Scratch.fingerprint("v1", planned), name)
+    }
+  }
+
+  test("an observed write that throws leaves no marker, and the next call rewrites") {
+    val root = tempDir("graft-scratch-observed-fail").toString + "/mat"
+    val e = intercept[IllegalStateException] {
+      Scratch.materializeIfChanged(root, "v1", thousand, Seq("id")) { df =>
+        df.write.parquet(s"$root/data")
+        throw new IllegalStateException("write failed")
+      }
+    }
+    assert(e.getMessage === "write failed")
+    assert(!Files.exists(Paths.get(root, Scratch.Marker)), "no marker after a failed write")
+    var writes = 0
+    Scratch.materializeIfChanged(root, "v1", thousand, Seq("id")) { df =>
+      writes += 1
+      df.write.parquet(s"$root/data")
+    }
+    assert(writes === 1)
+    assert(readBack(s"$root/${Scratch.Marker}") ===
+      Scratch.fingerprint("v1", thousand.select(col("id"))))
+  }
+
+  test("a cold x_delta_fold or x_stream_join build starts no fingerprint job of its own") {
+    // a fresh copy of sf0.001: every scratch root keyed on it is cold
+    val dir = tempDir("graft-scratch-cold-sf")
+    val src = Paths.get("/root/testdata/sf0.001")
+    Files.list(src).forEach(p => Files.copy(p, dir.resolve(p.getFileName)))
+    def buildJobs(name: String): Int = Run.jobsStarted(spark, s"graft-spec-$name") {
+      SparkEntry.queries(name)(spark, dir.toString)
+    }
+    // with a separate fingerprint pass and parquet schema inference over
+    // the files just written, the cold builds took 12 (fold) and 9 (join)
+    // jobs on this fixture
+    assert(buildJobs("x_delta_fold") <= 7)
+    assert(buildJobs("x_stream_join") <= 5)
   }
 }

@@ -52,10 +52,16 @@ class SessionSpec extends SparkSpec {
       p <- owned if text.contains(p)
     } yield s"$f: $p"
     assert(offenders.isEmpty, offenders.mkString("\n"))
-    // dynamic partition overwrite is a per-write option, never a
+    // dynamic partition overwrite is a per-write option and the stream
+    // join's progress retention the session default, never a
     // session-wide conf window other threads can see
-    val confWindows = sources.filter(f => Files.readString(f)
-      .contains("conf.set(\"spark.sql.sources.partitionOverwriteMode\""))
+    val windowed = Seq("spark.sql.sources.partitionOverwriteMode",
+      "spark.sql.streaming.numRecentProgressUpdates")
+    val confWindows = for {
+      f <- sources
+      text = Files.readString(f)
+      k <- windowed if text.contains(s"conf.set(\"$k\"")
+    } yield s"$f: $k"
     assert(confWindows.isEmpty, confWindows.mkString("\n"))
   }
 
