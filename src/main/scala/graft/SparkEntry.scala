@@ -14,18 +14,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.SensorPipeline.pipelineLong(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every registered query, each module listed once: one entry per
+    * implemented operator from SURVEY.md §2. */
+  lazy val registry: Seq[Query] = Seq(
+    ops.SensorPipeline.queries, ops.Relational.queries, ops.Olap.queries, ops.DecisionSupport.queries,
+    ops.Incremental.queries, ops.Analytics.queries, ops.AsOfJoin.queries, ops.Skew.queries,
+    ops.QualityChecks.queries, ops.SqlSurface.queries, ext.TextAnalysis.queries, ext.Curation.queries,
+    ext.Dedup.queries, ext.Similarity.queries, ext.Multimodal.queries, ext.CorpusStats.queries,
+    ext.Linkage.queries, ext.Redaction.queries, ext.BloomPrune.queries, ext.Layout.queries,
+    sources.BucketedTables.queries, streaming.IngestReplay.queries, streaming.StreamJoin.queries,
+    streaming.LakeIngestStream.queries, streaming.LakeCdfStream.queries).flatten
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.SensorPipeline.queries ++ ops.Relational.queries ++ ops.Olap.queries ++ ops.DecisionSupport.queries ++ ops.Incremental.queries ++
-      ops.Analytics.queries ++ ops.AsOfJoin.queries ++ ops.Skew.queries ++ ops.QualityChecks.queries ++ ops.SqlSurface.queries ++ ext.TextAnalysis.queries ++
-      ext.Curation.queries ++ ext.Dedup.queries ++ ext.Similarity.queries ++ ext.Multimodal.queries ++ ext.CorpusStats.queries ++ ext.Linkage.queries ++ ext.Redaction.queries ++
-      ext.BloomPrune.queries ++ ext.Layout.queries ++ sources.BucketedTables.queries ++ streaming.IngestReplay.queries ++ streaming.StreamJoin.queries ++ streaming.LakeIngestStream.queries ++ streaming.LakeCdfStream.queries
+    registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    ops.SensorPipeline.oracles ++ ops.Relational.oracles ++ ops.Olap.oracles ++ ops.DecisionSupport.oracles ++ ops.Incremental.oracles ++
-      ops.Analytics.oracles ++ ops.AsOfJoin.oracles ++ ops.Skew.oracles ++ ops.QualityChecks.oracles ++ ops.SqlSurface.oracles ++ ext.TextAnalysis.oracles ++
-      ext.Curation.oracles ++ ext.Dedup.oracles ++ ext.Similarity.oracles ++ ext.Multimodal.oracles ++ ext.CorpusStats.oracles ++ ext.Linkage.oracles ++ ext.Redaction.oracles ++
-      ext.BloomPrune.oracles ++ ext.Layout.oracles ++ sources.BucketedTables.oracles ++ streaming.IngestReplay.oracles ++ streaming.StreamJoin.oracles ++ streaming.LakeIngestStream.oracles ++ streaming.LakeCdfStream.oracles
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

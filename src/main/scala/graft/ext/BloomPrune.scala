@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.BloomFilter
 
 /** Bloom-pruned n-gram decontamination — the semi-join-reduction shape for
@@ -69,14 +69,10 @@ object BloomPrune {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_decontaminate_bloom" -> (decontaminateBloom _)
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // The oracle IS the exact semi-join — the Bloom stage must be
     // invisible to it (no false negatives, FPs killed by the verify join).
-    "x_decontaminate_bloom" ->
+    Query("x_decontaminate_bloom", decontaminateBloom _,
       """WITH grams AS (
         |  SELECT doc_id, g FROM (
         |    SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(w) - 3),
@@ -87,6 +83,6 @@ object BloomPrune {
         |SELECT doc_id, count(*) AS n_hits
         |FROM grams JOIN bench USING (g)
         |WHERE doc_id % 37 <> 0
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)
   )
 }

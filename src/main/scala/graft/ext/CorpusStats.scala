@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.ops.StableStats.{stableRound, stableRoundSql}
 
 /** Corpus-census statistics for a training-data pipeline over
@@ -611,24 +611,8 @@ object CorpusStats {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_vocab_coverage" -> ((s, d) => vocabCoverage(s, d)),
-    "x_psi_drift" -> ((s, d) => psiDrift(s, d)),
-    "x_corpus_datasheet" -> (datasheet _),
-    "x_bpe_merges" -> ((s, d) => bpeMerges(s, d)),
-    "x_bpe_segment" -> ((s, d) => bpeSegment(s, d)),
-    "x_quality_drift" -> (qualityDrift _),
-    "x_incr_novelty" -> (incrNovelty _),
-    "x_cms_topk"     -> ((s, d) => cmsTopTerms(s, d)),
-    "x_kmv_distinct" -> ((s, d) => kmvDistinct(s, d)),
-    "x_corpus_zipf" -> ((s, d) => zipfFit(s, d)),
-    "x_source_kl"   -> (sourceKl _),
-    "x_ngram_novelty" -> ((s, d) => ngramNovelty(s, d)),
-    "x_word_pmi"    -> ((s, d) => pmiCollocations(s, d))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x_psi_drift" -> {
+  val queries: Seq[Query] = Seq(
+    Query("x_psi_drift", (s, d) => psiDrift(s, d), {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH docs AS (
          |  SELECT source, doc_id, least(9, length(text) // 64) AS bucket FROM documents),
@@ -660,8 +644,8 @@ object CorpusStats {
          |  FROM piv)
          |SELECT source, ${stableRoundSql("CAST(sum(units) AS DOUBLE) / 1e9", 6)} AS psi
          |FROM u GROUP BY source ORDER BY source""".stripMargin
-    },
-    "x_vocab_coverage" -> {
+    }),
+    Query("x_vocab_coverage", (s, d) => vocabCoverage(s, d), {
       import graft.ops.StableStats.ratioSql
       s"""WITH toks AS (
          |  SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents),
@@ -680,8 +664,8 @@ object CorpusStats {
          |  ${ratioSql("coalesce(sum(CASE WHEN in_vocab IS NULL THEN 1 ELSE 0 END), 0)",
                        "count(*)")} AS oov_rate
          |FROM j GROUP BY source ORDER BY source""".stripMargin
-    },
-    "x_corpus_datasheet" -> {
+    }),
+    Query("x_corpus_datasheet", datasheet _, {
       import graft.ops.StableStats.ratioSql
       s"""WITH d AS (
          |  SELECT source, lang, text,
@@ -705,10 +689,10 @@ object CorpusStats {
          |  top_lang,
          |  ${ratioSql("nl", "n_docs")} AS top_lang_share
          |FROM base JOIN top USING (source) ORDER BY source""".stripMargin
-    },
-    "x_bpe_merges" -> bpeOracle(3),
-    "x_bpe_segment" -> bpeSegmentOracle(3),
-    "x_quality_drift" ->
+    }),
+    Query("x_bpe_merges", (s, d) => bpeMerges(s, d), bpeOracle(3)),
+    Query("x_bpe_segment", (s, d) => bpeSegment(s, d), bpeSegmentOracle(3)),
+    Query("x_quality_drift", qualityDrift _,
       s"""WITH q AS (${TextAnalysis.qualityScoreSql}),
          |j AS (SELECT q.doc_id, q.quality_score, d.source
          |  FROM q JOIN documents d ON d.doc_id = q.doc_id)
@@ -717,8 +701,8 @@ object CorpusStats {
              "CAST(sum(CAST(round(quality_score * 1e4) AS BIGINT)) AS DOUBLE) / count(*) / 1e4", 4)} AS mean_quality,
          |  ${stableRoundSql("regr_slope(quality_score, doc_id) * 1000", 4)} AS slope_per_1k,
          |  ${stableRoundSql("regr_r2(quality_score, doc_id)", 4)} AS r2
-         |FROM j GROUP BY source ORDER BY source""".stripMargin,
-    "x_incr_novelty" ->
+         |FROM j GROUP BY source ORDER BY source""".stripMargin),
+    Query("x_incr_novelty", incrNovelty _,
       s"""WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
          |  WHERE len(string_split(text, ' ')) >= 3),
          |sh AS (SELECT DISTINCT doc_id, source, unnest(list_transform(
@@ -736,8 +720,8 @@ object CorpusStats {
          |  CAST(coalesce(novel_ngrams, 0) AS BIGINT) AS novel_ngrams,
          |  ${stableRoundSql("CAST(coalesce(novel_ngrams, 0) AS DOUBLE) / delta_ngrams", 4)} AS novelty
          |FROM per LEFT JOIN nov ON per.source = nov.source
-         |ORDER BY per.source""".stripMargin,
-    "x_ngram_novelty" ->
+         |ORDER BY per.source""".stripMargin),
+    Query("x_ngram_novelty", (s, d) => ngramNovelty(s, d),
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
          |  WHERE len(string_split(text, ' ')) >= 3),
          |sh AS (SELECT DISTINCT doc_id, unnest(list_transform(
@@ -752,8 +736,8 @@ object CorpusStats {
          |  CAST(sum(n_ngrams) AS BIGINT) AS total_ngrams,
          |  CAST(sum(n_novel) AS BIGINT) AS novel_ngrams,
          |  ${stableRoundSql("CAST(sum(n_novel) AS DOUBLE) / CAST(sum(n_ngrams) AS BIGINT)", 4)} AS novelty
-         |FROM pd GROUP BY 1 ORDER BY 1""".stripMargin,
-    "x_cms_topk" ->
+         |FROM pd GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("x_cms_topk", (s, d) => cmsTopTerms(s, d),
       """WITH toks AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         |exact AS (SELECT tok, count(*) AS freq FROM toks GROUP BY 1),
         |b AS (SELECT tok, freq, j,
@@ -764,8 +748,8 @@ object CorpusStats {
         |  FROM b JOIN cells USING (j, bucket) GROUP BY 1, 2)
         |SELECT tok, CAST(freq AS BIGINT) AS freq, CAST(est AS BIGINT) AS est,
         |  CAST(est - freq AS BIGINT) AS overcount
-        |FROM est ORDER BY freq DESC, tok ASC LIMIT 20""".stripMargin,
-    "x_kmv_distinct" ->
+        |FROM est ORDER BY freq DESC, tok ASC LIMIT 20""".stripMargin),
+    Query("x_kmv_distinct", (s, d) => kmvDistinct(s, d),
       s"""WITH w AS (SELECT source, string_split(text, ' ') AS w FROM documents
          |  WHERE len(string_split(text, ' ')) >= 3),
          |sh AS (SELECT DISTINCT source, unnest(list_transform(
@@ -782,8 +766,8 @@ object CorpusStats {
          |  ${stableRoundSql(
              "abs(coalesce(63.0 / rk, CAST(n_exact AS DOUBLE)) - n_exact) / n_exact", 4)} AS rel_err
          |FROM ex LEFT JOIN kth ON ex.source = kth.source
-         |ORDER BY ex.source""".stripMargin,
-    "x_corpus_zipf" ->
+         |ORDER BY ex.source""".stripMargin),
+    Query("x_corpus_zipf", (s, d) => zipfFit(s, d),
       s"""WITH c AS (SELECT tok, count(*) AS freq FROM (
          |    SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
          |  GROUP BY 1),
@@ -795,8 +779,8 @@ object CorpusStats {
          |  ${stableRoundSql("regr_slope(ln(freq), ln(rank))", 4)} AS slope,
          |  ${stableRoundSql("regr_intercept(ln(freq), ln(rank))", 4)} AS intercept,
          |  ${stableRoundSql("regr_r2(ln(freq), ln(rank))", 4)} AS r2 FROM top)
-         |SELECT n_types, n_tokens, slope, intercept, r2 FROM t CROSS JOIN fit""".stripMargin,
-    "x_source_kl" ->
+         |SELECT n_types, n_tokens, slope, intercept, r2 FROM t CROSS JOIN fit""".stripMargin),
+    Query("x_source_kl", sourceKl _,
       s"""WITH sw AS (SELECT source, tok, count(*) AS c_sw FROM (
          |    SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents)
          |  GROUP BY 1, 2),
@@ -813,8 +797,8 @@ object CorpusStats {
              "sum((CAST(c_sw + 1 AS DOUBLE) / (n_s + v)) * " +
                "ln((CAST(c_sw + 1 AS DOUBLE) / (n_s + v)) / " +
                "(CAST(c_w + 1 AS DOUBLE) / (n + v))))", 6)} AS kl_nat
-         |FROM grid GROUP BY source ORDER BY source""".stripMargin,
-    "x_word_pmi" ->
+         |FROM grid GROUP BY source ORDER BY source""".stripMargin),
+    Query("x_word_pmi", (s, d) => pmiCollocations(s, d),
       s"""WITH d AS (SELECT string_split(text, ' ') AS w FROM documents
          |  WHERE len(string_split(text, ' ')) >= 2),
          |bg AS (SELECT unnest(list_transform(generate_series(1, len(w) - 1),
@@ -830,6 +814,6 @@ object CorpusStats {
          |  FROM bc JOIN uc u1 ON u1.tok = bc.w1 JOIN uc u2 ON u2.tok = bc.w2
          |  CROSS JOIN tot WHERE bc.n >= 5)
          |SELECT w1, w2, CAST(n AS BIGINT) AS n, pmi FROM scored
-         |ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT 20""".stripMargin
+         |ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT 20""".stripMargin)
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.exec.{Cut, Pool}
 
 /** Dataset-curation operators for a training-data pipeline: deterministic
@@ -1549,49 +1549,13 @@ object Curation {
       |         al.langs_left - 1
       |  FROM alloc al JOIN ord o ON o.rn = al.rn + 1)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_unimax_sample"     -> ((s: SparkSession, d: String) => unimaxSample(s, d)),
-    "x_unimax_alloc"      -> (unimaxAlloc _),
-    "x_snapshot_diff"     -> (snapshotDiff _),
-    "x_weighted_sample"   -> ((s: SparkSession, d: String) => weightedSample(s, d)),
-    "x_curriculum"        -> (curriculumOrder _),
-    "x_pareto_front"      -> ((s: SparkSession, d: String) => paretoFront(s, d)),
-    "x_token_budget"      -> ((s: SparkSession, d: String) => tokenBudget(s, d)),
-    "x_triangle_sim"      -> (triangleSim _),
-    "x_pagerank_sim"      -> (pagerankSim _),
-    "x_dedup_spans"       -> (spanDedup _),
-    "x_domain_mix"        -> (domainMix _),
-    "x_neyman_alloc"      -> ((s: SparkSession, d: String) => neymanAllocation(s, d)),
-    "x_mix_temperature"   -> ((s: SparkSession, d: String) => temperatureMix(s, d)),
-    "x_mix_temp_sample"   -> (temperatureSample _),
-    "x_dsir_weights"      -> ((s: SparkSession, d: String) => dsirWeights(s, d)),
-    "x_len_buckets"       -> ((s: SparkSession, d: String) => lengthBuckets(s, d)),
-    "x_winsorize"         -> (winsorize _),
-    "x_dedup_keep_best"   -> (keepBest _),
-    "x_decontaminate"     -> (decontaminate _),
-    "x_decontaminate_spans" -> (spanDecontaminate _),
-    "x_decontaminate_sem" -> (semDecontaminate _),
-    "x_pack_shards"       -> ((s: SparkSession, d: String) => packShards(s, d)),
-    "x_split_assign"      -> (splitAssign _),
-    "x_cluster_split"     -> (clusterSplitAssign _),
-    "x_split_leakage"     -> (splitLeakage _),
-    "x_curation_e2e"      -> (curationPipeline _),
-    "x_stratified_sample" -> (stratifiedSample _),
-    "x_dup_clusters"      -> (dupClusters _),
-    "x_incr_clusters"     -> (incrementalClusters _),
-    "x_outliers"          -> (outliers _),
-    "x_outliers_mad"      -> (madOutliers _),
-    "x_top_terms"         -> (topTerms _),
-    "x_pack_bins"         -> ((s: SparkSession, d: String) => packBins(s, d))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x_unimax_alloc" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_unimax_alloc", unimaxAlloc _,
       s"""WITH RECURSIVE $unimaxAllocCte
          |SELECT lang, toks, a AS alloc_chars,
          |  floor(CAST(a AS DOUBLE) / toks * 1e4 + 5e-1) / 1e4 AS epochs
-         |FROM alloc WHERE rn > 0 ORDER BY lang""".stripMargin,
-    "x_unimax_sample" ->
+         |FROM alloc WHERE rn > 0 ORDER BY lang""".stripMargin),
+    Query("x_unimax_sample", (s: SparkSession, d: String) => unimaxSample(s, d),
       s"""WITH RECURSIVE $unimaxAllocCte,
          |a2 AS (SELECT lang, a AS alloc_chars FROM alloc WHERE rn > 0),
          |copies AS (
@@ -1615,8 +1579,8 @@ object Curation {
          |  CASE WHEN a2.alloc_chars = 0 THEN 0e0
          |    ELSE ${graft.ops.StableStats.ratioSql(
                   "coalesce(chars_kept, 0)", "a2.alloc_chars")} END AS fill_rate
-         |FROM a2 LEFT JOIN agg USING (lang) ORDER BY lang""".stripMargin,
-    "x_neyman_alloc" -> {
+         |FROM a2 LEFT JOIN agg USING (lang) ORDER BY lang""".stripMargin),
+    Query("x_neyman_alloc", (s: SparkSession, d: String) => neymanAllocation(s, d), {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH stats AS (
          |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1640,8 +1604,8 @@ object Curation {
          |  CAST((1000 * w_units) // w_total AS BIGINT) AS alloc_neyman,
          |  CAST((1000 * n_docs) // n_total AS BIGINT) AS alloc_proportional
          |FROM w, t ORDER BY source""".stripMargin
-    },
-    "x_weighted_sample" -> {
+    }),
+    Query("x_weighted_sample", (s: SparkSession, d: String) => weightedSample(s, d), {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH u AS (SELECT source, doc_id, n_chars,
          |    ('0x' || substr(md5('wsamp|' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
@@ -1654,8 +1618,8 @@ object Curation {
          |  FROM keyed)
          |SELECT source, CAST(rn AS INTEGER) AS rn, doc_id, n_chars, es_key
          |FROM r WHERE rn <= 3 ORDER BY source, rn""".stripMargin
-    },
-    "x_snapshot_diff" ->
+    }),
+    Query("x_snapshot_diff", snapshotDiff _,
       """WITH old AS (SELECT doc_id, text, source FROM documents),
         |survived AS (SELECT doc_id,
         |    CASE WHEN doc_id % 7 = 0 THEN text || ' rev2' ELSE text END AS text, source
@@ -1674,16 +1638,16 @@ object Curation {
         |  CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
         |  CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
         |  CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "x_curriculum" ->
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("x_curriculum", curriculumOrder _,
       s"""WITH q AS (${TextAnalysis.qualityScoreSql}),
          |b AS (SELECT doc_id,  quality_score,
          |  CAST(least(3, floor(quality_score * 4)) AS INTEGER) AS band FROM q),
          |r AS (SELECT doc_id, band, row_number() OVER (
          |    PARTITION BY band ORDER BY quality_score DESC, doc_id ASC) AS rn FROM b)
          |SELECT doc_id, band, CAST((rn - 1) * 4 + band AS BIGINT) AS position
-         |FROM r ORDER BY position""".stripMargin,
-    "x_token_budget" -> {
+         |FROM r ORDER BY position""".stripMargin),
+    Query("x_token_budget", (s: SparkSession, d: String) => tokenBudget(s, d), {
       import graft.ops.StableStats.stableRoundSql
       val score = stableRoundSql(
         "least(1e0, CAST(len(w) AS DOUBLE) / 1e2)" +
@@ -1696,8 +1660,8 @@ object Curation {
          |    ORDER BY coalesce(quality_score, 0) DESC, doc_id ROWS UNBOUNDED PRECEDING) AS cum_tokens FROM q)
          |SELECT doc_id, source, n_words, quality_score, CAST(cum_tokens AS BIGINT) AS cum_tokens
          |FROM r WHERE cum_tokens <= 800 ORDER BY doc_id""".stripMargin
-    },
-    "x_pareto_front" -> {
+    }),
+    Query("x_pareto_front", (s: SparkSession, d: String) => paretoFront(s, d), {
       import graft.ops.StableStats.stableRoundSql
       val score = stableRoundSql(
         "least(1e0, CAST(len(w) AS DOUBLE) / 1e2)" +
@@ -1710,9 +1674,9 @@ object Curation {
          |  WHERE b.n_words >= a.n_words AND b.quality_score >= a.quality_score
          |    AND (b.n_words > a.n_words OR b.quality_score > a.quality_score))
          |ORDER BY doc_id""".stripMargin
-    },
-    "x_triangle_sim" -> {
-      val pairsSql = Dedup.oracles("x_dedup_minhash_lsh")
+    }),
+    Query("x_triangle_sim", triangleSim _, {
+      val pairsSql = Query.oracleOf(Dedup.queries, "x_dedup_minhash_lsh")
         .replaceAll("ORDER BY doc_a, doc_b$", "")
       // canonical a<b edges make (a<b<c) enumerable by one join chain;
       // per-node participation is orientation-invariant, so the engine's
@@ -1726,9 +1690,9 @@ object Curation {
          |  UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri)
          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
          |FROM nodes GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    "x_pagerank_sim" -> {
-      val pairsSql = Dedup.oracles("x_dedup_minhash_lsh")
+    }),
+    Query("x_pagerank_sim", pagerankSim _, {
+      val pairsSql = Query.oracleOf(Dedup.queries, "x_dedup_minhash_lsh")
         .replaceAll("ORDER BY doc_a, doc_b$", "")
       def round(prev: String, next: String) =
         s"""c$next AS (
@@ -1748,8 +1712,8 @@ object Curation {
          |${round("r2", "r3")}
          |SELECT doc_id, CAST(deg AS BIGINT) AS deg, CAST(r AS BIGINT) AS rank_units
          |FROM r3 ORDER BY rank_units DESC, doc_id ASC""".stripMargin
-    },
-    "x_dedup_spans" ->
+    }),
+    Query("x_dedup_spans", spanDedup _,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |sp AS (
         |  SELECT doc_id, ci,
@@ -1765,8 +1729,8 @@ object Curation {
         |SELECT doc_id, n_spans,
         |  coalesce(n_kept, 0) AS n_kept,
         |  coalesce(rebuilt_md5, md5('')) AS rebuilt_md5
-        |FROM tot LEFT JOIN reb USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "x_domain_mix" -> {
+        |FROM tot LEFT JOIN reb USING (doc_id) ORDER BY doc_id""".stripMargin),
+    Query("x_domain_mix", domainMix _, {
       import graft.ops.StableStats
       s"""WITH counts AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
          |stats AS (SELECT CAST(sum(n_docs) AS BIGINT) AS total, count(*) AS n_sources FROM counts),
@@ -1780,8 +1744,8 @@ object Curation {
          |  ${StableStats.stableRoundSql("max(rate)", 4)} AS rate
          |FROM u JOIN rates USING (source)
          |GROUP BY source ORDER BY source""".stripMargin
-    },
-    "x_mix_temperature" -> {
+    }),
+    Query("x_mix_temperature", (s: SparkSession, d: String) => temperatureMix(s, d), {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH counts AS (
          |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1799,8 +1763,8 @@ object Curation {
          |  ${stableRoundSql("q / p", 4)} AS up_weight,
          |  CAST(floor(q * total + 0.5) AS BIGINT) AS expected_docs
          |FROM r ORDER BY source""".stripMargin
-    },
-    "x_mix_temp_sample" -> {
+    }),
+    Query("x_mix_temp_sample", temperatureSample _, {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH counts AS (
          |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1832,8 +1796,8 @@ object Curation {
          |  coalesce(a.sample_tokens, 0) AS sample_tokens
          |FROM quota q LEFT JOIN agg a USING (source)
          |ORDER BY source""".stripMargin
-    },
-    "x_dsir_weights" -> {
+    }),
+    Query("x_dsir_weights", (s: SparkSession, d: String) => dsirWeights(s, d), {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH toks AS (SELECT doc_id, source, lang, tok,
          |    ('0x' || substr(md5('dsir|' || tok), 1, 8))::BIGINT % 1024 AS b
@@ -1860,8 +1824,8 @@ object Curation {
          |  ${stableRoundSql("sum_units / 1e6", 4)} AS log_ratio,
          |  ${stableRoundSql("sum_units / 1e6 / n_tokens", 4)} AS mean_log_ratio
          |FROM d ORDER BY mean_log_ratio DESC, doc_id LIMIT 20""".stripMargin
-    },
-    "x_len_buckets" ->
+    }),
+    Query("x_len_buckets", (s: SparkSession, d: String) => lengthBuckets(s, d),
       """WITH t AS (
         |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         |    ('0x' || substr(md5('shard|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4 AS shard
@@ -1879,8 +1843,8 @@ object Curation {
         |  min(n_tokens) AS min_tokens, max(n_tokens) AS max_tokens,
         |  CAST(max(n_tokens) * count(*) - sum(n_tokens) AS BIGINT) AS pad_waste
         |FROM r GROUP BY shard, bucket, batch
-        |ORDER BY shard, bucket, batch""".stripMargin,
-    "x_winsorize" -> {
+        |ORDER BY shard, bucket, batch""".stripMargin),
+    Query("x_winsorize", winsorize _, {
       import graft.ops.StableStats
       def tenKMeanSql(e: String) = StableStats.stableRoundSql(
         s"CAST(sum(CAST(round(($e) * 1e4) AS BIGINT)) AS DOUBLE) / count(*) / 1e4", 4)
@@ -1904,8 +1868,8 @@ object Curation {
          |FROM events JOIN cuts USING (event_type)
          |WHERE value IS NOT NULL
          |GROUP BY event_type ORDER BY event_type""".stripMargin
-    },
-    "x_decontaminate_sem" ->
+    }),
+    Query("x_decontaminate_sem", semDecontaminate _,
       """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         |ev AS (SELECT vec_id AS eval_id, e AS ee FROM emb WHERE vec_id < 20)
         |SELECT emb.vec_id, ev.eval_id,
@@ -1913,8 +1877,8 @@ object Curation {
         |FROM emb CROSS JOIN ev
         |WHERE emb.vec_id >= 20
         |  AND round(list_cosine_similarity(emb.e, ev.ee), 6) >= 4e-1
-        |ORDER BY vec_id, eval_id""".stripMargin,
-    "x_decontaminate" ->
+        |ORDER BY vec_id, eval_id""".stripMargin),
+    Query("x_decontaminate", decontaminate _,
       """WITH grams AS (
         |  SELECT doc_id, g FROM (
         |    SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(w) - 3),
@@ -1925,8 +1889,8 @@ object Curation {
         |SELECT doc_id, count(*) AS n_hits
         |FROM grams JOIN bench USING (g)
         |WHERE doc_id % 50 <> 0
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "x_decontaminate_spans" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("x_decontaminate_spans", spanDecontaminate _,
       s"""WITH widths AS (SELECT unnest([${SpanWidths.mkString(", ")}]) AS width),
         |docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |pos AS (
@@ -1941,8 +1905,8 @@ object Curation {
         |SELECT doc_id, width, count(DISTINCT g) AS n_hits
         |FROM spans JOIN bench USING (width, g)
         |WHERE doc_id % 50 <> 0
-        |GROUP BY doc_id, width ORDER BY doc_id, width""".stripMargin,
-    "x_pack_shards" ->
+        |GROUP BY doc_id, width ORDER BY doc_id, width""".stripMargin),
+    Query("x_pack_shards", (s: SparkSession, d: String) => packShards(s, d),
       """WITH t AS (
         |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         |    md5('pack|' || CAST(doc_id AS VARCHAR)) AS h,
@@ -1954,8 +1918,8 @@ object Curation {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre_total
         |  FROM t)
         |SELECT doc_id, shard, n_tokens, CAST(floor(pre_total / 2000) AS BIGINT) AS bin
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "x_outliers" -> {
+        |FROM r ORDER BY doc_id""".stripMargin),
+    Query("x_outliers", outliers _, {
       import graft.ops.StableStats
       s"""WITH stats AS (
          |  SELECT event_type AS et, ${StableStats.centsMeanSql("value")} AS mu,
@@ -1966,8 +1930,8 @@ object Curation {
          |FROM events JOIN stats ON event_type = et
          |WHERE abs(${StableStats.stableRoundSql("(value - mu) / sigma", 4)}) >= 2.5
          |ORDER BY event_id""".stripMargin
-    },
-    "x_outliers_mad" -> {
+    }),
+    Query("x_outliers_mad", madOutliers _, {
       import graft.ops.StableStats
       s"""WITH med AS (
          |  SELECT event_type AS et1, round(quantile_cont(value, 5e-1), 4) AS med
@@ -1981,12 +1945,12 @@ object Curation {
          |WHERE mad <> 0
          |  AND abs(${StableStats.stableRoundSql("(value - med) / (14826e-4 * mad)", 4)}) >= 3
          |ORDER BY event_id""".stripMargin
-    },
-    "x_top_terms" ->
+    }),
+    Query("x_top_terms", topTerms _,
       """SELECT tok, count(*) AS freq FROM (
         |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        |GROUP BY tok ORDER BY freq DESC, tok ASC LIMIT 20""".stripMargin,
-    "x_pack_bins" ->
+        |GROUP BY tok ORDER BY freq DESC, tok ASC LIMIT 20""".stripMargin),
+    Query("x_pack_bins", (s: SparkSession, d: String) => packBins(s, d),
       """WITH t AS (
         |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         |    md5('pack|' || CAST(doc_id AS VARCHAR)) AS h
@@ -1997,26 +1961,26 @@ object Curation {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre_total
         |  FROM t)
         |SELECT doc_id, n_tokens, CAST(floor(pre_total / 2000) AS BIGINT) AS bin
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "x_split_assign" ->
+        |FROM r ORDER BY doc_id""".stripMargin),
+    Query("x_split_assign", splitAssign _,
       """SELECT doc_id,
         |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket,
         |  CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
         |       WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "x_stratified_sample" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("x_stratified_sample", stratifiedSample _,
       """SELECT lang, CAST(rn AS INTEGER) AS rn, doc_id, n_chars FROM (
         |  SELECT lang, doc_id, n_chars,
         |    row_number() OVER (PARTITION BY lang
         |      ORDER BY md5('strat|' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
         |  FROM documents)
-        |WHERE rn <= 3 ORDER BY lang, rn""".stripMargin,
-    "x_dup_clusters" -> clustersSql,
+        |WHERE rn <= 3 ORDER BY lang, rn""".stripMargin),
+    Query("x_dup_clusters", dupClusters _, clustersSql),
     // the one-pass closure IS the oracle: hash-equality against the
     // star ∪ new-probe loop is the incremental ≡ recompute proof
-    "x_incr_clusters" -> clustersSql,
-    "x_curation_e2e" ->
+    Query("x_incr_clusters", incrementalClusters _, clustersSql),
+    Query("x_curation_e2e", curationPipeline _,
       s"""WITH g AS (${TextAnalysis.gopherSignalsSql}),
          |keep AS (SELECT doc_id, n_words FROM g WHERE keep = 1),
          |lc AS (${TextAnalysis.classifierSql}),
@@ -2036,8 +2000,8 @@ object Curation {
          |JOIN canon USING (doc_id)
          |JOIN sp USING (doc_id)
          |JOIN documents d USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY split, lang""".stripMargin,
-    "x_cluster_split" ->
+         |GROUP BY 1, 2 ORDER BY split, lang""".stripMargin),
+    Query("x_cluster_split", clusterSplitAssign _,
       s"""WITH cl AS ($clustersSql),
          |a AS (SELECT d.doc_id, coalesce(cl.cluster, d.doc_id) AS anchor
          |      FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id),
@@ -2046,21 +2010,22 @@ object Curation {
          |SELECT doc_id, anchor, bucket,
          |  CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val'
          |       ELSE 'test' END AS split
-         |FROM b ORDER BY doc_id""".stripMargin,
-    "x_dedup_keep_best" ->
+         |FROM b ORDER BY doc_id""".stripMargin),
+    Query("x_dedup_keep_best", keepBest _,
       s"""WITH clusters AS ($clustersSql),
          |q AS (${TextAnalysis.qualityScoreSql})
          |SELECT cluster, doc_id, quality_score,
          |  CAST(row_number() OVER (PARTITION BY cluster
          |    ORDER BY quality_score DESC, doc_id ASC) = 1 AS INTEGER) AS keep
          |FROM clusters JOIN q USING (doc_id)
-         |ORDER BY cluster, doc_id""".stripMargin
-  ) ++ Map("x_split_leakage" -> splitLeakageSql)
+         |ORDER BY cluster, doc_id""".stripMargin),
+    Query("x_split_leakage", splitLeakage _, splitLeakageSql)
+  )
 
   /** [[splitLeakage]]'s DuckDB twin — pairs and the cluster closure both
     * reuse the shared oracle blocks; appended to the map below. */
   private lazy val splitLeakageSql: String = {
-    val pairsSql = Dedup.oracles("x_dedup_minhash_lsh")
+    val pairsSql = Query.oracleOf(Dedup.queries, "x_dedup_minhash_lsh")
       .replaceAll("ORDER BY doc_a, doc_b$", "")
     s"""WITH cl AS ($clustersSql),
        |p AS ($pairsSql),
@@ -2091,7 +2056,7 @@ object Curation {
   /** Transitive closure over the LSH pairs, min reachable = cluster —
     * shared by the cluster and keep-best oracles. */
   private lazy val clustersSql: String = {
-    val pairsSql = Dedup.oracles("x_dedup_minhash_lsh")
+    val pairsSql = Query.oracleOf(Dedup.queries, "x_dedup_minhash_lsh")
       .replaceAll("ORDER BY doc_a, doc_b$", "")
     s"""WITH RECURSIVE pairs AS ($pairsSql),
        |e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.exec.{Cut, Pool}
 
 /** Deduplication operators over `documents` / `embeddings`
@@ -855,26 +855,7 @@ object Dedup {
       .orderBy("band_lo")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_dedup_lsh_recall"    -> (lshRecall _),
-    "x_dedup_editdist"      -> (editDistancePairs _),
-    "x_source_overlap"      -> (sourceOverlap _),
-    "x_dedup_containment"   -> (containment _),
-    "x_minhash_est"         -> (minhashEstQuality _),
-    "x_dedup_exact"         -> (exact _),
-    "x_dedup_exact_nfc"     -> (exactNfc _),
-    "x_dedup_minhash_lsh"   -> (minhashLsh _),
-    "x_incr_minhash"        -> (incrementalMinhash _),
-    "x_incr_lsh_pairs"      -> (incrementalLshPairs _),
-    "x_dedup_simhash"       -> (simhashSignatures _),
-    "x_dedup_simhash_pairs" -> (simhashPairs _),
-    "x_dedup_ngram_jaccard" -> (ngramJaccard _),
-    "x_dedup_jaccard_exact" -> (jaccardPrefixJoin _),
-    "x_dedup_embedding"     -> (embeddingNearDup _),
-    "x_semdedup"            -> (semDedup _)
-  )
-
-  val oracles: Map[String, String] = {
+  val queries: Seq[Query] = {
     val minCols = (0 until K).map(i => s"min((h1 + $i * h2) % $P) AS h$i").mkString(", ")
     val bandSelects = (0 until BANDS).map { b =>
       val rows = (b * K / BANDS until (b + 1) * K / BANDS).map(i => s"h$i").mkString(" || ',' || ")
@@ -919,8 +900,8 @@ object Dedup {
          |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          |FROM bands x JOIN bands y
          |  ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id""".stripMargin
-    Map(
-      "x_dedup_lsh_recall" -> {
+    Seq(
+      Query("x_dedup_lsh_recall", lshRecall _, {
         import graft.ops.StableStats
         s"""WITH pairs AS ($pairsSubquery),
            |${shingleCtes("words2", "shx", md5Shingle)},
@@ -945,8 +926,8 @@ object Dedup {
            |SELECT CAST(decile AS DOUBLE) / 10 AS band_lo, n_true, n_hit,
            |  ${StableStats.ratioSql("n_hit", "n_true")} AS recall, n_cands
            |FROM g CROSS JOIN nc ORDER BY band_lo""".stripMargin
-      },
-      "x_dedup_editdist" -> {
+      }),
+      Query("x_dedup_editdist", editDistancePairs _, {
         import graft.ops.StableStats
         s"""WITH pairs AS ($pairsSubquery),
            |pfx AS (SELECT doc_id, substr(text, 1, $EditCap) AS p FROM documents),
@@ -962,8 +943,8 @@ object Dedup {
            |FROM cand
            |WHERE levenshtein(ta, tb) <= floor(max_len * 3e-1)
            |ORDER BY doc_a, doc_b""".stripMargin
-      },
-      "x_source_overlap" ->
+      }),
+      Query("x_source_overlap", sourceOverlap _,
         s"""WITH pairs AS ($pairsSubquery)
            |SELECT least(da.source, db.source) AS source_x,
            |  greatest(da.source, db.source) AS source_y,
@@ -971,8 +952,8 @@ object Dedup {
            |FROM pairs
            |JOIN documents da ON da.doc_id = doc_a
            |JOIN documents db ON db.doc_id = doc_b
-           |GROUP BY 1, 2 ORDER BY source_x, source_y""".stripMargin,
-      "x_minhash_est" -> {
+           |GROUP BY 1, 2 ORDER BY source_x, source_y""".stripMargin),
+      Query("x_minhash_est", minhashEstQuality _, {
         import graft.ops.StableStats
         val est = (0 until K).map(i => s"CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END")
           .mkString(" + ")
@@ -1009,8 +990,8 @@ object Dedup {
            |JOIN sizes sa ON sa.doc_id = s.doc_a
            |JOIN sizes sb ON sb.doc_id = s.doc_b
            |ORDER BY s.doc_a, s.doc_b""".stripMargin
-      },
-      "x_dedup_containment" -> {
+      }),
+      Query("x_dedup_containment", containment _, {
         import graft.ops.StableStats
         s"""WITH pairs AS ($pairsSubquery),
            |${shingleCtes("words", "hsh", md5Shingle)},
@@ -1034,24 +1015,24 @@ object Dedup {
            |JOIN sizes sa ON sa.doc_id = pairs.doc_a
            |JOIN sizes sb ON sb.doc_id = pairs.doc_b
            |ORDER BY pairs.doc_a, pairs.doc_b""".stripMargin
-      },
-      "x_dedup_exact" ->
+      }),
+      Query("x_dedup_exact", exact _,
         """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-      "x_dedup_exact_nfc" ->
+          |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin),
+      Query("x_dedup_exact_nfc", exactNfc _,
         """SELECT md5(nfc_normalize(text)) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-      "x_dedup_minhash_lsh" ->
+          |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin),
+      Query("x_dedup_minhash_lsh", minhashLsh _,
         s"""$pairsSubquery
-           |ORDER BY doc_a, doc_b""".stripMargin,
+           |ORDER BY doc_a, doc_b""".stripMargin),
       // ONE-pass candidate set: hash-equality against the Spark side's
       // per-shard probes is the incremental≡one-pass proof
-      "x_incr_lsh_pairs" ->
+      Query("x_incr_lsh_pairs", incrementalLshPairs _,
         s"""$uncappedPairsSubquery
-           |ORDER BY doc_a, doc_b""".stripMargin,
+           |ORDER BY doc_a, doc_b""".stripMargin),
       // ONE-pass signature recompute: hash-equality against the Spark
       // side's per-shard merge is the merge≡recompute proof
-      "x_incr_minhash" ->
+      Query("x_incr_minhash", incrementalMinhash _,
         s"""WITH $shinglesSql,
            |hashed AS (SELECT doc_id,
            |  ('0x' || substr(md5(s), 1, 8))::BIGINT AS h1,
@@ -1060,15 +1041,15 @@ object Dedup {
            |  ${(0 until K).map(i => s"min((h1 + $i * h2) % $P) AS m$i").mkString(", ")}
            |  FROM hashed GROUP BY doc_id)
            |SELECT doc_id, ${(0 until K).map(i => s"m$i").mkString(", ")}
-           |FROM mh ORDER BY doc_id""".stripMargin,
-      "x_dedup_simhash" ->
+           |FROM mh ORDER BY doc_id""".stripMargin),
+      Query("x_dedup_simhash", simhashSignatures _,
         s"""WITH toks AS (SELECT DISTINCT doc_id, tok FROM (
            |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
            |hashed AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM toks),
            |bits AS (SELECT doc_id, $bitSums FROM hashed GROUP BY doc_id)
            |SELECT doc_id, CAST($simhashExpr AS BIGINT) AS simhash
-           |FROM bits ORDER BY doc_id""".stripMargin,
-      "x_dedup_simhash_pairs" ->
+           |FROM bits ORDER BY doc_id""".stripMargin),
+      Query("x_dedup_simhash_pairs", simhashPairs _,
         s"""WITH toks AS (SELECT DISTINCT doc_id, tok FROM (
            |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
            |hashed AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM toks),
@@ -1078,8 +1059,8 @@ object Dedup {
            |  CAST(bit_count(xor(x.simhash, y.simhash)) AS INTEGER) AS hamming
            |FROM sims x JOIN sims y ON x.doc_id % 10 = 0 AND x.doc_id < y.doc_id
            |WHERE bit_count(xor(x.simhash, y.simhash)) <= 8
-           |ORDER BY doc_a, doc_b""".stripMargin,
-      "x_dedup_ngram_jaccard" ->
+           |ORDER BY doc_a, doc_b""".stripMargin),
+      Query("x_dedup_ngram_jaccard", ngramJaccard _,
         s"""WITH ${shingleCtes("words", "sh", md5Shingle)},
            |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
            |informative AS (SELECT s FROM sh GROUP BY s HAVING count(*) >= 2 AND count(*) <= 100),
@@ -1093,10 +1074,10 @@ object Dedup {
            |JOIN sizes sa ON sa.doc_id = doc_a
            |JOIN sizes sb ON sb.doc_id = doc_b
            |WHERE round(CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter), 4) >= 0.5
-           |ORDER BY doc_a, doc_b""".stripMargin,
+           |ORDER BY doc_a, doc_b""".stripMargin),
       // deliberately brute-force (every shared-shingle pair, no prefix
       // anywhere): the differential proves the prefix filter lossless
-      "x_dedup_jaccard_exact" -> {
+      Query("x_dedup_jaccard_exact", jaccardPrefixJoin _, {
         import graft.ops.StableStats
         s"""WITH ${shingleCtes("words", "sh", md5Shingle)},
            |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
@@ -1110,15 +1091,15 @@ object Dedup {
            |JOIN sizes sb ON sb.doc_id = doc_b
            |WHERE n_shared * $TauDen >= (sa.n + sb.n - n_shared) * $TauNum
            |ORDER BY doc_a, doc_b""".stripMargin
-      },
-      "x_dedup_embedding" ->
+      }),
+      Query("x_dedup_embedding", embeddingNearDup _,
         """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e, label FROM embeddings)
           |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
           |  round(list_cosine_similarity(a.e, b.e), 4) AS cos_sim
           |FROM emb a JOIN emb b ON a.label = b.label AND a.vec_id < b.vec_id
           |WHERE round(list_cosine_similarity(a.e, b.e), 4) >= 0.4
-          |ORDER BY vec_a, vec_b""".stripMargin,
-      "x_semdedup" ->
+          |ORDER BY vec_a, vec_b""".stripMargin),
+      Query("x_semdedup", semDedup _,
         """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
           |cent AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id < 8),
           |assigned AS (SELECT vec_id, c_id AS cluster FROM (
@@ -1134,7 +1115,7 @@ object Dedup {
           |  CAST(coalesce(d.n_earlier_dups, 0) AS BIGINT) AS n_earlier_dups, d.max_sim,
           |  CAST(CASE WHEN d.max_sim IS NULL THEN 1 ELSE 0 END AS INTEGER) AS keep
           |FROM assigned a LEFT JOIN dups d USING (vec_id)
-          |ORDER BY a.vec_id""".stripMargin
+          |ORDER BY a.vec_id""".stripMargin)
     )
   }
 }

@@ -2,8 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.exec.{Cut, Pool, Scratch}
 
 /** Z-order (Morton-curve) data layout planning — multi-dimensional file
@@ -251,6 +252,12 @@ object Layout {
       delta.fold(base)(d => newestWins(base, d.frame, d.upserts)))
   }
 
+  /** `schema` as a parquet read reports the columns written from it:
+    * every field nullable. Handing it to the read skips parquet's
+    * schema-inference job. */
+  private def asRead(schema: StructType): StructType =
+    StructType(schema.map(_.copy(nullable = true)))
+
   /** `files` read with `read` (which resolves their schema), or `empty`
     * — the typed zero-row frame a fully pruned read needs, since an empty
     * parquet read has no schema to infer. */
@@ -326,9 +333,12 @@ object Layout {
     * NOTHING stays pinned in the cache manager. */
   /** Idempotently materialize the (source, length-band) document layout
     * — one physical file per cell, `source`/`n_chars` kept as DATA
-    * columns so both get footer stats — and return its directory.
-    * Shared by [[footerPruneStr]] and [[footerPruneMixed]]. */
-  private def ensureStrLayoutMaterialized(spark: SparkSession, dir: String): String = {
+    * columns so both get footer stats — and return its directory with
+    * the schema a read of its files reports (the data columns; a file
+    * list carries no partition columns). Shared by [[footerPruneStr]]
+    * and [[footerPruneMixed]]. */
+  private def ensureStrLayoutMaterialized(spark: SparkSession,
+      dir: String): (String, StructType) = {
     val out = Scratch.root("footer_prune_str", dir)
     val slice = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("n_chars"))
@@ -343,15 +353,15 @@ object Layout {
       _.repartition(col("src_part"), col("lb"))
         .write.mode("overwrite").partitionBy("src_part", "lb").parquet(out)
     }
-    out
+    (out, asRead(slice.schema))
   }
 
   def footerPruneStr(spark: SparkSession, dir: String): DataFrame = {
-    val out = ensureStrLayoutMaterialized(spark, dir)
+    val (out, schema) = ensureStrLayoutMaterialized(spark, dir)
     prunedStage(graft.sources.FooterManifest.build(spark, out, Seq("source", "n_chars")).collect(),
       Map("n_chars" -> ((150.0, 400.0))),
       orEmpty(spark.range(0).select(col("id").cast("string").as("source"),
-        col("id").as("n_chars")))(spark.read.parquet(_: _*)),
+        col("id").as("n_chars")))(spark.read.schema(schema).parquet(_: _*)),
       strBox = Map("source" -> (("src12", "src17"))))
       .report(countIn(col("source").between("src12", "src17") &&
         col("n_chars").between(150, 400)))
@@ -373,7 +383,7 @@ object Layout {
     * every candidate set from the documents table alone. */
   def footerPruneMixed(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.FooterManifest
-    val out = ensureStrLayoutMaterialized(spark, dir)
+    val (out, schema) = ensureStrLayoutMaterialized(spark, dir)
     val m = FooterManifest.build(spark, out, Seq("source", "n_chars"))
     // one collect; all three candidate sets and the file total decided
     // driver-side (was four Spark jobs over local metadata — guide §5)
@@ -391,7 +401,7 @@ object Layout {
     val keptDf = if (keptFiles.isEmpty)
         spark.range(0).select(col("id").cast("string").as("source"),
           col("id").as("n_chars"))
-      else spark.read.parquet(keptFiles: _*)
+      else spark.read.schema(schema).parquet(keptFiles: _*)
     val rowsOut = keptDf
       .where(col("source").between("src12", "src17") &&
         col("n_chars").between(150, 400))
@@ -1285,7 +1295,6 @@ object Layout {
     * columns are the only broadcasts (PlanSpec ceilings). */
   def lakeEvolve(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.PartitionedSink
-    import org.apache.spark.sql.types.StructType
     val zcols = LakeZCols
     val (_, base, arrival) = lakeSplit(spark, dir)
     val delta = arrival
@@ -3838,12 +3847,14 @@ object Layout {
   def dppRead(spark: SparkSession, dir: String): DataFrame = {
     val out = Scratch.root("dpp_read", dir)
     val docs = Tables.documents(spark, dir)
-    Scratch.materializeIfChanged(out, "v1", docs, Seq("doc_id", "source", "lang", "n_chars")) {
-      _.withColumn("src_part", col("source"))
-        .repartition(col("src_part"))
+    val written = docs.withColumn("src_part", col("source"))
+    Scratch.materializeIfChanged(out, "v1", written, Seq("doc_id", "source", "lang", "n_chars")) {
+      _.repartition(col("src_part"))
         .write.mode("overwrite").partitionBy("src_part").parquet(out)
     }
-    val fact = spark.read.parquet(out)
+    // the layout's schema as a read of `out` reports it: the data
+    // columns, then the trailing partition column
+    val fact = spark.read.schema(asRead(written.schema)).parquet(out)
     // O(sources) frame: bounded by the source cardinality (a domain
     // dimension), never the corpus
     val dim = docs.groupBy(col("source").as("sel_source"))
@@ -3856,41 +3867,6 @@ object Layout {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .orderBy("source")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_zorder_layout" -> (zorderLayout _),
-    "x_zorder_prune" -> (zorderPrune _),
-    "x_footer_prune" -> (footerPrune _),
-    "x_footer_prune_str" -> (footerPruneStr _),
-    "x_footer_prune_mixed" -> (footerPruneMixed _),
-    "x_delta_read" -> (deltaRead _),
-    "x_delta_fold" -> (deltaFold _),
-    "x_lake_e2e" -> (lakeE2e _),
-    "x_lake_evolve" -> (lakeEvolve _),
-    "x_lake_widen" -> (lakeWiden _),
-    "x_lake_ingest" -> (lakeIngest _),
-    "x_lake_ingest_asof" -> (lakeIngestAsof _),
-    "x_lake_vacuum" -> (lakeVacuum _),
-    "x_lake_timetravel" -> (lakeTimetravel _),
-    "x_lake_timestamp_asof" -> (lakeTimestampAsof _),
-    "x_lake_changes" -> (lakeChanges _),
-    "x_lake_changes_cursor" -> (lakeChangesCursor _),
-    "x_lake_rebase" -> (lakeRebase _),
-    "x_lake_merge" -> (lakeMerge _),
-    "x_lake_cdf_merge" -> (lakeCdfMerge _),
-    "x_lake_merge_sync" -> (lakeMergeSync _),
-    "x_lake_cdf_merge_sync" -> (lakeCdfMergeSync _),
-    "x_lake_cdf_delete" -> (lakeCdfDelete _),
-    "x_lake_history" -> (lakeHistory _),
-    "x_lake_cdf_restore" -> (lakeCdfRestore _),
-    "x_lake_cdc_apply" -> (cdcApply _),
-    "x_lake_delete" -> (lakeDelete _),
-    "x_dpp_read" -> (dppRead _),
-    "x_hilbert_prune" -> (hilbertPrune _),
-    "x_zorder_incr" -> (zorderIncr _),
-    "x_compaction_plan" -> (compactionPlan _),
-    "x_compaction_exec" -> (compactionExec _)
-  )
 
   private val bucketCte =
     """stats AS (
@@ -4209,18 +4185,18 @@ object Layout {
   }
 
 
-  val oracles: Map[String, String] = Map(
-    "x_lake_ingest" -> lakeIngestOracleSql,
+  val queries: Seq[Query] = Seq(
+    Query("x_lake_ingest", lakeIngest _, lakeIngestOracleSql),
     // every row is a pure function of the events table — the log only
     // decides which files carry which state; DuckDB replays each
     // generation's newest-wins answer with no knowledge of the log
-    "x_lake_ingest_asof" -> lakeIngestAsofOracleSql,
+    Query("x_lake_ingest_asof", lakeIngestAsof _, lakeIngestAsofOracleSql),
     // history metadata across BOTH lineages: base reference counts are
     // cell-grid counts (the ingest/delete seeds share one base grid;
     // the delete fold's grid `e` runs under its own bounds), each
     // arrival adds exactly one staged file, and the op names are the
     // literals the commit protocol stamps
-    "x_lake_history" ->
+    Query("x_lake_history", lakeHistory _,
       s"""WITH $lakeIngestCommonCtes,
          |$lakeEraseCtes,
          |$lakeIngestFoldCtes,
@@ -4240,52 +4216,52 @@ object Layout {
          |SELECT lineage, gen, op, n_base_refs,
          |  CAST(n_delta_refs AS BIGINT) AS n_delta_refs,
          |  CAST(n_cdelta_refs AS BIGINT) AS n_cdelta_refs
-         |FROM h ORDER BY lineage, gen""".stripMargin,
+         |FROM h ORDER BY lineage, gen""".stripMargin),
     // the feed is a pure function of the fixture slices: forward rows
     // carry the arriving values, the fold's inverse rows carry the
     // vanishing/reverted values
-    "x_lake_changes" -> changeFeedSql(lakeSlices,
+    Query("x_lake_changes", lakeChanges _, changeFeedSql(lakeSlices,
       (0, 1, "insert", "value", "ins"),
       (1, 2, "delete", "value", "ins"),
       (0, 1, "update_postimage", "value + 150.0", "upd"),
-      (1, 2, "update_preimage", "value", "upd")),
+      (1, 2, "update_preimage", "value", "upd"))),
     // the cursor feed over the arrival log is a pure function of the
     // batch slices: batch-0/2 transitions are pure inserts, batch 1
     // adds both update images (postimage +150, preimage = base value)
-    "x_lake_changes_cursor" -> changeFeedSql(lakeSlices,
+    Query("x_lake_changes_cursor", lakeChangesCursor _, changeFeedSql(lakeSlices,
       (0, 1, "insert", "value", s"ins WHERE $batchOf = 0"),
       (1, 2, "insert", "value", s"ins WHERE $batchOf = 1"),
       (1, 2, "update_postimage", "value + 150.0", "upd"),
       (1, 2, "update_preimage", "value", "upd"),
-      (2, 3, "insert", "value", s"ins WHERE $batchOf = 2")),
+      (2, 3, "insert", "value", s"ins WHERE $batchOf = 2"))),
     // both directions are pure functions of the fixture slices: the
     // forward transition feeds the arrivals (inserts + both update
     // images), the restore feeds their inverses (vanishing inserts as
     // deletes at their arrival values, reverted updates as the +150
     // preimage next to the restored base postimage)
-    "x_lake_cdf_restore" -> changeFeedSql(lakeSlices,
+    Query("x_lake_cdf_restore", lakeCdfRestore _, changeFeedSql(lakeSlices,
       (0, 1, "insert", "value", "ins"),
       (0, 1, "update_postimage", "value + 150.0", "upd"),
       (0, 1, "update_preimage", "value", "upd"),
       (1, 2, "delete", "value", "ins"),
       (1, 2, "update_preimage", "value + 150.0", "upd"),
-      (1, 2, "update_postimage", "value", "upd")),
+      (1, 2, "update_postimage", "value", "upd"))),
     // the CRUD arrival's feed is a pure function of the fixture slices:
     // inserts feed themselves, updates feed both images, tombstones
     // feed the erased BASE rows (the mod-100≡3 rows are base rows by
     // construction, so the preimage is the row itself); the fold
     // transition feeds nothing
-    "x_lake_cdf_delete" -> changeFeedSql(lakeSlices,
+    Query("x_lake_cdf_delete", lakeCdfDelete _, changeFeedSql(lakeSlices,
       (0, 1, "insert", "value", "ins"),
       (0, 1, "update_postimage", "value + 150.0", "upd"),
       (0, 1, "update_preimage", "value", "upd"),
-      (0, 1, "delete", "value", "tomb")),
+      (0, 1, "delete", "value", "tomb"))),
     // each commit's answer is a pure newest-wins function of the
     // fixture slices; the file counts are the base cell grid + one
     // delta file per landed writer, and the conflict count is the
     // literal the validated-append protocol guarantees (B aborts once,
     // rebases, lands)
-    "x_lake_rebase" ->
+    Query("x_lake_rebase", lakeRebase _,
       s"""WITH $lakeBaseCtes,
          |wa AS (SELECT * FROM ins WHERE $batchOf = 0),
          |wb AS (SELECT * FROM ins WHERE $batchOf <> 0
@@ -4300,7 +4276,7 @@ object Layout {
          |SELECT CAST(1 AS BIGINT), 'A', CAST(0 AS BIGINT), n + 1, ${boxRows("m1")} FROM bn
          |UNION ALL
          |SELECT CAST(2 AS BIGINT), 'B', CAST(1 AS BIGINT), n + 2, ${boxRows("m2")} FROM bn
-         |ORDER BY gen""".stripMargin,
+         |ORDER BY gen""".stripMargin),
     // every MERGE report column is a pure function of the events
     // table: file counts are the base cell grid + the one staged
     // arrival, outcome counts are slice counts (the clause conditions
@@ -4310,7 +4286,7 @@ object Layout {
     // keep the ORIGINAL user_id — DuckDB recomputing them from the
     // events row alone is the per-column-UPDATE pin (a whole-row
     // upsert would land the +10⁶ decoy and hash-mismatch)
-    "x_lake_merge" ->
+    Query("x_lake_merge", lakeMerge _,
       s"""WITH $lakeBaseCtes,
          |mupd AS (SELECT event_id, user_id, value + 150.0 AS value FROM ev
          |  WHERE event_id % 100 = 7),
@@ -4334,13 +4310,13 @@ object Layout {
          |SELECT CAST(1 AS BIGINT), 'merged', n + 1,
          |  n_source, n_inserted, n_updated, n_deleted, n_matched_noop, ${boxRows("mmerged")}
          |FROM bn, acc
-         |ORDER BY gen""".stripMargin,
+         |ORDER BY gen""".stripMargin),
     // the FULL-SYNC merge: synced state = the desired source state ∪
     // the stale target rows the BY-SOURCE condition retained — every
     // column a pure function of the events table (outcome counts are
     // slice counts; matched rows all differ by +150, so every one
     // updates)
-    "x_lake_merge_sync" ->
+    Query("x_lake_merge_sync", lakeMergeSync _,
       s"""WITH $lakeBaseCtes,
          |src AS (SELECT event_id, user_id, value + 150.0 AS value FROM ev
          |        WHERE event_id % 3 = 0),
@@ -4363,11 +4339,11 @@ object Layout {
          |  n_source, n_inserted, n_updated, n_deleted_by_source,
          |  n_kept_unmatched, ${boxRows("synced")}
          |FROM bn, acc
-         |ORDER BY gen""".stripMargin,
+         |ORDER BY gen""".stripMargin),
     // the sync's feed: convergence updates feed both images, absent
     // rows feed inserts, and the BY-SOURCE deletes feed the erased
     // stale target rows — all pure functions of the fixture slices
-    "x_lake_cdf_merge_sync" -> changeFeedSql(
+    Query("x_lake_cdf_merge_sync", lakeCdfMergeSync _, changeFeedSql(
       s"""$lakeSlices,
          |sins AS (SELECT * FROM ins WHERE event_id % 3 = 0),
          |supd AS (SELECT * FROM ev WHERE event_id % 3 = 0 AND event_id % 10 <> 0),
@@ -4375,24 +4351,24 @@ object Layout {
       (0, 1, "insert", "value + 150.0", "sins"),
       (0, 1, "update_postimage", "value + 150.0", "supd"),
       (0, 1, "update_preimage", "value", "supd"),
-      (0, 1, "delete", "value", "sdel")),
+      (0, 1, "delete", "value", "sdel"))),
     // the merge's feed is a pure function of the fixture slices:
     // clause-inserts feed themselves, conditional updates feed both
     // images with the ORIGINAL user_id (the decoy staying out of
     // uid_chk is the per-column pin riding the CDF), and conditional
     // deletes feed the erased base rows
-    "x_lake_cdf_merge" -> changeFeedSql(
+    Query("x_lake_cdf_merge", lakeCdfMerge _, changeFeedSql(
       s"""$lakeSlices,
          |mupd AS (SELECT * FROM ev WHERE event_id % 100 = 7),
          |mdel AS (SELECT * FROM ev WHERE event_id % 100 = 13)""".stripMargin,
       (0, 1, "insert", "value", "ins"),
       (0, 1, "update_postimage", "value + 150.0", "mupd"),
       (0, 1, "update_preimage", "value", "mupd"),
-      (0, 1, "delete", "value", "mdel")),
+      (0, 1, "delete", "value", "mdel"))),
     // the maintained view is base census + fixture-slice corrections —
     // a pure function of the events table; DuckDB recomputes it with no
     // knowledge of the log or the feed
-    "x_lake_cdc_apply" ->
+    Query("x_lake_cdc_apply", cdcApply _,
       s"""WITH $lakeSlices,
          |d AS (
          |  SELECT user_id, 1 AS dn, CAST(floor(value) AS BIGINT) AS dv FROM ins
@@ -4411,12 +4387,12 @@ object Layout {
          |  coalesce(n_before, 0) + dn AS n_after,
          |  coalesce(val_before, 0) + dv AS val_after
          |FROM du LEFT JOIN v0 ON du.user_id = v0.user_id
-         |ORDER BY du.user_id""".stripMargin,
+         |ORDER BY du.user_id""".stripMargin),
     // erasure accounting and both stage reports are pure functions of
     // the events table: file counts are cell-grid counts, the box is
     // ONE newest-wins-with-deletes count, and erased_remaining is the
     // tombstone-keys ∩ erased-state probe (zero — the erasure proof)
-    "x_lake_delete" ->
+    Query("x_lake_delete", lakeDelete _,
       s"""WITH $lakeBaseCtes,
          |$lakeEraseCtes,
          |acc AS (SELECT
@@ -4432,13 +4408,13 @@ object Layout {
          |SELECT stage, state, files_total, files_read, rows_scanned,
          |  ${boxRows("erased")} AS rows_out, n_tombstones, n_erased, erased_remaining
          |FROM st, acc
-         |ORDER BY stage""".stripMargin,
+         |ORDER BY stage""".stripMargin),
     // file counts are cell-grid / packed-group counts (the layouts are
     // pure functions of the data) plus the one-file ingest-batch delta;
     // all three box answers are the SAME newest-wins count, which pins
     // both survival proofs: the current state's answer outlives the
     // vacuum AND the retained previous generation still answers
-    "x_lake_vacuum" ->
+    Query("x_lake_vacuum", lakeVacuum _,
       s"""WITH $lakeFoldCtes,
          |${packedGroups("mfiles")},
          |one AS (SELECT
@@ -4460,12 +4436,12 @@ object Layout {
          |FROM bn, mn, ng)
          |SELECT m.mode, one.* FROM one,
          |  (SELECT 'dry_run' AS mode UNION ALL SELECT 'vacuum') m
-         |ORDER BY m.mode""".stripMargin,
+         |ORDER BY m.mode""".stripMargin),
     // every file count is a cell-grid (or packed-group) count, every
     // rows_referenced a slice count, and every generation's rows_out the
     // SAME newest-wins box count — equality across the three rows IS the
     // fold/compaction invariant the log exists to let a reader replay
-    "x_lake_timetravel" ->
+    Query("x_lake_timetravel", lakeTimetravel _,
       s"""WITH $lakeFoldCtes,
          |${packedGroups("mfiles")},
          |g AS (
@@ -4477,7 +4453,7 @@ object Layout {
          |  UNION ALL SELECT 2, 'compacted', n, (SELECT count(*) FROM merged) FROM ng)
          |SELECT gen, state, files_live, CAST(rows_referenced AS BIGINT) AS rows_referenced,
          |  ${boxRows("merged")} AS rows_out
-         |FROM g ORDER BY gen""".stripMargin,
+         |FROM g ORDER BY gen""".stripMargin),
     // TIMESTAMP AS OF: the probe→generation mapping is the resolution
     // rule over the deterministic commit grid (latest commit instant ≤
     // probe — protocol literals, like the rebase conflict counts);
@@ -4485,7 +4461,7 @@ object Layout {
     // packed-group count as the timetravel oracle, which is what pins
     // that the RIGHT generation was resolved (the three differ), and
     // rows_out is the shared newest-wins box answer
-    "x_lake_timestamp_asof" ->
+    Query("x_lake_timestamp_asof", lakeTimestampAsof _,
       s"""WITH $lakeFoldCtes,
          |${packedGroups("mfiles")},
          |probes AS (
@@ -4500,8 +4476,8 @@ object Layout {
          |  UNION ALL SELECT 2, n FROM ng)
          |SELECT p.probe, p.gen, fl.files_live, ${boxRows("merged")} AS rows_out
          |FROM probes p JOIN fl ON fl.gen = p.gen
-         |ORDER BY p.probe""".stripMargin,
-    "x_lake_evolve" ->
+         |ORDER BY p.probe""".stripMargin),
+    Query("x_lake_evolve", lakeEvolve _,
       s"""WITH $lakeBaseCtes,
          |sdelta AS (SELECT *, floor(value) + 1000 AS score FROM delta),
          |smerged AS (
@@ -4527,13 +4503,13 @@ object Layout {
              ", rows_out, n_scored, score_chk FROM so"))}
          |SELECT stage, state, files_total, files_read, rows_scanned,
          |  rows_out, n_scored, score_chk
-         |FROM st ORDER BY stage""".stripMargin,
+         |FROM st ORDER BY stage""".stripMargin),
     // the widening never changes a value, so every file count is a
     // cell-grid count, every pruning decision a min/max comparison over
     // exact integers, and uid_chk an exact integer sum — all recomputed
     // from the events table with no notion of physical width; equality
     // pins that the INT32→INT64 promotion read is value-preserving
-    "x_lake_widen" ->
+    Query("x_lake_widen", lakeWiden _,
       s"""WITH $lakeFoldCtes,
          |ukept AS (SELECT * FROM bfiles WHERE NOT ${statsMiss("u", "3", "9")}),
          |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out,
@@ -4550,12 +4526,12 @@ object Layout {
              ", rows_out, uid_chk FROM uo"))}
          |SELECT stage, state, files_total, files_read, rows_scanned,
          |  rows_out, uid_chk
-         |FROM st ORDER BY stage""".stripMargin,
-    "x_footer_prune" ->
+         |FROM st ORDER BY stage""".stripMargin),
+    Query("x_footer_prune", footerPrune _,
       s"""WITH ${cellGrid("e", "events", "events", shift = 20)}
          |SELECT ${prunedReadCols("efiles", "ekept")},
-         |  ${boxRows("events")} AS rows_out""".stripMargin,
-    "x_delta_read" ->
+         |  ${boxRows("events")} AS rows_out""".stripMargin),
+    Query("x_delta_read", deltaRead _,
       s"""WITH $lakeBaseCtes,
          |r AS (SELECT (SELECT n FROM bn) AS files_total,
          |  CAST((SELECT count(*) FROM bkept) AS BIGINT) AS files_read_base,
@@ -4563,17 +4539,17 @@ object Layout {
          |  CAST((SELECT count(*) FROM delta) AS BIGINT) AS rows_delta)
          |SELECT files_total, files_read_base, rows_scanned_base, rows_delta,
          |  rows_scanned_base + rows_delta AS rows_scanned, ${boxRows("merged")} AS rows_out
-         |FROM r""".stripMargin,
-    "x_delta_fold" ->
+         |FROM r""".stripMargin),
+    Query("x_delta_fold", deltaFold _,
       s"""WITH $lakeSlices,
          |${cellGrid("m", "merged", "merged")}
          |SELECT ${prunedReadCols("mfiles", "mkept")},
-         |  ${boxRows("merged")} AS rows_out""".stripMargin,
+         |  ${boxRows("merged")} AS rows_out""".stripMargin),
     // stage 1 reads the base grid pruned plus the whole delta; DECIDE
     // counts the base rows under the delta's cells (the delta `d` under
     // the base grid, clamped); stages 2/3 read the fold and its packed
     // groups
-    "x_lake_e2e" ->
+    Query("x_lake_e2e", lakeE2e _,
       s"""WITH $lakeFoldCtes,
          |${cellGrid("d", "delta", "base")},
          |${packedGroups("mfiles")},
@@ -4588,8 +4564,8 @@ object Layout {
            "compacted" -> prunedReadCols("grp", "gkept"))}
          |SELECT stage, state, files_total, files_read, rows_scanned,
          |  ${boxRows("merged")} AS rows_out, amp_x1000
-         |FROM st, amp ORDER BY stage""".stripMargin,
-    "x_dpp_read" ->
+         |FROM st, amp ORDER BY stage""".stripMargin),
+    Query("x_dpp_read", dppRead _,
       """WITH by_src AS (
         |  SELECT source AS sel_source, count(*) AS n_total,
         |         sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_en
@@ -4600,8 +4576,8 @@ object Layout {
         |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
         |       CAST(sum(d.n_chars) AS BIGINT) AS sum_chars
         |FROM documents d JOIN sel ON d.source = sel.sel_source
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "x_footer_prune_mixed" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("x_footer_prune_mixed", footerPruneMixed _,
       s"""WITH files AS (
          |  SELECT source, n_chars // 128 AS lb, count(*) AS n_rows,
          |    min(source) AS min_s, max(source) AS max_s,
@@ -4624,8 +4600,8 @@ object Layout {
          |       WHERE source BETWEEN 'src12' AND 'src17' AND n_chars BETWEEN 150 AND 400)
          |SELECT files_total, files_read_num, files_read_str, files_read_both,
          |  rows_scanned, rows_out
-         |FROM ft, kn, ks, kb, ro""".stripMargin,
-    "x_footer_prune_str" ->
+         |FROM ft, kn, ks, kb, ro""".stripMargin),
+    Query("x_footer_prune_str", footerPruneStr _,
       s"""WITH files AS (
          |  SELECT source, n_chars // 128 AS lb, count(*) AS n_rows,
          |    min(source) AS min_s, max(source) AS max_s,
@@ -4640,12 +4616,12 @@ object Layout {
          |       CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS rows_scanned FROM kept),
          |ro AS (SELECT CAST(count(*) AS BIGINT) AS rows_out FROM documents
          |       WHERE source BETWEEN 'src12' AND 'src17' AND n_chars BETWEEN 150 AND 400)
-         |SELECT files_total, files_read, rows_scanned, rows_out FROM ft, ka, ro""".stripMargin,
-    "x_zorder_layout" ->
+         |SELECT files_total, files_read, rows_scanned, rows_out FROM ft, ka, ro""".stripMargin),
+    Query("x_zorder_layout", zorderLayout _,
       s"""WITH $bucketCte,
          |${bucketFiles("files", "file_id")}
-         |SELECT * FROM files ORDER BY 1""".stripMargin,
-    "x_zorder_prune" ->
+         |SELECT * FROM files ORDER BY 1""".stripMargin),
+    Query("x_zorder_prune", zorderPrune _,
       s"""WITH $bucketCte,
          |${bucketFiles("files", "file_id")},
          |zc AS (
@@ -4657,8 +4633,8 @@ object Layout {
          |    CAST(sum(CASE WHEN db BETWEEN 10 AND 12 AND ub BETWEEN 8 AND 11 THEN 1 ELSE 0 END) AS BIGINT) AS exact_rows
          |  FROM f)
          |SELECT total_rows, naive_candidate_rows, exact_rows, z_candidate_rows
-         |FROM tot, zc""".stripMargin,
-    "x_hilbert_prune" ->
+         |FROM tot, zc""".stripMargin),
+    Query("x_hilbert_prune", hilbertPrune _,
       s"""WITH $bucketCte,
          |$hilbertCtes,
          |${bucketFiles("hfiles", "hd >> 2 AS hf", "h1")},
@@ -4674,8 +4650,8 @@ object Layout {
          |    CAST(sum(CASE WHEN db BETWEEN 10 AND 12 AND ub BETWEEN 8 AND 11 THEN 1 ELSE 0 END) AS BIGINT) AS exact_rows
          |  FROM f)
          |SELECT total_rows, exact_rows, morton_candidate_rows, hilbert_candidate_rows
-         |FROM tot, mc, hc""".stripMargin,
-    "x_zorder_incr" ->
+         |FROM tot, mc, hc""".stripMargin),
+    Query("x_zorder_incr", zorderIncr _,
       s"""WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
          |base AS (SELECT * FROM ev WHERE event_id % 10 <> 0),
          |arr AS (SELECT * FROM ev WHERE event_id % 10 = 0),
@@ -4700,8 +4676,8 @@ object Layout {
          |  CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS rows_rewritten,
          |  CAST(sum(CASE WHEN n_rows IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_new_files
          |  FROM j)
-         |SELECT r.*, rows_rewritten * 1000 // n_arrivals AS rewrite_amp_x1000 FROM r""".stripMargin,
-    "x_compaction_exec" ->
+         |SELECT r.*, rows_rewritten * 1000 // n_arrivals AS rewrite_amp_x1000 FROM r""".stripMargin),
+    Query("x_compaction_exec", compactionExec _,
       s"""WITH $compactionCtes
          |SELECT pre_rows // $CompactionTargetRows AS group_id,
          |  count(*) AS n_files_in,
@@ -4709,14 +4685,14 @@ object Layout {
          |  CAST(sum(n_rows) AS BIGINT) AS n_rows,
          |  min(min_db) AS min_db, max(max_db) AS max_db,
          |  min(min_ub) AS min_ub, max(max_ub) AS max_ub
-         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "x_compaction_plan" ->
+         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("x_compaction_plan", compactionPlan _,
       s"""WITH $compactionCtes
          |SELECT pre_rows // $CompactionTargetRows AS group_id, count(*) AS n_files,
          |  CAST(sum(n_rows) AS BIGINT) AS n_rows,
          |  min(file_id) AS first_file, max(file_id) AS last_file,
          |  min(min_db) AS min_db, max(max_db) AS max_db,
          |  min(min_ub) AS min_ub, max(max_ub) AS max_ub
-         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin
+         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Fuzzy record linkage with multi-pass blocking — the entity-resolution
   * shape (Fellegi-Sunter via blocking; see also MMDS §3.9 on the
@@ -112,11 +112,6 @@ object Linkage {
       .orderBy("name")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_fuzzy_linkage"  -> ((s, d) => fuzzyLinkage(s, d)),
-    "x_entity_resolve" -> ((s, d) => entityResolve(s, d))
-  )
-
   /** Linked-pairs SQL (DuckDB), no ordering — shared by the linkage
     * oracle and the entity-resolution oracle's closure. */
   private val linkPairsSql: String =
@@ -133,11 +128,11 @@ object Linkage {
       |  CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b
       |FROM cand WHERE levenshtein(name_a, name_b) <= 3""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "x_fuzzy_linkage" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_fuzzy_linkage", (s, d) => fuzzyLinkage(s, d),
       s"""$linkPairsSql
-         |ORDER BY dist, name_a, name_b""".stripMargin,
-    "x_entity_resolve" ->
+         |ORDER BY dist, name_a, name_b""".stripMargin),
+    Query("x_entity_resolve", (s, d) => entityResolve(s, d),
       s"""WITH RECURSIVE links AS ($linkPairsSql),
          |names AS (SELECT p_name AS name, count(*) AS n FROM part GROUP BY 1),
          |e AS (SELECT name_a AS src, name_b AS dst FROM links
@@ -156,6 +151,6 @@ object Linkage {
          |      row_number() OVER (PARTITION BY cluster ORDER BY n DESC, name ASC) AS rn
          |    FROM lab) WHERE rn = 1)
          |SELECT lab.name, canon.canonical, CAST(lab.n AS BIGINT) AS n_records
-         |FROM lab JOIN canon USING (cluster) ORDER BY lab.name""".stripMargin
+         |FROM lab JOIN canon USING (cluster) ORDER BY lab.name""".stripMargin)
   )
 }

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Multimodal-column plumbing (BASELINE.json extension mandate): media is
   * an opaque `binary` column + typed metadata. The container has no
@@ -172,14 +172,8 @@ object Multimodal {
       .where(col("n_docs") >= 2)
       .orderBy(col("n_docs").desc, col("sig").asc)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_mm_binary_meta" -> (binaryMeta _),
-    "x_mm_frame_agg"   -> (frameAgg _),
-    "x_mm_frame_dups"  -> (frameDupFamilies _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x_mm_frame_dups" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_mm_frame_dups", frameDupFamilies _,
       """WITH sigs AS (
         |  SELECT doc_id, array_to_string(list_transform(generate_series(0, 3),
         |      i -> ascii(substr(text, i * CAST(length(text) // 4 AS INTEGER) + 1, 1))), ',') AS sig
@@ -187,8 +181,8 @@ object Multimodal {
         |SELECT sig, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(min(doc_id) AS BIGINT) AS rep_doc
         |FROM sigs GROUP BY sig HAVING count(*) >= 2
-        |ORDER BY n_docs DESC, sig ASC""".stripMargin,
-    "x_mm_frame_agg" ->
+        |ORDER BY n_docs DESC, sig ASC""".stripMargin),
+    Query("x_mm_frame_agg", frameAgg _,
       s"""WITH meta AS (
         |  SELECT doc_id, CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
         |    unnest(list_transform(generate_series(0, 3),
@@ -199,8 +193,8 @@ object Multimodal {
         |  min(m.frame) AS min_frame, max(m.frame) AS max_frame,
         |  ${graft.ops.StableStats.intMeanSql("m.byte_len")} AS avg_bytes
         |FROM meta m JOIN documents d USING (doc_id)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "x_mm_binary_meta" ->
+        |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    Query("x_mm_binary_meta", binaryMeta _,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
         |  sha256(text) AS sha256,
@@ -208,6 +202,6 @@ object Multimodal {
         |  1 + (n_chars * 104729) % 480 AS fake_height,
         |  array_to_string(list_transform(generate_series(0, 3),
         |    i -> ascii(substr(text, i * CAST(length(text) // 4 AS INTEGER) + 1, 1))), ',') AS frame_sample
-        |FROM documents ORDER BY doc_id""".stripMargin
+        |FROM documents ORDER BY doc_id""".stripMargin)
   )
 }

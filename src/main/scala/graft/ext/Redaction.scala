@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.exec.Scratch
 import graft.ops.StableStats
 
@@ -324,13 +324,6 @@ object Redaction {
       lit(kMinMerged).as("k_min_merged"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_pii_redact" -> (piiRedact _),
-    "x_k_anonymity" -> (kAnonymity _),
-    "x_k_anon_enforce" -> (kAnonEnforce _),
-    "x_k_anon_view" -> (kAnonView _),
-    "x_k_anon_incr" -> (kAnonIncr _))
-
   // DuckDB notes: single-quoted literals are raw (no backslash escape
   // layer), so the Scala-escaped "\\b" must re-emit as \b; regexp_replace
   // needs the 'g' flag to match Spark's replace-all; ((x % 3) + 3) % 3
@@ -339,8 +332,8 @@ object Redaction {
   private val ipSql = IpRe.replace("\\\\", "\\")
   private val phoneSql = PhoneRe.replace("\\\\", "\\")
 
-  val oracles: Map[String, String] = Map(
-    "x_k_anon_incr" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_k_anon_incr", kAnonIncr _,
       s"""WITH d AS (SELECT doc_id, lang, source, n_chars FROM documents),
          |base AS (SELECT * FROM d WHERE ((doc_id % 10) + 10) % 10 <> 0),
          |delta AS (SELECT * FROM d WHERE ((doc_id % 10) + 10) % 10 = 0),
@@ -373,8 +366,8 @@ object Redaction {
          |  CAST((SELECT m * 256 FROM chb) AS BIGINT) AS width_before,
          |  CAST((SELECT m * 256 FROM chm) AS BIGINT) AS width_after,
          |  k_min_merged
-         |FROM nd, cb, cm, km""".stripMargin,
-    "x_k_anon_view" ->
+         |FROM nd, cb, cm, km""".stripMargin),
+    Query("x_k_anon_view", kAnonView _,
       s"""WITH base AS (
          |  SELECT lang, source, n_chars // 256 AS lb, CAST(count(*) AS BIGINT) AS n
          |  FROM documents GROUP BY 1, 2, 3),
@@ -391,8 +384,8 @@ object Redaction {
          |sized AS (SELECT *, count(*) OVER (PARTITION BY lang, source, glb) AS n
          |  FROM tagged)
          |SELECT doc_id, lang, source, glb FROM sized
-         |WHERE n >= 5 ORDER BY doc_id""".stripMargin,
-    "x_k_anon_enforce" ->
+         |WHERE n >= 5 ORDER BY doc_id""".stripMargin),
+    Query("x_k_anon_enforce", kAnonEnforce _,
       s"""WITH base AS (
          |  SELECT lang, source, n_chars // 256 AS lb, CAST(count(*) AS BIGINT) AS n
          |  FROM documents GROUP BY 1, 2, 3),
@@ -416,8 +409,8 @@ object Redaction {
          |  FROM fin)
          |SELECT classes_before, gen_width, n_classes_gen, classes_after,
          |  rows_suppressed, k_min_after
-         |FROM cb, rep""".stripMargin,
-    "x_k_anonymity" ->
+         |FROM cb, rep""".stripMargin),
+    Query("x_k_anonymity", kAnonymity _,
       s"""WITH cls AS (
          |  SELECT lang, source, n_chars // 256 AS lb,
          |         CAST(count(*) AS BIGINT) AS n
@@ -428,8 +421,8 @@ object Redaction {
          |  CAST(coalesce(sum(CASE WHEN n < 5 THEN n END), 0) AS BIGINT) AS n_rows_below_5,
          |  ${graft.ops.StableStats.ratioSql(
               "coalesce(sum(CASE WHEN n < 5 THEN n END), 0)", "sum(n)")} AS pct_below_5
-         |FROM cls""".stripMargin,
-    "x_pii_redact" ->
+         |FROM cls""".stripMargin),
+    Query("x_pii_redact", piiRedact _,
       s"""WITH aug AS (
          |  SELECT source,
          |    text
@@ -464,5 +457,5 @@ object Redaction {
          |    + len(regexp_extract_all(scrubbed, '$phoneSql'))) AS BIGINT) AS n_residual,
          |  CAST(sum(length(scrubbed)) AS BIGINT) AS scrub_len_sum,
          |  CAST(sum(('0x' || substr(md5(scrubbed), 1, 8))::BIGINT) AS BIGINT) AS scrub_md5_sum
-         |FROM s GROUP BY source ORDER BY source""".stripMargin)
+         |FROM s GROUP BY source ORDER BY source""".stripMargin))
 }

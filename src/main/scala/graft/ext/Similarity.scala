@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (BASELINE.json extension mandate).
@@ -744,25 +744,8 @@ object Similarity {
       .orderBy("a_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_align_mutual_nn" -> (alignMutualNn _),
-    "x_sim_mmr"        -> ((s, d) => mmrSelect(s, d)),
-    "x_embed_silhouette" -> (embedSilhouette _),
-    "x_label_noise"    -> ((s, d) => labelNoise(s, d)),
-    "x_embed_norm"     -> (embedNorm _),
-    "x_rrf_hybrid"     -> (rrfHybrid _),
-    "x_pq_search"      -> (pqSearch _),
-    "x_pq_codes"       -> (pqCodes _),
-    "x_kmeans_step"    -> (kmeansStep _),
-    "x_sim_topk_brute" -> (bruteTopK _),
-    "x_sim_ivf_topk"   -> (ivfTopK _),
-    "x_sim_ivf_recall" -> (ivfRecall _),
-    "x_sim_lsh_topk"   -> (lshTopK _),
-    "x_sim_quantized"  -> (quantizedTopK _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x_align_mutual_nn" -> {
+  val queries: Seq[Query] = Seq(
+    Query("x_align_mutual_nn", alignMutualNn _, {
       import graft.ops.StableStats.stableRoundSql
       // same adaptive plane count as alignPlanes (ceil-log2 over ceil(n/64),
       // floored at 4), same integer bucket id, same md5 cap order, same
@@ -801,9 +784,9 @@ object Similarity {
          |  ${stableRoundSql("2 * r.cos_sim - a_nn_avg - b_nn_avg", 4)} AS margin
          |FROM r JOIN atop USING (a_id) JOIN btop USING (b_id)
          |WHERE ra = 1 AND rb = 1 ORDER BY a_id""".stripMargin
-    },
-    "x_sim_mmr" -> mmrOracle(12, 4),
-    "x_embed_silhouette" -> {
+    }),
+    Query("x_sim_mmr", (s, d) => mmrSelect(s, d), mmrOracle(12, 4)),
+    Query("x_embed_silhouette", embedSilhouette _, {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
          |px AS (SELECT label, unnest(emb) AS x,
@@ -829,8 +812,8 @@ object Similarity {
          |  ${stableRoundSql(
               "CAST(sum(own_u) - sum(other_u) AS DOUBLE) / count(*) / 1e6", 6)} AS mean_margin
          |FROM per GROUP BY label ORDER BY label""".stripMargin
-    },
-    "x_embed_norm" -> {
+    }),
+    Query("x_embed_norm", embedNorm _, {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH e AS (SELECT vec_id, unnest(embedding) AS v,
          |    unnest(generate_series(1, len(embedding))) AS pos FROM embeddings),
@@ -849,8 +832,8 @@ object Similarity {
          |  ${stableRoundSql("CAST(sum(zq) AS DOUBLE) / 1e4", 4)} AS z_sum,
          |  ${stableRoundSql("CAST(max(abs(zq)) AS DOUBLE) / 1e4", 4)} AS z_max
          |FROM z GROUP BY vec_id ORDER BY vec_id""".stripMargin
-    },
-    "x_rrf_hybrid" -> {
+    }),
+    Query("x_rrf_hybrid", rrfHybrid _, {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH toks AS (SELECT doc_id, tok FROM (
          |    SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
@@ -890,8 +873,8 @@ object Similarity {
          |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
          |    ORDER BY rrf DESC, cand_id) AS rn FROM fused)
          |WHERE rn <= 10 ORDER BY query_id, rn""".stripMargin
-    },
-    "x_pq_search" -> {
+    }),
+    Query("x_pq_search", pqSearch _, {
       def assign(sub: String, out: String) =
         s"""$out AS (SELECT vec_id, c_id FROM (
            |  SELECT t.vec_id, c.vec_id AS c_id,
@@ -926,8 +909,8 @@ object Similarity {
          |  CAST(CASE WHEN e5.cand_id IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) AS in_exact_top5
          |FROM pr LEFT JOIN e5 ON pr.query_id = e5.query_id AND pr.cand_id = e5.cand_id
          |WHERE pr.rn <= 5 ORDER BY pr.query_id, pr.rn""".stripMargin
-    },
-    "x_pq_codes" -> {
+    }),
+    Query("x_pq_codes", pqCodes _, {
       def assign(sub: String, out: String) =
         s"""$out AS (SELECT vec_id, c_id FROM (
            |  SELECT t.vec_id, c.vec_id AS c_id,
@@ -943,8 +926,8 @@ object Similarity {
          |SELECT vec_id, clo.c_id AS code_lo, chi.c_id AS code_hi
          |FROM clo JOIN chi USING (vec_id)
          |ORDER BY vec_id""".stripMargin
-    },
-    "x_kmeans_step" -> {
+    }),
+    Query("x_kmeans_step", kmeansStep _, {
       import graft.ops.StableStats
       s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          |cent AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id < 8),
@@ -963,8 +946,8 @@ object Similarity {
               "CAST(sum(CAST(round(x * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6", 6)} AS centroid
          |FROM px GROUP BY cluster, pos
          |ORDER BY cluster, pos""".stripMargin
-    },
-    "x_sim_quantized" ->
+    }),
+    Query("x_sim_quantized", quantizedTopK _,
       """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         |qn AS (SELECT vec_id, e, list_transform(e, x -> round(x / s * 127)) AS q
         |  FROM (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS s FROM emb)),
@@ -984,8 +967,8 @@ object Similarity {
         |SELECT qr.query_id, CAST(qr.rn AS INTEGER) AS rn, qr.cand_id, qr.q_cos,
         |  CAST(CASE WHEN e5.cand_id IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) AS in_exact_top5
         |FROM qr LEFT JOIN e5 ON qr.query_id = e5.query_id AND qr.cand_id = e5.cand_id
-        |WHERE qr.rn <= 5 ORDER BY qr.query_id, qr.rn""".stripMargin,
-    "x_label_noise" -> {
+        |WHERE qr.rn <= 5 ORDER BY qr.query_id, qr.rn""".stripMargin),
+    Query("x_label_noise", (s, d) => labelNoise(s, d), {
       val bucketConcat = (0 until PLANES)
         .map(i => s"max(CASE WHEN p = $i THEN bit END)").mkString(" || ")
       s"""WITH emb AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1009,8 +992,8 @@ object Similarity {
          |SELECT vec_id, label, bucket, blabel AS suggested, CAST(adj AS BIGINT) AS n_agree
          |FROM r WHERE rn = 1 AND blabel <> label AND adj >= 2
          |ORDER BY n_agree DESC, vec_id LIMIT 20""".stripMargin
-    },
-    "x_sim_lsh_topk" -> {
+    }),
+    Query("x_sim_lsh_topk", lshTopK _, {
       val bucketConcat = (0 until PLANES)
         .map(i => s"max(CASE WHEN p = $i THEN bit END)").mkString(" || ")
       s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1031,8 +1014,8 @@ object Similarity {
          |SELECT query_id, CAST(rn AS INTEGER) AS rn, cand_id, cos_sim,
          |  q_bucket AS bucket
          |FROM r WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
-    },
-    "x_sim_topk_brute" ->
+    }),
+    Query("x_sim_topk_brute", bruteTopK _,
       """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         |q AS (SELECT vec_id AS query_id, e AS qe FROM emb WHERE vec_id < 20),
         |scored AS (SELECT q.query_id, emb.vec_id AS cand_id,
@@ -1042,8 +1025,8 @@ object Similarity {
         |    (PARTITION BY query_id ORDER BY cos_sim DESC, cand_id) AS rn
         |  FROM scored)
         |SELECT query_id, CAST(rn AS INTEGER) AS rn, cand_id, cos_sim
-        |FROM ranked WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
-    "x_sim_ivf_recall" -> {
+        |FROM ranked WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin),
+    Query("x_sim_ivf_recall", ivfRecall _, {
       import graft.ops.StableStats
       s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          |cent AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id < 8),
@@ -1074,8 +1057,8 @@ object Similarity {
          |SELECT q.query_id, CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
          |  ${StableStats.ratioSql("coalesce(n_hits, 0)", "3")} AS recall_at_3
          |FROM q LEFT JOIN hits USING (query_id) ORDER BY query_id""".stripMargin
-    },
-    "x_sim_ivf_topk" ->
+    }),
+    Query("x_sim_ivf_topk", ivfTopK _,
       """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         |cent AS (SELECT vec_id AS c_id, e AS ce FROM emb WHERE vec_id < 8),
         |assigned AS (SELECT emb.vec_id, cent.c_id,
@@ -1096,6 +1079,6 @@ object Similarity {
         |  FROM scored)
         |SELECT query_id, CAST(rn AS INTEGER) AS rn, cand_id, cos_sim,
         |  q_cluster AS cluster
-        |FROM ranked WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+        |FROM ranked WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin)
   )
 }

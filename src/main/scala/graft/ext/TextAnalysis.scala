@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.exec.Scratch
 
 /** Text-analysis operators for a training-data pipeline over `documents`
@@ -905,32 +905,6 @@ object TextAnalysis {
       .withColumn("keep", (col("score_logit") >= ClassifierThreshold).cast("int"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_classifier_grad"  -> (classifierGradStep _),
-    "x_classifier_train" -> (classifierTrain _),
-    "x_classifier_apply" -> (classifierApply _),
-    "x_classifier_incr" -> (classifierIncr _),
-    "x_classifier_bias"  -> (classifierBias _),
-    "x_quality_classifier" -> (qualityClassifier _),
-    "x_text_normalize"   -> (textNormalize _),
-    "x_ppl_buckets"      -> (pplBuckets _),
-    "x_text_entropy"     -> (charEntropy _),
-    "x_bm25_topk"        -> (bm25TopK _),
-    "x_boilerplate_ngrams" -> (boilerplateNgrams _),
-    "x_lm_logprob"       -> (lmLogprob _),
-    "x_quality_sample"   -> (qualitySample _),
-    "x_text_chunks"      -> (chunks _),
-    "x_text_repetition"  -> (repetition _),
-    "x_text_char_bigrams" -> (charBigrams _),
-    "x_text_tokens"      -> (tokenCounts _),
-    "x_text_quality"     -> (qualityScore _),
-    "x_text_gopher"      -> (gopherRules _),
-    "x_bpe_merge_step"   -> (bpeMergeStep _),
-    "x_text_langid"      -> (languageId _),
-    "x_text_fingerprint" -> (fingerprint _),
-    "x_text_tfidf"       -> (tfidfTopTerm _)
-  )
-
   private[ext] def inList(ws: Seq[String]) = ws.map("'" + _ + "'").mkString(",")
 
   /** Quality-score SQL fragment (DuckDB dialect) shared with composing
@@ -1096,14 +1070,14 @@ object TextAnalysis {
        |FROM ch""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "x_classifier_train" -> classifierTrainSql,
-    "x_classifier_incr" -> classifierIncrSql,
-    "x_classifier_apply" -> classifierApplySql,
-    "x_quality_classifier" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_classifier_train", classifierTrain _, classifierTrainSql),
+    Query("x_classifier_incr", classifierIncr _, classifierIncrSql),
+    Query("x_classifier_apply", classifierApply _, classifierApplySql),
+    Query("x_quality_classifier", qualityClassifier _,
       s"""$classifierSql
-         |ORDER BY doc_id""".stripMargin,
-    "x_classifier_bias" -> {
+         |ORDER BY doc_id""".stripMargin),
+    Query("x_classifier_bias", classifierBias _, {
       import graft.ops.StableStats.{ratioSql, stableRoundSql}
       val deltaSql = stableRoundSql(
         "CAST(n_keep AS DOUBLE) / n_docs" +
@@ -1118,8 +1092,8 @@ object TextAnalysis {
          |  $deltaSql AS rate_delta,
          |  CAST(abs($deltaSql) > 1e-1 AS INTEGER) AS skewed
          |FROM per ORDER BY source""".stripMargin
-    },
-    "x_classifier_grad" ->
+    }),
+    Query("x_classifier_grad", classifierGradStep _,
       s"""WITH $classifierGramsSql,
          |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
          |    CAST(sum($classifierMilliSql) AS BIGINT) AS milli_sum
@@ -1133,15 +1107,15 @@ object TextAnalysis {
          |  CAST(sum(residual) AS BIGINT) AS grad,
          |  CAST(-sign(sum(residual)) AS INTEGER) AS dir
          |FROM slots GROUP BY slot
-         |ORDER BY abs(grad) DESC, slot ASC LIMIT 20""".stripMargin,
-    "x_text_normalize" ->
+         |ORDER BY abs(grad) DESC, slot ASC LIMIT 20""".stripMargin),
+    Query("x_text_normalize", textNormalize _,
       """SELECT doc_id,
         |  CAST(length(text) AS BIGINT) AS n_chars_raw,
         |  CAST(length(nfc_normalize(text)) AS BIGINT) AS n_chars_nfc,
         |  CAST(text <> nfc_normalize(text) AS INT) AS changed,
         |  md5(nfc_normalize(text)) AS nfc_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "x_ppl_buckets" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("x_ppl_buckets", pplBuckets _,
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |counts AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
         |tot AS (SELECT sum(cnt) AS total FROM counts),
@@ -1154,8 +1128,8 @@ object TextAnalysis {
         |  FROM lp JOIN documents USING (doc_id))
         |SELECT CASE tert WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket,
         |  lang, count(*) AS n_docs, min(avg_logp) AS min_logp, max(avg_logp) AS max_logp
-        |FROM b GROUP BY tert, lang ORDER BY bucket, lang""".stripMargin,
-    "x_text_entropy" ->
+        |FROM b GROUP BY tert, lang ORDER BY bucket, lang""".stripMargin),
+    Query("x_text_entropy", charEntropy _,
       """WITH chars AS (
         |  SELECT doc_id, substr(text, CAST(i AS INTEGER), 1) AS ch
         |  FROM (SELECT doc_id, text, unnest(generate_series(1, len(text))) AS i
@@ -1164,8 +1138,8 @@ object TextAnalysis {
         |SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_chars, count(*) AS n_distinct,
         |  round(log2(CAST(sum(cnt) AS DOUBLE)) - sum(CAST(cnt AS DOUBLE) * log2(CAST(cnt AS DOUBLE))) / sum(cnt), 4) AS entropy
         |FROM counts
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "x_bm25_topk" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("x_bm25_topk", bm25TopK _,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |lens AS (SELECT doc_id, len(w) AS dl FROM d),
         |stats AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM lens),
@@ -1180,8 +1154,8 @@ object TextAnalysis {
         |      * tf * 22e-1
         |      / (tf + 12e-1 * (1 - 75e-2 + 75e-2 * dl / (CAST(total_dl AS DOUBLE) / n_docs))) AS score_t
         |  FROM tf JOIN dfq USING (tok) JOIN lens USING (doc_id), stats)
-        |GROUP BY doc_id ORDER BY bm25 DESC, doc_id ASC LIMIT 10""".stripMargin,
-    "x_boilerplate_ngrams" ->
+        |GROUP BY doc_id ORDER BY bm25 DESC, doc_id ASC LIMIT 10""".stripMargin),
+    Query("x_boilerplate_ngrams", boilerplateNgrams _,
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
          |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
@@ -1192,24 +1166,24 @@ object TextAnalysis {
          |  ${graft.ops.StableStats.ratioSql(
               "sum(CASE WHEN df >= 3 THEN 1 ELSE 0 END)", "count(*)")} AS boiler_ratio
          |FROM sh JOIN df USING (shingle)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "x_lm_logprob" ->
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("x_lm_logprob", lmLogprob _,
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |counts AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
         |tot AS (SELECT sum(cnt) AS total FROM counts)
         |SELECT doc_id, count(*) AS n_tokens,
         |  round(avg(log10(CAST(cnt AS DOUBLE)) - log10(CAST(total AS DOUBLE))), 4) AS avg_logp
         |FROM toks JOIN counts USING (tok), tot
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "x_text_chunks" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("x_text_chunks", chunks _,
       """SELECT doc_id, CAST(start // 40 AS INTEGER) AS chunk_idx,
         |  CAST(len(w[start + 1 : start + 50]) AS INTEGER) AS n_tokens,
         |  md5(array_to_string(w[start + 1 : start + 50], ' ')) AS chunk_hash
         |FROM (
         |  SELECT doc_id, w, unnest(generate_series(0, len(w) - 1, 40)) AS start
         |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "x_text_repetition" ->
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("x_text_repetition", repetition _,
       s"""WITH t AS (
          |  SELECT doc_id,
          |    CAST(len(sh) AS INTEGER) AS n_grams,
@@ -1224,8 +1198,8 @@ object TextAnalysis {
               "1e0 - CAST(n_distinct AS DOUBLE) / n_grams", 4)} AS dup_frac,
          |  CAST(${graft.ops.StableStats.stableRoundSql(
               "1e0 - CAST(n_distinct AS DOUBLE) / n_grams", 4)} > 2e-1 AS INTEGER) AS repetitive
-         |FROM t ORDER BY doc_id""".stripMargin,
-    "x_text_char_bigrams" ->
+         |FROM t ORDER BY doc_id""".stripMargin),
+    Query("x_text_char_bigrams", charBigrams _,
       """SELECT lang, CAST(rn AS INTEGER) AS rn, bigram, freq FROM (
         |  SELECT lang, bigram, freq,
         |    row_number() OVER (PARTITION BY lang ORDER BY freq DESC, bigram ASC) AS rn
@@ -1235,14 +1209,14 @@ object TextAnalysis {
         |        i -> substr(text, i, 2))) AS bg
         |      FROM documents)
         |    GROUP BY lang, bg))
-        |WHERE rn <= 5 ORDER BY lang, rn""".stripMargin,
-    "x_text_tokens" ->
+        |WHERE rn <= 5 ORDER BY lang, rn""".stripMargin),
+    Query("x_text_tokens", tokenCounts _,
       """SELECT doc_id, CAST(length(text) AS INTEGER) AS n_chars_calc,
         |  CAST(len(string_split(text, ' ')) AS INTEGER) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS INTEGER) AS re_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-z0-9]{1,4}')) AS INTEGER) AS bpe_chunks
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "x_quality_sample" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("x_quality_sample", qualitySample _,
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |s AS (SELECT doc_id, len(w) AS n_words, len(list_distinct(w)) AS n_uniq,
          |  len(list_filter(w, x -> x IN (${inList(stopEn)}))) AS n_stop FROM t),
@@ -1251,8 +1225,8 @@ object TextAnalysis {
          |  ('0x' || substr(md5('qsamp|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 / 1e4 AS u
          |FROM s)
          |SELECT doc_id, u, quality_score FROM q
-         |WHERE u < quality_score ORDER BY doc_id""".stripMargin,
-    "x_text_quality" ->
+         |WHERE u < quality_score ORDER BY doc_id""".stripMargin),
+    Query("x_text_quality", qualityScore _,
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |s AS (SELECT doc_id, len(w) AS n_words, len(list_distinct(w)) AS n_uniq,
          |  len(list_filter(w, x -> x IN (${inList(stopEn)}))) AS n_stop FROM t)
@@ -1260,17 +1234,17 @@ object TextAnalysis {
          |  ${graft.ops.StableStats.stableRoundSql("CAST(n_uniq AS DOUBLE) / CAST(n_words AS DOUBLE)", 4)} AS distinct_ratio,
          |  ${graft.ops.StableStats.stableRoundSql("CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE)", 4)} AS stopword_ratio,
          |  ${graft.ops.StableStats.stableRoundSql("least(1e0, CAST(n_words AS DOUBLE) / 1e2) * (1 - CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE)) * (CAST(n_uniq AS DOUBLE) / CAST(n_words AS DOUBLE))", 4)} AS quality_score
-         |FROM s ORDER BY doc_id""".stripMargin,
-    "x_text_gopher" -> s"""$gopherSignalsSql
-         |ORDER BY doc_id""".stripMargin,
-    "x_bpe_merge_step" ->
+         |FROM s ORDER BY doc_id""".stripMargin),
+    Query("x_text_gopher", gopherRules _, s"""$gopherSignalsSql
+         |ORDER BY doc_id""".stripMargin),
+    Query("x_bpe_merge_step", bpeMergeStep _,
       """WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
         |wf AS (SELECT word, count(*) AS freq FROM w WHERE len(word) >= 2 GROUP BY 1),
         |p AS (SELECT substr(word, CAST(i AS INTEGER), 2) AS pair, freq
         |      FROM (SELECT word, freq, unnest(generate_series(1, len(word) - 1)) AS i FROM wf))
         |SELECT pair, CAST(sum(freq) AS BIGINT) AS n
-        |FROM p GROUP BY 1 ORDER BY n DESC, pair LIMIT 20""".stripMargin,
-    "x_text_langid" -> {
+        |FROM p GROUP BY 1 ORDER BY n DESC, pair LIMIT 20""".stripMargin),
+    Query("x_text_langid", languageId _, {
       val scoreCols = langStops.map { case (l, ws) =>
         s"CAST(len(list_filter(w, x -> x IN (${inList(ws)}))) AS INTEGER) AS s_$l"
       }.mkString(", ")
@@ -1283,8 +1257,8 @@ object TextAnalysis {
          |SELECT doc_id, s_en, s_de, s_fr, s_es, predicted, lang,
          |  predicted = lang AS matched
          |FROM p ORDER BY doc_id""".stripMargin
-    },
-    "x_text_tfidf" ->
+    }),
+    Query("x_text_tfidf", tfidfTopTerm _,
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
         |wl AS (SELECT *, sum(tf) OVER (PARTITION BY doc_id) AS doc_len FROM tf),
@@ -1296,13 +1270,13 @@ object TextAnalysis {
         |r AS (SELECT *, row_number() OVER
         |    (PARTITION BY doc_id ORDER BY tfidf DESC, tok) AS rn FROM scored)
         |SELECT doc_id, tok, CAST(tf AS BIGINT) AS tf, tfidf
-        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "x_text_fingerprint" ->
+        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+    Query("x_text_fingerprint", fingerprint _,
       """WITH t AS (SELECT doc_id, lower(regexp_replace(text, '\s+', ' ', 'g')) AS norm FROM documents)
         |SELECT doc_id, md5(norm) AS norm_md5,
         |  ('0x' || substr(md5(norm), 1, 8))::BIGINT AS fp32,
         |  list_aggregate(list_transform(generate_series(1, greatest(length(norm) - 4, 1)),
         |    i -> md5(substr(norm, i, 5))), 'min') AS rolling_min_hash
-        |FROM t ORDER BY doc_id""".stripMargin
+        |FROM t ORDER BY doc_id""".stripMargin)
   )
 }

@@ -42,7 +42,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   * `etl/etl_process.py:140-166`); this is the probabilistic prefilter a
   * lake-scale engine puts in front of that exact check.
   */
-object BloomFilter {
+object BloomFilter extends NativeFunction("bloom_might_contain", classOf[BloomMightContain]) {
 
   /** Number of 64-bit words for an `mBits`-slot filter (`mBits` must be a
     * power of two ≥ 64 so the probe can mask instead of mod). */
@@ -116,20 +116,16 @@ object BloomFilter {
     org.apache.spark.sql.functions.call_function(
       "bloom_might_contain", hash, lit(bits), lit(k))
 
-  /** Idempotently register `bloom_might_contain(hash, bits, k)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "bloom_might_contain expects (hash, bits, k)")
-        require(args(1).foldable, "bloom bits must be a foldable literal")
-        require(args(2).foldable, "k must be a foldable literal")
-        val bitsArr = args(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
-        val k = args(2).eval().asInstanceOf[Number].intValue()
-        BloomMightContain(args.head, bitsArr, k)
-      },
-      "built-in")
+  /** `bloom_might_contain(hash, bits, k)`. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 3, "bloom_might_contain expects (hash, bits, k)")
+    require(args(1).foldable, "bloom bits must be a foldable literal")
+    require(args(2).foldable, "k must be a foldable literal")
+    val bitsArr = args(1).eval()
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
+    val k = args(2).eval().asInstanceOf[Number].intValue()
+    BloomMightContain(args.head, bitsArr, k)
+  }
 
   /** Theoretical false-positive probability for n inserted keys. */
   def fpp(mBits: Int, k: Int, n: Long): Double =

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,15 +90,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object CosineSimilarity {
-  /** Idempotently register `cosine_sim(a, b)` as a temp SQL function on
-    * this session so query code can use it via `expr(...)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "cosine_sim expects exactly 2 arguments")
-        CosineSimilarity(args.head, args(1))
-      },
-      "built-in")
+/** `cosine_sim(a, b)`. */
+object CosineSimilarity extends NativeFunction("cosine_sim", classOf[CosineSimilarity]) {
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 2, "cosine_sim expects exactly 2 arguments")
+    CosineSimilarity(args.head, args(1))
+  }
 }

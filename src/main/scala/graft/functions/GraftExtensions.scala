@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point — lets a deployment wire graft's
   * native functions into EVERY session via config, with no code change:
@@ -12,37 +10,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * Inside this repo's query functions the imperative
-  * [[CosineSimilarity.register]] path is used instead (the driver owns
-  * session construction); both routes register the same expression.
+  * [[NativeFunction.register]] path is used instead (the caller owns
+  * session construction); both routes register each function's one
+  * [[NativeFunction.build]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "cosine_sim expects exactly 2 arguments")
-        CosineSimilarity(args.head, args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("md5_slice64"),
-      new ExpressionInfo(classOf[Md5Slice64].getName, "md5_slice64"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "md5_slice64 expects exactly 3 arguments")
-        Md5Slice64(args.head, args(1), args(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "bloom_might_contain expects (hash, bits, k)")
-        require(args(1).foldable && args(2).foldable,
-          "bloom bits and k must be foldable literals")
-        val bits = args(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
-        BloomMightContain(args.head, bits,
-          args(2).eval().asInstanceOf[Number].intValue())
-      }))
+    Seq(CosineSimilarity, Md5Slice64, BloomFilter, UnicodeNormalize)
+      .foreach(f => ext.injectFunction(f.description))
     // canonical HOF cosine chains collapse to the fused native expression
     ext.injectOptimizerRule(_ => CosineHofRewrite)
     // single-slice md5 prefix-hash chains collapse to Md5Slice64

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,7 +71,8 @@ case class Md5Slice64(input: Expression, pos: Expression, len: Expression)
     copy(input = newFirst, pos = newSecond, len = newThird)
 }
 
-object Md5Slice64 {
+/** `md5_slice64(x, pos, len)`. */
+object Md5Slice64 extends NativeFunction("md5_slice64", classOf[Md5Slice64]) {
   private val digests = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -98,14 +98,8 @@ object Md5Slice64 {
     v
   }
 
-  /** Idempotently register `md5_slice64(x, pos, len)` as a temp SQL
-    * function on this session (same route as [[CosineSimilarity]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_slice64",
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "md5_slice64 expects exactly 3 arguments")
-        Md5Slice64(args.head, args(1), args(2))
-      },
-      "built-in")
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 3, "md5_slice64 expects exactly 3 arguments")
+    Md5Slice64(args.head, args(1), args(2))
+  }
 }

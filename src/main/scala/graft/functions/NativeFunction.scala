@@ -1,0 +1,22 @@
+package graft.functions
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
+/** A graft native SQL function: its name and the one [[build]] both
+  * registration routes use — [[register]] on a live session, and
+  * [[GraftExtensions]] for every session created with the extension. */
+abstract class NativeFunction(val name: String, expression: Class[_ <: Expression]) {
+  /** The expression for the SQL call's `args`. */
+  def build(args: Seq[Expression]): Expression
+
+  /** Idempotently register [[name]] as a temp SQL function on `spark`, so
+    * query code can use it via `expr(...)`. */
+  def register(spark: SparkSession): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+
+  /** The function as a `SparkSessionExtensions.injectFunction` entry. */
+  def description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(expression.getName, name), build)
+}

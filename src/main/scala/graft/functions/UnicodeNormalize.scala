@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,7 +60,7 @@ case class UnicodeNormalize(child: Expression, formName: String)
     copy(child = newChild)
 }
 
-object UnicodeNormalize {
+object UnicodeNormalize extends NativeFunction("unicode_normalize", classOf[UnicodeNormalize]) {
 
   /** Shared by interpreted eval and generated code (called via the
     * companion's static forwarder). isNormalized first: for the common
@@ -71,19 +70,15 @@ object UnicodeNormalize {
     if (Normalizer.isNormalized(s, form)) s else Normalizer.normalize(s, form)
   }
 
-  /** Idempotently register `unicode_normalize(str[, form])`; form
-    * defaults to NFC and must be a foldable literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_normalize",
-      (args: Seq[Expression]) => {
-        require(args.length == 1 || args.length == 2,
-          "unicode_normalize expects (str) or (str, form)")
-        val form = if (args.length == 2) {
-          require(args(1).foldable, "normalization form must be a literal")
-          args(1).eval().toString
-        } else "NFC"
-        UnicodeNormalize(args.head, form)
-      },
-      "built-in")
+  /** `unicode_normalize(str[, form])`; form defaults to NFC and must be
+    * a foldable literal. */
+  def build(args: Seq[Expression]): Expression = {
+    require(args.length == 1 || args.length == 2,
+      "unicode_normalize expects (str) or (str, form)")
+    val form = if (args.length == 2) {
+      require(args(1).foldable, "normalization form must be a literal")
+      args(1).eval().toString
+    } else "NFC"
+    UnicodeNormalize(args.head, form)
+  }
 }

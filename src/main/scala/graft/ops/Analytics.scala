@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Analytics surface: the reference's summary/structure assets
   * (`dagster/assets.py:189-394`) plus stream-analytics operators a
@@ -579,34 +579,8 @@ object Analytics {
       .orderBy("col_a", "col_b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_corr_matrix"      -> (corrMatrix _),
-    "x_gap_fill"         -> (gapFill _),
-    "a_funnel"           -> (funnel _),
-    "a_cohort_retention" -> (cohortRetention _),
-    "a_array_agg"      -> (arrayAgg _),
-    "f_null_scalars"   -> (nullScalars _),
-    "x_user_gaps"      -> (userGaps _),
-    "a_sliding_window" -> (slidingWindow _),
-    "a_session_window" -> (sessionWindow _),
-    "a7_column_stats"  -> (columnStats _),
-    "o3_export_order"  -> (exportOrder _),
-    "j4_concat_axis"   -> (concatAxis _),
-    "x_sessionize"     -> (sessionize _),
-    "x_event_transitions" -> (eventTransitions _),
-    "x_seasonal_mase"  -> (seasonalMase _),
-    "x_count_anomaly"  -> ((s, d) => countAnomalies(s, d)),
-    "x_lateness_hist"  -> (latenessHistogram _),
-    "x_interval_overlap" -> (intervalOverlap _),
-    "x_bootstrap_ci"   -> ((s, d) => bootstrapCi(s, d)),
-    "x_quantile_sketch" -> ((s, d) => quantileSketch(s, d)),
-    "a_quantiles"      -> (quantiles _),
-    "a_histogram"      -> (histogram _),
-    "s9_catalog"       -> (catalogStructure _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x_corr_matrix" -> {
+  val queries: Seq[Query] = Seq(
+    Query("x_corr_matrix", corrMatrix _, {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
       val rows = (for {
         i <- cols.indices; j <- (i + 1) until cols.size
@@ -614,8 +588,8 @@ object Analytics {
         s"${StableStats.stableRoundSql(s"corr(${cols(i)}, ${cols(j)})", 4)} AS corr FROM lineitem")
         .mkString("\nUNION ALL\n")
       s"$rows\nORDER BY col_a, col_b"
-    },
-    "x_gap_fill" ->
+    }),
+    Query("x_gap_fill", gapFill _,
       s"""WITH day AS (
          |  SELECT * FROM events
          |  WHERE ts >= TIMESTAMP '2024-01-03' AND ts < TIMESTAMP '2024-01-04'),
@@ -632,8 +606,8 @@ object Analytics {
          |  last_value(avg_value IGNORE NULLS) OVER (PARTITION BY event_type
          |    ORDER BY slot ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
          |FROM grid LEFT JOIN obs ON event_type = ot AND slot = oslot
-         |ORDER BY event_type, slot""".stripMargin,
-    "a_funnel" -> {
+         |ORDER BY event_type, slot""".stripMargin),
+    Query("a_funnel", funnel _, {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH s1 AS (
          |  SELECT user_id, min(CASE WHEN event_type = 'view' THEN ts END) AS t_view
@@ -656,15 +630,15 @@ object Analytics {
          |  ${stableRoundSql("CAST(count(*) AS DOUBLE) / (SELECT count(*) FROM s1)", 4)} AS click_rate,
          |  ${stableRoundSql("CAST(count(t_purchase) AS DOUBLE) / count(*)", 4)} AS purchase_rate
          |FROM s3""".stripMargin
-    },
-    "a_cohort_retention" ->
+    }),
+    Query("a_cohort_retention", cohortRetention _,
       """WITH d AS (SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day FROM events),
         |c AS (SELECT user_id, day, min(day) OVER (PARTITION BY user_id) AS cohort_day FROM d)
         |SELECT cohort_day,
         |  CAST(date_diff('day', cohort_day, day) AS INTEGER) AS day_offset,
         |  count(*) AS n_users
-        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "x_user_gaps" ->
+        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("x_user_gaps", userGaps _,
       s"""WITH g AS (
          |  SELECT user_id,
          |    epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) AS gap_us
@@ -673,8 +647,8 @@ object Analytics {
          |  ${StableStats.intMeanSql("gap_us")} AS avg_gap_us,
          |  min(gap_us) AS min_gap_us, max(gap_us) AS max_gap_us
          |FROM g WHERE gap_us IS NOT NULL
-         |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "x_event_transitions" ->
+         |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("x_event_transitions", eventTransitions _,
       s"""WITH bi AS (
          |  SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
          |    event_type AS curr
@@ -684,10 +658,10 @@ object Analytics {
          |  FROM bi WHERE prev IS NOT NULL GROUP BY prev, curr)
          |SELECT prev, curr, n,
          |  ${StableStats.ratioSql("n", "sum(n) OVER (PARTITION BY prev)")} AS p
-         |FROM c ORDER BY prev, curr""".stripMargin,
+         |FROM c ORDER BY prev, curr""".stripMargin),
     // the oracle is the DIRECT single-window formulation: the two-level
     // prefix-scan decomposition must be indistinguishable from it
-    "x_lateness_hist" ->
+    Query("x_lateness_hist", latenessHistogram _,
       """WITH o AS (SELECT event_id, epoch_us(ts) AS us FROM events),
         |r AS (SELECT us, max(us) OVER (ORDER BY event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM o),
@@ -698,8 +672,8 @@ object Analytics {
         |    WHEN lat <= 3600000000 THEN 'd_le_1h'
         |    ELSE 'e_gt_1h' END AS bucket,
         |  CAST(count(*) AS BIGINT) AS n
-        |FROM l GROUP BY 1 ORDER BY 1""".stripMargin,
-    "x_count_anomaly" ->
+        |FROM l GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("x_count_anomaly", (s, d) => countAnomalies(s, d),
       s"""WITH hourly AS (
          |  SELECT event_type, date_trunc('hour', ts) AS h, CAST(count(*) AS BIGINT) AS c
          |  FROM events GROUP BY 1, 2),
@@ -721,8 +695,8 @@ object Analytics {
          |SELECT event_type, h, c,
          |  ${StableStats.stableRoundSql("mean", 4)} AS win_mean, z
          |FROM z WHERE abs(z) >= 2.0
-         |ORDER BY abs(z) DESC, event_type, h LIMIT 10""".stripMargin,
-    "x_seasonal_mase" ->
+         |ORDER BY abs(z) DESC, event_type, h LIMIT 10""".stripMargin),
+    Query("x_seasonal_mase", seasonalMase _,
       s"""WITH hourly AS (
          |  SELECT event_type, date_trunc('hour', ts) AS h, CAST(count(*) AS BIGINT) AS c
          |  FROM events GROUP BY 1, 2),
@@ -740,16 +714,16 @@ object Analytics {
          |  ${StableStats.ratioSql("s1", "c1")} AS mae_naive,
          |  ${StableStats.ratioSql("s24", "c24")} AS mae_seasonal,
          |  ${StableStats.ratioSql("s24 * c1", "c24 * s1")} AS mase
-         |FROM agg ORDER BY event_type""".stripMargin,
-    "a_sliding_window" ->
+         |FROM agg ORDER BY event_type""".stripMargin),
+    Query("a_sliding_window", slidingWindow _,
       s"""SELECT win_start, count(*) AS n, ${StableStats.centsMeanSql("value")} AS avg_value
          |FROM (
          |  SELECT time_bucket(INTERVAL 5 MINUTE, ts) - i * INTERVAL 5 MINUTE AS win_start,
          |         ts, value
          |  FROM events CROSS JOIN (VALUES (0), (1)) k(i))
          |WHERE ts >= win_start AND ts < win_start + INTERVAL 10 MINUTE
-         |GROUP BY win_start ORDER BY win_start""".stripMargin,
-    "a_session_window" ->
+         |GROUP BY win_start ORDER BY win_start""".stripMargin),
+    Query("a_session_window", sessionWindow _,
       """WITH g AS (
         |  SELECT user_id, ts, value,
         |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -764,25 +738,25 @@ object Analytics {
         |SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
         |  count(*) AS n_events, round(sum(value),2) AS sum_value
         |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_start""".stripMargin,
-    "a_array_agg" ->
+        |ORDER BY user_id, session_start""".stripMargin),
+    Query("a_array_agg", arrayAgg _,
       """SELECT event_type,
         |  array_to_string(list_sort(list(DISTINCT user_id)), ',') AS users, count(*) AS n
         |FROM events WHERE value > 400
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "f_null_scalars" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("f_null_scalars", nullScalars _,
       """SELECT n_nationkey, n_name,
         |  coalesce(s_name, '<none>') AS supp_or_none,
         |  nullif(s_nationkey, 0) AS nz_nationkey,
         |  CASE WHEN s_suppkey IS NULL THEN 'absent' ELSE 'present' END AS presence,
         |  coalesce(s_acctbal, 0e0) AS bal_or_zero
         |FROM nation LEFT JOIN supplier ON n_nationkey = s_nationkey
-        |ORDER BY n_nationkey, supp_or_none""".stripMargin,
-    "a7_column_stats" ->
+        |ORDER BY n_nationkey, supp_or_none""".stripMargin),
+    Query("a7_column_stats", columnStats _,
       s"""SELECT count(*) AS n, ${StableStats.centsMeanSql("value")} AS avg_value,
          |  min(value) AS min_value, max(value) AS max_value,
-         |  round(stddev(value),4) AS std_value FROM events""".stripMargin,
-    "o3_export_order" -> {
+         |  round(stddev(value),4) AS std_value FROM events""".stripMargin),
+    Query("o3_export_order", exportOrder _, {
       val day = "(SELECT * FROM events WHERE ts >= TIMESTAMP '2024-01-07 00:00:00' " +
         "AND ts < TIMESTAMP '2024-01-08 00:00:00')"
       s"""WITH agg AS (${SensorPipeline.aggSql.format(day)}),
@@ -792,8 +766,8 @@ object Analytics {
          |SELECT lng.timestamp, dim.signal_id, lng.value
          |FROM lng JOIN dim ON lng.signal_name = dim.name
          |ORDER BY lng.timestamp DESC, dim.signal_id ASC""".stripMargin
-    },
-    "j4_concat_axis" ->
+    }),
+    Query("j4_concat_axis", concatAxis _,
       s"""WITH c AS (
          |  SELECT time_bucket(INTERVAL 10 MINUTE, ts) AS click_ts,
          |    ${StableStats.centsMeanSql("value")} AS click_mean, min(value) AS click_min,
@@ -808,8 +782,8 @@ object Analytics {
         |  click_mean, click_min, click_max, click_std,
         |  view_mean, view_min, view_max, view_std
         |FROM c FULL OUTER JOIN v ON click_ts = view_ts
-        |ORDER BY timestamp""".stripMargin,
-    "x_quantile_sketch" -> {
+        |ORDER BY timestamp""".stripMargin),
+    Query("x_quantile_sketch", (s, d) => quantileSketch(s, d), {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH e AS (SELECT event_type, CAST(round(value * 1e2) AS BIGINT) AS c, value
          |  FROM events),
@@ -838,8 +812,8 @@ object Analytics {
          |SELECT event_type, p, n, est, exact,
          |  ${stableRoundSql("est - exact", 4)} AS err
          |FROM sel ORDER BY event_type, p""".stripMargin
-    },
-    "x_bootstrap_ci" -> {
+    }),
+    Query("x_bootstrap_ci", (s, d) => bootstrapCi(s, d), {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH e AS (SELECT event_id, event_type,
          |    CAST(round(value * 1e2) AS BIGINT) AS cents FROM events),
@@ -872,8 +846,8 @@ object Analytics {
          |  FROM e GROUP BY 1)
          |SELECT base.event_type, n, mean_value, boot_lo, boot_hi
          |FROM base JOIN ci USING (event_type) ORDER BY event_type""".stripMargin
-    },
-    "x_interval_overlap" ->
+    }),
+    Query("x_interval_overlap", intervalOverlap _,
       """WITH g AS (
         |  SELECT user_id, ts,
         |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -896,8 +870,8 @@ object Analytics {
         |    ON a.user_id < b.user_id AND a.s_us < b.e_us AND b.s_us < a.e_us)
         |SELECT u1, u2, count(*) AS n_overlaps, CAST(sum(ov_us) AS BIGINT) AS total_overlap_us
         |FROM p GROUP BY u1, u2
-        |ORDER BY n_overlaps DESC, u1 ASC, u2 ASC LIMIT 100""".stripMargin,
-    "x_sessionize" ->
+        |ORDER BY n_overlaps DESC, u1 ASC, u2 ASC LIMIT 100""".stripMargin),
+    Query("x_sessionize", sessionize _,
       """WITH g AS (
         |  SELECT user_id, ts, value,
         |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -914,14 +888,16 @@ object Analytics {
         |  epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us,
         |  round(sum(value),2) AS sum_value
         |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "a_quantiles" ->
+        |ORDER BY user_id, session_id""".stripMargin),
+    Query("a_quantiles", quantiles _,
       """SELECT event_type, round(quantile_cont(value, 0.5),4) AS p50,
         |  round(quantile_cont(value, 0.9),4) AS p90, count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "a_histogram" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("a_histogram", histogram _,
       """SELECT CAST(floor(value / 50) AS BIGINT) AS bucket, count(*) AS n,
         |  round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    // catalog introspection has no SQL twin: SketchCatalogSpec pins it
+    Query("s9_catalog", catalogStructure _)
   )
 }

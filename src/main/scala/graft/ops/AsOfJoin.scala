@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** As-of join — an operator Spark lacks natively (SPARK-22947 open), built
   * the scalable way: union both sides, ONE window pass per key carries the
@@ -137,14 +137,8 @@ object AsOfJoin {
       .orderBy("purchase_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_asof_attribution" -> (attribution _),
-    "x_asof_windowed"    -> (attributionWindowed _),
-    "x_multitouch"       -> (multiTouch _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x_multitouch" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_multitouch", multiTouch _,
       """WITH p AS (
         |  SELECT user_id, ts, event_id AS purchase_id,
         |    CAST(round(value * 100) AS BIGINT) AS cents
@@ -169,8 +163,8 @@ object AsOfJoin {
         |  CASE WHEN count(cid) > 0 THEN cents // count(cid) ELSE 0 END AS cents_per_touch,
         |  CASE WHEN count(cid) > 0 THEN cents % count(cid) ELSE 0 END AS cents_remainder
         |FROM r GROUP BY purchase_id, user_id, cents
-        |ORDER BY purchase_id""".stripMargin,
-    "x_asof_attribution" ->
+        |ORDER BY purchase_id""".stripMargin),
+    Query("x_asof_attribution", attribution _,
       """WITH clicks AS (
         |  SELECT user_id, ts, event_id FROM (
         |    SELECT user_id, ts, event_id, row_number() OVER
@@ -185,8 +179,8 @@ object AsOfJoin {
         |  epoch_us(p.ts) - epoch_us(c.ts) AS lag_us
         |FROM purchases p
         |ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY purchase_id""".stripMargin,
-    "x_asof_windowed" ->
+        |ORDER BY purchase_id""".stripMargin),
+    Query("x_asof_windowed", attributionWindowed _,
       """WITH clicks AS (
         |  SELECT user_id, ts, event_id FROM (
         |    SELECT user_id, ts, event_id, row_number() OVER
@@ -208,6 +202,6 @@ object AsOfJoin {
         |    THEN NULL ELSE click_ts END AS click_ts,
         |  CASE WHEN epoch_us(purchase_ts) - epoch_us(click_ts) > 1800000000
         |    THEN NULL ELSE epoch_us(purchase_ts) - epoch_us(click_ts) END AS lag_us
-        |FROM m ORDER BY purchase_id""".stripMargin
+        |FROM m ORDER BY purchase_id""".stripMargin)
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The remaining TPC-H decision-support shapes (Q4, Q9, Q11, Q13, Q15, Q16,
   * Q20, Q21) — with `Relational` and `Olap` this completes all 22 classic
@@ -229,27 +229,16 @@ object DecisionSupport {
       .orderBy(col("numwait").desc, col("s_name").asc)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q4_priority_check"   -> (orderPriorityCheck _),
-    "q9_product_profit"   -> (productProfit _),
-    "q11_important_parts" -> (importantParts _),
-    "q13_cust_distribution" -> (customerDistribution _),
-    "q15_top_supplier"    -> (topSupplier _),
-    "q16_supplier_variety" -> (supplierVariety _),
-    "q20_promo_suppliers" -> (promotionSuppliers _),
-    "q21_waiting_suppliers" -> (waitingSuppliers _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q4_priority_check" ->
+  val queries: Seq[Query] = Seq(
+    Query("q4_priority_check", orderPriorityCheck _,
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-07-01' AND o_orderdate < TIMESTAMP '1996-10-01'
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey
         |                AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q9_product_profit" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q9_product_profit", productProfit _,
       s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
          |  ${StableStats.stableRoundSql(
               "CAST(sum(CAST(round(l_extendedprice * 1e2) AS BIGINT)" +
@@ -262,8 +251,8 @@ object DecisionSupport {
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN supplier ON l_suppkey = s_suppkey
          |JOIN nation ON s_nationkey = n_nationkey
-         |GROUP BY 1, 2 ORDER BY nation ASC, o_year DESC""".stripMargin,
-    "q11_important_parts" ->
+         |GROUP BY 1, 2 ORDER BY nation ASC, o_year DESC""".stripMargin),
+    Query("q11_important_parts", importantParts _,
       s"""WITH per_part AS (
          |  SELECT l_partkey,
          |    sum(CAST(round(l_extendedprice * 1e2) AS BIGINT)
@@ -278,15 +267,15 @@ object DecisionSupport {
          |FROM per_part
          |WHERE part_units * (SELECT count(*) FROM per_part)
          |    > 2 * (SELECT sum(part_units) FROM per_part)
-         |ORDER BY value DESC, l_partkey ASC""".stripMargin,
-    "q13_cust_distribution" ->
+         |ORDER BY value DESC, l_partkey ASC""".stripMargin),
+    Query("q13_cust_distribution", customerDistribution _,
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q15_top_supplier" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Query("q15_top_supplier", topSupplier _,
       s"""WITH rev AS (
          |  SELECT l_suppkey,
          |    sum(CAST(round(l_extendedprice * 1e2) AS BIGINT)
@@ -298,16 +287,16 @@ object DecisionSupport {
          |  ${StableStats.stableRoundSql("CAST(rev_units AS DOUBLE) / 1e4", 2)} AS total_revenue
          |FROM rev JOIN supplier ON l_suppkey = s_suppkey
          |WHERE rev_units = (SELECT max(rev_units) FROM rev)
-         |ORDER BY s_suppkey""".stripMargin,
-    "q16_supplier_variety" ->
+         |ORDER BY s_suppkey""".stripMargin),
+    Query("q16_supplier_variety", supplierVariety _,
       """SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem
         |JOIN part ON l_partkey = p_partkey
         |WHERE p_brand <> 'Brand#1' AND p_size <= 25
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type
-        |ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC""".stripMargin,
-    "q20_promo_suppliers" ->
+        |ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC""".stripMargin),
+    Query("q20_promo_suppliers", promotionSuppliers _,
       """SELECT s_suppkey, s_name, n_name
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |WHERE s_suppkey IN (
@@ -316,8 +305,8 @@ object DecisionSupport {
         |    AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
         |  GROUP BY l_suppkey, l_partkey
         |  HAVING round(sum(l_quantity), 2) > 30)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q21_waiting_suppliers" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("q21_waiting_suppliers", waitingSuppliers _,
       """WITH per_os AS (
         |  SELECT l_orderkey, l_suppkey,
         |    max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY THEN 1 ELSE 0 END) AS supp_late
@@ -332,6 +321,6 @@ object DecisionSupport {
         |SELECT s_name, count(*) AS numwait
         |FROM flagged JOIN supplier ON l_suppkey = s_suppkey
         |WHERE supp_late = 1 AND n_supp > 1 AND n_late = 1
-        |GROUP BY s_name ORDER BY numwait DESC, s_name ASC""".stripMargin
+        |GROUP BY s_name ORDER BY numwait DESC, s_name ASC""".stripMargin)
   )
 }

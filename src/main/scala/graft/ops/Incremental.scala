@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Incremental aggregate maintenance — the 100 TB answer to the
   * reference's nightly rebuild-everything analytics assets
@@ -161,21 +161,15 @@ object Incremental {
       .orderBy("prev", "curr")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_incr_merged_stats" -> (mergedStats _),
-    "x_incr_scd2"         -> (scd2Intervals _),
-    "x_incr_transitions"  -> ((s, d) => incrTransitions(s, d))
-  )
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // the oracle is the DIRECT full-scan formulation: merging partials
     // must be indistinguishable from never having partialed at all
-    "x_incr_merged_stats" ->
+    Query("x_incr_merged_stats", mergedStats _,
       s"""SELECT event_type, count(*) AS n,
          |  ${StableStats.centsMeanSql("value")} AS avg_value,
          |  min(value) AS min_value, max(value) AS max_value
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "x_incr_transitions" ->
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("x_incr_transitions", (s, d) => incrTransitions(s, d),
       s"""WITH bi AS (
          |  SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
          |    event_type AS curr
@@ -185,8 +179,8 @@ object Incremental {
          |  FROM bi WHERE prev IS NOT NULL GROUP BY prev, curr)
          |SELECT prev, curr, n,
          |  ${StableStats.ratioSql("n", "sum(n) OVER (PARTITION BY prev)")} AS p
-         |FROM c ORDER BY prev, curr""".stripMargin,
-    "x_incr_scd2" ->
+         |FROM c ORDER BY prev, curr""".stripMargin),
+    Query("x_incr_scd2", scd2Intervals _,
       """WITH flagged AS (
         |  SELECT user_id, ts, event_id, event_type AS state,
         |    CASE WHEN lag(event_type) OVER w IS NULL
@@ -207,6 +201,6 @@ object Incremental {
         |SELECT user_id, CAST(version AS BIGINT) AS version, state, valid_from, valid_to,
         |  CAST(valid_to IS NULL AS INTEGER) AS is_current,
         |  n_events
-        |FROM closed ORDER BY user_id, version""".stripMargin
+        |FROM closed ORDER BY user_id, version""".stripMargin)
   )
 }

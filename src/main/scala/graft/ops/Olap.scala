@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** OLAP surface beyond the reference's own queries: multi-dimensional
   * grouping (CUBE + GROUPING), market-share two-level aggregation (TPC-H
@@ -287,24 +287,8 @@ object Olap {
       .orderBy("o_orderpriority", "o_orderdate", "o_orderkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "w_window_battery"    -> (windowBattery _),
-    "q19_disjunctive_rev" -> (disjunctiveRevenue _),
-    "q22_idle_customers"  -> (idleCustomers _),
-    "q17_small_qty_revenue" -> (smallQuantityRevenue _),
-    "q18_large_orders"    -> (largeOrders _),
-    "q6_forecast_revenue" -> (forecastRevenue _),
-    "q12_priority_lines"  -> (priorityLines _),
-    "q14_promo_revenue"   -> (promoRevenue _),
-    "a_cube_summary"     -> (cubeSummary _),
-    "q8_market_share"    -> (marketShare _),
-    "w_running_range"    -> (runningRange _),
-    "u_intersect_nations" -> (intersectNations _),
-    "f_array_scalars"    -> (arrayScalars _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "w_window_battery" ->
+  val queries: Seq[Query] = Seq(
+    Query("w_window_battery", windowBattery _,
       """SELECT o_orderkey, o_orderpriority, o_orderdate, o_totalprice,
         |  lag(o_totalprice, 1) OVER w AS prev_price,
         |  lead(o_totalprice, 1) OVER w AS next_price,
@@ -313,16 +297,16 @@ object Olap {
         |  round(cume_dist() OVER w, 6) AS cume
         |FROM orders WHERE o_custkey < 50
         |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_orderpriority, o_orderdate, o_orderkey""".stripMargin,
-    "q19_disjunctive_rev" ->
+        |ORDER BY o_orderpriority, o_orderdate, o_orderkey""".stripMargin),
+    Query("q19_disjunctive_rev", disjunctiveRevenue _,
       s"""SELECT
          |  ${StableStats.discountedSumSql("l_extendedprice", "l_discount")} AS revenue,
          |  count(*) AS n_lines
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE (p_type = 'PROMO' AND l_quantity BETWEEN 1 AND 11)
          |   OR (p_type = 'STANDARD' AND l_quantity BETWEEN 10 AND 20)
-         |   OR (p_size <= 5 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q22_idle_customers" ->
+         |   OR (p_size <= 5 AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
+    Query("q22_idle_customers", idleCustomers _,
       s"""WITH a AS (SELECT ${StableStats.centsMeanSql("c_acctbal")} AS avg_bal
          |  FROM customer WHERE c_acctbal > 0)
          |SELECT c_mktsegment, count(*) AS n_custs,
@@ -331,8 +315,8 @@ object Olap {
          |WHERE c_acctbal > a.avg_bal
          |  AND c_custkey NOT IN (
          |    SELECT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '2000-01-01')
-         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q17_small_qty_revenue" ->
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q17_small_qty_revenue", smallQuantityRevenue _,
       s"""WITH t AS (
          |  SELECT l_extendedprice, l_quantity,
          |    ${StableStats.stableRoundSql(
@@ -343,16 +327,16 @@ object Olap {
          |  ${StableStats.stableRoundSql(
               "CAST(sum(CAST(round(l_extendedprice * 1e2) AS BIGINT)) AS DOUBLE) / 7e2", 2)} AS avg_yearly,
          |  count(*) AS n_lines
-         |FROM t WHERE l_quantity < 2e-1 * avg_qty""".stripMargin,
-    "q18_large_orders" ->
+         |FROM t WHERE l_quantity < 2e-1 * avg_qty""".stripMargin),
+    Query("q18_large_orders", largeOrders _,
       """SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
         |FROM orders
         |JOIN (SELECT l_orderkey, round(sum(l_quantity), 2) AS total_qty
         |      FROM lineitem GROUP BY l_orderkey HAVING round(sum(l_quantity), 2) > 300) big
         |  ON o_orderkey = l_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 50""".stripMargin,
-    "q6_forecast_revenue" ->
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 50""".stripMargin),
+    Query("q6_forecast_revenue", forecastRevenue _,
       s"""SELECT
          |  ${StableStats.stableRoundSql(
               "CAST(sum(CAST(round(l_extendedprice * 1e2) AS BIGINT)" +
@@ -360,14 +344,14 @@ object Olap {
          |  count(*) AS n_lines
          |FROM lineitem
          |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-         |  AND l_discount BETWEEN 5e-2 AND 7e-2 AND l_quantity < 24""".stripMargin,
-    "q12_priority_lines" ->
+         |  AND l_discount BETWEEN 5e-2 AND 7e-2 AND l_quantity < 24""".stripMargin),
+    Query("q12_priority_lines", priorityLines _,
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
         |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q14_promo_revenue" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q14_promo_revenue", promoRevenue _,
       s"""WITH t AS (
          |  SELECT CAST(round(l_extendedprice * 1e2) AS BIGINT)
          |      * (100 - CAST(round(l_discount * 1e2) AS BIGINT)) AS units,
@@ -380,15 +364,15 @@ object Olap {
                 " / CAST(sum(units) AS DOUBLE)", 4)} AS promo_pct,
          |  ${StableStats.stableRoundSql("CAST(sum(units) AS DOUBLE) / 1e4", 2)} AS total_revenue,
          |  count(*) AS n_lines
-         |FROM t""".stripMargin,
-    "a_cube_summary" ->
+         |FROM t""".stripMargin),
+    Query("a_cube_summary", cubeSummary _,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(GROUPING(l_returnflag) AS INTEGER) AS g_rf,
         |  CAST(GROUPING(l_linestatus) AS INTEGER) AS g_ls,
         |  count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q8_market_share" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("q8_market_share", marketShare _,
       s"""WITH t AS (
          |  SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
          |    CAST(round(l_extendedprice * 1e2) AS BIGINT)
@@ -410,8 +394,8 @@ object Olap {
                 " / CAST(sum(units) AS DOUBLE)", 6)} AS mkt_share,
          |  ${StableStats.stableRoundSql("CAST(sum(units) AS DOUBLE) / 1e4", 2)} AS total_revenue,
          |  count(*) AS n_lines
-         |FROM t GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "w_running_range" ->
+         |FROM t GROUP BY o_year ORDER BY o_year""".stripMargin),
+    Query("w_running_range", runningRange _,
       """WITH daily AS (
         |  SELECT o_orderpriority,
         |    CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS INTEGER) AS day_num,
@@ -421,19 +405,19 @@ object Olap {
         |  CAST(day_cents AS DOUBLE) / 1e2 AS daily_rev,
         |  CAST(sum(day_cents) OVER (PARTITION BY o_orderpriority ORDER BY day_num
         |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) / 1e2 AS rev_7d
-        |FROM daily ORDER BY o_orderpriority, day_num""".stripMargin,
-    "u_intersect_nations" ->
+        |FROM daily ORDER BY o_orderpriority, day_num""".stripMargin),
+    Query("u_intersect_nations", intersectNations _,
       """SELECT c_nationkey AS nationkey FROM customer WHERE c_acctbal > 7500
         |INTERSECT
         |SELECT s_nationkey FROM supplier WHERE s_acctbal > 7500
-        |ORDER BY nationkey""".stripMargin,
-    "f_array_scalars" ->
+        |ORDER BY nationkey""".stripMargin),
+    Query("f_array_scalars", arrayScalars _,
       """SELECT vec_id,
         |  CAST(len(embedding) AS INTEGER) AS dim,
         |  CAST(len(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_pos,
         |  CAST(list_sum(list_transform(embedding[1:8],
         |    x -> CAST(round(abs(CAST(x AS DOUBLE)) * 1e4) AS BIGINT))) AS DOUBLE) / 1e4 AS l1_head8,
         |  round(CAST(embedding[3] AS DOUBLE), 6) AS e3
-        |FROM embeddings WHERE vec_id < 200 ORDER BY vec_id""".stripMargin
+        |FROM embeddings WHERE vec_id < 200 ORDER BY vec_id""".stripMargin)
   )
 }

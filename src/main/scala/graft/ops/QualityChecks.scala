@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Data-quality checks as a first-class operator — the engine-native form
   * of the reference's operational verification practices (SURVEY.md §5:
@@ -198,16 +198,8 @@ object QualityChecks {
           col("n_paired") + col("n_docs_unembedded")))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_quality_checks"  -> (report _),
-    "x_modality_coverage" -> (modalityCoverage _),
-    "x_observe_metrics" -> (observedMetrics _),
-    "x_benford"         -> (benfordPrices _),
-    "x_data_profile"    -> (dataProfile _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "x_quality_checks" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_quality_checks", report _,
       """SELECT check_name, CAST(observed AS BIGINT) AS observed,
         |  CAST(passed AS INTEGER) AS passed FROM (
         |  SELECT 'events_nonempty' AS check_name, count(*) AS observed, count(*) > 0 AS passed FROM events
@@ -227,8 +219,8 @@ object QualityChecks {
         |  UNION ALL
         |  SELECT 'documents_n_chars_consistent', count(*), count(*) = 0 FROM documents
         |    WHERE length(text) <> n_chars)
-        |ORDER BY check_name""".stripMargin,
-    "x_modality_coverage" -> {
+        |ORDER BY check_name""".stripMargin),
+    Query("x_modality_coverage", modalityCoverage _, {
       import graft.ops.StableStats.ratioSql
       s"""WITH j AS (
          |  SELECT d.doc_id, e.vec_id
@@ -244,23 +236,23 @@ object QualityChecks {
             "coalesce(sum(CASE WHEN doc_id IS NOT NULL AND vec_id IS NOT NULL THEN 1 ELSE 0 END), 0)",
             "coalesce(sum(CASE WHEN doc_id IS NOT NULL THEN 1 ELSE 0 END), 0)")} AS coverage
          |FROM j""".stripMargin
-    },
-    "x_data_profile" -> {
+    }),
+    Query("x_data_profile", dataProfile _, {
       def row(c: String) =
         s"""SELECT '$c' AS column_name, CAST(count(*) AS BIGINT) AS n_rows,
            |  CAST(coalesce(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_nulls,
            |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct FROM events""".stripMargin
       Seq("event_id", "event_type", "ts", "user_id", "value")
         .map(row).mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-    },
-    "x_observe_metrics" ->
+    }),
+    Query("x_observe_metrics", observedMetrics _,
       """SELECT CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(coalesce(sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_null_ts,
         |  CAST(coalesce(sum(CASE WHEN value <= 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_nonpos_value,
         |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS min_ts,
         |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS max_ts
-        |FROM events""".stripMargin,
-    "x_benford" -> {
+        |FROM events""".stripMargin),
+    Query("x_benford", benfordPrices _, {
       import graft.ops.StableStats.stableRoundSql
       s"""WITH d AS (SELECT CAST(substr(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
          |      AS VARCHAR), 1, 1) AS INTEGER) AS digit FROM lineitem),
@@ -271,6 +263,6 @@ object QualityChecks {
          |  ${stableRoundSql("log10(1.0 + 1.0 / digit)", 4)} AS benford_p,
          |  ${stableRoundSql("CAST(n AS DOUBLE) / total - log10(1.0 + 1.0 / digit)", 4)} AS dev
          |FROM c CROSS JOIN t ORDER BY digit""".stripMargin
-    }
+    })
   )
 }

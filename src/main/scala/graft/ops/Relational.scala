@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Relational operator inventory (SURVEY.md §2) over the TPC-H-ish tables,
   * plus TPC-H-shaped composites that exercise the multi-join/agg path the
@@ -359,40 +359,12 @@ object Relational {
       .orderBy("p_type", "p_partkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q10_returned_items"     -> (returnedItemReport _),
-    "q2_min_cost_parts"      -> (minCostParts _),
-    "q7_volume_shipping"     -> (volumeShipping _),
-    "a_rollup"               -> (rollupSummary _),
-    "r_pivot_wide"           -> (pivotWide _),
-    "a_count_distinct"       -> (countDistinctUsers _),
-    "f_string_scalars"       -> (stringScalars _),
-    "j_semi_orders"          -> (semiJoinOrders _),
-    "j_range_ship"           -> (rangeShipJoin _),
-    "s2_scan_project_filter" -> (scanProjectFilter _),
-    "a1_window_agg"          -> (windowAgg _),
-    "j1_fact_dim_stats"      -> (factDimStats _),
-    "j3_left_outer_stats"    -> (leftOuterStats _),
-    "a2_global_count"        -> (globalCount _),
-    "a3_date_range"          -> (dateRange _),
-    "a6_daily_counts"        -> (dailyCounts _),
-    "o4_topk_latest"         -> (topkLatest _),
-    "f_json_extract_agg"     -> (jsonExtractAgg _),
-    "f_time_scalars"         -> (timeScalars _),
-    "w_rank_topn"            -> (rankTopN _),
-    "u_union_nationkeys"     -> (unionNationKeys _),
-    "u_except_no_orders"     -> (customersWithoutOrders _),
-    "q1_pricing_summary"     -> (pricingSummary _),
-    "q3_shipping_priority"   -> (shippingPriority _),
-    "q5_local_supplier"      -> (localSupplierVolume _)
-  )
-
   private val pivotCaseCols: String =
     (for { t <- Seq("click", "view"); s <- Seq("mean", "min", "max", "std") } yield
       s"max(CASE WHEN signal_name = '${t}_$s' THEN value END) AS ${t}_$s").mkString(", ")
 
-  val oracles: Map[String, String] = Map(
-    "q10_returned_items" ->
+  val queries: Seq[Query] = Seq(
+    Query("q10_returned_items", returnedItemReport _,
       s"""SELECT c_custkey, c_name, n_name,
          |  ${StableStats.discountedSumSql("l_extendedprice", "l_discount")} AS revenue,
          |  count(*) AS n_items
@@ -402,15 +374,15 @@ object Relational {
          |JOIN nation ON c_nationkey = n_nationkey
          |WHERE l_returnflag = 'R'
          |GROUP BY c_custkey, c_name, n_name
-         |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
-    "q2_min_cost_parts" ->
+         |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin),
+    Query("q2_min_cost_parts", minCostParts _,
       """SELECT p_type, p_partkey, p_name, p_retailprice FROM (
         |  SELECT p_type, p_partkey, p_name, p_retailprice,
         |    min(p_retailprice) OVER (PARTITION BY p_type) AS min_price
         |  FROM part)
         |WHERE p_retailprice = min_price
-        |ORDER BY p_type, p_partkey""".stripMargin,
-    "q7_volume_shipping" ->
+        |ORDER BY p_type, p_partkey""".stripMargin),
+    Query("q7_volume_shipping", volumeShipping _,
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS INTEGER) AS l_year,
         |  ${StableStats.discountedSumSql("l_extendedprice", "l_discount")} AS revenue,
@@ -423,12 +395,12 @@ object Relational {
         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
         |WHERE n1.n_name <> n2.n_name
         |  AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "a_rollup" ->
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    Query("a_rollup", rollupSummary _,
       """SELECT l_returnflag, l_linestatus, count(*) AS n, round(sum(l_quantity),2) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "r_pivot_wide" -> {
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("r_pivot_wide", pivotWide _, {
       val names = for { t <- Seq("click", "view"); s <- Seq("mean", "min", "max", "std") } yield s"${t}_$s"
       val day = "(SELECT * FROM events WHERE ts >= TIMESTAMP '2024-01-03 00:00:00' " +
         "AND ts < TIMESTAMP '2024-01-04 00:00:00')"
@@ -437,11 +409,11 @@ object Relational {
          |  FROM (UNPIVOT agg ON ${names.mkString(", ")} INTO NAME sig VALUE v))
          |SELECT timestamp, $pivotCaseCols
          |FROM lng GROUP BY timestamp ORDER BY timestamp""".stripMargin
-    },
-    "a_count_distinct" ->
+    }),
+    Query("a_count_distinct", countDistinctUsers _,
       """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "f_string_scalars" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("f_string_scalars", stringScalars _,
       """SELECT doc_id, upper(substring(text, 1, 20)) AS up20,
         |  substring(replace(text, ' ', '_'), 1, 30) AS und30,
         |  lpad(source, 8, '0') AS padsrc,
@@ -449,78 +421,78 @@ object Relational {
         |  reverse(lang) AS rlang,
         |  trim(concat(' ', lang, ' ')) AS tlang,
         |  CAST(length(text) AS INTEGER) AS len
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin,
-    "j_semi_orders" ->
+        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin),
+    Query("j_semi_orders", semiJoinOrders _,
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity > 45)
-        |ORDER BY o_orderkey""".stripMargin,
-    "j_range_ship" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("j_range_ship", rangeShipJoin _,
       """SELECT o_orderpriority, count(*) AS n_lines,
         |  round(sum(l_extendedprice),2) AS sum_price
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |  AND l_shipdate >= o_orderdate
         |  AND l_shipdate < o_orderdate + INTERVAL 90 DAY
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "s2_scan_project_filter" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("s2_scan_project_filter", scanProjectFilter _,
       """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity, l_extendedprice
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "a1_window_agg" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("a1_window_agg", windowAgg _,
       s"""SELECT time_bucket(INTERVAL 10 MINUTE, ts) AS bucket_ts, event_type,
         |  count(*) AS n, ${StableStats.centsMeanSql("value")} AS avg_value, min(value) AS min_value,
         |  max(value) AS max_value, round(stddev(value),4) AS std_value,
         |  round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "j1_fact_dim_stats" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("j1_fact_dim_stats", factDimStats _,
       s"""SELECT c_mktsegment, count(*) AS n_orders, ${StableStats.centsMeanSql("o_totalprice")} AS avg_price,
         |  min(o_totalprice) AS min_price, max(o_totalprice) AS max_price,
         |  round(sum(o_totalprice),2) AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "j3_left_outer_stats" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("j3_left_outer_stats", leftOuterStats _,
       s"""SELECT n_name, count(s_suppkey) AS n_suppliers,
         |  ${StableStats.centsMeanSql("s_acctbal")} AS avg_acctbal, round(stddev(s_acctbal),4) AS std_acctbal
         |FROM nation LEFT JOIN supplier ON n_nationkey = s_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "a2_global_count" -> "SELECT count(*) AS n_rows FROM lineitem",
-    "a3_date_range" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("a2_global_count", globalCount _, "SELECT count(*) AS n_rows FROM lineitem"),
+    Query("a3_date_range", dateRange _,
       """SELECT min(o_orderdate) AS min_date, max(o_orderdate) AS max_date,
-        |  count(*) AS n_rows FROM orders""".stripMargin,
-    "a6_daily_counts" ->
+        |  count(*) AS n_rows FROM orders""".stripMargin),
+    Query("a6_daily_counts", dailyCounts _,
       """SELECT CAST(ts AS DATE) AS day, count(*) AS n, round(sum(value),2) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "o4_topk_latest" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("o4_topk_latest", topkLatest _,
       """SELECT event_id, ts, event_type, value FROM events
-        |ORDER BY ts DESC, event_id ASC LIMIT 10""".stripMargin,
-    "f_json_extract_agg" ->
+        |ORDER BY ts DESC, event_id ASC LIMIT 10""".stripMargin),
+    Query("f_json_extract_agg", jsonExtractAgg _,
       s"""SELECT event_type,
         |  ${StableStats.intMeanSql("CAST(json_extract_string(props, '$.k') AS INTEGER)")} AS avg_k,
         |  min(CAST(json_extract_string(props, '$$.k') AS INTEGER)) AS min_k,
         |  max(CAST(json_extract_string(props, '$$.k') AS INTEGER)) AS max_k,
         |  count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "f_time_scalars" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("f_time_scalars", timeScalars _,
       """SELECT event_id, CAST(ts AS DATE) AS day,
         |  strftime(ts, '%Y-%m-%dT%H:%M:%S') AS iso,
         |  CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start,
         |  date_trunc('day', ts) + INTERVAL 1 DAY AS next_day,
         |  CAST(extract(hour FROM ts) AS INTEGER) AS hr
-        |FROM events WHERE event_id < 50 ORDER BY event_id""".stripMargin,
-    "w_rank_topn" ->
+        |FROM events WHERE event_id < 50 ORDER BY event_id""".stripMargin),
+    Query("w_rank_topn", rankTopN _,
       """SELECT o_custkey, CAST(rn AS INTEGER) AS rn, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders WHERE o_custkey < 100)
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "u_union_nationkeys" ->
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
+    Query("u_union_nationkeys", unionNationKeys _,
       """SELECT c_nationkey AS nk FROM customer
-        |UNION SELECT s_nationkey AS nk FROM supplier ORDER BY nk""".stripMargin,
-    "u_except_no_orders" ->
+        |UNION SELECT s_nationkey AS nk FROM supplier ORDER BY nk""".stripMargin),
+    Query("u_except_no_orders", customersWithoutOrders _,
       """SELECT DISTINCT o_custkey AS custkey FROM orders
         |EXCEPT SELECT c_custkey AS custkey FROM customer WHERE c_acctbal >= 0
-        |ORDER BY custkey""".stripMargin,
-    "q1_pricing_summary" ->
+        |ORDER BY custkey""".stripMargin),
+    Query("q1_pricing_summary", pricingSummary _,
       s"""SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity),2) AS sum_qty,
         |  round(sum(l_extendedprice),2) AS sum_base_price,
@@ -531,8 +503,8 @@ object Relational {
         |  ${StableStats.centsMeanSql("l_discount")} AS avg_disc,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q3_shipping_priority", shippingPriority _,
       s"""SELECT o_orderkey, o_orderdate, o_orderpriority,
         |  ${StableStats.discountedSumSql("l_extendedprice", "l_discount")} AS revenue
         |FROM orders
@@ -540,8 +512,8 @@ object Relational {
         |JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE o_orderdate < TIMESTAMP '1999-01-01' AND l_shipdate > TIMESTAMP '1997-01-01'
         |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
+        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Query("q5_local_supplier", localSupplierVolume _,
       s"""SELECT n_name, ${StableStats.discountedSumSql("l_extendedprice", "l_discount")} AS revenue
         |FROM orders
         |JOIN customer ON o_custkey = c_custkey
@@ -551,6 +523,6 @@ object Relational {
         |JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA'
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name ASC""".stripMargin
+        |ORDER BY revenue DESC, n_name ASC""".stripMargin)
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The reference's core ETL re-expressed Spark-first.
   *
@@ -120,12 +120,6 @@ object SensorPipeline {
       .select("signal_name").distinct().orderBy("signal_name")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_sensor_long" -> (pipelineLong _),
-    "p2_pipeline_day"      -> (pipelineDay _),
-    "p6_unmapped_signals"  -> (unmappedSignals _)
-  )
-
   // ---- DuckDB oracles -----------------------------------------------------
 
   /** DuckDB twin of [[wideAgg]] (shared by the Analytics/Relational
@@ -155,16 +149,16 @@ object SensorPipeline {
        |FROM lng JOIN dim ON lng.signal_name = dim.name
        |ORDER BY lng.timestamp, dim.signal_id""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "pipeline_sensor_long" -> pipelineSql("events"),
-    "p2_pipeline_day" -> pipelineSql(
-      "(SELECT * FROM events WHERE ts >= TIMESTAMP '2024-01-05 00:00:00' AND ts < TIMESTAMP '2024-01-06 00:00:00')"),
-    "p6_unmapped_signals" ->
+  val queries: Seq[Query] = Seq(
+    Query("pipeline_sensor_long", pipelineLong _, pipelineSql("events")),
+    Query("p2_pipeline_day", pipelineDay _, pipelineSql(
+      "(SELECT * FROM events WHERE ts >= TIMESTAMP '2024-01-05 00:00:00' AND ts < TIMESTAMP '2024-01-06 00:00:00')")),
+    Query("p6_unmapped_signals", unmappedSignals _,
       s"""WITH agg AS (${aggSql.format("events")}),
          |lng AS (SELECT sig AS signal_name, v AS value
          |        FROM (UNPIVOT agg ON ${signalNames.mkString(", ")} INTO NAME sig VALUE v))
          |SELECT DISTINCT signal_name FROM lng
          |WHERE signal_name NOT IN (${signalNames.filter(_.startsWith("click_")).map("'" + _ + "'").mkString(", ")})
-         |ORDER BY signal_name""".stripMargin
+         |ORDER BY signal_name""".stripMargin)
   )
 }

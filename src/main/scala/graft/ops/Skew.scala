@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Skew mitigation: salted two-stage aggregation.
   *
@@ -295,42 +295,34 @@ object Skew {
     local.orderBy("o_orderpriority")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a_salted_agg"  -> (saltedEventStats _),
-    "j_salted_join" -> (saltedJoinStats _),
-    "j_runtime_bloom" -> (runtimeBloomJoin _),
-    "j_cbo_reorder" -> (cboReorder _),
-    "x_join_cardinality" -> (joinCardinality _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "a_salted_agg" ->
+  val queries: Seq[Query] = Seq(
+    Query("a_salted_agg", saltedEventStats _,
       s"""SELECT event_type, count(*) AS n,
          |  ${StableStats.centsMeanSql("value")} AS avg_value,
          |  min(value) AS min_value, max(value) AS max_value
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "j_salted_join" ->
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("j_salted_join", saltedJoinStats _,
       s"""SELECT o_orderpriority, count(*) AS n_lines,
          |  round(sum(l_quantity), 2) AS sum_qty,
          |  ${StableStats.centsMeanSql("l_extendedprice")} AS avg_price
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "j_runtime_bloom" ->
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("j_runtime_bloom", runtimeBloomJoin _,
       s"""SELECT o_orderpriority, count(*) AS n_lines,
          |  round(sum(l_quantity), 2) AS sum_qty,
          |  ${StableStats.centsMeanSql("l_extendedprice")} AS avg_price
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |WHERE o_orderpriority = '1-URGENT'
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "j_cbo_reorder" ->
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("j_cbo_reorder", cboReorder _,
       s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_lines,
          |  ${StableStats.discountedSumSql("l_extendedprice", "l_discount")} AS revenue
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
          |WHERE c_mktsegment = 'BUILDING'
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "x_join_cardinality" -> {
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("x_join_cardinality", joinCardinality _, {
       def forecast(pair: String, ta: String, ka: String, tb: String, kb: String) =
         s"""SELECT '$pair' AS pair, rows_a, rows_b, predicted_rows,
            |  ${StableStats.ratioSql("predicted_rows", "greatest(rows_a, rows_b)")} AS expansion,
@@ -347,6 +339,6 @@ object Skew {
         "\nUNION ALL\n" +
         forecast("events_self_user", "events", "user_id", "events", "user_id") +
         "\nORDER BY pair"
-    }
+    })
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, count => fcount, lit}
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The `spark.sql(...)` surface: registered temp views + one dialect-shared
   * SQL text. The statement below is written in the ANSI intersection of
@@ -102,19 +102,13 @@ object SqlSurface {
         fcount(lit(1)).as("n"))
       .orderBy("event_type")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_pricing_summary" -> (sqlPricingSummary _),
-    "sql_grouping_sets"   -> (sqlGroupingSets _),
-    "sql_cte_window"      -> (sqlCteWindow _),
-    "sql_exists"          -> (sqlExists _),
-    "a_approx_sketches"   -> (approxSketches _)
-  )
-
   /** The oracles for the SQL-surface queries are the very same strings. */
-  val oracles: Map[String, String] = Map(
-    "sql_pricing_summary" -> pricingSql,
-    "sql_grouping_sets"   -> groupingSetsSql,
-    "sql_cte_window"      -> cteWindowSql,
-    "sql_exists"          -> existsSql
+  val queries: Seq[Query] = Seq(
+    Query("sql_pricing_summary", sqlPricingSummary _, pricingSql),
+    Query("sql_grouping_sets", sqlGroupingSets _, groupingSetsSql),
+    Query("sql_cte_window", sqlCteWindow _, cteWindowSql),
+    Query("sql_exists", sqlExists _, existsSql),
+    // approximate sketches have no exact SQL twin: SketchCatalogSpec pins them
+    Query("a_approx_sketches", approxSketches _)
   )
 }

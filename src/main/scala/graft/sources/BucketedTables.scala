@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.exec.Scratch
 
 /** Bucketed-table layout for shuffle-free co-located joins.
@@ -215,14 +216,10 @@ object BucketedTables {
     graft.ext.Curation.diffOf(spark.table(to), spark.table(tn))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j_bucketed" -> (bucketedAttribution _),
-    "j_bucketed_diff" -> (bucketedSnapshotDiff _))
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // identical semantics to x_snapshot_diff — the bucketed layout only
     // changes WHERE the join's rows live, never what they say
-    "j_bucketed_diff" ->
+    Query("j_bucketed_diff", bucketedSnapshotDiff _,
       """WITH old AS (SELECT doc_id, text, source FROM documents),
         |survived AS (SELECT doc_id,
         |    CASE WHEN doc_id % 7 = 0 THEN text || ' rev2' ELSE text END AS text, source
@@ -241,11 +238,11 @@ object BucketedTables {
         |  CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
         |  CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
         |  CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
     // n_buckets recomputes the sizing decision from the data (scale-
     // honest at any SF): smallest power of two ≥ ⌈max slice / 1024⌉,
     // swept over the same 2^0..2^20 candidates deriveBuckets walks
-    "j_bucketed" ->
+    Query("j_bucketed", bucketedAttribution _,
       """WITH sz AS (
         |  SELECT greatest(
         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END),
@@ -261,5 +258,5 @@ object BucketedTables {
         |    CAST(sum(c.event_id + p.event_id) AS BIGINT) AS id_checksum
         |  FROM events c JOIN events p ON c.user_id = p.user_id
         |  WHERE c.event_type = 'click' AND p.event_type = 'purchase')
-        |SELECT n_pairs, n_users, id_checksum, n_buckets FROM agg, nb""".stripMargin)
+        |SELECT n_pairs, n_users, id_checksum, n_buckets FROM agg, nb""".stripMargin))
 }

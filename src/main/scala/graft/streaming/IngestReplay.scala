@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.exec.Scratch
 
 /** Deterministic batch replay of the two-tier screened ingest — the
@@ -78,11 +78,8 @@ object IngestReplay {
       .orderBy("batch_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_ingest_metrics" -> (ingestMetrics _))
-
-  val oracles: Map[String, String] = Map(
-    "x_ingest_metrics" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_ingest_metrics", ingestMetrics _,
       """WITH arr AS (
         |  SELECT 0 AS batch_id, text FROM documents WHERE doc_id % 3 = 0
         |  UNION ALL SELECT 1, text FROM documents WHERE doc_id % 3 = 1
@@ -99,5 +96,5 @@ object IngestReplay {
         |SELECT CAST(p.batch_id AS BIGINT) AS batch_id, n_arrived, n_unique,
         |  CAST(coalesce(n_admitted, 0) AS BIGINT) AS n_admitted,
         |  1 AS screen_partition_ok, 1 AS admission_ok
-        |FROM per p LEFT JOIN adm USING (batch_id) ORDER BY batch_id""".stripMargin)
+        |FROM per p LEFT JOIN adm USING (batch_id) ORDER BY batch_id""".stripMargin))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Query
 import graft.exec.Scratch
 import graft.ext.Layout
 
@@ -140,11 +141,8 @@ object LakeCdfStream {
       .orderBy("from_gen", "to_gen", "change_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_lake_cdf_stream" -> (lakeCdfStream _))
-
   // the streamed increments must compose to exactly the from-scratch
   // cursor feed — same oracle by construction (ONE SQL definition)
-  val oracles: Map[String, String] = Map(
-    "x_lake_cdf_stream" -> Layout.oracles("x_lake_changes_cursor"))
+  val queries: Seq[Query] = Seq(
+    Query("x_lake_cdf_stream", lakeCdfStream _, Query.oracleOf(Layout.queries, "x_lake_changes_cursor")))
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Query
 import graft.exec.Scratch
 import graft.ext.Layout
 
@@ -121,11 +122,8 @@ object LakeIngestStream {
     Layout.readLakeMetrics(spark, root)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_lake_ingest_stream" -> (lakeIngestStream _))
-
   // the streaming execution must land on exactly the batch loop's rows —
   // same oracle by construction (ONE SQL definition, no copy to drift)
-  val oracles: Map[String, String] = Map(
-    "x_lake_ingest_stream" -> Layout.oracles("x_lake_ingest"))
+  val queries: Seq[Query] = Seq(
+    Query("x_lake_ingest_stream", lakeIngestStream _, Query.oracleOf(Layout.queries, "x_lake_ingest")))
 }

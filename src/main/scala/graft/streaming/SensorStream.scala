@@ -30,7 +30,6 @@ object SensorStream {
     * watermark operator rejects NTZ event time outright, and every entry
     * point pins the session to UTC so the cast is value-preserving). */
   def eventsStream(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = graft.Tables.table(spark, dir, "events").schema
     // the table is a single parquet FILE; stream sources take a directory,
     // so stream the parent dir with a glob pinned to this table

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.exec.Scratch
 
 /** Watermarked stream-stream interval join — the attribution shape
@@ -171,12 +171,8 @@ object StreamJoin {
           .cast("int").as("nothing_evicted"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_stream_join" -> (streamJoinAttribution _),
-    "x_stream_join_state" -> (streamJoinState _))
-
-  val oracles: Map[String, String] = Map(
-    "x_stream_join_state" ->
+  val queries: Seq[Query] = Seq(
+    Query("x_stream_join_state", streamJoinState _,
       """WITH c AS (SELECT CAST(count(*) AS BIGINT) AS n_clicks
         |           FROM events WHERE event_type = 'click'),
         |p AS (SELECT CAST(count(*) AS BIGINT) AS n_purchases
@@ -185,13 +181,13 @@ object StreamJoin {
         |  n_clicks + n_purchases AS state_rows_peak,
         |  n_clicks + n_purchases AS state_rows_final,
         |  1 AS nothing_evicted
-        |FROM c, p""".stripMargin,
-    "x_stream_join" ->
+        |FROM c, p""".stripMargin),
+    Query("x_stream_join", streamJoinAttribution _,
       """SELECT c.user_id AS user_id, c.event_id AS click_id,
         |       p.event_id AS purchase_id
         |FROM events c, events p
         |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
         |  AND c.user_id = p.user_id
         |  AND c.ts >= p.ts - INTERVAL 60 MINUTE AND c.ts <= p.ts
-        |ORDER BY user_id, click_id, purchase_id""".stripMargin)
+        |ORDER BY user_id, click_id, purchase_id""".stripMargin))
 }

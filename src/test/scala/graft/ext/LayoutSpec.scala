@@ -838,6 +838,42 @@ class LayoutSpec extends SparkSpec {
       s"DPP should prune to the ${sel.size} selected source partitions, read $filesRead")
   }
 
+  /** (query, scratch kind of the layout it reads back with the schema of
+    * the frame that wrote it) */
+  private val schemaReads = Seq(
+    "x_footer_prune_str" -> "footer_prune_str",
+    "x_footer_prune_mixed" -> "footer_prune_str",
+    "x_dpp_read" -> "dpp_read")
+
+  test("each layout read's schema is the one parquet infers for the same paths") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    schemaReads.foreach { case (name, kind) =>
+      val df = graft.SparkEntry.queries(name)(spark, sf)
+      val rels = df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }.collect {
+        case r: HadoopFsRelation if r.location.rootPaths.exists(_.toString.contains(s"graft_$kind")) => r
+      }
+      assert(rels.nonEmpty, s"$name reads no file under its $kind layout")
+      rels.foreach { r =>
+        val inferred = spark.read.parquet(r.location.rootPaths.map(_.toString): _*).schema
+        assert(r.schema === inferred, s"$name: the read's schema differs from the inferred one")
+      }
+    }
+  }
+
+  test("a warm call of each schema-given layout read starts no schema-inference job") {
+    def jobs(name: String): Int = graft.Run.jobsStarted(spark, s"graft-spec-read-schema-$name") {
+      graft.SparkEntry.queries(name)(spark, sf).collect()
+    }
+    // with parquet inferring each read's schema, warm calls on this
+    // fixture started 7 (both footer prunes) and 9 (DPP) jobs
+    val ceilings = Map("x_footer_prune_str" -> 6, "x_footer_prune_mixed" -> 6, "x_dpp_read" -> 8)
+    schemaReads.foreach { case (name, _) =>
+      jobs(name) // builds the layout if this run has not yet
+      val n = jobs(name)
+      assert(n <= ceilings(name), s"a warm $name call started $n jobs")
+    }
+  }
+
   test("commit conflict: a data-bearing winner aborts the loser; a metadata-only winner permits retry") {
     // writer A and writer B both fold parent g0; A lands g1 with its own
     // fold output — B's snapshot, computed against g0, would silently

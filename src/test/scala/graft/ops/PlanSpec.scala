@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Plan-shape assertions — the "would this survive a 100× scale-up" tests.
   * These pin the physical properties the scale design depends on: pushdown
@@ -471,7 +471,7 @@ class PlanSpec extends SparkSpec {
     // every job started before it is too.
     val sc = spark.sparkContext
     sc.setJobGroup("plan-pin-align-construct", "construction must be job-free", false)
-    try graft.ext.Similarity.queries("x_align_mutual_nn")(spark, dir) // construct only
+    try SparkEntry.queries("x_align_mutual_nn")(spark, dir) // construct only
     finally sc.clearJobGroup()
     sc.setJobGroup("plan-pin-align-sentinel", "flush marker", false)
     try spark.range(1).count()
