@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.{Query, Tables}
 import graft.exec.{Cut, Pool, Scratch}
+import graft.lake.Log._
 
 /** Z-order (Morton-curve) data layout planning — multi-dimensional file
   * skipping for an event lake.
@@ -1596,75 +1597,6 @@ object Layout {
     * overridden. */
   private val VacuumMaxCursorLag = 1
 
-  /** REGISTER a CDC consumer's checkpoint in the log: the consumer has
-    * folded in everything up to and including generation `gen`, and its
-    * next [[lakeChangesSince]] read starts there — so generation `gen`
-    * itself (the probe epoch of its next transition) and everything
-    * after must outlive any vacuum (round 19, VERDICT r18 missing #3).
-    * Stored as a `cursors/<consumer>` sidecar, atomically overwritten
-    * on advance (the published "registered stream checkpoint"
-    * contract: retention ≥ oldest registered consumer). Unregistered
-    * consumers get no protection — that asymmetry is the point. */
-  private[graft] def registerCursor(root: String, consumer: String,
-      gen: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(s"$root/cursors")
-    val fs = dir.getFileSystem(logConf())
-    fs.mkdirs(dir)
-    val dst = new Path(dir, consumer)
-    if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-      val dstNio = java.nio.file.Paths.get(dst.toUri.getPath)
-      val tmp = java.nio.file.Files.createTempFile(
-        dstNio.getParent, s".$consumer-", ".tmp")
-      java.nio.file.Files.write(tmp, gen.toString.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, dstNio,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      val tmp = new Path(dir, s".$consumer-${java.util.UUID.randomUUID}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(gen.toString.getBytes("UTF-8")) finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, logConf())
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
-
-  /** Explicitly UNREGISTER a consumer: its checkpoint stops flooring
-    * retention immediately (round 20, VERDICT r19 missing #3 — the
-    * policy escape an operator previously had by hand-deleting the
-    * sidecar). Unknown consumers are a no-op — unregistration is
-    * idempotent. */
-  private[graft] def unregisterCursor(root: String, consumer: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/cursors/$consumer")
-    val fs = p.getFileSystem(logConf())
-    fs.delete(p, false); ()
-  }
-
-  /** Every registered consumer's checkpoint generation. */
-  private[graft] def readCursors(root: String): Map[String, Int] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/cursors")
-    val fs = dir.getFileSystem(logConf())
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).toSeq
-      .filterNot(_.getPath.getName.startsWith("."))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        // this sits on the vacuum's safety-policy path: a torn or
-        // corrupt sidecar must fail NAMING the consumer file, not as a
-        // bare NumberFormatException from deep inside retention
-        // (ADVICE r19 #4)
-        val gen = try body.trim.toInt
-          catch {
-            case e: NumberFormatException => throw new IllegalStateException(
-              s"corrupt consumer cursor ${st.getPath}: body " +
-                s"'${body.trim.take(64)}' is not a generation number — " +
-                "delete or re-register the consumer's sidecar", e)
-          }
-        st.getPath.getName -> gen
-      }.toMap
-  }
-
   /** The retention policy, in GENERATIONS-OR-AGE with a CONSUMER FLOOR
     * (rounds 18/19): a generation survives when it is among the newest
     * `keepLast`, OR its commit is younger than `minAgeMs` against
@@ -1702,16 +1634,8 @@ object Layout {
     }
     val floor = fresh.values.minOption
     def floored(g: Int) = floor.exists(g >= _)
-    if (minAgeMs <= 0L) gens.filter(g => byCount(g) || floored(g))
-    else {
-      val fs = new org.apache.hadoop.fs.Path(s"$root/gens")
-        .getFileSystem(logConf())
-      gens.filter { g =>
-        byCount(g) || floored(g) || now - fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(s"$root/gens/g=$g"))
-          .getModificationTime < minAgeMs
-      }
-    }
+    gens.filter(g => byCount(g) || floored(g) ||
+      minAgeMs > 0L && now - commitTime(root, g) < minAgeMs)
   }
 
   /** The vacuum PLAN: (all files under the data root, the set any
@@ -2006,570 +1930,6 @@ object Layout {
       .write.mode("overwrite").partitionBy("gid").parquet(out)
   }
 
-  /** GENERATION LOG — the numbered transaction-log analogue (round 17,
-    * VERDICT r16 missing #1): each committed table state is a text
-    * manifest `gens/g=<n>` whose lines are `<kind>\t<path>` file
-    * references (`kind` ∈ base|delta — what the AS-OF reader needs to
-    * replay merge-on-read for that state). Commit = write the manifest;
-    * the data files are immutable once referenced, so a generation is
-    * readable for exactly as long as its references survive retention
-    * ([[lakeVacuum]]). This is the published Delta/Iceberg log design
-    * reduced to its load-bearing core: numbered manifests over immutable
-    * files, liveness = reachability from retained manifests.
-    *
-    * ACTIONS LOG + CHECKPOINTS (round 19, VERDICT r18 missing #1 —
-    * retiring the O(live files)-per-commit metadata cost): the
-    * published Delta-log representation, in full. A committed manifest
-    * `g=<n>` normally carries only the commit's ACTIONS relative to its
-    * parent — a `@delta` header, then `-\t<kind>\t<path>` removes and
-    * `+\t<kind>\t<path>` adds — so a continuous arrival loop over a
-    * 10⁶-file table writes O(changed files) of manifest text per
-    * commit, not tens of MB of snapshot. Generation 0 (no parent) and
-    * any commit whose snapshot cannot be reproduced exactly by
-    * replaying its actions over the parent (entry reorderings — none of
-    * the engine's lineages produce one, but exactness is verified at
-    * commit time, never assumed) fall back to the legacy headerless
-    * snapshot form, which [[readGeneration]] still parses — the two
-    * forms share one grammar. Replay is bounded by FULL-SNAPSHOT
-    * CHECKPOINT sidecars `c=<n>` written every
-    * [[LogCheckpointInterval]] commits: reading generation n folds at
-    * most interval-many action manifests over the nearest checkpoint
-    * (or snapshot-form manifest, or the JVM's stat-validated snapshot
-    * cache) at or below n. The caller-facing contract is UNCHANGED:
-    * [[commitGeneration]] takes and [[readGeneration]] returns the full
-    * (kind, path) snapshot — the log's representation is its own
-    * private business, which is what lets every lake lineage and spec
-    * ride the refactor untouched.
-    *
-    * PRICED BOUND — driver-parsed checkpoints (round 20, VERDICT r19
-    * missing #4, the decided answer: document, don't re-platform):
-    * steady-state reads are O(changes) action manifests, but a COLD
-    * read's anchor — the `c=<n>` checkpoint or a snapshot-form
-    * manifest — is parsed single-threaded on the driver
-    * ([[readManifestBody]] + line split). At ~100 bytes/entry that is
-    * ~100 MB of text at the 10⁶-file mark: a few seconds once per
-    * JVM per lineage, then amortized by the stat-validated snapshot
-    * cache — acceptable at this engine's lineage scale (≤ thousands
-    * of entries), and the measured fixture cost is microseconds. The
-    * published remedy when a table actually reaches 10⁶ live files is
-    * a PARQUET checkpoint read distributedly (Delta's
-    * checkpoint.parquet; this repo's FooterManifest reader is the
-    * ready-made scan path) — a representation swap behind
-    * [[readGeneration]]'s unchanged contract, deliberately not paid
-    * now because every committed lineage here is orders of magnitude
-    * below the threshold where it wins. */
-  /** Thrown by [[commitNextGeneration]] when a lost commit race cannot
-    * be safely retried: a generation committed after the caller's
-    * declared read tip references files outside the caller's read set,
-    * so re-claiming the next slot with the caller's (stale) snapshot
-    * entries would silently drop the winner's data — the LOST UPDATE
-    * the published logs' commit-time validation exists to prevent. The
-    * caller must re-read the new tip and rebase (recompute its entries
-    * against the winner's state) before committing. */
-  final class CommitConflictException(message: String)
-    extends IllegalStateException(message)
-
-  /** Hadoop configuration for the log's IO — the active session's (so
-    * `root` resolves against the same filesystems every data path
-    * uses), or a default config when no session is up (plain-JVM unit
-    * tests of the log primitives). */
-  private def logConf(): org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-  /** Manifest entry kinds that name DATA FILES — the kinds conflict
-    * detection, vacuum liveness, and reference accounting operate on.
-    * Metadata entries (`op`, `schema`, …) never participate in any of
-    * those (ADVICE r18 #1: a metadata-carrying winner used to raise a
-    * spurious conflict against a committer whose read set lacked the
-    * op/schema STRING, forcing callers to hand-stuff schema text into
-    * read sets). */
-  private[graft] val LogFileKinds: Set[String] = Set("base", "delta", "cdelta")
-
-  /** Full-snapshot checkpoint cadence: every Nth commit also writes a
-    * `c=<n>` sidecar, bounding [[readGeneration]]'s action replay to at
-    * most N manifests. 4 keeps the fold observable at fixture scale
-    * (the arrival log's 5+ commits cross a checkpoint); production
-    * tables tune this like Delta's checkpointInterval. */
-  private[graft] val LogCheckpointInterval = 4
-
-  /** A parsed manifest: either the commit's full snapshot, or its
-    * actions relative to the parent generation. */
-  private sealed trait ManifestForm
-  private final case class SnapshotForm(
-      entries: Seq[(String, String)]) extends ManifestForm
-  private final case class ActionsForm(removes: Seq[(String, String)],
-      adds: Seq[(String, String)]) extends ManifestForm
-
-  private def parseManifest(body: String): ManifestForm = {
-    val lines = body.split("\n").toSeq.filter(_.nonEmpty)
-    def entry(l: String) = {
-      val i = l.indexOf('\t')
-      (l.substring(0, i), l.substring(i + 1))
-    }
-    if (lines.headOption.contains("@delta")) {
-      val (rm, ad) = lines.tail.partition(_.startsWith("-\t"))
-      ActionsForm(rm.map(l => entry(l.substring(2))),
-        ad.map(l => entry(l.substring(2))))
-    } else SnapshotForm(lines.map(entry))
-  }
-
-  private def snapshotBody(entries: Seq[(String, String)]): String =
-    entries.map { case (kind, f) => s"$kind\t$f" }.mkString("\n")
-
-  /** CANONICAL manifest order: data-file entries (caller order) then
-    * metadata entries (caller order). Snapshots are stored and returned
-    * canonical, and the actions form always REMOVES the parent's
-    * metadata entries and ADDS this commit's — metadata is per-commit
-    * state, not a position in a file list. Without this, a metadata
-    * entry retained verbatim across commits (op->arrival on every
-    * arrival) aliases in the multiset diff and forces the snapshot
-    * fallback on exactly the continuous-arrival lineage the actions log
-    * exists for; with it, each commit's op/schema is also readable
-    * straight off its ADD set at O(changes) — what DESCRIBE HISTORY
-    * reads. */
-  private def canonicalEntries(
-      entries: Seq[(String, String)]): Seq[(String, String)] = {
-    val (files, metas) = entries.partition(e => LogFileKinds(e._1))
-    files ++ metas
-  }
-
-  /** `a` minus `b` as ordered multisets: each element of `b` cancels at
-    * most one occurrence in `a`; survivors keep `a`'s order. */
-  private def multisetDiff(a: Seq[(String, String)],
-      b: Seq[(String, String)]): Seq[(String, String)] = {
-    val counts = scala.collection.mutable.HashMap.empty[(String, String), Int]
-    b.foreach(e => counts.update(e, counts.getOrElse(e, 0) + 1))
-    a.filter { e =>
-      counts.get(e) match {
-        case Some(n) if n > 0 => counts.update(e, n - 1); false
-        case _ => true
-      }
-    }
-  }
-
-  /** Replay one commit's actions over its parent snapshot: removes
-    * cancel in place (parent order preserved), adds append in commit
-    * order — exactly how every lineage builds its snapshots, which is
-    * why the actions form reproduces them byte-for-byte (verified at
-    * commit time by [[commitGeneration]]). */
-  private def applyLogActions(parent: Seq[(String, String)],
-      removes: Seq[(String, String)],
-      adds: Seq[(String, String)]): Seq[(String, String)] =
-    multisetDiff(parent, removes) ++ adds
-
-  /** JVM-wide resolved-snapshot cache, validated by the manifest file's
-    * (length, mtime) stat on every hit — manifests are immutable once
-    * committed, so the stat only changes when a lineage wipes and
-    * re-materializes its root, which is exactly when the entry must
-    * die. Honest bound: a rewrite producing a SAME-LENGTH body within
-    * one mtime granule (1 ms on Hadoop's local FS) could alias; real
-    * re-materializations interpose multi-second Spark writes between
-    * wipe and recommit, and manifest bodies embed UUID-bearing part
-    * file names, so both coincidences together are negligible. Bounded
-    * LRU: (lineage roots × retained generations) is a few dozen live
-    * keys; 256 gives headroom without growing with history. Keys are
-    * CANONICAL root paths (same normalization as [[monitorFor]]), so
-    * two spellings of one root share entries instead of each holding
-    * an independent snapshot (ADVICE r19 #2). The bound is ENTRY
-    * COUNT, not bytes: each value is an O(live files) name list, so
-    * worst-case residency is 256 × the largest retained snapshot —
-    * priced for this engine's fixture-scale lineages (≤ a few hundred
-    * entries per snapshot); a 10⁶-file production table would want a
-    * size-aware weigher here, the same debt as the driver-parsed
-    * checkpoint read (see the log docstring). */
-  private val logSnapshotCache =
-    new java.util.LinkedHashMap[(String, Int), (Long, Long, Seq[(String, String)])](
-        64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), (Long, Long, Seq[(String, String)])]) =
-        size() > 256
-    }
-
-  /** Cache key for `root`: canonical local path (scheme-less spellings
-    * of one directory collapse), URIs with an explicit scheme pass
-    * through verbatim — canonicalizing `hdfs://…` through
-    * java.io.File would mangle it. */
-  private def cacheRootKey(root: String): String =
-    if (root.contains("://")) root
-    else try new java.io.File(root).getCanonicalPath
-      catch { case _: java.io.IOException => root }
-
-  private def manifestStat(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): (Long, Long) = {
-    val st = fs.getFileStatus(p)
-    (st.getLen, st.getModificationTime)
-  }
-
-  /** Test hook: drop every cached snapshot so the next read must
-    * reconstruct from disk (checkpoint + action replay) — how the spec
-    * pins that a FRESH JVM reads the same states this one committed. */
-  private[graft] def clearLogSnapshotCache(): Unit =
-    logSnapshotCache.synchronized { logSnapshotCache.clear() }
-
-  private def cacheGet(root: String, gen: Int,
-      stat: (Long, Long)): Option[Seq[(String, String)]] =
-    logSnapshotCache.synchronized {
-      Option(logSnapshotCache.get((cacheRootKey(root), gen)))
-        .collect { case (len, mt, s) if (len, mt) == stat => s }
-    }
-
-  private def cachePut(root: String, gen: Int, stat: (Long, Long),
-      entries: Seq[(String, String)]): Unit =
-    logSnapshotCache.synchronized {
-      logSnapshotCache.put((cacheRootKey(root), gen),
-        (stat._1, stat._2, entries)); ()
-    }
-
-  private def readManifestBody(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
-
-  /** Commit generation `gen`: write the manifest body COMPLETELY to a
-    * temp file, then claim the slot by atomically promoting the temp
-    * file into `gens/g=<gen>` — so a slot either does not exist or
-    * holds its full body, and a reader can never observe a
-    * committed-looking manifest with torn contents (ADVICE r17; the
-    * previous claim-then-write left exactly that window, and an empty
-    * body is a legitimate manifest, so a torn read was undetectable).
-    * The promotion is scheme-dispatched, the published LogStore design
-    * reduced to its core:
-    *
-    *   - local (`file:`): `Files.createLink` — link(2) is an atomic
-    *     put-if-absent that carries the complete body; a lost race
-    *     throws `java.nio.file.FileAlreadyExistsException`;
-    *   - HDFS-like: `FileContext.rename(Options.Rename.NONE)` — the
-    *     atomic fail-if-present rename HDFS guarantees (and the route
-    *     the whole log now takes through the Hadoop FS API, VERDICT
-    *     r17 wrong #1 — pointing `root` at HDFS works unchanged).
-    *     Object stores without atomic rename must supply their native
-    *     put-if-absent (conditional PUT) here instead — the one
-    *     documented constraint of this log.
-    *
-    * Either way two writers racing the same generation number cannot
-    * both win — the loser gets FileAlreadyExistsException instead of
-    * silently overwriting a committed state. Single-writer lineages
-    * never see the exception: they commit each number once under the
-    * materialize lock after wiping the root.
-    *
-    * Round 19: the body is the ACTIONS form when possible (see the log
-    * docstring) — `entries` is still the caller's full snapshot, stored
-    * in [[canonicalEntries]] order (files, then metadata — the order
-    * [[readGeneration]] returns), the delta vs the parent is computed
-    * here, and exactness (replay(parent, actions) == snapshot, order
-    * included) is VERIFIED before choosing the form; any divergence
-    * falls back to the snapshot body, so readGeneration is exact by
-    * construction either way. A successful commit seeds the snapshot cache and, every
-    * [[LogCheckpointInterval]] commits, writes the `c=<gen>` full-
-    * snapshot checkpoint sidecar (idempotent content — two racers
-    * would write identical bytes — and atomically promoted, so a
-    * reader never sees a torn checkpoint; it is an optimization only,
-    * replay works from any earlier anchor without it). */
-  private[graft] def commitGeneration(root: String, gen: Int,
-      entries: Seq[(String, String)]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val gensDir = new Path(s"$root/gens")
-    val fs = gensDir.getFileSystem(logConf())
-    fs.mkdirs(gensDir)
-    val dst = new Path(gensDir, s"g=$gen")
-    val canon = canonicalEntries(entries)
-    val parent = if (gen == 0) None
-      else scala.util.Try(readGeneration(root, gen - 1)).toOption
-    val body = parent match {
-      case Some(p) =>
-        val (pFiles, pMetas) = p.partition(e => LogFileKinds(e._1))
-        val (cFiles, cMetas) = canon.partition(e => LogFileKinds(e._1))
-        val removes = multisetDiff(pFiles, cFiles) ++ pMetas
-        val adds = multisetDiff(cFiles, pFiles) ++ cMetas
-        if (applyLogActions(p, removes, adds) == canon)
-          ("@delta" +: (removes.map(e => s"-\t${e._1}\t${e._2}") ++
-            adds.map(e => s"+\t${e._1}\t${e._2}"))).mkString("\n")
-        else snapshotBody(canon)
-      case None => snapshotBody(canon)
-    }
-    if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-      val dstNio = java.nio.file.Paths.get(dst.toUri.getPath)
-      val tmp = java.nio.file.Files.createTempFile(
-        dstNio.getParent, s".g=$gen-", ".tmp")
-      try {
-        java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-        java.nio.file.Files.createLink(dstNio, tmp)
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    } else {
-      val tmp = new Path(gensDir, s".g=$gen-${java.util.UUID.randomUUID}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      try {
-        org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, logConf())
-          .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
-      } catch {
-        case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
-                  _: java.nio.file.FileAlreadyExistsException) =>
-          fs.delete(tmp, false)
-          // normalize to the nio type so the retry loop (and specs)
-          // catch ONE exception class across both promotion paths
-          throw new java.nio.file.FileAlreadyExistsException(
-            s"$dst (lost slot race: ${e.getMessage})")
-      }
-    }
-    // the commit landed: seed the resolved-snapshot cache (the next
-    // sequential committer's parent read becomes a stat + map hit) and
-    // drop the periodic checkpoint anchor
-    cachePut(root, gen, manifestStat(fs, dst), canon)
-    if (gen > 0 && gen % LogCheckpointInterval == 0)
-      // best-effort, as documented on writeCheckpoint: the commit has
-      // already landed (manifest promoted), so a transient FS error
-      // here must not fail it — losing the sidecar costs only replay
-      // depth on the next cold read (ADVICE r19 #1)
-      try writeCheckpoint(fs, gensDir, gen, canon)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          Console.err.println(
-            s"[graft] best-effort checkpoint c=$gen under $root/gens " +
-              s"failed (commit already landed): ${e.getMessage}")
-      }
-  }
-
-  /** Write the `c=<gen>` full-snapshot checkpoint sidecar, atomically
-    * promoted (write-complete-then-rename) so a reader never observes a
-    * torn checkpoint. Overwrite-tolerant: the content is a pure
-    * function of the committed generation, so concurrent writers write
-    * identical bytes and last-rename-wins is harmless. Best-effort —
-    * a failure here loses only replay-bounding, never data. */
-  private def writeCheckpoint(fs: org.apache.hadoop.fs.FileSystem,
-      gensDir: org.apache.hadoop.fs.Path, gen: Int,
-      entries: Seq[(String, String)]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(gensDir, s"c=$gen")
-    val body = snapshotBody(entries)
-    if (Option(fs.getUri.getScheme).forall(_ == "file")) {
-      val dstNio = java.nio.file.Paths.get(dst.toUri.getPath)
-      val tmp = java.nio.file.Files.createTempFile(
-        dstNio.getParent, s".c=$gen-", ".tmp")
-      java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, dstNio,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      val tmp = new Path(gensDir, s".c=$gen-${java.util.UUID.randomUUID}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, logConf())
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
-
-  /** OPTIMISTIC APPEND to the generation log: read the tip, try to claim
-    * tip+1, and on a lost race re-read and retry — the published
-    * optimistic-concurrency commit loop (writers never lock the table).
-    * Returns the generation number actually committed.
-    *
-    * LOGICAL CONFLICT DETECTION (round 18, VERDICT r17 missing #2): the
-    * atomic slot claim alone only serializes WHO writes each number —
-    * a loser that retried blindly would land entries computed against
-    * the OLD tip, silently superseding the winner (a lost update, since
-    * every manifest here is a full state snapshot). A committer that
-    * declares its read state — `readState = Some((tipItBuiltAgainst,
-    * filesItRead))` — therefore RE-VALIDATES before every claim: each
-    * generation committed after its read tip must reference ONLY files
-    * inside its read set (a metadata-only commit relative to the
-    * committer's read — a RESTORE re-referencing files it already
-    * consumed, a retention bookkeeping row). Such winners introduce no
-    * datum the committer's snapshot misses, so landing the snapshot
-    * loses no data and the retry proceeds. Any winner ADDING a data
-    * file OUTSIDE the read set (its own fold output, an appended
-    * arrival batch) means the committer's snapshot would drop that data
-    * — [[CommitConflictException]], and the caller must rebase. This is
-    * the published commit-time validation (Delta's conflict checking /
-    * Iceberg's validate): round 19 reads each intervening commit's ADD
-    * SET straight off its actions manifest — O(intervening adds) per
-    * retry, not O(files) — restricted to [[LogFileKinds]], so metadata
-    * entries (`op`, `schema`) NEVER conflict (ADVICE r18 #1: an
-    * intervening schema/op-carrying commit used to raise a spurious
-    * conflict, and callers compensated by hand-stuffing schema strings
-    * into read sets). Adds-only is equivalent to the old whole-manifest
-    * subset test for any committer that declared the full tip it read
-    * (every caller does): an intervening winner's retained references
-    * ARE the tip the committer read; only its adds can be news.
-    * `readState = None` keeps the blind claim-retry behavior for
-    * callers that append unconditionally.
-    *
-    * Bounded retries: under real contention each loser's next read
-    * observes the winner's commit, so the loop advances every round;
-    * the cap only guards a pathological filesystem. */
-  private[graft] def commitNextGeneration(root: String,
-      entries: Seq[(String, String)],
-      readState: Option[(Int, Set[String])] = None): Int = {
-    var attempts = 0
-    while (attempts < 64) {
-      val gens = listGenerations(root)
-      readState.foreach { case (readTip, readFiles) =>
-        gens.filter(_ > readTip).foreach { g =>
-          val unseen = readGenerationAdds(root, g)
-            .collect { case (k, f) if LogFileKinds(k) => f }
-            .filterNot(readFiles.contains)
-          if (unseen.nonEmpty)
-            throw new CommitConflictException(
-              s"commit built against generation $readTip conflicts with " +
-                s"committed generation $g: it adds ${unseen.size} " +
-                s"data file(s) outside the committer's read set (e.g. " +
-                s"${unseen.head}) — landing this snapshot would silently " +
-                "drop them; re-read the tip and rebase")
-        }
-      }
-      val next = gens.lastOption.getOrElse(-1) + 1
-      try {
-        commitGeneration(root, next, entries)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => attempts += 1
-      }
-    }
-    throw new IllegalStateException(
-      "commitNextGeneration: lost 64 consecutive commit races")
-  }
-
-  /** The FULL (kind, path) references of generation `gen` — throws when
-    * the manifest was never committed (an uncommitted generation is not
-    * a readable state). Read through the Hadoop FS API, so the log
-    * lives on whatever filesystem `root` names.
-    *
-    * Round 19 (actions log): reconstructed by walking BACK from `gen`
-    * to the nearest resolved anchor — a stat-validated cache hit, a
-    * `c=<k>` checkpoint sidecar, or a snapshot-form manifest (g0 at the
-    * latest) — then replaying the collected action manifests FORWARD,
-    * caching every intermediate state so a sequential reader (the
-    * commit loop, the AS-OF family, the cursor feed) pays one stat +
-    * one O(changes) manifest read per new generation in steady state.
-    * Replay depth is bounded by [[LogCheckpointInterval]] whenever the
-    * checkpoints exist; without them (best-effort writes) it walks to
-    * g0 — correct either way. */
-  private[graft] def readGeneration(root: String, gen: Int): Seq[(String, String)] = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(s"$root/gens").getFileSystem(logConf())
-    // walk back collecting unreplayed actions until an anchor resolves
-    var g = gen
-    var state: Seq[(String, String)] = null
-    val pending = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, (Long, Long), Seq[(String, String)], Seq[(String, String)])]
-    while (state == null) {
-      val mp = new Path(s"$root/gens/g=$g")
-      val stat = manifestStat(fs, mp) // throws on an uncommitted slot
-      cacheGet(root, g, stat) match {
-        case Some(s) => state = s
-        case None =>
-          val cp = new Path(s"$root/gens/c=$g")
-          val fromCheckpoint = if (fs.exists(cp))
-            parseManifest(readManifestBody(fs, cp)) match {
-              case SnapshotForm(e) => Some(e)
-              case _ => None
-            }
-          else None
-          fromCheckpoint match {
-            case Some(e) =>
-              state = e
-              cachePut(root, g, stat, e)
-            case None => parseManifest(readManifestBody(fs, mp)) match {
-              case SnapshotForm(e) =>
-                state = e
-                cachePut(root, g, stat, e)
-              case ActionsForm(rm, ad) =>
-                require(g > 0, s"generation 0 of $root must be snapshot-form")
-                pending += ((g, stat, rm, ad))
-                g -= 1
-            }
-          }
-      }
-    }
-    // replay forward, caching each reconstructed intermediate
-    pending.reverseIterator.foreach { case (gg, stat, rm, ad) =>
-      state = applyLogActions(state, rm, ad)
-      cachePut(root, gg, stat, state)
-    }
-    state
-  }
-
-  /** EXPIRE LOG ENTRIES strictly below `oldestRetained` (round 19,
-    * beyond plan — the published log-retention cleanup, Delta's
-    * `logRetentionDuration` reduced to its core): once the data vacuum
-    * has expired the generations below the retained window, their
-    * manifests are metadata garbage — but under an ACTIONS log the
-    * window's floor may still reconstruct THROUGH them, so cleanup must
-    * first ANCHOR the floor with its own full-snapshot checkpoint
-    * (idempotent, written before any deletion — a crash mid-cleanup
-    * re-anchors and re-deletes on retry), and only then delete every
-    * manifest and checkpoint below it. [[listGenerations]] and DESCRIBE
-    * HISTORY thereafter answer the retained window, exactly what a
-    * production log answers after cleanup; reads below the floor throw
-    * (an expired generation is not a readable state), and the
-    * stat-validated snapshot cache cannot serve one (the manifest stat
-    * fails first). */
-  private[graft] def expireLogEntries(root: String, oldestRetained: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val gensDir = new Path(s"$root/gens")
-    val fs = gensDir.getFileSystem(logConf())
-    writeCheckpoint(fs, gensDir, oldestRetained,
-      readGeneration(root, oldestRetained))
-    listGenerations(root).filter(_ < oldestRetained).foreach { g =>
-      fs.delete(new Path(gensDir, s"g=$g"), false)
-      fs.delete(new Path(gensDir, s"c=$g"), false)
-    }
-  }
-
-  /** The (kind, path) references generation `gen` ADDED relative to its
-    * parent — read straight off the actions manifest when the commit
-    * has one (O(changes), no snapshot reconstruction: what makes
-    * [[commitNextGeneration]]'s conflict validation O(intervening
-    * adds)), derived by diffing against the parent snapshot for
-    * snapshot-form commits (g0: everything is an add). Priced edge
-    * (VERDICT r19): a non-g0 snapshot-form commit — only the rare
-    * exactness fallback produces one — pays a full parent
-    * reconstruction + O(files) diff here; acceptable because fallbacks
-    * require an entry REORDERING none of the engine's lineages emits
-    * (the randomized LayoutSpec property manufactures them on
-    * purpose), so steady-state conflict validation never hits this
-    * branch. */
-  private[graft] def readGenerationAdds(root: String,
-      gen: Int): Seq[(String, String)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/gens/g=$gen")
-    val fs = p.getFileSystem(logConf())
-    parseManifest(readManifestBody(fs, p)) match {
-      case ActionsForm(_, adds) => adds
-      case SnapshotForm(e) =>
-        if (gen == 0) e else multisetDiff(e, readGeneration(root, gen - 1))
-    }
-  }
-
-  /** The (adds, removes) of generation `gen` relative to its parent —
-    * the cursor feed's per-transition input, read at O(changes) off an
-    * actions manifest. */
-  private[graft] def readGenerationActions(root: String,
-      gen: Int): (Seq[(String, String)], Seq[(String, String)]) = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/gens/g=$gen")
-    val fs = p.getFileSystem(logConf())
-    parseManifest(readManifestBody(fs, p)) match {
-      case ActionsForm(removes, adds) => (adds, removes)
-      case SnapshotForm(e) =>
-        if (gen == 0) (e, Seq.empty)
-        else {
-          val parent = readGeneration(root, gen - 1)
-          (multisetDiff(e, parent), multisetDiff(parent, e))
-        }
-    }
-  }
-
-  private[graft] def listGenerations(root: String): Seq[Int] = {
-    val d = new org.apache.hadoop.fs.Path(s"$root/gens")
-    val fs = d.getFileSystem(logConf())
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("g=")).map(_.drop(2).toInt).sorted
-  }
-
   /** Read the lake AS OF generation `gen`, through nothing but the
     * generation manifest's file list: newest-wins merge of the
     * generation's delta references over its base references. The explicit
@@ -2613,7 +1973,7 @@ object Layout {
     val entries = readGeneration(root, gen)
     def files(kind: String) = entries.collect { case (`kind`, f) => f }
     val schema = entries.collectFirst { case ("schema", s) => s }
-      .getOrElse("event_id BIGINT, user_id BIGINT, value DOUBLE")
+      .getOrElse(LakeSchema)
     def readOr(fls: Seq[String]): DataFrame =
       if (fls.isEmpty) spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -2995,8 +2355,7 @@ object Layout {
     import spark.implicits._
     val root = ensureMergeLog(spark, dir)
     val source = spark.read.schema(LakeSchema).parquet(s"$root/source")
-    val baseKeys = spark.read.schema(LakeSchema)
-      .parquet(readGeneration(root, 0).collect { case ("base", f) => f }: _*)
+    val baseKeys = readLakeRefs(spark, root, 0, "base")
       .select(col("event_id"), col("value").as("__tv"))
     // outcome census: the merge's own classification, re-run as one
     // delta-scale probe + hash-agg (never a table rescan)
@@ -3066,8 +2425,7 @@ object Layout {
     import spark.implicits._
     val root = ensureMergeSyncLog(spark, dir)
     val source = spark.read.schema(LakeSchema).parquet(s"$root/source")
-    val baseDf = spark.read.schema(LakeSchema)
-      .parquet(readGeneration(root, 0).collect { case ("base", f) => f }: _*)
+    val baseDf = readLakeRefs(spark, root, 0, "base")
     val srcAcc = source
       .join(baseDf.select(col("event_id"), col("value").as("__tv")),
         Seq("event_id"), "left_outer")
@@ -3164,11 +2522,9 @@ object Layout {
       // read them back — setTimes is a silent no-op on some
       // filesystems, and TIMESTAMP AS OF must fail loudly rather
       // than resolve against whatever instants the FS kept
-      val gens = listGenerations(l.root)
-      def manifest(g: Int) = new org.apache.hadoop.fs.Path(s"${l.root}/gens/g=$g")
-      gens.foreach(g => l.fs.setTimes(manifest(g), TimetravelEpochMs + g * TimetravelStepMs, -1))
-      val mtimes = gens.map(g => l.fs.getFileStatus(manifest(g)).getModificationTime)
-      require(mtimes == gens.map(g => TimetravelEpochMs + g * TimetravelStepMs),
+      def at(g: Int) = TimetravelEpochMs + g * TimetravelStepMs
+      val mtimes = setCommitTimes(l.root, at)
+      require(mtimes == listGenerations(l.root).map(at),
         s"filesystem did not honor setTimes — commit instants are not " +
           s"the deterministic grid: $mtimes")
     }
@@ -3183,9 +2539,7 @@ object Layout {
     * work: one listing + one stat per generation, no manifest body is
     * read. */
   private[graft] def resolveTimestampAsOf(root: String, ts: Long): Int = {
-    val fs = new org.apache.hadoop.fs.Path(s"$root/gens").getFileSystem(logConf())
-    val at = listGenerations(root).filter(g => fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(s"$root/gens/g=$g")).getModificationTime <= ts)
+    val at = listGenerations(root).filter(commitTime(root, _) <= ts)
     require(at.nonEmpty,
       s"TIMESTAMP AS OF $ts precedes the first commit of $root — " +
         "no generation was live at that instant")

@@ -11,10 +11,15 @@ abstract class NativeFunction(val name: String, expression: Class[_ <: Expressio
   /** The expression for the SQL call's `args`. */
   def build(args: Seq[Expression]): Expression
 
-  /** Idempotently register [[name]] as a temp SQL function on `spark`, so
-    * query code can use it via `expr(...)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+  /** Register [[name]] as a temp SQL function on `spark` unless the
+    * session already has it, so query code can use it via `expr(...)`;
+    * a repeat call leaves the registry untouched (a replacement would
+    * log a WARN per call, and every table read calls this). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+  }
 
   /** The function as a `SparkSessionExtensions.injectFunction` entry. */
   def description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -8,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.Query
 import graft.exec.Scratch
 import graft.ext.Layout
+import graft.lake.Log
 
 /** The CURSOR CHANGE FEED consumed as a STREAM over the generation log
   * (round 19, VERDICT r18 missing #4 — the published `readStream`
@@ -17,7 +17,7 @@ import graft.ext.Layout
   * `foreachBatch` consumer drains feed(checkpoint → arrived generation)
   * per trigger via [[graft.ext.Layout.lakeChangesSince]], then advances
   * AND REGISTERS its checkpoint in the log
-  * ([[graft.ext.Layout.registerCursor]]) — the registration is what
+  * ([[graft.lake.Log.registerCursor]]) — the registration is what
   * makes the retention vacuum consumer-aware: the generations this
   * stream still needs cannot be expired under it (round 19's
   * consumer-floor contract, closed end to end here).
@@ -52,7 +52,6 @@ object LakeCdfStream {
     val feedSchema = "from_gen BIGINT, to_gen BIGINT, change_type STRING, " +
       "n_rows BIGINT, key_chk BIGINT, uid_chk BIGINT, val_chk BIGINT"
     Scratch.materializeIfChanged(root, Layout.lakeIngestFingerprint(spark, dir)) {
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // the committing arrival loop, under this operator's own root
       val ctx = Layout.prepareLakeIngest(spark, dir, root)
       try {
@@ -64,22 +63,18 @@ object LakeCdfStream {
       // ... and the fold, committed on the same log BEFORE the stream
       // starts (round 19): the consumer must read the data-movement
       // commit as an EMPTY increment, and — the fold being generation
-      // 4 — its `c=4` checkpoint sidecar now sits in gens/, so the
-      // manifest glob below is exercised against a real non-manifest
+      // 4 — its `c=4` checkpoint sidecar now sits next to the manifests,
+      // so the manifest glob below is exercised against a real non-manifest
       // neighbor, not vacuously
       Layout.commitIngestFold(spark, dir, root)
       // deterministic replay order: explicit ascending commit mtimes
-      val gens = Layout.listGenerations(root)
+      val gens = Log.listGenerations(root)
       val t0 = System.currentTimeMillis()
-      gens.foreach { g =>
-        fs.setTimes(new Path(s"$root/gens/g=$g"), t0 + g * 2000L, -1)
-      }
       // setTimes is a silent no-op on some Hadoop filesystems (object
-      // stores): read the mtimes back and fail LOUDLY if the
+      // stores): check the read-back mtimes and fail LOUDLY if the
       // "manifests replay in commit order" guarantee was lost, instead
       // of degrading to directory-listing luck (ADVICE r19 #3)
-      val mtimes = gens.map(g =>
-        fs.getFileStatus(new Path(s"$root/gens/g=$g")).getModificationTime)
+      val mtimes = Log.setCommitTimes(root, t0 + _ * 2000L)
       require(mtimes == mtimes.sorted && mtimes.distinct.size == mtimes.size,
         s"filesystem did not honor setTimes — manifest mtimes are not " +
           s"strictly ascending ($mtimes): deterministic commit-order " +
@@ -95,15 +90,15 @@ object LakeCdfStream {
       var cursor = 0
       val q = spark.readStream
         .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "g=*") // manifests only, never c=* checkpoints
-        .text(s"$root/gens")
+        .option("pathGlobFilter", Log.ManifestGlob) // manifests only, never checkpoints
+        .text(Log.manifestDir(root))
         .select(input_file_name().as("f"))
         .writeStream
         .option("checkpointLocation", s"$root/ckpt")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, _: Long) =>
           val gensInBatch = b.select(col("f")).distinct().collect()
-            .map(_.getString(0).split("g=").last.toInt).sorted
+            .map(r => Log.generationOf(r.getString(0))).sorted
           lock.synchronized {
             gensInBatch.foreach { g =>
               seen += g
@@ -114,7 +109,7 @@ object LakeCdfStream {
                     r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
                 cursor = g
                 // the checkpoint the retention floor respects
-                Layout.registerCursor(root, "cdf_stream", g)
+                Log.registerCursor(root, "cdf_stream", g)
               }
             }
           }
@@ -128,7 +123,7 @@ object LakeCdfStream {
             s"expected $gens, got ${seen.sorted}")
         require(cursor == gens.last,
           s"the stream's checkpoint must end at the tip: $cursor vs ${gens.last}")
-        require(Layout.readCursors(root).get("cdf_stream").contains(gens.last),
+        require(Log.readCursors(root).get("cdf_stream").contains(gens.last),
           "the registered cursor must have advanced with the stream")
         import spark.implicits._
         drained.toSeq

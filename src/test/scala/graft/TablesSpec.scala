@@ -57,4 +57,18 @@ class TablesSpec extends SparkSpec {
     assert(df.schema("ts").dataType === TimestampType)
     assert(df.select(unix_micros(col("ts"))).collect().head.getLong(0) === baseMicros)
   }
+
+  test("a table read registers the native functions once per session") {
+    // a re-registration stores a new builder and logs a replacement WARN
+    // on every table read
+    val dir = tempDir("graft-register").toString
+    spark.range(1).write.parquet(s"$dir/t.parquet")
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_might_contain")
+    Tables.table(spark, dir, "t")
+    val first = registry.lookupFunctionBuilder(id)
+    assert(first.isDefined)
+    Tables.table(spark, dir, "t")
+    assert(registry.lookupFunctionBuilder(id).get eq first.get)
+  }
 }

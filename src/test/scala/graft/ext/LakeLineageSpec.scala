@@ -8,6 +8,7 @@ import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 import graft.exec.Scratch
+import graft.lake.Log
 
 /** The lake-lineage builder (`Layout.lakeLineage`): idempotent builds,
   * op-stamped generations in step order, and a failure path that leaves
@@ -43,12 +44,12 @@ class LakeLineageSpec extends SparkSpec {
     }
   }
 
-  private def ops(root: String): Seq[String] = Layout.listGenerations(root)
-    .map(g => Layout.readGeneration(root, g).collectFirst { case ("op", o) => o }
+  private def ops(root: String): Seq[String] = Log.listGenerations(root)
+    .map(g => Log.readGeneration(root, g).collectFirst { case ("op", o) => o }
       .getOrElse("<none>"))
 
   private def fileRefs(root: String, g: Int): Seq[(String, String)] =
-    Layout.readGeneration(root, g).filter(e => Layout.LogFileKinds(e._1))
+    Log.readGeneration(root, g).filter(e => Log.LogFileKinds(e._1))
 
   test("a lineage built twice writes once, its generations op-stamped in step order") {
     builds = 0

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.exec.Scratch
+import graft.lake.Log
 
 /** Pins the Morton interleave bit math, the skipping-effectiveness
   * invariants on the real corpus, and the clustered-write idiom
@@ -528,9 +529,9 @@ class LayoutSpec extends SparkSpec {
     // entries verbatim (its op stamp is its own — a restore is a new
     // commit), and the data dir holds exactly the g0 ∪ g1 file set
     def fileRefs(g: Int) =
-      Layout.readGeneration(root, g).filter(e => Layout.LogFileKinds(e._1))
+      Log.readGeneration(root, g).filter(e => Log.LogFileKinds(e._1))
     assert(fileRefs(2) === fileRefs(0))
-    assert(Layout.readGeneration(root, 2)
+    assert(Log.readGeneration(root, 2)
       .collectFirst { case ("op", o) => o } === Some("restore"))
     val referenced = (fileRefs(0) ++ fileRefs(1)).map(_._2).toSet
     assert(Layout.listParquetFiles(spark, s"$root/data").toSet === referenced,
@@ -642,7 +643,7 @@ class LayoutSpec extends SparkSpec {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val ts = (1 to 2).map(i => new Thread(() => {
       gate.countDown(); gate.await()
-      try got.add(Layout.commitNextGeneration(root,
+      try got.add(Log.commitNextGeneration(root,
         Seq("base" -> s"file:/fake/writer$i.parquet")))
       catch { case t: Throwable => errs.add(t) }
     }))
@@ -653,16 +654,22 @@ class LayoutSpec extends SparkSpec {
     // winner instead of overwriting it
     val gens = got.toArray(Array.empty[Integer]).map(_.intValue).sorted.toSeq
     assert(gens === Seq(0, 1))
-    assert(Layout.listGenerations(root) === Seq(0, 1))
+    assert(Log.listGenerations(root) === Seq(0, 1))
     // each manifest holds exactly its writer's entry — no torn/mixed log
-    val bodies = Seq(0, 1).map(g => Layout.readGeneration(root, g))
+    val bodies = Seq(0, 1).map(g => Log.readGeneration(root, g))
     bodies.foreach(b => assert(b.length === 1 && b.head._1 === "base"))
     assert(bodies.map(_.head._2).toSet.size === 2,
       "the two committed manifests must carry the two distinct payloads")
     // a direct re-claim of a committed slot must fail loudly
     intercept[java.nio.file.FileAlreadyExistsException] {
-      Layout.commitGeneration(root, 1, Seq("base" -> "file:/fake/late.parquet"))
+      Log.commitGeneration(root, 1, Seq("base" -> "file:/fake/late.parquet"))
     }
+    // ... and leaves no temp file behind: neither the racing loser's
+    // promotion nor the failed re-claim strands a `.tmp` in the log
+    val left = java.nio.file.Files.list(java.nio.file.Paths.get(root, "gens"))
+    try assert(left.filter(_.getFileName.toString.endsWith(".tmp")).count() === 0L,
+      "a lost slot race left a temp file")
+    finally left.close()
   }
 
   test("lake vacuum: retention window keeps g-1 readable, expires g0, answers survive") {
@@ -698,11 +705,11 @@ class LayoutSpec extends SparkSpec {
     val root = Scratch.root("lake_vacuum", sf)
     def onDisk(f: String): Boolean =
       new java.io.File(f.replaceFirst("^file:", "")).exists()
-    val live = (Layout.readGeneration(root, 1) ++ Layout.readGeneration(root, 2))
-      .collect { case (k, f) if Layout.LogFileKinds(k) => f }.toSet
-    assert(Layout.listGenerations(root) === Seq(1, 2),
+    val live = (Log.readGeneration(root, 1) ++ Log.readGeneration(root, 2))
+      .collect { case (k, f) if Log.LogFileKinds(k) => f }.toSet
+    assert(Log.listGenerations(root) === Seq(1, 2),
       "log cleanup must expire the manifests below the retained floor")
-    intercept[java.io.FileNotFoundException] { Layout.readGeneration(root, 0) }
+    intercept[java.io.FileNotFoundException] { Log.readGeneration(root, 0) }
     assert(r.getAs[Long]("log_floor") === 1L)
     assert(r.getAs[Long]("log_tip") === 2L)
     assert(r.getAs[Long]("n_log_expired") === 1L)
@@ -754,13 +761,13 @@ class LayoutSpec extends SparkSpec {
     // the log itself: three numbered generations; g0 carries both file
     // kinds (merge-on-read state), the rewrites are pure base
     // generations, and every commit names its operation (round 19)
-    assert(Layout.listGenerations(root) === Seq(0, 1, 2))
-    def kinds(g: Int) = Layout.readGeneration(root, g)
-      .collect { case (k, _) if Layout.LogFileKinds(k) => k }.toSet
+    assert(Log.listGenerations(root) === Seq(0, 1, 2))
+    def kinds(g: Int) = Log.readGeneration(root, g)
+      .collect { case (k, _) if Log.LogFileKinds(k) => k }.toSet
     assert(kinds(0) === Set("base", "delta"))
     assert(kinds(1) === Set("base"))
     assert(kinds(2) === Set("base"))
-    def op(g: Int) = Layout.readGeneration(root, g)
+    def op(g: Int) = Log.readGeneration(root, g)
       .collectFirst { case ("op", o) => o }
     assert(Seq(op(0), op(1), op(2)) ===
       Seq(Some("seed"), Some("fold"), Some("compact")))
@@ -879,45 +886,45 @@ class LayoutSpec extends SparkSpec {
     // fold output — B's snapshot, computed against g0, would silently
     // drop that output, so B must ABORT, never land
     val root = tempDir("graft-conflict").toString
-    Layout.commitGeneration(root, 0,
+    Log.commitGeneration(root, 0,
       Seq("base" -> "file:/t/a.parquet", "base" -> "file:/t/b.parquet"))
-    val read0 = Layout.readGeneration(root, 0).map(_._2).toSet
-    assert(Layout.commitNextGeneration(root,
+    val read0 = Log.readGeneration(root, 0).map(_._2).toSet
+    assert(Log.commitNextGeneration(root,
       Seq("base" -> "file:/t/foldA.parquet"), Some((0, read0))) === 1)
-    intercept[Layout.CommitConflictException] {
-      Layout.commitNextGeneration(root,
+    intercept[Log.CommitConflictException] {
+      Log.commitNextGeneration(root,
         Seq("base" -> "file:/t/foldB.parquet"), Some((0, read0)))
     }
     // no lost-update manifest landed: the log holds exactly A's commit
-    assert(Layout.listGenerations(root) === Seq(0, 1))
-    assert(Layout.readGeneration(root, 1) === Seq("base" -> "file:/t/foldA.parquet"))
+    assert(Log.listGenerations(root) === Seq(0, 1))
+    assert(Log.readGeneration(root, 1) === Seq("base" -> "file:/t/foldA.parquet"))
     // a METADATA-ONLY winner (a RESTORE re-referencing files the loser
     // already read) introduces no datum the loser's snapshot misses —
     // the loser's retry proceeds
     val root2 = tempDir("graft-conflict2").toString
-    Layout.commitGeneration(root2, 0,
+    Log.commitGeneration(root2, 0,
       Seq("base" -> "file:/t/a.parquet", "base" -> "file:/t/b.parquet"))
-    val read02 = Layout.readGeneration(root2, 0).map(_._2).toSet
-    assert(Layout.commitNextGeneration(root2,
+    val read02 = Log.readGeneration(root2, 0).map(_._2).toSet
+    assert(Log.commitNextGeneration(root2,
       Seq("base" -> "file:/t/a.parquet"), Some((0, read02))) === 1)
-    assert(Layout.commitNextGeneration(root2,
+    assert(Log.commitNextGeneration(root2,
       Seq("base" -> "file:/t/foldB.parquet"), Some((0, read02))) === 2)
   }
 
   test("commit conflict race: two committers folding one parent — exactly one lands, one aborts") {
     val root = tempDir("graft-conflictrace").toString
-    Layout.commitGeneration(root, 0, Seq("base" -> "file:/t/parent.parquet"))
-    val readState = Some((0, Layout.readGeneration(root, 0).map(_._2).toSet))
+    Log.commitGeneration(root, 0, Seq("base" -> "file:/t/parent.parquet"))
+    val readState = Some((0, Log.readGeneration(root, 0).map(_._2).toSet))
     val gate = new java.util.concurrent.CountDownLatch(2)
     val landed = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
     val conflicts = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val ts = (1 to 2).map(i => new Thread(() => {
       gate.countDown(); gate.await()
-      try landed.add(Layout.commitNextGeneration(root,
+      try landed.add(Log.commitNextGeneration(root,
         Seq("base" -> s"file:/t/fold$i.parquet"), readState))
       catch {
-        case c: Layout.CommitConflictException => conflicts.add(c)
+        case c: Log.CommitConflictException => conflicts.add(c)
         case t: Throwable => errs.add(t)
       }
     }))
@@ -927,8 +934,8 @@ class LayoutSpec extends SparkSpec {
     assert(landed.size === 1, "exactly one fold must land")
     assert(conflicts.size === 1, "exactly one fold must abort with a conflict")
     // the log holds g0 + the single winner — never both folds
-    assert(Layout.listGenerations(root) === Seq(0, 1))
-    assert(Layout.readGeneration(root, 1).map(_._2).toSet.size === 1)
+    assert(Log.listGenerations(root) === Seq(0, 1))
+    assert(Log.readGeneration(root, 1).map(_._2).toSet.size === 1)
   }
 
   test("actions log: an 8-commit lineage reconstructs every state from checkpoint + action replay") {
@@ -946,14 +953,14 @@ class LayoutSpec extends SparkSpec {
     snaps :+= Seq("base" -> "file:/t/fold.parquet", "op" -> "fold")
     snaps :+= (snaps(3).filterNot(_._1 == "op") :+ ("op" -> "restore"))
     snaps.zipWithIndex.foreach { case (e, i) =>
-      assert(Layout.commitNextGeneration(root, e) === i)
+      assert(Log.commitNextGeneration(root, e) === i)
     }
     // COLD read: drop the JVM snapshot cache, so every state below must
     // reconstruct from nothing but the on-disk log — what a fresh JVM
     // (a different reader of the same table) would do
-    Layout.clearLogSnapshotCache()
+    Log.clearLogSnapshotCache()
     snaps.zipWithIndex.foreach { case (e, i) =>
-      assert(Layout.readGeneration(root, i) === e,
+      assert(Log.readGeneration(root, i) === e,
         s"generation $i must reconstruct to the exact committed snapshot")
     }
     // the representation really is an actions log: every non-g0 commit
@@ -970,17 +977,17 @@ class LayoutSpec extends SparkSpec {
     }
     assert(!raw("g=0").startsWith("@delta"), "g0 (no parent) is snapshot-form")
     // the checkpoint sidecar at the interval carries g4's full snapshot
-    val c = s"c=${Layout.LogCheckpointInterval}"
+    val c = s"c=${Log.LogCheckpointInterval}"
     val ckpt = raw(c).split("\n").toSeq.filter(_.nonEmpty).map { l =>
       val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
     }
-    assert(ckpt === snaps(Layout.LogCheckpointInterval),
+    assert(ckpt === snaps(Log.LogCheckpointInterval),
       s"$c must hold the full snapshot of its generation")
     // adds read off a manifest at O(changes): arrival 3 added its delta
     // file and its op stamp, nothing else
-    assert(Layout.readGenerationAdds(root, 3) ===
+    assert(Log.readGenerationActions(root, 3)._1 ===
       Seq("delta" -> f(3), "op" -> "arrival"))
-    assert(Layout.readGenerationActions(root, 6)._2.map(_._2).toSet
+    assert(Log.readGenerationActions(root, 6)._2.map(_._2).toSet
       .contains(f(5)), "the fold's manifest records the removed arrivals")
   }
 
@@ -992,7 +999,7 @@ class LayoutSpec extends SparkSpec {
     // and each commit's recorded actions must compose over its parent.
     val seen = scala.collection.mutable.ArrayBuffer.empty[Boolean]
     def canonical(e: Seq[(String, String)]) = {
-      val (f, m) = e.partition(x => Layout.LogFileKinds(x._1)); f ++ m
+      val (f, m) = e.partition(x => Log.LogFileKinds(x._1)); f ++ m
     }
     for (seed <- 1 to 6) {
       val rnd = new scala.util.Random(seed)
@@ -1013,16 +1020,16 @@ class LayoutSpec extends SparkSpec {
         // metadata interleaved anywhere — the log canonicalizes
         val entries = rnd.shuffle(files ++ metas)
         snaps :+= entries
-        assert(Layout.commitNextGeneration(root, entries) === g)
+        assert(Log.commitNextGeneration(root, entries) === g)
       }
-      Layout.clearLogSnapshotCache()
+      Log.clearLogSnapshotCache()
       (0 until n).foreach { g =>
-        assert(Layout.readGeneration(root, g) === canonical(snaps(g)),
+        assert(Log.readGeneration(root, g) === canonical(snaps(g)),
           s"seed=$seed g=$g cold reconstruction")
       }
       (1 until n).foreach { g =>
-        val (adds, removes) = Layout.readGenerationActions(root, g)
-        val parent = Layout.readGeneration(root, g - 1)
+        val (adds, removes) = Log.readGenerationActions(root, g)
+        val parent = Log.readGeneration(root, g - 1)
         val counts = scala.collection.mutable.HashMap.empty[(String, String), Int]
         removes.foreach(e => counts.update(e, counts.getOrElse(e, 0) + 1))
         val applied = parent.filter { e =>
@@ -1031,7 +1038,7 @@ class LayoutSpec extends SparkSpec {
             case _ => true
           }
         } ++ adds
-        assert(applied.sorted === Layout.readGeneration(root, g).sorted,
+        assert(applied.sorted === Log.readGeneration(root, g).sorted,
           s"seed=$seed g=$g: actions must compose over the parent")
         assert(counts.values.forall(_ == 0),
           s"seed=$seed g=$g: every recorded remove must hit a parent entry")
@@ -1056,29 +1063,29 @@ class LayoutSpec extends SparkSpec {
         Seq("delta" -> s"file:/t/d$i.parquet", "op" -> "arrival"))
     }
     snaps.zipWithIndex.foreach { case (e, i) =>
-      assert(Layout.commitNextGeneration(root, e) === i)
+      assert(Log.commitNextGeneration(root, e) === i)
     }
-    Layout.expireLogEntries(root, 6)
-    assert(Layout.listGenerations(root) === Seq(6, 7, 8, 9),
+    Log.expireLogEntries(root, 6)
+    assert(Log.listGenerations(root) === Seq(6, 7, 8, 9),
       "history answers the retained window after cleanup")
     // cold reconstruction: the window's floor anchors on its own
     // checkpoint — the deleted ancestor chain is never needed
-    Layout.clearLogSnapshotCache()
+    Log.clearLogSnapshotCache()
     (6 to 9).foreach { g =>
-      assert(Layout.readGeneration(root, g) === snaps(g), s"generation $g")
+      assert(Log.readGeneration(root, g) === snaps(g), s"generation $g")
     }
     // an expired generation is not a readable state
-    intercept[java.io.IOException] { Layout.readGeneration(root, 3) }
+    intercept[java.io.IOException] { Log.readGeneration(root, 3) }
     // idempotent: a crash-retry (or a second cleanup) is a no-op
-    Layout.expireLogEntries(root, 6)
-    assert(Layout.listGenerations(root) === Seq(6, 7, 8, 9))
-    assert(Layout.readGeneration(root, 9) === snaps(9))
+    Log.expireLogEntries(root, 6)
+    assert(Log.listGenerations(root) === Seq(6, 7, 8, 9))
+    assert(Log.readGeneration(root, 9) === snaps(9))
   }
 
   test("commit validation: metadata-only intervening commits never conflict; data adds still do") {
     val root = tempDir("graft-metaconflict").toString
     val baseRefs = Seq("base" -> "file:/t/b0.parquet")
-    Layout.commitGeneration(root, 0, baseRefs :+ ("schema" -> "event_id BIGINT"))
+    Log.commitGeneration(root, 0, baseRefs :+ ("schema" -> "event_id BIGINT"))
     // the committer's read set holds FILES only — no schema text, no op
     // stamps (ADVICE r18 #1: callers used to hand-stuff schema strings
     // into read sets to survive exactly this scenario)
@@ -1086,18 +1093,18 @@ class LayoutSpec extends SparkSpec {
     // an intervening commit that changes ONLY metadata (evolves the
     // schema, stamps an op) adds no data file the committer missed —
     // the committer's retry must proceed
-    Layout.commitNextGeneration(root,
+    Log.commitNextGeneration(root,
       baseRefs ++ Seq("schema" -> "event_id BIGINT, score DOUBLE", "op" -> "evolve"))
-    assert(Layout.commitNextGeneration(root,
+    assert(Log.commitNextGeneration(root,
       baseRefs :+ ("delta" -> "file:/t/d0.parquet"), readState) === 2)
     // but an intervening DATA add still conflicts — and the error names
     // the missed file, never a metadata string
-    val read2 = Some((2, Layout.readGeneration(root, 2)
-      .collect { case (k, p) if Layout.LogFileKinds(k) => p }.toSet))
-    Layout.commitNextGeneration(root,
-      Layout.readGeneration(root, 2) :+ ("delta" -> "file:/t/d1.parquet"))
-    val e = intercept[Layout.CommitConflictException] {
-      Layout.commitNextGeneration(root,
+    val read2 = Some((2, Log.readGeneration(root, 2)
+      .collect { case (k, p) if Log.LogFileKinds(k) => p }.toSet))
+    Log.commitNextGeneration(root,
+      Log.readGeneration(root, 2) :+ ("delta" -> "file:/t/d1.parquet"))
+    val e = intercept[Log.CommitConflictException] {
+      Log.commitNextGeneration(root,
         baseRefs :+ ("delta" -> "file:/t/d2.parquet"), read2)
     }
     assert(e.getMessage.contains("d1.parquet"))
@@ -1111,40 +1118,40 @@ class LayoutSpec extends SparkSpec {
     val root = tempDir("graft-badbatch").toString
     val ctx = Layout.prepareLakeIngest(spark, sf, root)
     try {
-      assert(Layout.listGenerations(root) === Seq(0))
+      assert(Log.listGenerations(root) === Seq(0))
       val dup = Seq((1000001L, 7L, 50.0), (1000001L, 7L, 60.0))
         .toDF("event_id", "user_id", "value")
       intercept[IllegalArgumentException] {
         Layout.lakeIngestStep(dup, 0L, root, ctx, ctx.boxInit)
       }
-      assert(Layout.listGenerations(root) === Seq(0),
+      assert(Log.listGenerations(root) === Seq(0),
         "the rejected batch must not have committed a generation")
       // the lineage is not poisoned: a valid batch still commits as g1
       val ok = Seq((1000001L, 7L, 50.0), (1000002L, 8L, 60.0))
         .toDF("event_id", "user_id", "value")
       Layout.lakeIngestStep(ok, 0L, root, ctx, ctx.boxInit)
-      assert(Layout.listGenerations(root) === Seq(0, 1))
+      assert(Log.listGenerations(root) === Seq(0, 1))
     } finally ctx.baseBoxKeys.unpersist()
   }
 
   test("actions log: a wiped and re-committed root reads its new states, never stale cached ones") {
     val root = tempDir("graft-logwipe").toString
-    Layout.commitGeneration(root, 0, Seq("base" -> "file:/t/old.parquet"))
-    Layout.commitGeneration(root, 1,
+    Log.commitGeneration(root, 0, Seq("base" -> "file:/t/old.parquet"))
+    Log.commitGeneration(root, 1,
       Seq("base" -> "file:/t/old.parquet", "delta" -> "file:/t/old_d.parquet"))
-    assert(Layout.readGeneration(root, 1).map(_._2)
+    assert(Log.readGeneration(root, 1).map(_._2)
       .contains("file:/t/old_d.parquet"))
     // wipe + re-materialize — what every lineage's fingerprint miss does
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    Layout.commitGeneration(root, 0, Seq("base" -> "file:/t/rewritten.parquet"))
-    Layout.commitGeneration(root, 1,
+    Log.commitGeneration(root, 0, Seq("base" -> "file:/t/rewritten.parquet"))
+    Log.commitGeneration(root, 1,
       Seq("base" -> "file:/t/rewritten.parquet", "delta" -> "file:/t/rewritten_d.parquet"))
     // the stat-validated cache must miss on the rewritten manifests
-    assert(Layout.readGeneration(root, 1) ===
+    assert(Log.readGeneration(root, 1) ===
       Seq("base" -> "file:/t/rewritten.parquet", "delta" -> "file:/t/rewritten_d.parquet"))
-    assert(Layout.readGeneration(root, 0) ===
+    assert(Log.readGeneration(root, 0) ===
       Seq("base" -> "file:/t/rewritten.parquet"))
   }
 
@@ -1153,7 +1160,7 @@ class LayoutSpec extends SparkSpec {
     val root = Scratch.root("lake_ingest", sf)
     // g0 = the seeded base, g1..g3 = one commit per arrival batch,
     // g4 = the fold committed on the same log (round 19)
-    assert(Layout.listGenerations(root) === Seq(0, 1, 2, 3, 4))
+    assert(Log.listGenerations(root) === Seq(0, 1, 2, 3, 4))
     val box = col("user_id").between(60, 90) && col("value").between(100.0, 200.0)
     val ev = graft.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
@@ -1177,9 +1184,9 @@ class LayoutSpec extends SparkSpec {
     assert(g4.where(box).count() === metrics.last.getAs[Long]("rows_out_after"))
     assert(g4.exceptAll(g3).count() === 0L && g3.exceptAll(g4).count() === 0L,
       "the fold must answer exactly what the last arrival state does")
-    assert(Layout.readGeneration(root, 4)
-      .collect { case (k, _) if Layout.LogFileKinds(k) => k }.toSet === Set("base"))
-    assert(Layout.readGeneration(root, 4)
+    assert(Log.readGeneration(root, 4)
+      .collect { case (k, _) if Log.LogFileKinds(k) => k }.toSet === Set("base"))
+    assert(Log.readGeneration(root, 4)
       .collectFirst { case ("op", o) => o } === Some("fold"))
     assert(Layout.lakeChangesSince(spark, root, cursor = 3).count() === 0L,
       "a data-movement commit feeds nothing")
@@ -1188,15 +1195,15 @@ class LayoutSpec extends SparkSpec {
       "a consumer checkpointed before the fold still drains every arrival")
     // the lifecycle lineage commits its three states too
     Layout.lakeE2e(spark, sf).collect()
-    assert(Layout.listGenerations(Scratch.root("lake_e2e", sf)) === Seq(0, 1, 2))
+    assert(Log.listGenerations(Scratch.root("lake_e2e", sf)) === Seq(0, 1, 2))
   }
 
   test("lake delete via the log: AS-OF g1 is already erasure-complete, g2 physically erased") {
     Layout.lakeDelete(spark, sf).collect()
     val root = Scratch.root("lake_delete", sf)
-    assert(Layout.listGenerations(root) === Seq(0, 1, 2))
-    assert(Layout.readGeneration(root, 1)
-      .collect { case (k, _) if Layout.LogFileKinds(k) => k }.toSet ===
+    assert(Log.listGenerations(root) === Seq(0, 1, 2))
+    assert(Log.readGeneration(root, 1)
+      .collect { case (k, _) if Log.LogFileKinds(k) => k }.toSet ===
       Set("base", "cdelta"))
     // the merge-on-read generation and the folded one answer the same
     // table: tombstones apply at READ time from the manifest alone
@@ -1249,7 +1256,7 @@ class LayoutSpec extends SparkSpec {
       val drained = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
       Layout.lakeArrivalBatches(spark, sf).zipWithIndex.foreach { case (b, i) =>
         running = Layout.lakeIngestStep(b, i.toLong, root, ctx, running)._7
-        val tip = Layout.listGenerations(root).last
+        val tip = Log.listGenerations(root).last
         drained ++= Layout.lakeChangesSince(spark, root, checkpoint, Some(tip)).collect()
         checkpoint = tip
       }
@@ -1309,16 +1316,16 @@ class LayoutSpec extends SparkSpec {
     // checkpoint sidecar sits NEXT TO the manifests — so the stream's
     // g=* glob was exercised against a real non-manifest neighbor, and
     // the fold itself arrived as a micro-batch that fed NOTHING
-    assert(Layout.listGenerations(root) === Seq(0, 1, 2, 3, 4))
-    assert(new java.io.File(s"$root/gens/c=${Layout.LogCheckpointInterval}").isFile,
+    assert(Log.listGenerations(root) === Seq(0, 1, 2, 3, 4))
+    assert(new java.io.File(s"$root/gens/c=${Log.LogCheckpointInterval}").isFile,
       "the fold commit must have dropped its checkpoint sidecar in gens/")
     assert(!streamed.exists(_.getAs[Long]("to_gen") == 4L),
       "the data-movement fold must stream as an empty increment")
     // the stream registered its checkpoint at the tip, and retention
     // respects it: keep-last-1 by count cannot expire the tip's parent
     // chain past the registered cursor
-    val tip = Layout.listGenerations(root).last
-    assert(Layout.readCursors(root) === Map("cdf_stream" -> tip))
+    val tip = Log.listGenerations(root).last
+    assert(Log.readCursors(root) === Map("cdf_stream" -> tip))
     assert(Layout.retainedGenerations(root, 1, 0L,
       java.lang.System.currentTimeMillis()) === Seq(tip))
   }
@@ -1420,7 +1427,7 @@ class LayoutSpec extends SparkSpec {
   test("retention policy: the age floor retains generations keep-last would expire") {
     val root = tempDir("graft-retain").toString
     (0 to 3).foreach(g =>
-      Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
+      Log.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val now = java.lang.System.currentTimeMillis()
     // zero age floor degenerates to pure keep-last-N
     assert(Layout.retainedGenerations(root, 2, 0L, now) === Seq(2, 3))
@@ -1439,7 +1446,7 @@ class LayoutSpec extends SparkSpec {
   test("consumer-aware retention: a lagging REGISTERED checkpoint floors expiry; an unregistered one does not") {
     val root = tempDir("graft-cursorfloor").toString
     (0 to 3).foreach(g =>
-      Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
+      Log.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val now = java.lang.System.currentTimeMillis()
     // no registration: keep-last-1 expires everything but the tip —
     // a consumer that never registered gets no protection
@@ -1447,15 +1454,15 @@ class LayoutSpec extends SparkSpec {
     // a lagging registered consumer (checkpoint at g1) blocks expiry of
     // its generation and everything after: its next feed(1) needs g1 as
     // the probe epoch and g2..g3 as the transitions to read
-    Layout.registerCursor(root, "replica", 1)
+    Log.registerCursor(root, "replica", 1)
     assert(Layout.retainedGenerations(root, 1, 0L, now) === Seq(1, 2, 3))
     // the floor is the OLDEST registered checkpoint across consumers
-    Layout.registerCursor(root, "audit", 0)
+    Log.registerCursor(root, "audit", 0)
     assert(Layout.retainedGenerations(root, 1, 0L, now) === Seq(0, 1, 2, 3))
     // advancing a checkpoint releases its generations
-    Layout.registerCursor(root, "audit", 3)
+    Log.registerCursor(root, "audit", 3)
     assert(Layout.retainedGenerations(root, 1, 0L, now) === Seq(1, 2, 3))
-    assert(Layout.readCursors(root) === Map("replica" -> 1, "audit" -> 3))
+    assert(Log.readCursors(root) === Map("replica" -> 1, "audit" -> 3))
   }
 
   test("consumer-aware retention: feed(registered cursor) answers over the vacuumed lineage by construction") {
@@ -1470,7 +1477,7 @@ class LayoutSpec extends SparkSpec {
     // round 20: the lineage also registers a DEAD consumer at g0 —
     // overridden by the staleness bound (reported, not honored), so
     // the effective floor stays the fresh replica's g1
-    assert(Layout.readCursors(root) ===
+    assert(Log.readCursors(root) ===
       Map("replica" -> 1, "stale_replica" -> 0))
     assert(rows.forall(_.getAs[Long]("n_stale_cursors") === 1L))
     val feed = Layout.lakeChangesSince(spark, root, cursor = 1)
@@ -1532,7 +1539,7 @@ class LayoutSpec extends SparkSpec {
       Seq((1L, 10L, 1.0), (2L, 20L, 5.0)).toDF("event_id", "user_id", "value")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
       val refs = Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
-      assert(Layout.commitNextGeneration(root, refs :+ ("op" -> "seed"),
+      assert(Log.commitNextGeneration(root, refs :+ ("op" -> "seed"),
         Some((-1, Set.empty[String]))) === 0)
       root
     }
@@ -1592,7 +1599,7 @@ class LayoutSpec extends SparkSpec {
       Seq((1L, 10L, 1.0), (2L, 20L, 5.0), (3L, 30L, 9.0))
         .toDF("event_id", "user_id", "value")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
-      assert(Layout.commitNextGeneration(root,
+      assert(Log.commitNextGeneration(root,
         Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
           :+ ("op" -> "seed"),
         Some((-1, Set.empty[String]))) === 0)
@@ -1631,12 +1638,12 @@ class LayoutSpec extends SparkSpec {
     Seq((1L, 10L, 1.0), (2L, 20L, 5.0)).toDF("event_id", "user_id", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
     val g0Refs = Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
-    assert(Layout.commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
+    assert(Log.commitNextGeneration(root, g0Refs :+ ("op" -> "seed"),
       Some((-1, Set.empty[String]))) === 0)
     // an interleaving writer lands an arrival the merge never read
     Seq((5L, 50L, 7.0)).toDF("event_id", "user_id", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/arr")
-    assert(Layout.commitNextGeneration(root,
+    assert(Log.commitNextGeneration(root,
       g0Refs ++ Layout.listParquetFiles(spark, s"$root/arr").map("delta" -> _)
         :+ ("op" -> "arrival"),
       Some((0, g0Refs.map(_._2).toSet))) === 1)
@@ -1648,11 +1655,11 @@ class LayoutSpec extends SparkSpec {
       Layout.WhenNotMatchedInsert(lit(true)))
     // the merge built against the SUPERSEDED g0 must abort — landing
     // its snapshot would silently drop the winner's arrival file
-    intercept[Layout.CommitConflictException] {
+    intercept[Log.CommitConflictException] {
       Layout.lakeMergeInto(spark, root, src, "event_id", clauses,
         s"$root/stage", asOf = Some(0))
     }
-    assert(Layout.listGenerations(root) === Seq(0, 1),
+    assert(Log.listGenerations(root) === Seq(0, 1),
       "an aborted merge must leave the log untouched")
     // the re-merge classifies against the live tip and lands: key 1
     // updates off the base, key 5 updates off the WINNER'S arrival —
@@ -1671,7 +1678,7 @@ class LayoutSpec extends SparkSpec {
     Seq((1L, 10L, 1.0), (2L, 20L, 5.0), (3L, 30L, 9.0))
       .toDF("event_id", "user_id", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
-    assert(Layout.commitNextGeneration(root,
+    assert(Log.commitNextGeneration(root,
       Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
         :+ ("op" -> "seed"),
       Some((-1, Set.empty[String]))) === 0)
@@ -1700,7 +1707,7 @@ class LayoutSpec extends SparkSpec {
         "event_id", clauses, s"$root/s3")
     }
     assert(ex.getMessage.contains("fold the lake, then merge"))
-    assert(Layout.listGenerations(root) === Seq(0, 1, 2),
+    assert(Log.listGenerations(root) === Seq(0, 1, 2),
       "the refused merge must leave the log untouched")
   }
 
@@ -1714,7 +1721,7 @@ class LayoutSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$root/base")
     val baseFiles = Layout.listParquetFiles(spark, s"$root/base")
     assert(baseFiles.size === 4)
-    assert(Layout.commitNextGeneration(root,
+    assert(Log.commitNextGeneration(root,
       baseFiles.map("base" -> _) :+ ("op" -> "seed"),
       Some((-1, Set.empty[String]))) === 0)
     // the pruning decision itself: a narrow key range keeps only the
@@ -1752,7 +1759,7 @@ class LayoutSpec extends SparkSpec {
     val root = tempDir("graft-mergedup").toString
     Seq((1L, 10L, 1.0), (2L, 20L, 5.0)).toDF("event_id", "user_id", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
-    assert(Layout.commitNextGeneration(root,
+    assert(Log.commitNextGeneration(root,
       Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
         :+ ("op" -> "seed"),
       Some((-1, Set.empty[String]))) === 0)
@@ -1770,7 +1777,7 @@ class LayoutSpec extends SparkSpec {
         s"$root/s1")
     }
     assert(ex.getMessage.contains("multiple source rows matched"))
-    assert(Layout.listGenerations(root) === Seq(0),
+    assert(Log.listGenerations(root) === Seq(0),
       "the refused merge must leave the log untouched")
   }
 
@@ -1856,7 +1863,7 @@ class LayoutSpec extends SparkSpec {
       val root = tempDir(s"graft-mergeprop$seed").toString
       tgtRows.toDF("event_id", "user_id", "value")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/base")
-      assert(Layout.commitNextGeneration(root,
+      assert(Log.commitNextGeneration(root,
         Layout.listParquetFiles(spark, s"$root/base").map("base" -> _)
           :+ ("op" -> "seed"),
         Some((-1, Set.empty[String]))) === 0)
@@ -1905,7 +1912,7 @@ class LayoutSpec extends SparkSpec {
           s"(clauses: ${all.map(_._1.getClass.getSimpleName)})")
       // and the commit is a first-class log citizen: op-stamped, one
       // staged cdelta arrival
-      val g1 = Layout.readGeneration(root, 1)
+      val g1 = Log.readGeneration(root, 1)
       assert(g1.collectFirst { case ("op", o) => o }.contains("merge"))
       assert(g1.count(_._1 == "cdelta") === 1)
     }
@@ -1914,7 +1921,7 @@ class LayoutSpec extends SparkSpec {
   test("TIMESTAMP AS OF: boundary resolution over controlled commit instants") {
     val root = tempDir("graft-tsasof").toString
     (0 to 2).foreach(g =>
-      Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
+      Log.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val t0 = 1000000L
     (0 to 2).foreach { g =>
       java.nio.file.Files.setLastModifiedTime(
@@ -1939,7 +1946,7 @@ class LayoutSpec extends SparkSpec {
   test("TIMESTAMP AS OF composed with log expiry: expired history is not timestamp-addressable") {
     val root = tempDir("graft-tsexpire").toString
     (0 to 3).foreach(g =>
-      Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
+      Log.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val t0 = 2000000L
     (0 to 3).foreach { g =>
       java.nio.file.Files.setLastModifiedTime(
@@ -1950,10 +1957,10 @@ class LayoutSpec extends SparkSpec {
     // expire below g2: the log window is now [2, 3] — an instant that
     // used to resolve to g0/g1 has NO live state and must throw, the
     // same contract as generation-addressed reads below the floor
-    Layout.expireLogEntries(root, 2)
+    Log.expireLogEntries(root, 2)
     // (expiry wrote the c=2 anchor; normalize its listing away — only
     // g= manifests carry commit instants)
-    assert(Layout.listGenerations(root) === Seq(2, 3))
+    assert(Log.listGenerations(root) === Seq(2, 3))
     intercept[IllegalArgumentException] {
       Layout.resolveTimestampAsOf(root, t0 + 1500L) // was g1's window
     }
@@ -1965,10 +1972,10 @@ class LayoutSpec extends SparkSpec {
   test("consumer staleness bound: a dead checkpoint is overridden and reported, a fresh one floors, unregister releases") {
     val root = tempDir("graft-stale").toString
     (0 to 3).foreach(g =>
-      Layout.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
+      Log.commitGeneration(root, g, Seq("base" -> s"file:/t/$g.parquet")))
     val now = java.lang.System.currentTimeMillis()
-    Layout.registerCursor(root, "fresh", 2)
-    Layout.registerCursor(root, "dead", 0)
+    Log.registerCursor(root, "fresh", 2)
+    Log.registerCursor(root, "dead", 0)
     // unbounded floor (the pre-round-20 behavior): the dead consumer
     // pins the whole log
     assert(Layout.retainedGenerations(root, 1, 0L, now) === Seq(0, 1, 2, 3))
@@ -1976,11 +1983,11 @@ class LayoutSpec extends SparkSpec {
     // fresh (lag 1) floors at its checkpoint
     assert(Layout.retainedGenerations(root, 1, 0L, now, Some(2)) === Seq(2, 3))
     // explicit unregistration releases the floor entirely
-    Layout.unregisterCursor(root, "fresh")
-    Layout.unregisterCursor(root, "dead")
+    Log.unregisterCursor(root, "fresh")
+    Log.unregisterCursor(root, "dead")
     assert(Layout.retainedGenerations(root, 1, 0L, now, Some(2)) === Seq(3))
-    assert(Layout.readCursors(root) === Map.empty[String, Int])
+    assert(Log.readCursors(root) === Map.empty[String, Int])
     // unregistering an unknown consumer is an idempotent no-op
-    Layout.unregisterCursor(root, "fresh")
+    Log.unregisterCursor(root, "fresh")
   }
 }

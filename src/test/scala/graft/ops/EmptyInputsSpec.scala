@@ -367,7 +367,7 @@ class EmptyInputsSpec extends SparkSpec {
     // (base-only, arrival, restore) but nothing changed, so the feed is
     // EMPTY — a grouped report over zero changes has zero rows
     assert(graft.ext.Layout.lakeChanges(spark, dir).count() === 0L)
-    assert(graft.ext.Layout
+    assert(graft.lake.Log
       .listGenerations(graft.exec.Scratch.root("lake_changes", dir))
       === Seq(0, 1, 2))
     // applying an empty feed maintains nothing: zero touched users

@@ -220,10 +220,10 @@ class StreamBatchParitySpec extends SparkSpec {
     // (round 19 — one committed-fold definition shared by both): same
     // generations, same op stamps, same per-kind reference counts
     val broot = graft.exec.Scratch.root("lake_ingest", dir)
-    assert(graft.ext.Layout.listGenerations(root) ===
-      graft.ext.Layout.listGenerations(broot))
-    graft.ext.Layout.listGenerations(root).foreach { g =>
-      def shape(r: String) = graft.ext.Layout.readGeneration(r, g)
+    assert(graft.lake.Log.listGenerations(root) ===
+      graft.lake.Log.listGenerations(broot))
+    graft.lake.Log.listGenerations(root).foreach { g =>
+      def shape(r: String) = graft.lake.Log.readGeneration(r, g)
         .groupBy(_._1).map { case (k, es) =>
           k -> (if (k == "op") es.map(_._2).toSet.toSeq else Seq(es.size.toString))
         }
