@@ -59,19 +59,8 @@ object Tables {
     } catch { case scala.util.control.NonFatal(_) => "" }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts is parquet TIMESTAMP(NANOS) (TESTDATA/FIXTURES): Spark has
-    // no nanosecond timestamp type and rejects the column outright; read it
-    // as raw nanos and truncate to micros below — same truncation DuckDB
-    // applies when it coerces TIMESTAMP_NS to its microsecond TIMESTAMP.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The driver owns SparkSession construction (no config-time
-    // GraftExtensions), and every query path reads through here — so this
-    // is the session-level installation point for the engine's native
-    // optimizations and the fork-free `file:` filesystem (sources.LocalFs).
-    // All three are idempotent and O(1).
-    graft.functions.Md5ConvRewrite.register(spark)
-    graft.functions.BloomFilter.register(spark)
-    graft.sources.LocalFs.install(spark.sparkContext.hadoopConfiguration)
+    // a session the factory did not build gets graft's state on its first read
+    graft.exec.Session.install(spark)
     val path = s"$dir/$name.parquet"
     val sig = mtimeSignature(path)
     if (sig.isEmpty) spark.read.parquet(path)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Query, Tables}
-import graft.exec.{Cut, Pool}
+import graft.exec.{Cut, Pool, Session}
 
 /** Dataset-curation operators for a training-data pipeline: deterministic
   * splits, stratified sampling, and near-dup cluster resolution.
@@ -18,36 +18,30 @@ import graft.exec.{Cut, Pool}
 object Curation {
 
   /** Run `body` with the session's shuffle width narrowed to fit
-    * `stateRows` of iterated loop state (~4M rows ≈ 64 MB per partition,
-    * floor 4, never raised above the session setting) and AQE scoped
-    * off. Shared by the [[dupClusterLabels]] and [[pagerankEdges]]
-    * loops: their per-round jobs iterate a state table that is O(docs
-    * in pairs) — far smaller than the corpus the session is tuned
-    * for — and profiling at local[32]/sf0.1 showed the rounds
-    * driver-bound (all executed jobs sum under half the wall time; the
-    * gaps are per-stage planning/AQE-future latency scaling with
-    * partition count). AQE is safe to drop: the loops' joins key on the
-    * UNIQUE id side of the state table, so there is no skew for it to
-    * repair. The narrowing is SESSION-global, and other threads DO plan
-    * during `body`: [[splitLeakage]]'s doc_hash census and
-    * [[incrementalClusters]]' probe cut run on the report pool
-    * ([[Pool.overlap]]) while the main thread works the loop, so a plan
-    * those tasks create inside the window picks up the narrowed
-    * partition count and AQE off. Results are unaffected; at corpus
-    * scale such a plan is shuffled through as few as 4 partitions — a
-    * known race, not a guarantee, until loop tuning is isolated from
-    * concurrent planners. */
+    * `stateRows` of iterated loop state (~4M rows ≈ 64 MB per
+    * partition, floor 4, never raised above the session setting) and
+    * AQE scoped off, in one [[Session.withConf]] window. Shared by the
+    * [[dupClusterLabels]] and [[pagerankEdges]] loops: their per-round
+    * jobs iterate a state table that is O(docs in pairs) — far smaller
+    * than the corpus the session is tuned for — and profiling at
+    * local[32]/sf0.1 showed the rounds driver-bound (all executed jobs
+    * sum under half the wall time; the gaps are per-stage
+    * planning/AQE-future latency scaling with partition count). AQE is
+    * safe to drop: the loops' joins key on the UNIQUE id side of the
+    * state table, so there is no skew for it to repair. The narrowing
+    * is SESSION-global, and other threads DO plan during `body`:
+    * [[splitLeakage]]'s doc_hash census and [[incrementalClusters]]'
+    * probe cut run on the report pool ([[Pool.overlap]]) while the main
+    * thread works the loop, so a plan those tasks create inside the
+    * window picks up the narrowed partition count and AQE off. Results
+    * are unaffected; at corpus scale such a plan is shuffled through as
+    * few as 4 partitions — a known race, not a guarantee, until loop
+    * tuning is isolated from concurrent planners. */
   private def withLoopTuning[T](sess: SparkSession, stateRows: Long)(body: Int => T): T = {
     val sessionParts = sess.conf.get("spark.sql.shuffle.partitions").toInt
     val target = math.max(4, math.min(sessionParts, math.ceil(stateRows / 4e6).toInt))
-    val sessionAqe = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.shuffle.partitions", target.toString)
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try body(target)
-    finally {
-      sess.conf.set("spark.sql.shuffle.partitions", sessionParts.toString)
-      sess.conf.set("spark.sql.adaptive.enabled", sessionAqe)
-    }
+    Session.withConf(sess, Seq("spark.sql.shuffle.partitions" -> target.toString,
+      "spark.sql.adaptive.enabled" -> "false"))(body(target))
   }
 
   /** The split-hash policy shared by [[splitAssign]], [[clusterSplits]],
@@ -189,7 +183,6 @@ object Curation {
     * proves), so it covers the COMPOSITION, not just the
     * parts. */
   def curationPipeline(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.UnicodeNormalize.register(spark)
     val docs = Tables.documents(spark, dir)
     // ONE corpus text scan (round 13): the rule battery, the learned
     // gate, the NFC content hash and the lang dimension all ride a
@@ -525,12 +518,8 @@ object Curation {
     val sigsAll = Dedup.mergeMinhashSignatures(
       sigsOld, Dedup.minhashSignaturesOf(newer)).persist()
     val bandsAll = Dedup.bandsOf(sigsAll)
-    val newPairs = bandsAll.join(newer.select("doc_id"), Seq("doc_id"), "left_semi").as("x")
-      .join(bandsAll.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket")
-          && col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
+    val newPairs = Dedup.bandProbe(
+      bandsAll.join(newer.select("doc_id"), Seq("doc_id"), "left_semi"), bandsAll)
       .distinct()
     // OVERLAP (round 22, guide §2.6 / VERDICT r21 #1): the probe branch
     // (new-shard signatures → merged band index → join → distinct) and

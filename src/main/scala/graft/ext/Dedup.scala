@@ -137,16 +137,15 @@ object Dedup {
     * majority, pays one scan and no rewrite), so the query stays one
     * map-side hash-agg like [[exact]]. DuckDB's `nfc_normalize` is the
     * differential twin. */
-  def exactNfc(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.UnicodeNormalize.register(spark)
+  def exactNfc(spark: SparkSession, dir: String): DataFrame =
     exactNfcOf(Tables.documents(spark, dir))
-  }
 
   /** THE NFC-canonical content key — the single definition shared by
     * [[exactNfc]] and [[graft.ext.Curation.curationPipeline]]'s canon
     * step, so the exact-dedup tier cannot silently fork into two
-    * different canonical forms. Callers must have
-    * [[graft.functions.UnicodeNormalize]] registered. */
+    * different canonical forms. `unicode_normalize` resolves through the
+    * session's function registry, which `graft.exec.Session.install`
+    * fills. */
   private[ext] def nfcContentHash: org.apache.spark.sql.Column =
     md5(expr("unicode_normalize(text, 'NFC')"))
 
@@ -227,6 +226,19 @@ object Dedup {
     a.unionByName(b).groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
   }
 
+  /** The LSH band probe: `x`'s band rows join `index`'s on (band,
+    * bucket) between distinct docs, both orientations collapsed to
+    * (doc_a = min, doc_b = max). Duplicates across bands remain; callers
+    * dedupe. Shared by [[incrementalLshPairs]],
+    * [[graft.ext.Curation.incrementalClusters]] and the streaming band
+    * index ([[graft.streaming.MinhashMaintenance]]). */
+  private[graft] def bandProbe(x: DataFrame, index: DataFrame): DataFrame =
+    x.as("x").join(index.as("y"),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket")
+          && col("x.doc_id") =!= col("y.doc_id"))
+      .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
+        greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
+
   /** Incremental candidate generation AS A QUERY — the batch twin of the
     * streaming band-index probe ([[graft.streaming.MinhashMaintenance]]):
     * the corpus ingests as two shards (doc_id parity, every %10==0 doc
@@ -246,16 +258,10 @@ object Dedup {
     // probe sides — the same cache point lshCandidatesOf needs
     val sigs1   = minhashSignaturesOf(even).persist()
     val sigsAll = mergeMinhashSignatures(sigs1, minhashSignaturesOf(odd)).persist()
-    def probe(x: DataFrame, index: DataFrame): DataFrame =
-      x.as("x").join(index.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket")
-            && col("x.doc_id") =!= col("y.doc_id"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
     val bands1 = bandsOf(sigs1)
     val bandsAll = bandsOf(sigsAll)
-    probe(bands1, bands1) // shard-1 rows probe the shard-1 index
-      .union(probe( // shard-2 rows (post-merge signatures) probe the updated index
+    bandProbe(bands1, bands1) // shard-1 rows probe the shard-1 index
+      .union(bandProbe( // shard-2 rows (post-merge signatures) probe the updated index
         bandsAll.join(odd.select("doc_id"), Seq("doc_id"), "left_semi"), bandsAll))
       .distinct()
       .orderBy("doc_a", "doc_b")
@@ -585,7 +591,6 @@ object Dedup {
     * Cosine via SQL higher-order functions over array<double> — sequential
     * index-order summation, reproducible across engines. */
   def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"), col("label"))
     val a = emb.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"), col("label"))

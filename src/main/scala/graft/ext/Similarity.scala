@@ -24,9 +24,9 @@ object Similarity {
 
   /** Cosine similarity over array<double> via the native codegen'd
     * [[graft.functions.CosineSimilarity]] expression (single fused pass;
-    * bit-identical to the HOF formulation it replaced). Callers must have
-    * run `CosineSimilarity.register(session)` first — every query entry
-    * point in this module and [[Dedup]] does. */
+    * bit-identical to the HOF formulation it replaced), resolved through
+    * the session's function registry, which `graft.exec.Session.install`
+    * fills (the factory and every [[Tables.table]] read run it). */
   def cosine(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
 
   /** The interpreted SQL-HOF formulation — kept as the portable reference
@@ -36,11 +36,9 @@ object Similarity {
        | / (sqrt(aggregate($a, 0D, (acc, v) -> acc + v * v))
        |    * sqrt(aggregate($b, 0D, (acc, v) -> acc + v * v)))""".stripMargin)
 
-  private[ext] def emb(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
+  private[ext] def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"), col("label"))
-  }
 
   /** Brute-force cosine top-5 for query vectors vec_id < 20. */
   def bruteTopK(spark: SparkSession, dir: String): DataFrame = {
@@ -216,9 +214,10 @@ object Similarity {
   /** Search a materialized IVF index: queries probe their own cluster
     * only; the `cluster = q_cluster` equi-join prunes index partitions
     * at the directory level. Must return exactly [[ivfTopK]]'s results
-    * (spec-pinned). */
+    * (spec-pinned). The index is read without `Tables`, so this installs
+    * graft's session state (for [[cosine]]) itself. */
   def searchIvfIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
+    graft.exec.Session.install(spark)
     val clustered = spark.read.parquet(indexPath)
     val q = clustered.where(col("vec_id") >= 100 && col("vec_id") < 110)
       .select(col("vec_id").as("query_id"), col("cluster").as("q_cluster"), col("emb").as("qemb"))
@@ -541,7 +540,6 @@ object Similarity {
   def mmrSelect(spark: SparkSession, dir: String, m: Int = 12,
       k: Int = 4): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val q = emb.where(col("vec_id") === 0).select(col("emb").as("qemb"))

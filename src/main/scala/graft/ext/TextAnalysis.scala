@@ -445,7 +445,6 @@ object TextAnalysis {
     * checkable. Map-side only: one scan, no shuffle but the output
     * sort. */
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.UnicodeNormalize.register(spark)
     Tables.documents(spark, dir)
       .withColumn("norm", expr("unicode_normalize(text, 'NFC')"))
       .select(col("doc_id"),

@@ -110,8 +110,8 @@ object BloomFilter extends NativeFunction("bloom_might_contain", classOf[BloomMi
     * Routed through the session function registry (the same path as
     * `cosine_sim`): the bits ride as a foldable array<bigint> literal that
     * [[register]]'s builder unwraps into the expression's long[] at
-    * analysis time. [[register]] must have run on the session first —
-    * every query path does so via [[graft.Tables.table]]. */
+    * analysis time. `graft.exec.Session.install` registers it — the
+    * factory and every [[graft.Tables.table]] read run that. */
   def mightContain(bits: Array[Long], hash: Column, k: Int = 5): Column =
     org.apache.spark.sql.functions.call_function(
       "bloom_might_contain", hash, lit(bits), lit(k))

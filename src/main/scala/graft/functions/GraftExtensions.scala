@@ -9,15 +9,14 @@ import org.apache.spark.sql.SparkSessionExtensions
   *   spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * Inside this repo's query functions the imperative
-  * [[NativeFunction.register]] path is used instead (the caller owns
-  * session construction); both routes register each function's one
+  * Inside this repo `graft.exec.Session.install` attaches the same
+  * functions and `Md5ConvRewrite` to a live session instead (the caller
+  * owns session construction); both routes register each function's one
   * [[NativeFunction.build]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    Seq(CosineSimilarity, Md5Slice64, BloomFilter, UnicodeNormalize)
-      .foreach(f => ext.injectFunction(f.description))
+    NativeFunction.all.foreach(f => ext.injectFunction(f.description))
     // canonical HOF cosine chains collapse to the fused native expression
     ext.injectOptimizerRule(_ => CosineHofRewrite)
     // single-slice md5 prefix-hash chains collapse to Md5Slice64

@@ -1,6 +1,7 @@
 package graft.lake
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
@@ -284,7 +285,10 @@ object Log {
     val bytes = body.getBytes("UTF-8")
     if (Option(fs.getUri.getScheme).forall(_ == "file")) {
       val dstNio = Paths.get(dst.toUri.getPath)
-      val tmp = Files.createTempFile(dstNio.getParent, s".$name-", ".tmp")
+      // rw-rw-rw- narrowed by the umask, the mode Files.createFile and the
+      // data files beside the log get (createTempFile's default is 0600)
+      val tmp = Files.createTempFile(dstNio.getParent, s".$name-", ".tmp",
+        PosixFilePermissions.asFileAttribute(PosixFilePermissions.fromString("rw-rw-rw-")))
       try {
         Files.write(tmp, bytes)
         if (replace) Files.move(tmp, dstNio,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Query, Tables}
+import graft.exec.Session
 
 /** Skew mitigation: salted two-stage aggregation.
   *
@@ -157,29 +158,6 @@ object Skew {
         StableStats.centsMean(col("l_extendedprice")).as("avg_price"))
   }
 
-  /** Scoped session-conf window (set → body → restore), the
-    * [[graft.ext.Curation]] withLoopTuning discipline: the optimizer
-    * reads the SESSION's conf at action time — so the body must EXECUTE
-    * (not merely construct or merely collect) everything it wants
-    * planned under the window, including `optimizedPlan` accesses,
-    * which latch on first touch. SparkSession conf is session-global
-    * ACROSS THREADS (ADVICE r13): an action planned concurrently on
-    * another thread of the same session silently inherits these
-    * overrides, so a conf window must never overlap concurrent actions
-    * — every call site here runs sequentially; a caller that needs
-    * thread isolation should plan inside `spark.newSession()` (cloned
-    * session state, shared SparkContext) instead. */
-  private[ops] def withConfWindow[T](spark: SparkSession,
-      wanted: Seq[(String, String)])(body: => T): T = {
-    val saved = wanted.map { case (k, _) => k -> spark.conf.getOption(k) }
-    wanted.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   private[ops] def withBloomJoinConf[T](spark: SparkSession)(body: => T): T = {
     val wanted = Seq(
       // force the shuffle join: at fixture scale the filtered build side
@@ -193,12 +171,12 @@ object Skew {
       // lake-scale one would under the defaults
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-    withConfWindow(spark, wanted)(body)
+    Session.withConf(spark, wanted)(body)
   }
 
   /** The CBO conf window: cost-based estimation + the join-order DP. */
   private[ops] def withCboConf[T](spark: SparkSession)(body: => T): T =
-    withConfWindow(spark, Seq(
+    Session.withConf(spark, Seq(
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true"))(body)
 

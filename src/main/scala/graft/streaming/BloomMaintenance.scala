@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.exec.Cut
+import graft.exec.{Cut, Session}
 import graft.functions.BloomFilter
 
 /** Streaming maintenance of a corpus Bloom filter — the ingest-time twin
@@ -151,10 +151,12 @@ object BloomMaintenance {
   /** Admission screen for a frame of candidate (…, text) rows: adds
     * `suspect_dup` — false means PROVABLY never ingested (admit with no
     * further I/O); true routes to the exact corpus-index check (true dups
-    * + the ε false-positive tail). */
+    * + the ε false-positive tail). The probe resolves through the
+    * session's function registry, and the filter is read without
+    * `Tables`, so this installs graft's session state itself. */
   def screen(spark: SparkSession, tableDir: String, candidates: DataFrame,
       mBits: Int = DefaultBits, k: Int = DefaultK): DataFrame = {
-    BloomFilter.register(spark) // probe resolves via the function registry
+    Session.install(spark)
     val filter = bits(spark, tableDir, mBits)
     candidates.withColumn("suspect_dup",
       BloomFilter.mightContain(filter, contentHash, k))

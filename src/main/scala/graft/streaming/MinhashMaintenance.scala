@@ -204,13 +204,7 @@ object MinhashMaintenance {
       // candidates: the batch's band rows probe the updated partitions —
       // both orientations collapsed to (min, max), duplicates across
       // bands removed exactly like the batch self-join
-      newBands.as("x")
-        .join(cutBands.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket")
-            && col("x.doc_id") =!= col("y.doc_id"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-        .distinct()
+      Dedup.bandProbe(newBands, cutBands).distinct()
     } finally fresh.unpersist()
   }
 }

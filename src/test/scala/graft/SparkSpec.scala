@@ -22,6 +22,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
+  /** Run `body` under the RocksDB state store, which `transformWithState`
+    * requires; the provider is restored when the body returns or throws. */
+  def withRocksDbState[T](body: => T): T =
+    graft.exec.Session.withConf(spark, Seq("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(body)
+
   override def afterAll(): Unit =
     try tempDirs.forEach { d =>
       SparkSpec.deleteTree(d)

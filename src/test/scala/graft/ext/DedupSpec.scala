@@ -41,7 +41,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("NFC exact dedup collapses normalization-variant duplicates; raw md5 does not") {
-    graft.functions.UnicodeNormalize.register(spark)
     // "café" three ways: precomposed NFC, decomposed e+U+0301, and NFC
     // again — plus an unrelated doc. Raw-byte keying sees the decomposed
     // form as a DIFFERENT document; the NFC key collapses all three.

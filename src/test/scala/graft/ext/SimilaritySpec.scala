@@ -145,7 +145,6 @@ class SimilaritySpec extends SparkSpec {
     val rows = (0 until 200).map(j => (j.toLong, vec(j), 0)) ++
       (0 until 200).map(j => (1000L + j, vec(j), 1))
     val e = rows.toDF("vec_id", "emb", "label")
-    graft.functions.CosineSimilarity.register(spark)
     val capped = Similarity.alignCandidates(e, nPlanes = 4, maxBucket = 8)
     assert(capped.count() === 64L)
     // ...and the full operator still runs to a sane, deterministic answer
@@ -217,7 +216,6 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("cosine: identity, orthogonality, known angle (native expr == HOF)") {
-    graft.functions.CosineSimilarity.register(spark)
     val base = Seq(
       (Array(1.0, 0.0), Array(1.0, 0.0)),
       (Array(1.0, 0.0), Array(0.0, 1.0)),
@@ -233,7 +231,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosine native expr matches HOF bit-for-bit on real embeddings") {
-    graft.functions.CosineSimilarity.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
     val q = e.where($"vec_id" === 0).select($"emb".as("qemb"))

@@ -17,10 +17,6 @@ class BloomFilterSpec extends SparkSpec {
   private val M = 1 << 16
   private val K = 5
 
-  // mightContain resolves through the session registry (query paths
-  // register via Tables.table; here we do it explicitly)
-  BloomFilter.register(spark)
-
   // Deterministic keys spanning the full signed-long domain, negatives
   // included — the regression class the pmod/signed-% fixes guard against.
   private def keys(seed: Long, n: Int): Seq[Long] = {

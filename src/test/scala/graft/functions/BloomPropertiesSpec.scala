@@ -26,7 +26,6 @@ class BloomPropertiesSpec extends SparkSpec {
     (1 to 5).map(i => caseGen.pureApply(Gen.Parameters.default, Seed(i.toLong * 97)))
 
   test("no false negatives for arbitrary (m, k, keys) — negatives included") {
-    BloomFilter.register(spark)
     for ((m, k, keys) <- cases) {
       val bits = BloomFilter.build(keys.toDF("h"), "h", m, k)
       val hits = keys.toDF("h")

@@ -11,8 +11,6 @@ import graft.SparkSpec
 class UnicodeNormalizeSpec extends SparkSpec {
   import spark.implicits._
 
-  UnicodeNormalize.register(spark)
-
   private val combining = "café" // "cafe" + combining acute
   private val precomposed = "café"     // "café"
   private val compat = "① ﬁle"    // circled one + fi ligature

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
-/** The generation log's on-disk format, pinned byte for byte, its
-  * corrupt-cursor error, and the source guard that keeps every spelling
-  * of the format inside [[Log]]. */
+/** The generation log's on-disk format, pinned byte for byte, its file
+  * mode, its corrupt-cursor error, and the source guard that keeps every
+  * spelling of the format inside [[Log]]. */
 class LogSpec extends SparkSpec {
 
   private val base = Seq("b0", "b1", "b2").map(n => "base" -> s"file:/fake/base/$n.parquet")
@@ -57,6 +57,15 @@ class LogSpec extends SparkSpec {
     }.toMap
     assert(written.keySet === golden.keySet)
     golden.foreach { case (f, body) => assert(written(f) === body, s"bytes of $f") }
+  }
+
+  test("log files get the mode Files.createFile gives a file beside them") {
+    val root = tempDir("graft-logmode")
+    Log.commitGeneration(root.toString, 0, base :+ ("op" -> "seed"))
+    val gens = root.resolve("gens")
+    val plain = Files.createFile(gens.resolve("plain"))
+    assert(Files.getPosixFilePermissions(gens.resolve("g=0")) ===
+      Files.getPosixFilePermissions(plain))
   }
 
   test("a corrupt cursor sidecar fails naming the file") {

@@ -162,7 +162,6 @@ class EmptyInputsSpec extends SparkSpec {
 
   test("round-12 additions on empty inputs") {
     // NFC exact dedup: empty corpus → no groups
-    graft.functions.UnicodeNormalize.register(spark)
     assert(graft.ext.Dedup.exactNfc(spark, dir).count() === 0)
     // footer-prune loop: the z-celled write of an empty table produces no
     // files, the manifest is empty, nothing is read — and the one-row

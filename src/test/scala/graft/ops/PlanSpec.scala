@@ -443,7 +443,6 @@ class PlanSpec extends SparkSpec {
     // codegen participation, asserted on a plain non-AQE frame (the AQE
     // plan above prints without stage markers until final): same pattern
     // as the cosine pin below
-    graft.functions.BloomFilter.register(spark)
     val probe = spark.range(100).toDF("h")
       .where(graft.functions.BloomFilter.mightContain(Array(-1L, -1L), org.apache.spark.sql.functions.col("h")))
     val probePlan = probe.queryExecution.executedPlan.toString
@@ -493,7 +492,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("native cosine participates in whole-stage codegen") {
-    graft.functions.CosineSimilarity.register(spark)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .selectExpr("vec_id", "cast(embedding as array<double>) as emb")
     val df = e.selectExpr("cosine_sim(emb, emb) as c").where("c > 0.5")

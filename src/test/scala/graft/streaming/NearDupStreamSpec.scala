@@ -42,10 +42,7 @@ class NearDupStreamSpec extends SparkSpec {
     // every batch must agree exactly. The comparison core is shared, so
     // this witnesses the state/timer plumbing, not the pair logic.
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       val batches = Seq(
         Seq(Doc(1L, ts("2024-01-01 00:00:00"), textA)),
         Seq(Doc(2L, ts("2024-01-01 00:01:00"), textB),
@@ -70,9 +67,6 @@ class NearDupStreamSpec extends SparkSpec {
       assert(tws === fmgws, s"APIs diverged: tws=$tws fmgws=$fmgws")
       // and the final set is the expected near-dup family (A~B, A~4, B~4)
       assert(fmgws.last.map(p => (p._1, p._2)) === Set((1L, 2L), (1L, 4L), (2L, 4L)))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

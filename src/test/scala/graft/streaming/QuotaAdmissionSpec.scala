@@ -59,11 +59,7 @@ class QuotaAdmissionSpec extends SparkSpec {
       (5 to 8).map(i => QuotaAdmission.Doc(i.toLong, "a")) ++
         Seq(QuotaAdmission.Doc(101L, "b"), QuotaAdmission.Doc(200L, "c")))
     val viaFmgws = run("quota_fmgws", quotas, batches)
-    // transformWithState requires the RocksDB state-store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState {
       implicit val ctx = spark.sqlContext
       val stream = MemoryStream[QuotaAdmission.Doc]
       val q = QuotaAdmission.admitTws(stream.toDS(), quotas)
@@ -75,9 +71,6 @@ class QuotaAdmissionSpec extends SparkSpec {
         assert(viaTws.sortBy(_.doc_id).toSeq === viaFmgws.sortBy(_.doc_id).toSeq,
           "the two stateful APIs must admit the identical document set")
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

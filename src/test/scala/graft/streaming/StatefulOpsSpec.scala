@@ -89,44 +89,35 @@ class StatefulOpsSpec extends SparkSpec {
 
   test("transformWithState sessionization == flatMapGroupsWithState (same input, same sessions)") {
     implicit val ctx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = MemoryStream[StatefulOps.Evt]
-    val out = StatefulOps.sessionizeTws(stream.toDS(), watermark = "10 minutes")
-    val q = out.writeStream.format("memory").queryName("tws_sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // identical input schedule to the flatMapGroupsWithState test above
-      stream.addData(
-        StatefulOps.Evt(7L, ts("2024-01-01 00:00:00"), 1.0),
-        StatefulOps.Evt(7L, ts("2024-01-01 00:05:00"), 2.0),
-        StatefulOps.Evt(7L, ts("2024-01-01 00:10:00"), 3.0))
-      q.processAllAvailable()
-      assert(spark.table("tws_sessions").count() === 0) // still open
+    withRocksDbState {
+      val stream = MemoryStream[StatefulOps.Evt]
+      val out = StatefulOps.sessionizeTws(stream.toDS(), watermark = "10 minutes")
+      val q = out.writeStream.format("memory").queryName("tws_sessions")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // identical input schedule to the flatMapGroupsWithState test above
+        stream.addData(
+          StatefulOps.Evt(7L, ts("2024-01-01 00:00:00"), 1.0),
+          StatefulOps.Evt(7L, ts("2024-01-01 00:05:00"), 2.0),
+          StatefulOps.Evt(7L, ts("2024-01-01 00:10:00"), 3.0))
+        q.processAllAvailable()
+        assert(spark.table("tws_sessions").count() === 0) // still open
 
-      stream.addData(StatefulOps.Evt(7L, ts("2024-01-01 02:00:00"), 9.0))
-      q.processAllAvailable()
-      val s1 = spark.table("tws_sessions").as[StatefulOps.SessionOut].collect()
-      assert(s1.length === 1)
-      assert(s1.head.n_events === 3 && s1.head.sum_value === 6.0)
-      assert(s1.head.session_start === ts("2024-01-01 00:00:00"))
-      assert(s1.head.session_end === ts("2024-01-01 00:10:00"))
+        stream.addData(StatefulOps.Evt(7L, ts("2024-01-01 02:00:00"), 9.0))
+        q.processAllAvailable()
+        val s1 = spark.table("tws_sessions").as[StatefulOps.SessionOut].collect()
+        assert(s1.length === 1)
+        assert(s1.head.n_events === 3 && s1.head.sum_value === 6.0)
+        assert(s1.head.session_start === ts("2024-01-01 00:00:00"))
+        assert(s1.head.session_end === ts("2024-01-01 00:10:00"))
 
-      // advance the watermark far past burst 2 + gap → the explicit timer fires
-      stream.addData(StatefulOps.Evt(99L, ts("2024-01-01 06:00:00"), 0.0))
-      q.processAllAvailable()
-      val s2 = spark.table("tws_sessions").as[StatefulOps.SessionOut].collect()
-      assert(s2.exists(s => s.user_id == 7L && s.n_events == 1 && s.sum_value == 9.0),
-        s"burst-2 session should close by timer: ${s2.mkString(", ")}")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+        // advance the watermark far past burst 2 + gap → the explicit timer fires
+        stream.addData(StatefulOps.Evt(99L, ts("2024-01-01 06:00:00"), 0.0))
+        q.processAllAvailable()
+        val s2 = spark.table("tws_sessions").as[StatefulOps.SessionOut].collect()
+        assert(s2.exists(s => s.user_id == 7L && s.n_events == 1 && s.sum_value == 9.0),
+          s"burst-2 session should close by timer: ${s2.mkString(", ")}")
+      } finally q.stop()
     }
   }
 }

@@ -76,26 +76,17 @@ class StreamBatchParitySpec extends SparkSpec {
       .as[(Long, Long, java.sql.Timestamp, String)].collect()
       .sortBy(e => (e._3.getTime, e._2))
       .map(e => StatefulOps.TypedEvt(e._1, e._2, e._3, e._4))
-    // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.TypedEvt]
-    val q = StatefulOps.transitionsTws(stream.toDS())
-      .toDF().writeStream.format("memory").queryName("trans_tws")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      evs.grouped((evs.length + 2) / 3).foreach { batch =>
-        stream.addData(batch.toSeq)
-        q.processAllAvailable()
-      }
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDbState {
+      val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StatefulOps.TypedEvt]
+      val q = StatefulOps.transitionsTws(stream.toDS())
+        .toDF().writeStream.format("memory").queryName("trans_tws")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        evs.grouped((evs.length + 2) / 3).foreach { batch =>
+          stream.addData(batch.toSeq)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
     }
     val tws = spark.table("trans_tws")
       .groupBy("prev", "curr").count()
