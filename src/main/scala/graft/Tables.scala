@@ -14,59 +14,35 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
-  /** Inferred-schema cache keyed by (path, mtime signature): every bare
+  /** Inferred-schema cache keyed by (path, file signature): every bare
     * `spark.read.parquet` schedules a schema-inference job (~90 ms of
     * driver latency), and composition queries read the same tables 4-6
     * times PER INVOCATION — across the 195-query registry this was
-    * thousands of redundant metadata jobs per bench run. The mtime key
-    * self-invalidates when a fixture dir is rewritten (overwrite
-    * changes the directory's entries); a non-local or unstat-able path
-    * yields signature 0 and falls back to plain inference, never a
-    * stale schema. The cache holds schemas only (KBs), keyed by
-    * path — session-independent because the FILES define the schema. */
+    * thousands of redundant metadata jobs per bench run. The signature
+    * ([[graft.exec.Scratch.fileSignature]] over every parquet file under
+    * the path, at any depth) self-invalidates when a file is added,
+    * removed, resized or touched; a path with no parquet file falls back
+    * to plain inference, never a stale schema. The cache holds schemas
+    * only (KBs), keyed by path — session-independent because the FILES
+    * define the schema. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
-
-  /** Change signature of the path: newest lastModified among the path,
-    * its direct children, and one nested level of grandchildren (the
-    * `key=value` partition-dir layout), PLUS the file count and total
-    * byte size over the same set — mtime alone has 1-second granularity
-    * on some filesystems, so a fixture rewritten within the same second
-    * with a changed schema could be served the stale cached schema; a
-    * rewrite that changes any file's size or the file census misses the
-    * cache regardless of timestamps. The grandchild level matters
-    * because an IN-PLACE rewrite of a file inside a partition
-    * subdirectory touches neither the parent dir's mtime (only entry
-    * creation/deletion does) nor any direct-child size — a directory's
-    * File.length() is not its contents' size (ADVICE r13). Rewrites
-    * nested DEEPER than one partition level are out of the signature's
-    * scope; none of this repo's fixtures nest further. Empty string
-    * when the path is not a stat-able local file. */
-  private def mtimeSignature(path: String): String =
-    try {
-      val f = new java.io.File(path)
-      if (!f.exists) ""
-      else {
-        def ls(d: java.io.File): Seq[java.io.File] =
-          if (d.isDirectory) Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
-          else Nil
-        val children = ls(f)
-        val grand = children.flatMap(ls)
-        val all = children ++ grand
-        val maxM = (f.lastModified +: all.map(_.lastModified)).max
-        s"$maxM:${all.size}:${all.map(_.length).sum + f.length}"
-      }
-    } catch { case scala.util.control.NonFatal(_) => "" }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // a session the factory did not build gets graft's state on its first read
     graft.exec.Session.install(spark)
     val path = s"$dir/$name.parquet"
-    val sig = mtimeSignature(path)
-    if (sig.isEmpty) spark.read.parquet(path)
+    val files = scala.util.Try(graft.sources.FooterManifest.listParquet(spark, path))
+      .getOrElse(Nil)
+    if (files.isEmpty) spark.read.parquet(path)
     else {
-      val schema = schemaCache.computeIfAbsent((path, sig),
-        _ => spark.read.parquet(path).schema)
+      // inference runs outside the map's lock: two first readers both infer
+      val key = (path, graft.exec.Scratch.fileSignature(files))
+      val schema = Option(schemaCache.get(key)).getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemaCache.put(key, inferred)
+        inferred
+      }
       spark.read.schema(schema).parquet(path)
     }
   }

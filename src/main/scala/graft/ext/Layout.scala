@@ -157,13 +157,11 @@ object Layout {
     * change to the data OR the bucketing/curve formulas forces the
     * rewrite — staleness is impossible (the OPTIMIZE contract: an
     * already-clustered layout is not rewritten). */
-  private def ensureZorderMaterialized(spark: SparkSession, dir: String,
-      plannedPre: Option[DataFrame] = None): String = {
+  private def ensureZorderMaterialized(dir: String, files: DataFrame): String = {
     val out = Scratch.root("zorder_prune", dir)
-    // callers that already hold a persisted planned frame pass it in so
-    // the per-invocation fingerprint agg rides their cache
-    val planned = plannedPre.getOrElse(withFiles(spark, dir))
-      .select(col("db"), col("ub"), col("file_id"))
+    // the callers hold `files` ([[withFiles]]) persisted, so a key miss's
+    // fingerprint agg rides their cache
+    val planned = files.select(col("db"), col("ub"), col("file_id"))
     Scratch.materializeIfChanged(out, "v1", planned, planned.columns.toSeq) {
       // one physical file per planned file_id: hash-repartition on the
       // id puts each id wholly in one task, partitionBy splits ids to
@@ -177,11 +175,11 @@ object Layout {
   def zorderPrune(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.FooterManifest
     val z = withFiles(spark, dir).persist()
-    val out = ensureZorderMaterialized(spark, dir, Some(z))
-    val manifest = FooterManifest.build(spark, out, Seq("db", "ub"))
-    val zCand = FooterManifest
-      .filesToRead(manifest, Map("db" -> ((10.0, 12.0)), "ub" -> ((8.0, 11.0))))
-      .agg(coalesce(sum(col("n_rows")), lit(0L)).as("z_candidate_rows"))
+    val out = ensureZorderMaterialized(dir, z)
+    val zCand = spark.range(1).select(lit(FooterManifest.filesToReadLocal(
+        FooterManifest.collected(spark, out, Seq("db", "ub")),
+        Map("db" -> ((10.0, 12.0)), "ub" -> ((8.0, 11.0)))).map(_._2).sum)
+      .as("z_candidate_rows"))
     val tot = z.agg(
       count(lit(1)).as("total_rows"),
       sum(when(col("db").between(10, 12), 1L).otherwise(0L)).as("naive_candidate_rows"),
@@ -287,7 +285,7 @@ object Layout {
     * z-celled layout under `out`: (files_total, files_read,
     * rows_scanned, rows_out). */
   private def zcelledBoxReport(spark: SparkSession, out: String): DataFrame =
-    prunedStage(graft.sources.FooterManifest.build(spark, out, LakeZCols).collect(),
+    prunedStage(graft.sources.FooterManifest.collected(spark, out, LakeZCols),
       LakeNumBox, readEvents(spark, _)).report(countIn(lakeBox))
 
   /** The production pruning loop end-to-end on RAW event columns: write
@@ -359,7 +357,7 @@ object Layout {
 
   def footerPruneStr(spark: SparkSession, dir: String): DataFrame = {
     val (out, schema) = ensureStrLayoutMaterialized(spark, dir)
-    prunedStage(graft.sources.FooterManifest.build(spark, out, Seq("source", "n_chars")).collect(),
+    prunedStage(graft.sources.FooterManifest.collected(spark, out, Seq("source", "n_chars")),
       Map("n_chars" -> ((150.0, 400.0))),
       orEmpty(spark.range(0).select(col("id").cast("string").as("source"),
         col("id").as("n_chars")))(spark.read.schema(schema).parquet(_: _*)),
@@ -385,10 +383,9 @@ object Layout {
   def footerPruneMixed(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.FooterManifest
     val (out, schema) = ensureStrLayoutMaterialized(spark, dir)
-    val m = FooterManifest.build(spark, out, Seq("source", "n_chars"))
-    // one collect; all three candidate sets and the file total decided
-    // driver-side (was four Spark jobs over local metadata — guide §5)
-    val mRows = m.collect()
+    // one collected manifest; all three candidate sets and the file total
+    // decided driver-side (was four Spark jobs over local metadata — guide §5)
+    val mRows = FooterManifest.collected(spark, out, Seq("source", "n_chars"))
     val numBox = Map("n_chars" -> ((150.0, 400.0)))
     val strBox = Map("source" -> (("src12", "src17")))
     def keptUnder(box: Map[String, (Double, Double)],
@@ -541,7 +538,7 @@ object Layout {
       _.coalesce(1).write.mode("overwrite").parquet(outDelta)
     }
     // the pruned base stage and the fully scanned delta side by side
-    val s = prunedStage(FooterManifest.build(spark, outBase, LakeZCols).collect(),
+    val s = prunedStage(FooterManifest.collected(spark, outBase, LakeZCols),
       LakeNumBox, readEvents(spark, _))
     val rowsDelta = FooterManifest.rowCountFromFooters(spark, outDelta)
     val deltaDf = spark.read.schema(LakeSchema).parquet(outDelta)
@@ -735,9 +732,9 @@ object Layout {
     * materialize the lineage rooted at `Scratch.root(kind, dir)` and
     * return that root. `base`, every arrival and `persisted` are cached
     * for the build and released in a `finally`, whatever happens. The
-    * fingerprint is [[Scratch.fingerprint]] under `tag` over
-    * [[plannedLineage]] (or the caller's precomputed one); on a marker
-    * hit nothing else runs. Otherwise the guard wipes the root (the log
+    * guard keys on [[plannedLineage]] under `tag` and fingerprints it
+    * only on a key miss (or takes the caller's precomputed fingerprint);
+    * on a hit nothing else runs. Otherwise the guard wipes the root (the log
     * restarts at g0 with the data), `base` is written z-celled under
     * `baseDir`, g0 commits as `seed` with its files plus whatever `seed`
     * stages (an initial delta, a schema entry), and `steps` drives the
@@ -753,12 +750,15 @@ object Layout {
     val cached = (base +: arrivals) ++ persisted
     cached.foreach(_.persist())
     try {
-      Scratch.materializeIfChanged(root, fingerprint.getOrElse(
-          Scratch.fingerprint(tag, plannedLineage(base, arrivals)))) {
+      def build(): Unit = {
         val l = new LakeLineage(spark, root)
         graft.sources.PartitionedSink.writeZCelled(base, s"$root/$baseDir", LakeZCols, 12, 6)
         l.commit("seed", l.refs("base", baseDir) ++ seed(l))
         steps(l)
+      }
+      fingerprint match {
+        case Some(fp) => Scratch.materializeIfChanged(root, fp)(build())
+        case None => Scratch.materializeIfChanged(root, tag, plannedLineage(base, arrivals))(build())
       }
     } finally cached.foreach(_.unpersist())
     root
@@ -1139,14 +1139,11 @@ object Layout {
       .parquet(s"$root/metrics")
       .orderBy("batch_id")
 
-  /** Order-free content fingerprint of (base, arrivals, grid formulas)
-    * — shared by both ingest engines so they cache/invalidate together.
-    * v6 (round 19): EVERY arrival-shaped lineage — the batch loop AND
-    * both streaming replays — ends in the SAME committed FOLD
-    * ([[commitIngestFold]]); same metric values, but the bump forces
-    * stale dirs (whose logs stop at the last arrival) to
-    * re-materialize through the folding code path. */
-  private[graft] def lakeIngestFingerprint(spark: SparkSession, dir: String): String = {
+  /** The planned rows the ingest lineages are guarded on, under
+    * [[LakeIngestTag]]: the z-celled base (its cells cover the grid
+    * formulas) ∪ each arrival batch under cell −1, −2, … — shared by both
+    * ingest engines so they cache/invalidate together. */
+  private[graft] def lakeIngestPlanned(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.PartitionedSink
     val (_, base, _) = lakeSplit(spark, dir)
     val plannedBase = PartitionedSink.withZCell(base, LakeZCols, 12, 6)
@@ -1155,13 +1152,20 @@ object Layout {
       .map { case (b, i) => b.withColumn("zcell", lit(-1L - i))
         .select(col("event_id"), col("user_id"), col("value"), col("zcell")) }
       .reduce(_ unionByName _)
-    Scratch.fingerprint("v6", plannedBase.unionByName(plannedArrivals))
+    plannedBase.unionByName(plannedArrivals)
   }
+
+  /** The tag of [[lakeIngestPlanned]]'s guard. v6 (round 19): EVERY
+    * arrival-shaped lineage — the batch loop AND both streaming replays —
+    * ends in the SAME committed FOLD ([[commitIngestFold]]); same metric
+    * values, but the bump forces stale dirs (whose logs stop at the last
+    * arrival) to re-materialize through the folding code path. */
+  private[graft] val LakeIngestTag = "v6"
 
   def lakeIngest(spark: SparkSession, dir: String): DataFrame = {
     val root = Scratch.root("lake_ingest", dir)
     val bs = lakeArrivalBatches(spark, dir)
-    Scratch.materializeIfChanged(root, lakeIngestFingerprint(spark, dir)) {
+    Scratch.materializeIfChanged(root, LakeIngestTag, lakeIngestPlanned(spark, dir)) {
       val ctx = prepareLakeIngest(spark, dir, root)
       try {
         var running = ctx.boxInit
@@ -3106,7 +3110,7 @@ object Layout {
   def compactionExec(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.FooterManifest
     val z = withFiles(spark, dir).persist()
-    val baseDir = ensureZorderMaterialized(spark, dir, Some(z))
+    val baseDir = ensureZorderMaterialized(dir, z)
     // the assignment is manifest-scale (≤ 2^(2·5−2) rows) — settle it
     // locally so the returned report frame references no persisted
     // corpus lineage (the round-13 cache-release discipline)
@@ -3119,7 +3123,7 @@ object Layout {
     val plannedRows = z.select(col("db"), col("ub"), col("file_id"))
       .join(broadcast(assign), Seq("file_id"))
       .select(col("db"), col("ub"), col("group_id"))
-    Scratch.materializeIfChanged(out, Scratch.fingerprint("v1", plannedRows)) {
+    Scratch.materializeIfChanged(out, "v1", plannedRows) {
       // explicit schema: types the file_id partition column LONG to
       // match the assignment's key (inference would make it INT), and
       // keeps an EMPTY base (zero-row source → no part files, only

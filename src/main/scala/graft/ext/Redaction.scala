@@ -277,8 +277,8 @@ object Redaction {
     val delta = docs.where(pmod(col("doc_id"), lit(10)) === 0)
     val store = Scratch.root("kanon_classes", dir)
     val baseCls = classesOf(base)
-    Scratch.materializeIfChanged(store, Scratch.fingerprint("v1",
-        base.select(col("lang"), col("source"), col("n_chars")))) {
+    Scratch.materializeIfChanged(store, "v1",
+        base.select(col("lang"), col("source"), col("n_chars"))) {
       baseCls.write.mode("overwrite").parquet(store)
     }
     val stored = spark.read.schema(

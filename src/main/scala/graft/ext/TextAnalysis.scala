@@ -717,9 +717,8 @@ object TextAnalysis {
     * queries/sessions" contract. Returns the weight-table path. */
   private[ext] def ensureModelMaterialized(spark: SparkSession, dir: String): String = {
     val out = Scratch.root("classifier_model", dir)
-    val fp = Scratch.fingerprint(s"v1:$TrainSteps:$TrainStepMillis",
-      Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text")))
-    Scratch.materializeIfChanged(out, fp) {
+    Scratch.materializeIfChanged(out, s"v1:$TrainSteps:$TrainStepMillis",
+        Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text"))) {
       val (w, _) = trainLoop(spark, dir)
       import spark.implicits._
       w.zipWithIndex.map { case (wt, slot) => (slot.toLong, wt) }.toSeq

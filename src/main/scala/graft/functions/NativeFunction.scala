@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * registration routes use — [[register]] on a live session (run by
   * `graft.exec.Session.install`), and [[GraftExtensions]] for every
   * session created with the extension. */
-abstract class NativeFunction(val name: String, expression: Class[_ <: Expression]) {
+abstract class NativeFunction(val name: String, val expression: Class[_ <: Expression]) {
   /** The expression for the SQL call's `args`. */
   def build(args: Seq[Expression]): Expression
 

@@ -112,7 +112,7 @@ private class EnvelopeTable(tableSchema: StructType, path: String)
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EnvelopeScanBuilder(tableSchema, path, options)
+    new EnvelopeScanBuilder(tableSchema, path)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new EnvelopeWriteBuilder(info.schema(), path)
 }
@@ -122,8 +122,7 @@ private class EnvelopeTable(tableSchema: StructType, path: String)
   * and drops non-matching records at parse time, before any InternalRow
   * materializes — the V2 analog of the reference API pushing its
   * start/end-date range into Postgres (`api/app/database.py:54-60`). */
-private class EnvelopeScanBuilder(fullSchema: StructType, path: String,
-    options: CaseInsensitiveStringMap)
+private class EnvelopeScanBuilder(fullSchema: StructType, path: String)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownAggregates
     with SupportsPushDownLimit with SupportsPushDownTopN {
@@ -236,7 +235,7 @@ private class EnvelopeScanBuilder(fullSchema: StructType, path: String,
   override def build(): Scan =
     if (pushedAggs.nonEmpty)
       new EnvelopeAggScan(pushedGroupBy, pushedAggs, pushed, path, fullSchema)
-    else new EnvelopeScan(required, fullSchema, pushed, limit, topN, path, options)
+    else new EnvelopeScan(required, fullSchema, pushed, limit, topN, path)
 }
 
 /** One accepted pushed sort key: field + direction + null placement. */
@@ -423,8 +422,7 @@ private case class EnvelopeAggReaderFactory(groupBy: Array[StructField],
 }
 
 private class EnvelopeScan(schema: StructType, fullSchema: StructType,
-    pushed: Array[Filter], limit: Int, topN: Array[EnvelopeSortKey], path: String,
-    options: CaseInsensitiveStringMap)
+    pushed: Array[Filter], limit: Int, topN: Array[EnvelopeSortKey], path: String)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this

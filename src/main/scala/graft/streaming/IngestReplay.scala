@@ -62,7 +62,7 @@ object IngestReplay {
       .reduce(_ unionByName _)
     // the guard wipes the root before the replay: the metrics/index
     // writes append, so a stale dir would double them
-    Scratch.materializeIfChanged(base, Scratch.fingerprint("v1", planned)) {
+    Scratch.materializeIfChanged(base, "v1", planned) {
       bs.zipWithIndex.foreach { case (b, i) =>
         BloomMaintenance.ingestBatch(b, s"$base/filter", s"$base/index",
           s"$base/admitted", BloomMaintenance.DefaultBits, BloomMaintenance.DefaultK,

@@ -51,7 +51,7 @@ object LakeCdfStream {
     val root = Scratch.root("lake_cdf_stream", dir)
     val feedSchema = "from_gen BIGINT, to_gen BIGINT, change_type STRING, " +
       "n_rows BIGINT, key_chk BIGINT, uid_chk BIGINT, val_chk BIGINT"
-    Scratch.materializeIfChanged(root, Layout.lakeIngestFingerprint(spark, dir)) {
+    Scratch.materializeIfChanged(root, Layout.LakeIngestTag, Layout.lakeIngestPlanned(spark, dir)) {
       // the committing arrival loop, under this operator's own root
       val ctx = Layout.prepareLakeIngest(spark, dir, root)
       try {

@@ -31,8 +31,8 @@ import graft.ext.Layout
   * shared fingerprint+OS-lock protocol ([[graft.exec.Scratch
   * .materializeIfChanged]]), marker written only after a completed
   * replay, checkpoint directory wiped with the lineage so batch ids
-  * restart at 0. The fingerprint is the SAME one the batch loop uses
-  * ([[graft.ext.Layout.lakeIngestFingerprint]]), so both engines
+  * restart at 0. The guard covers the SAME planned rows the batch loop
+  * uses ([[graft.ext.Layout.lakeIngestPlanned]]), so both engines
   * cache/invalidate together.
   *
   * Oracle: identical to `x_lake_ingest` — the whole point is that the
@@ -47,7 +47,7 @@ object LakeIngestStream {
   def lakeIngestStream(spark: SparkSession, dir: String): DataFrame = {
     val root = Scratch.root("lake_ingest_stream", dir)
     val bs = Layout.lakeArrivalBatches(spark, dir)
-    Scratch.materializeIfChanged(root, Layout.lakeIngestFingerprint(spark, dir)) {
+    Scratch.materializeIfChanged(root, Layout.LakeIngestTag, Layout.lakeIngestPlanned(spark, dir)) {
       val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // stage each arrival slice as ONE parquet file; explicit ascending
       // modification times make the file source's replay order the

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,6 +28,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.exec.Session.withConf(spark, Seq("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(body)
 
+  /** The rows of a reference frame `build` makes on [[SparkSpec.plain]]:
+    * a session with graft's native functions but not `Md5ConvRewrite`, so
+    * an md5 `conv` chain runs as written instead of being fused into the
+    * `md5_slice64` it is compared with. Fails when the frame's optimized
+    * plan holds `md5_slice64` all the same. `build` reads files with
+    * `read.parquet`: `Tables` would install the rule on the session. */
+  def reference(build: SparkSession => DataFrame): Array[Row] = {
+    val df = build(SparkSpec.plain)
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("md5_slice64"), s"the reference was fused into md5_slice64:\n$plan")
+    df.collect()
+  }
+
   override def afterAll(): Unit =
     try tempDirs.forEach { d =>
       SparkSpec.deleteTree(d)
@@ -47,6 +60,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   * confs the mains use. */
 object SparkSpec {
   lazy val session: SparkSession = graft.exec.Session(4)
+
+  /** A session sharing [[session]]'s context, with graft's native
+    * functions registered and no `Md5ConvRewrite`. */
+  lazy val plain: SparkSession = {
+    val s = session.newSession()
+    graft.functions.NativeFunction.all.foreach(_.register(s))
+    s
+  }
 
   /** Best-effort recursive delete (symlinks are not followed): a file a
     * spec still holds open must not fail the suite. */

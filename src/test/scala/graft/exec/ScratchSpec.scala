@@ -9,8 +9,9 @@ import graft.{Run, SparkEntry, SparkSpec}
 
 /** The scratch-materialization guard: root naming, the wipe before a
   * guarded write, the marker as commit point, same-root contention, the
-  * fingerprint string every marker already on disk holds, and the
-  * observed form whose cold write counts the fingerprint itself. */
+  * fingerprint string every marker already on disk holds, the observed
+  * form whose cold write counts the fingerprint itself, and the metadata
+  * key that lets a warm call skip the fingerprint. */
 class ScratchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -221,5 +222,133 @@ class ScratchSpec extends SparkSpec {
     // jobs on this fixture
     assert(buildJobs("x_delta_fold") <= 7)
     assert(buildJobs("x_stream_join") <= 5)
+  }
+
+  /** An (event_id, user_id, value) parquet table of `n` rows under
+    * `path`, its values shifted by `shift`. */
+  private def events(path: String, n: Int, shift: Double = 0.0): String = {
+    spark.range(n).select(col("id").as("event_id"), (col("id") % 97).as("user_id"),
+      (col("id") * 1.5 + shift).as("value")).coalesce(2).write.mode("overwrite").parquet(path)
+    path
+  }
+
+  private val zcols = Seq("user_id", "value")
+
+  /** The table under `path`, read with its schema given (no inference job). */
+  private def read(path: String): DataFrame =
+    spark.read.schema("event_id BIGINT, user_id BIGINT, value DOUBLE").parquet(path)
+
+  /** The planned z-celled layout of the table under `path`. */
+  private def zcelled(path: String, cellBits: Int = 4): DataFrame =
+    graft.sources.PartitionedSink.withZCell(read(path), zcols, 12, cellBits)
+
+  private val zcelledCols = Seq("event_id", "user_id", "value", "zcell")
+
+  private def files(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val all = Files.walk(Paths.get(dir))
+    try all.iterator.asScala.filter(Files.isRegularFile(_)).toList.sorted
+    finally all.close()
+  }
+
+  test("a warm call whose key matches starts no job") {
+    val src = events(tempDir("graft-scratch-key").toString + "/src", 500)
+    val root = tempDir("graft-scratch-key-root").toString + "/mat"
+    var writes = 0
+    def call(): Unit = Scratch.materializeIfChanged(root, "v1", zcelled(src),
+        zcelledCols) { df =>
+      writes += 1
+      graft.sources.PartitionedSink.writeCells(df, root, zcols)
+    }
+    call()
+    assert(Scratch.key("v1", zcelled(src)).nonEmpty)
+    assert(readBack(s"$root/${Scratch.KeyFile}") ===
+      Scratch.key("v1", zcelled(src)).get + "\n" + readBack(s"$root/${Scratch.Marker}"))
+    assert(Run.jobsStarted(spark, "graft-spec-scratch-key-hit")(call()) === 0)
+    assert(writes === 1)
+  }
+
+  test("a touched input refingerprints and rewrites only the key file") {
+    val src = events(tempDir("graft-scratch-touch").toString + "/src", 500)
+    val root = tempDir("graft-scratch-touch-root").toString + "/mat"
+    var writes = 0
+    def call(): Unit = Scratch.materializeIfChanged(root, "v1", zcelled(src),
+        zcelledCols) { df =>
+      writes += 1
+      graft.sources.PartitionedSink.writeCells(df, root, zcols)
+    }
+    call()
+    val keyBefore = readBack(s"$root/${Scratch.KeyFile}")
+    val stamps = files(root).filterNot(_.getFileName.toString == Scratch.KeyFile)
+      .map(f => f -> mtime(f.toString))
+    // same bytes, a new mtime: the key misses, the fingerprint matches
+    files(src).foreach(f => Files.setLastModifiedTime(f,
+      java.nio.file.attribute.FileTime.fromMillis(mtime(f.toString) + 10000)))
+    assert(Run.jobsStarted(spark, "graft-spec-scratch-touch")(call()) > 0,
+      "a key miss computes the fingerprint")
+    assert(writes === 1, "an unchanged fingerprint does not rewrite")
+    assert(readBack(s"$root/${Scratch.KeyFile}") !== keyBefore)
+    stamps.foreach { case (f, t) => assert(mtime(f.toString) === t, s"$f was rewritten") }
+    assert(Run.jobsStarted(spark, "graft-spec-scratch-touch-hit")(call()) === 0,
+      "the rewritten key file makes the next call a hit")
+  }
+
+  test("changed input bytes, a changed formula and a changed tag each force a rewrite") {
+    val src = events(tempDir("graft-scratch-miss").toString + "/src", 500)
+    val root = tempDir("graft-scratch-miss-root").toString + "/mat"
+    var writes = 0
+    def call(tag: String, cellBits: Int): Unit = Scratch.materializeIfChanged(root, tag,
+        zcelled(src, cellBits), zcelledCols) { df =>
+      writes += 1
+      graft.sources.PartitionedSink.writeCells(df, root, zcols)
+    }
+    call("v1", 4)
+    call("v1", 4)
+    assert(writes === 1)
+    events(src, 500, shift = 0.25)
+    call("v1", 4)
+    assert(writes === 2, "changed input bytes")
+    call("v1", 5)
+    assert(writes === 3, "a changed formula")
+    call("v2", 5)
+    assert(writes === 4, "a changed tag")
+    call("v2", 5)
+    assert(writes === 4)
+  }
+
+  test("the key renders the whole plan: frames differing past the 25th field get different keys") {
+    val src = read(events(tempDir("graft-scratch-wide").toString + "/src", 10))
+    def wide(last: Int) = src.select((1 to 29).map(i => lit(i).as(s"c$i")) :+ lit(last).as("c30"): _*)
+    def defaultText(df: DataFrame) = df.queryExecution.analyzed.toString.replaceAll("#\\d+", "#N")
+    // the session's default rendering elides the difference
+    assert(defaultText(wide(0)) === defaultText(wide(1)))
+    assert(Scratch.key("v1", wide(0)).nonEmpty)
+    assert(Scratch.key("v1", wide(0)) !== Scratch.key("v1", wide(1)))
+    // the same past a function's 25th argument
+    def longHash(last: Int) = src.select(hash((1 to 29).map(lit(_)) :+ lit(last): _*).as("h"))
+    assert(defaultText(longHash(0)) === defaultText(longHash(1)))
+    assert(Scratch.key("v1", longHash(0)) !== Scratch.key("v1", longHash(1)))
+  }
+
+  test("no key for a local relation, a non-deterministic column, a UDF or a native function") {
+    val src = read(events(tempDir("graft-scratch-nokey").toString + "/src", 10))
+    val plusOne = udf((x: Long) => x + 1)
+    assert(Scratch.key("v1", src).nonEmpty)
+    assert(Scratch.key("v1", Seq(1L, 2L).toDF("a")).isEmpty)
+    assert(Scratch.key("v1", src.withColumn("r", rand(1))).isEmpty)
+    assert(Scratch.key("v1", src.withColumn("u", plusOne(col("event_id")))).isEmpty)
+    assert(Scratch.key("v1", src.withColumn("m",
+      expr("md5_slice64(cast(event_id as string), 1, 8)"))).isEmpty)
+    assert(Scratch.key("v1", src.unionByName(Seq((1L, 1L, 1.0)).toDF("event_id", "user_id",
+      "value"))).isEmpty)
+  }
+
+  test("the plan part of the key of a fixed z-celled frame is pinned (stable across JVMs)") {
+    val src = events(tempDir("graft-scratch-golden").toString + "/src", 10)
+    val text = Scratch.render(zcelled(src).queryExecution.analyzed)
+    val hex = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(!text.contains("more fields"), text)
+    assert(hex === "fb7d0a5af34db81aa2fbb834f3cf02c60b342d27e8babc6d6169d598fb5ce4f3", text)
   }
 }

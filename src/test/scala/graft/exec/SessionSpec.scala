@@ -100,7 +100,7 @@ class SessionSpec extends SparkSpec {
 
   test("under src/main only graft/exec/Scratch.scala fingerprints, locks or names the marker") {
     val scratch = Paths.get("src/main/scala/graft/exec/Scratch.scala")
-    val owned = Seq("sum(hash(", "FileChannel.open", "_graft_layout_fingerprint")
+    val owned = Seq("sum(hash(", "FileChannel.open", "_graft_layout_fingerprint", "_graft_layout_key")
     val sources = Files.walk(Paths.get("src/main")).iterator.asScala
       .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".scala")).toSeq
     val own = Files.readString(scratch)

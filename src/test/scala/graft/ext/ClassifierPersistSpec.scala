@@ -42,11 +42,12 @@ class ClassifierPersistSpec extends SparkSpec {
     val slot = (pmod(
       expr("cast(conv(substring(md5(g), 1, 8), 16, 10) as long)"),
       lit(TextAnalysis.ClassifierBuckets)) + 1).cast("int")
-    val inMem = graft.Tables.documents(spark, sf)
+    // the slot's md5 chain runs as written, on the reference session
+    val inMem = reference(_.read.parquet(s"$sf/documents.parquet")
       .select(col("source"), explode(allGrams).as("g"))
       .select(col("source"), element_at(warr, slot).as("mw"))
-      .groupBy("source").agg(sum(col("mw")).as("margin_sum"))
-      .collect().map(r => r.getAs[String]("source") -> r.getAs[Long]("margin_sum")).toMap
+      .groupBy("source").agg(sum(col("mw")).as("margin_sum")))
+      .map(r => r.getAs[String]("source") -> r.getAs[Long]("margin_sum")).toMap
     applied.foreach { r =>
       assert(r.getAs[Long]("margin_sum") === inMem(r.getAs[String]("source")),
         s"source ${r.getAs[String]("source")}")

@@ -173,12 +173,14 @@ class CorpusStatsSpec extends SparkSpec {
     val total = toks.count()
     // rebuild the cells exactly as the operator does and check each of
     // the d rows partitions the full stream (the increment-on-stream ≡
-    // pre-aggregated-sum algebra the Scaladoc claims)
-    val cells = toks.groupBy(col("tok")).agg(count(lit(1)).as("freq"))
+    // pre-aggregated-sum algebra the Scaladoc claims); the bucket's md5
+    // chain runs as written, on the reference session
+    val cells = reference(_.read.parquet(s"$dir/documents.parquet")
+      .select(explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
       .select(col("freq"), explode(expr("transform(sequence(0, 2), j -> named_struct(" +
         "'j', j, 'bucket', pmod(cast(conv(substring(md5(concat(j, '|', tok)), 1, 12), 16, 10) as bigint), 64)))")).as("db"))
-      .groupBy(col("db.j").as("j")).agg(sum(col("freq")).as("row_total"))
-      .collect()
+      .groupBy(col("db.j").as("j")).agg(sum(col("freq")).as("row_total")))
     assert(cells.length === 3)
     cells.foreach(r => assert(r.getAs[Long]("row_total") === total))
   }

@@ -94,4 +94,47 @@ class LakeLineageSpec extends SparkSpec {
     assert(new java.io.File(root, "_graft_layout_fingerprint").exists())
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("a warm lineage over unchanged files starts no job; changed bytes, formula or tag rebuild") {
+    val d = tempDir("graft-lineage-key").toString
+    val src = s"$d/events"
+    def writeSource(shift: Double): Unit = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("user_id"), (col("value") + shift).as("value"))
+      .coalesce(2).write.mode("overwrite").parquet(src)
+    var built = 0
+    def build(tag: String, updateOffset: Double = 150.0): String = {
+      val ev = spark.read.schema("event_id BIGINT, user_id BIGINT, value DOUBLE").parquet(src)
+      val base = ev.where(pmod(col("event_id"), lit(10)) =!= 0)
+      val delta = ev.where(pmod(col("event_id"), lit(10)) === 0)
+        .withColumn("value", col("value") + lit(updateOffset))
+      Layout.lakeLineage(spark, d, "lineage_spec_key", tag, base, Seq(delta)) { l =>
+        built += 1
+        l.arrive("arrival", "delta", "delta", delta)
+      }
+    }
+    writeSource(0.0)
+    val root = build("t1")
+    val marker = Paths.get(root, Scratch.Marker)
+    val stamp = Files.getLastModifiedTime(marker)
+    assert(graft.Run.jobsStarted(spark, "graft-spec-lineage-key-hit")(build("t1")) === 0,
+      "an unchanged input is a key hit")
+    assert(built === 1)
+    // same bytes, new mtimes: the fingerprint runs, matches, and only
+    // the key file is rewritten
+    Files.list(Paths.get(src)).forEach(f => Files.setLastModifiedTime(f,
+      java.nio.file.attribute.FileTime.fromMillis(Files.getLastModifiedTime(f).toMillis + 10000)))
+    build("t1")
+    assert(built === 1, "touched but unchanged files must not rebuild")
+    assert(Files.getLastModifiedTime(marker) === stamp)
+    writeSource(0.5)
+    build("t1")
+    assert(built === 2, "changed input bytes")
+    build("t1", updateOffset = 151.0)
+    assert(built === 3, "a changed planned formula")
+    build("t2", updateOffset = 151.0)
+    assert(built === 4, "a changed tag")
+    build("t2", updateOffset = 151.0)
+    assert(built === 4)
+    assert(ops(root) === Seq("seed", "arrival"))
+  }
 }

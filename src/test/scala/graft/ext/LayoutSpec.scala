@@ -867,17 +867,34 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("a warm call of each schema-given layout read starts no schema-inference job") {
-    def jobs(name: String): Int = graft.Run.jobsStarted(spark, s"graft-spec-read-schema-$name") {
+  /** Jobs a warm call of `name` starts on this fixture (the first call
+    * builds the layout if this run has not yet). */
+  private def warmJobs(name: String): Int = {
+    def jobs(): Int = graft.Run.jobsStarted(spark, s"graft-spec-warm-$name") {
       graft.SparkEntry.queries(name)(spark, sf).collect()
     }
+    jobs()
+    jobs()
+  }
+
+  test("a warm call of each schema-given layout read starts no schema-inference job") {
     // with parquet inferring each read's schema, warm calls on this
-    // fixture started 7 (both footer prunes) and 9 (DPP) jobs
-    val ceilings = Map("x_footer_prune_str" -> 6, "x_footer_prune_mixed" -> 6, "x_dpp_read" -> 8)
+    // fixture started 7 (both footer prunes) and 9 (DPP) jobs; with a
+    // fingerprint job per guard and a footer job per manifest, 6, 6, 8
+    val ceilings = Map("x_footer_prune_str" -> 4, "x_footer_prune_mixed" -> 4, "x_dpp_read" -> 6)
     schemaReads.foreach { case (name, _) =>
-      jobs(name) // builds the layout if this run has not yet
-      val n = jobs(name)
+      val n = warmJobs(name)
       assert(n <= ceilings(name), s"a warm $name call started $n jobs")
+    }
+  }
+
+  test("a warm call of a guarded layout read starts no guard or footer job") {
+    // with a fingerprint job per guard and a footer job per manifest,
+    // warm calls at sf0.01 (`graft.Run profile`) started 9, 12 and 10 jobs
+    val ceilings = Map("x_footer_prune" -> 4, "x_delta_read" -> 5, "x_zorder_prune" -> 6)
+    ceilings.foreach { case (name, ceiling) =>
+      val n = warmJobs(name)
+      assert(n <= ceiling, s"a warm $name call started $n jobs")
     }
   }
 

@@ -113,11 +113,15 @@ class SimilaritySpec extends SparkSpec {
     // of collapsing to exact copies
     val e1 = Similarity.emb(spark, "/root/testdata/sf0.1")
     val n1 = e1.count()
-    val jit = e1.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(emb, (x, i) -> x + " +
-        "(cast(conv(substring(md5(concat(vec_id, '_', i)), 1, 6), 16, 10) as bigint) " +
-        "% 100 - 50) * 1e-4)").as("emb"),
-      col("label"))
+    // the jitter's md5 chain runs as written, on the reference session
+    val jitRows = reference(_.read.parquet(e1.inputFiles: _*)
+      .select((col("vec_id") + 1000000L).as("vec_id"),
+        expr("transform(cast(embedding as array<double>), (x, i) -> x + " +
+          "(cast(conv(substring(md5(concat(vec_id, '_', i)), 1, 6), 16, 10) as bigint) " +
+          "% 100 - 50) * 1e-4)").as("emb"),
+        col("label")))
+    val jit = spark.createDataFrame(java.util.Arrays.asList(jitRows: _*), jitRows.head.schema)
+    assert(jitRows.length === n1)
     val e2 = e1.unionByName(jit)
     val p1 = Similarity.alignPlanes(n1)
     val p2 = Similarity.alignPlanes(2 * n1)

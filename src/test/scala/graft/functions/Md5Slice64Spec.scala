@@ -10,16 +10,12 @@ import graft.SparkSpec
   * chain it replaces — the DuckDB oracles still run the chain, so any
   * divergence is an immediate hash mismatch. The shared spec session
   * carries [[Md5ConvRewrite]], which would fuse the chain into the very
-  * expression it checks, so the equality cases run on an isolated
-  * `newSession` that has the function but not the rule. */
+  * expression it checks, so the equality cases run on
+  * `SparkSpec.plain`, which has the function but not the rule. */
 class Md5Slice64Spec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val plain = {
-    val s = spark.newSession()
-    Md5Slice64.register(s)
-    s
-  }
+  private lazy val plain = SparkSpec.plain
 
   private def chain(c: String, p: Int, n: Int) =
     expr(s"cast(conv(substring(md5($c), $p, $n), 16, 10) as bigint)")

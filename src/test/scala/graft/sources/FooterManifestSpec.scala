@@ -152,4 +152,41 @@ class FooterManifestSpec extends SparkSpec {
     }
     m.unpersist()
   }
+
+  test("the collected memo returns a fresh build's rows and starts no job on a hit") {
+    import spark.implicits._
+    val dir = s"$tmp/memo"
+    Seq((1L, "a"), (2L, "b"), (50L, "y"), (51L, "z")).toDF("k", "s")
+      .repartitionByRange(2, col("k")).write.mode("overwrite").parquet(dir)
+    val cols = Seq("k", "s")
+    val first = FooterManifest.collected(spark, dir, cols)
+    assert(first.toSet === FooterManifest.build(spark, dir, cols).collect().toSet)
+    assert(graft.Run.jobsStarted(spark, "graft-spec-footer-memo-hit") {
+      assert(FooterManifest.collected(spark, dir, cols) === first)
+    } === 0)
+    // another column list is its own entry
+    assert(FooterManifest.collected(spark, dir, Seq("k")).map(_.getString(2)).toSet === Set("k"))
+  }
+
+  test("a rewritten file misses the memo") {
+    import spark.implicits._
+    val dir = s"$tmp/memo-rewrite"
+    def write(hi: Long): Unit = Seq((1L, "a"), (hi, "z")).toDF("k", "s")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    write(10L)
+    val before = FooterManifest.collected(spark, dir, Seq("k"))
+    assert(before.map(_.getDouble(4)) === Seq(10.0))
+    write(20L)
+    val after = FooterManifest.collected(spark, dir, Seq("k"))
+    assert(after.map(_.getDouble(4)) === Seq(20.0), "a changed file set must read its footers")
+    assert(after.toSet === FooterManifest.build(spark, dir, Seq("k")).collect().toSet)
+    // same name and length, a new mtime: still a miss
+    val part = Files.list(java.nio.file.Paths.get(dir)).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.setLastModifiedTime(part, java.nio.file.attribute.FileTime.fromMillis(
+      Files.getLastModifiedTime(part).toMillis + 10000))
+    assert(graft.Run.jobsStarted(spark, "graft-spec-footer-memo-touch") {
+      FooterManifest.collected(spark, dir, Seq("k"))
+    } > 0)
+  }
 }
